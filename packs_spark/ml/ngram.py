@@ -130,8 +130,7 @@ def fused_predict(
 
     Returns (best lang index or -1, margin, perplexity).  Scoring the
     stacked tables in a single ``score_batch`` halves the normalize/codes
-    work versus separate LangIdModel.predict + PerplexityModel.perplexity
-    calls on the same batch."""
+    work versus scoring the langid and perplexity tables separately."""
     scores, n_tri = score_batch(texts, stacked_tables)
     denom = np.maximum(n_tri, 1)
     per_tri = scores[:n_langs] / denom
@@ -160,26 +159,6 @@ class LangIdModel:
         tables = np.stack([train_trigram_logprobs(corpora[l]) for l in langs])
         return cls(tables, langs)
 
-    def predict(self, texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
-        """(predicted language index array, margin array).  Margin = mean
-        logprob gap between best and runner-up (per trigram), a confidence
-        proxy.  Documents with no trigrams predict index -1."""
-        scores, n_tri = score_batch(texts, self.tables)
-        denom = np.maximum(n_tri, 1)
-        per_tri = scores / denom
-        order = np.argsort(-per_tri, axis=0)
-        best = order[0]
-        margin = per_tri[order[0], np.arange(len(texts))] - per_tri[
-            order[1], np.arange(len(texts))
-        ]
-        best = np.where(n_tri > 0, best, -1)
-        margin = np.where(n_tri > 0, margin, 0.0)
-        return best, margin
-
-    def predict_labels(self, texts: list[str]) -> list[str]:
-        idx, _ = self.predict(texts)
-        return [self.langs[i] if i >= 0 else "unknown" for i in idx]
-
 
 class PerplexityModel:
     """Char-trigram LM perplexity: exp(-mean logprob per trigram)."""
@@ -193,9 +172,3 @@ class PerplexityModel:
 
         corpus = corpus or " ".join(SEED_SENTENCES.values())
         return cls(train_trigram_logprobs(corpus))
-
-    def perplexity(self, texts: list[str]) -> np.ndarray:
-        scores, n_tri = score_batch(texts, self.table[None, :])
-        denom = np.maximum(n_tri, 1)
-        ppl = np.exp(-scores[0] / denom)
-        return np.where(n_tri > 0, ppl, np.inf)

@@ -7,9 +7,9 @@ Model-backed signals (langid confidence, perplexity) join in at the pipeline
 level (packs_spark.pipeline.webtext) — they are pandas-UDF stages and are
 verified by pytest against a pandas oracle instead.
 
-Default thresholds (documented in the pipeline README):
-    min_chars=50, max_chars=100_000, min_words=10, max_word_len=30,
-    max_symbol_ratio=0.3, min_stopword_ratio=0.01, min_distinct_ratio=0.3
+The keep rule is written once, ``heuristic_keep``, over the ``q_*`` signal
+columns with the ``DEFAULTS`` thresholds; ``sql_keep_mask`` is its DuckDB
+oracle twin.
 """
 
 from __future__ import annotations
@@ -71,8 +71,7 @@ def stopword_ratio(c: Column) -> Column:
     """Fraction of lowercase tokens found in STOPWORDS (0 if no tokens)."""
     w = words(F.lower(c))
     n = F.size(w)
-    hits = F.size(F.array_intersect(w, F.array(*[F.lit(s) for s in STOPWORDS])))
-    # array_intersect dedups; count actual token hits instead:
+    # count token hits (array_intersect would dedup them)
     hits = F.size(F.filter(w, lambda x: x.isin(STOPWORDS)))
     return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
 
@@ -104,28 +103,23 @@ def repeated_bigram_ratio(c: Column) -> Column:
     )
 
 
-def keep_mask(c: Column, **thresholds) -> Column:
-    """Conjunction of all heuristic rules — True = keep.
-
-    ``max_repeated_bigram_ratio`` is OPT-IN (None = off, the default):
-    enabling it must be a deliberate re-labeling, because keep/drop parity
-    with the recorded reference labels (F1 gate) is defined over the
-    default rule set."""
-    t = {**DEFAULTS, **thresholds}
-    mask = (
-        c.isNotNull()
-        & (n_chars(c) >= t["min_chars"])
-        & (n_chars(c) <= t["max_chars"])
-        & (n_words(c) >= t["min_words"])
-        & (symbol_ratio(c) <= t["max_symbol_ratio"])
-        & (stopword_ratio(c) >= t["min_stopword_ratio"])
-        & (distinct_word_ratio(c) >= t["min_distinct_ratio"])
+def heuristic_keep() -> Column:
+    """THE heuristic keep rule (True = keep): the conjunction of every
+    ``DEFAULTS`` threshold over the ``q_*`` quality-signal columns.  Both
+    the pipeline (``webtext.label``, signals from the enrich UDF) and the
+    flagship query (``webtext.quality_columns``, JVM signals) apply it.
+    A NULL text (NULL ``q_n_chars``) is dropped, never NULL-labeled."""
+    t = DEFAULTS
+    n_chars = F.col("q_n_chars")
+    return (
+        n_chars.isNotNull()
+        & (n_chars >= t["min_chars"])
+        & (n_chars <= t["max_chars"])
+        & (F.col("q_n_words") >= t["min_words"])
+        & (F.col("q_symbol_ratio") <= t["max_symbol_ratio"])
+        & (F.col("q_stopword_ratio") >= t["min_stopword_ratio"])
+        & (F.col("q_distinct_ratio") >= t["min_distinct_ratio"])
     )
-    if t.get("max_repeated_bigram_ratio") is not None:
-        mask = mask & (
-            repeated_bigram_ratio(c) <= t["max_repeated_bigram_ratio"]
-        )
-    return mask
 
 
 # Tracking query parameters stripped by url canonicalization (public
@@ -235,20 +229,14 @@ def sql_repeated_bigram_ratio(col: str) -> str:
     )
 
 
-def sql_keep_mask(col: str, **thresholds) -> str:
-    t = {**DEFAULTS, **thresholds}
-    out = (
+def sql_keep_mask(col: str) -> str:
+    t = DEFAULTS
+    return (
         f"({col} IS NOT NULL"
         f" AND length({col}) >= {t['min_chars']}"
         f" AND length({col}) <= {t['max_chars']}"
         f" AND {sql_n_words(col)} >= {t['min_words']}"
         f" AND {sql_symbol_ratio(col)} <= {t['max_symbol_ratio']}"
         f" AND {sql_stopword_ratio(col)} >= {t['min_stopword_ratio']}"
-        f" AND {sql_distinct_word_ratio(col)} >= {t['min_distinct_ratio']}"
+        f" AND {sql_distinct_word_ratio(col)} >= {t['min_distinct_ratio']})"
     )
-    if t.get("max_repeated_bigram_ratio") is not None:
-        out += (
-            f" AND {sql_repeated_bigram_ratio(col)}"
-            f" <= {t['max_repeated_bigram_ratio']}"
-        )
-    return out + ")"

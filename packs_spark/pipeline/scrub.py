@@ -23,8 +23,6 @@ from __future__ import annotations
 import re
 from functools import lru_cache
 
-import pandas as pd
-
 from packs_spark.functions.patterns import SCRUB_PATTERNS
 from packs_spark.ml.corpora import BLOCKLIST_TERMS
 
@@ -103,17 +101,6 @@ def scrub_batch(
         scrubbed.append(s)
         spans.append(sp)
     return scrubbed, spans
-
-
-def scrub_series(texts: pd.Series) -> pd.Series:
-    """pd.Series wrapper around scrub_batch (kept for the operator API)."""
-    scrubbed, _ = scrub_batch(texts.tolist())
-    return pd.Series(scrubbed, index=texts.index)
-
-
-def scrub_spans(text: str | None) -> list[tuple[str, int, int]]:
-    """Spans only (lineage side-output for a single string)."""
-    return scrub_with_spans(text)[1]
 
 
 def scrub_text(text: str | None) -> str | None:

@@ -1,4 +1,5 @@
-"""Pandas/Arrow UDF wrappers around the broadcast models + scrub.
+"""The pipeline's one pandas UDF: the fused enrich UDF around the
+broadcast models + scrub.
 
 Pattern (mandated by BASELINE.json input_hint): models are built ONCE on
 the driver, shipped via ``sc.broadcast``, and materialized lazily inside
@@ -9,100 +10,12 @@ Spark layer.
 
 from __future__ import annotations
 
+import re as _re
+
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-def _materialize(broadcast):
-    """Per-worker lazy init: PySpark Broadcast.value already deserializes
-    once per worker process and memoizes (`Broadcast._value`) — that IS the
-    lazy per-executor model load.  (An earlier extra cache keyed by
-    id(broadcast) collided when CPython reused object addresses across
-    batches — do not reintroduce one.)"""
-    return broadcast.value
-
-
-def make_langid_udf(spark: SparkSession, model=None):
-    """Returns a pandas UDF: text -> struct<lang: string, margin: double>."""
-    from packs_spark.ml.ngram import LangIdModel
-
-    model = model or LangIdModel.train()
-    bc = spark.sparkContext.broadcast(model)
-    schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("margin", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def langid_udf(texts: pd.Series) -> pd.DataFrame:
-        m = _materialize(bc)
-        idx, margin = m.predict(texts.tolist())
-        labels = [m.langs[i] if i >= 0 else "unknown" for i in idx]
-        return pd.DataFrame({"lang": labels, "margin": margin})
-
-    return langid_udf
-
-
-def make_perplexity_udf(spark: SparkSession, model=None):
-    from packs_spark.ml.ngram import PerplexityModel
-
-    model = model or PerplexityModel.train()
-    bc = spark.sparkContext.broadcast(model)
-
-    @F.pandas_udf(T.DoubleType())
-    def ppl_udf(texts: pd.Series) -> pd.Series:
-        m = _materialize(bc)
-        return pd.Series(m.perplexity(texts.tolist()))
-
-    return ppl_udf
-
-
-def make_scrub_udf():
-    """text -> struct<scrubbed: string, spans: array<struct>, n_hits: int>.
-
-    The compiled patterns are module-level + lru_cached — each Python worker
-    compiles once (no broadcast needed: patterns are code, not data).
-    """
-    schema = T.StructType(
-        [
-            T.StructField("scrubbed", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("start", T.IntegerType()),
-                            T.StructField("end", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField("n_hits", T.IntegerType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def scrub_udf(texts: pd.Series) -> pd.DataFrame:
-        from packs_spark.pipeline.scrub import scrub_series, scrub_spans
-
-        scrubbed = scrub_series(texts)
-        spans = [scrub_spans(t) for t in texts]
-        return pd.DataFrame(
-            {
-                "scrubbed": scrubbed,
-                "spans": spans,
-                "n_hits": [len(s) for s in spans],
-            }
-        )
-
-    return scrub_udf
-
-
-import re as _re
 
 _SYM_RE = _re.compile(r"[^A-Za-z0-9\s]")
 
@@ -147,18 +60,20 @@ def _heuristic_batch(tl, stop_set):
     return n_chars, n_words, symbol_ratio, stopword_ratio, distinct_ratio, isnull
 
 
-def make_enrich_udf(spark: SparkSession, langid_model=None, ppl_model=None):
+def make_enrich_udf(spark: SparkSession):
     """Fused pipeline UDF: one Arrow round-trip of the text column computes
     langid + perplexity + heuristics + scrub together (separate pandas UDFs
     would ship the same strings to Python several times — at 10^12 docs the
     Arrow transfer IS the cost, so the fusion is a ~4× cut of
-    Python-boundary traffic)."""
+    Python-boundary traffic).  The heuristic keep rule is NOT applied here:
+    ``webtext.label`` applies ``rules.heuristic_keep`` to the returned
+    signals in the JVM."""
     import numpy as np
 
     from packs_spark.ml.ngram import LangIdModel, PerplexityModel
 
-    langid_model = langid_model or LangIdModel.train()
-    ppl_model = ppl_model or PerplexityModel.train()
+    langid_model = LangIdModel.train()
+    ppl_model = PerplexityModel.train()
     # one broadcast: langid tables + perplexity table stacked, so the UDF
     # scores all of them in a single normalize+codes pass (ml.ngram.
     # fused_predict)
@@ -194,13 +109,11 @@ def make_enrich_udf(spark: SparkSession, langid_model=None, ppl_model=None):
             T.StructField("symbol_ratio", T.DoubleType()),
             T.StructField("stopword_ratio", T.DoubleType()),
             T.StructField("distinct_ratio", T.DoubleType()),
-            T.StructField("keep_heuristic", T.BooleanType()),
         ]
     )
 
-    from packs_spark.pipeline.rules import DEFAULTS, STOPWORDS
+    from packs_spark.pipeline.rules import STOPWORDS
 
-    th = dict(DEFAULTS)
     stop_set = frozenset(STOPWORDS)
 
     @F.pandas_udf(schema)
@@ -208,22 +121,17 @@ def make_enrich_udf(spark: SparkSession, langid_model=None, ppl_model=None):
         from packs_spark.ml.ngram import fused_predict
         from packs_spark.pipeline.scrub import scrub_batch
 
-        tables, langs = _materialize(bc)
+        # Broadcast.value deserializes once per Python worker process and
+        # memoizes — that IS the lazy per-executor model load.  (An extra
+        # cache keyed by id(bc) collided when CPython reused object
+        # addresses across batches — do not reintroduce one.)
+        tables, langs = bc.value
         tl = texts.tolist()
         idx, margin, ppl = fused_predict(tl, tables, len(langs))
         labels = [langs[i] if i >= 0 else "unknown" for i in idx]
         scrubbed, spans = scrub_batch(tl)
-        n_chars, n_words, sym_r, stop_r, dist_r, isnull = _heuristic_batch(
+        n_chars, n_words, sym_r, stop_r, dist_r, _ = _heuristic_batch(
             tl, stop_set
-        )
-        keep_h = (
-            ~isnull
-            & (n_chars >= th["min_chars"])
-            & (n_chars <= th["max_chars"])
-            & (n_words >= th["min_words"])
-            & (sym_r <= th["max_symbol_ratio"])
-            & (stop_r >= th["min_stopword_ratio"])
-            & (dist_r >= th["min_distinct_ratio"])
         )
         return pd.DataFrame(
             {
@@ -238,7 +146,6 @@ def make_enrich_udf(spark: SparkSession, langid_model=None, ppl_model=None):
                 "symbol_ratio": sym_r,
                 "stopword_ratio": stop_r,
                 "distinct_ratio": dist_r,
-                "keep_heuristic": keep_h,
             }
         )
 

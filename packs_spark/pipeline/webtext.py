@@ -5,18 +5,21 @@ Stages over a Common-Crawl-style table (url, warc_ts, html, text, lang):
   1. extract      — html → text (already extracted in the input contract;
                     the html column is carried as opaque binary + used for
                     byte-parity verification)
-  2. langid       — char-ngram language ID, vectorized pandas UDF with a
-                    per-executor lazily-loaded broadcast model
-  3. perplexity   — char-ngram LM score, same UDF pattern
-  4. heuristics   — Gopher/C4-style Column-expression rules (pipeline.rules)
-  5. scrub        — Python-`re` PII/toxicity scrub in a pandas UDF
-                    (byte-parity with the reference patterns)
-  6. keep/drop    — conjunction of rule outcomes + model thresholds
+  2. langid       — char-ngram language ID
+  3. perplexity   — char-ngram LM score
+  4. heuristics   — Gopher/C4-style quality signals (length, symbol,
+                    stopword and distinct-word ratios)
+  5. scrub        — Python-`re` PII/toxicity scrub (byte-parity with the
+                    reference patterns)
+                    (2-5 run as ONE fused pandas UDF with a per-executor
+                    lazily-loaded broadcast model, udfs.make_enrich_udf)
+  6. keep/drop    — rules.heuristic_keep ∧ model thresholds (``label``)
   7. write        — partitioned by url-hash bucket (salted for hot hosts),
                     per-partition metrics + lineage, resumable checkpoints
                     (packs_spark.io.lakehouse)
 
-``run_batch`` is the full pipeline; ``flagship_summary`` is the compact
+``run_batch`` is the full pipeline; ``label`` is its labeling step (2-6),
+shared with the streaming pipeline; ``flagship_summary`` is the compact
 driver smoke query over the generic ``documents`` testdata table.
 """
 
@@ -36,6 +39,72 @@ DEFAULT_THRESHOLDS = dict(
     # the threshold separates the two modes
     max_ppl=8000.0,
 )
+
+
+def label(
+    df: DataFrame, thresholds: dict | None = None, run_id: str = "run-0"
+) -> DataFrame:
+    """The one labeling path, shared by ``run_batch`` (after its bucket
+    shuffle) and ``streaming.pipeline.stream_webtext``: the fused enrich
+    UDF's signals as columns, then keep = ``rules.heuristic_keep`` ∧ the
+    model thresholds, plus ``run_id`` lineage.  ``df`` carries a ``text``
+    column, which the output drops.
+
+    ``thresholds`` overrides ``DEFAULT_THRESHOLDS``; any other key raises
+    ``ValueError`` (a typo or a heuristic key would otherwise run with the
+    defaults and silently give a different answer — heuristic thresholds
+    are the ``rules.DEFAULTS`` constants)."""
+    from packs_spark.pipeline.udfs import make_enrich_udf
+
+    unknown = sorted(set(thresholds or {}) - set(DEFAULT_THRESHOLDS))
+    if unknown:
+        raise ValueError(
+            f"unknown thresholds key(s) {unknown}; accepted keys: "
+            f"{sorted(DEFAULT_THRESHOLDS)} (heuristic thresholds are the "
+            "fixed rules.DEFAULTS)"
+        )
+    t = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
+    enrich_udf = make_enrich_udf(df.sparkSession)
+
+    # The fused UDF computes EVERY signal per document in one Arrow pass —
+    # langid, perplexity, scrub AND the heuristic quality signals (Python
+    # string semantics, exactly the oracle's; see udfs._heuristic_batch).
+    # The flagship query's quality_columns() computes the same signals as
+    # JVM expressions; both apply the one keep rule, rules.heuristic_keep.
+    enriched = (
+        df.withColumn("__e", enrich_udf(F.col("text")))
+        .select(
+            "*",
+            F.col("__e.lang").alias("lang_pred"),
+            F.col("__e.margin").alias("lang_margin"),
+            F.col("__e.ppl").alias("ppl"),
+            F.col("__e.scrubbed").alias("text_scrubbed"),
+            F.col("__e.spans").alias("scrub_spans"),
+            F.col("__e.n_hits").alias("pii_hits"),
+            F.col("__e.n_chars").alias("q_n_chars"),
+            F.col("__e.n_words").alias("q_n_words"),
+            F.col("__e.symbol_ratio").alias("q_symbol_ratio"),
+            F.col("__e.stopword_ratio").alias("q_stopword_ratio"),
+            F.col("__e.distinct_ratio").alias("q_distinct_ratio"),
+        )
+        .drop("__e")
+        .withColumn("keep_heuristic", rules.heuristic_keep())
+    )
+
+    return (
+        enriched.withColumn(
+            "keep",
+            F.col("keep_heuristic")
+            & (F.col("lang_pred") != "unknown")
+            & (F.col("lang_margin") >= t["min_margin"])
+            & (F.col("ppl") <= t["max_ppl"]),
+        )
+        .withColumn("run_id", F.lit(run_id))
+        # the sink row is the scrubbed document + labels/metrics/lineage;
+        # the raw text is reproducible from (url, run_id) against the
+        # source table and would otherwise be the largest written column
+        .drop("text")
+    )
 
 
 def run_batch(
@@ -66,9 +135,7 @@ def run_batch(
     """
     from packs_spark.io.lakehouse import CheckpointedWriter
     from packs_spark.pipeline.partitioning import repartition_by_bucket, url_bucket
-    from packs_spark.pipeline.udfs import make_enrich_udf
 
-    t = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
     df = spark.read.parquet(source) if isinstance(source, str) else source
 
     # Project away the raw html payload BEFORE the shuffle: extraction
@@ -107,48 +174,7 @@ def run_batch(
     # hidden range-sampling job — a full extra scan of the input per run.
     df = repartition_by_bucket(df, n_buckets)
 
-    enrich_udf = make_enrich_udf(spark)
-
-    # The fused UDF computes EVERYTHING per document in one Arrow pass —
-    # langid, perplexity, scrub AND the heuristic quality signals (Python
-    # string semantics, exactly the oracle's; see udfs._heuristic_batch).
-    # The JVM-expression twin of the heuristics lives in quality_columns()
-    # (oracle-checked flagship query); the pipeline uses the UDF form
-    # because the text is already crossing the Arrow boundary anyway.
-    enriched = (
-        df.withColumn("__e", enrich_udf(F.col("text")))
-        .select(
-            "*",
-            F.col("__e.lang").alias("lang_pred"),
-            F.col("__e.margin").alias("lang_margin"),
-            F.col("__e.ppl").alias("ppl"),
-            F.col("__e.scrubbed").alias("text_scrubbed"),
-            F.col("__e.spans").alias("scrub_spans"),
-            F.col("__e.n_hits").alias("pii_hits"),
-            F.col("__e.n_chars").alias("q_n_chars"),
-            F.col("__e.n_words").alias("q_n_words"),
-            F.col("__e.symbol_ratio").alias("q_symbol_ratio"),
-            F.col("__e.stopword_ratio").alias("q_stopword_ratio"),
-            F.col("__e.distinct_ratio").alias("q_distinct_ratio"),
-            F.col("__e.keep_heuristic").alias("keep_heuristic"),
-        )
-        .drop("__e")
-    )
-
-    labeled = (
-        enriched.withColumn(
-            "keep",
-            F.col("keep_heuristic")
-            & (F.col("lang_pred") != "unknown")
-            & (F.col("lang_margin") >= t["min_margin"])
-            & (F.col("ppl") <= t["max_ppl"]),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        # the sink row is the scrubbed document + labels/metrics/lineage;
-        # the raw text is reproducible from (url, run_id) against the
-        # source table and would otherwise be the largest written column
-        .drop("text")
-    )
+    labeled = label(df, thresholds, run_id)
 
     import time as _time
 
@@ -209,7 +235,6 @@ def quality_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
     regex split instead of five per row.
     """
     c = F.col(text_col)
-    t = {**rules.DEFAULTS}
     out = (
         df.withColumn("__wl", rules.words(F.lower(c)))
         .withColumn("q_n_chars", rules.n_chars(c))
@@ -229,16 +254,7 @@ def quality_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
             ),
         )
     )
-    keep = (
-        c.isNotNull()
-        & (F.col("q_n_chars") >= t["min_chars"])
-        & (F.col("q_n_chars") <= t["max_chars"])
-        & (F.col("q_n_words") >= t["min_words"])
-        & (F.col("q_symbol_ratio") <= t["max_symbol_ratio"])
-        & (F.col("q_stopword_ratio") >= t["min_stopword_ratio"])
-        & (F.col("q_distinct_ratio") >= t["min_distinct_ratio"])
-    )
-    return out.withColumn("keep", keep).drop("__wl")
+    return out.withColumn("keep", rules.heuristic_keep()).drop("__wl")
 
 
 def flagship_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,9 +6,9 @@ are additive capability: the same quality-filter plan bolted onto
 ``readStream``, giving continuous ingestion with exactly-once parquet
 sinks via Spark's own streaming checkpoints.
 
-* ``stream_webtext`` — the full enrich (langid+ppl+scrub, same fused
-  pandas UDF) as a streaming query; file-source streaming means new
-  web-page parquet drops are picked up incrementally.
+* ``stream_webtext`` — the batch pipeline's labeling step
+  (``webtext.label``) as a streaming query; file-source streaming means
+  new web-page parquet drops are picked up incrementally.
 * ``stream_windowed_event_counts`` — tumbling-window counts with a
   watermark for late events (the streaming twin of the
   ``events_windowed_agg`` oracle query).
@@ -33,47 +33,22 @@ def stream_webtext(
     thresholds: dict | None = None,
     run_id: str = "stream-0",
 ):
-    """Streaming quality filter: the SAME fused enrich UDF and keep/drop
-    rule as the batch pipeline (pipeline/webtext.py run_batch), bolted
-    onto ``readStream`` — a document gets the identical label whether it
-    arrives by backfill or by stream (parity pinned in
-    tests/test_streaming.py).  Spark's streaming checkpoint replaces the
-    batch tier's per-bucket commit log as the exactly-once mechanism.
-    Returns the started StreamingQuery."""
-    from packs_spark.pipeline.udfs import make_enrich_udf
-    from packs_spark.pipeline.webtext import DEFAULT_THRESHOLDS, quality_columns
+    """Streaming quality filter: the batch pipeline's labeling path
+    (``pipeline.webtext.label``) bolted onto ``readStream`` — a document
+    gets the identical output row whether it arrives by backfill or by
+    stream, minus the batch table's ``bucket`` partition column (parity
+    of every column pinned in tests/test_streaming.py).  Spark's streaming
+    checkpoint replaces the batch tier's per-bucket commit log as the
+    exactly-once mechanism.  Returns the started StreamingQuery."""
+    from packs_spark.pipeline.webtext import label
 
-    t = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
     if schema is None:
         schema = (
             "url string, warc_ts timestamp, html binary, "
             "text string, lang string"
         )
     src = spark.readStream.schema(schema).parquet(source_dir)
-    enrich = make_enrich_udf(spark)
-    out = (
-        quality_columns(src)
-        .withColumn("__e", enrich(F.col("text")))
-        .select(
-            "*",
-            F.col("__e.lang").alias("lang_pred"),
-            F.col("__e.margin").alias("lang_margin"),
-            F.col("__e.ppl").alias("ppl"),
-            F.col("__e.scrubbed").alias("text_scrubbed"),
-            F.col("__e.spans").alias("scrub_spans"),
-            F.col("__e.n_hits").alias("pii_hits"),
-            F.col("__e.keep_heuristic").alias("keep_heuristic"),
-        )
-        .drop("__e")
-        .withColumn(
-            "keep",
-            F.col("keep_heuristic")
-            & (F.col("lang_pred") != "unknown")
-            & (F.col("lang_margin") >= t["min_margin"])
-            & (F.col("ppl") <= t["max_ppl"]),
-        )
-        .withColumn("run_id", F.lit(run_id))
-    )
+    out = label(src.select("url", "warc_ts", "lang", "text"), thresholds, run_id)
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_dir)

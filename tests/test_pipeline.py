@@ -2,6 +2,7 @@
 byte-identical scrubbed text per url, langid accuracy, resumability."""
 
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -94,6 +95,23 @@ def test_pipeline_resume_skips_completed(spark, pages_pd, pipeline_out):
     assert stats3["written"] == 1
     got = spark.read.parquet(out)
     assert got.count() == N_DOCS  # idempotent overwrite
+
+
+@pytest.mark.parametrize(
+    "thresholds, bad",
+    [({"max_pp": 900}, "max_pp"), ({"min_words": 5}, "min_words")],
+)
+def test_unknown_threshold_key_raises(spark, pages_pd, tmp_path, thresholds, bad):
+    """A misspelt model threshold or a heuristic key (fixed in
+    rules.DEFAULTS) must fail loudly, not run with the defaults."""
+    sdf = spark.createDataFrame(pages_pd.head(20))
+    out = str(tmp_path / "table")
+    with pytest.raises(
+        ValueError, match=re.escape(f"unknown thresholds key(s) ['{bad}']")
+    ) as exc:
+        run_batch(spark, sdf, out, n_buckets=4, thresholds=thresholds)
+    assert "max_ppl" in str(exc.value) and "min_margin" in str(exc.value)
+    assert not os.path.exists(out)
 
 
 def test_metrics_side_output(spark, pipeline_out):
@@ -209,7 +227,7 @@ def test_salted_host_metrics_equals_plain_groupby(spark, pages_pd):
     assert salted == plain and len(salted) > 1
 
 
-def test_repeated_bigram_ratio_and_optin_rule(spark):
+def test_repeated_bigram_ratio(spark):
     from packs_spark.pipeline import rules
 
     good = ("the quick brown fox jumps over the lazy dog and then runs far "
@@ -235,26 +253,6 @@ def test_repeated_bigram_ratio_and_optin_rule(spark):
     assert abs(r[good] - py_ratio(good)) < 1e-9
     assert abs(r[spam] - py_ratio(spam)) < 1e-9
     assert r[spam] > 0.5 > r[good]
-
-    # default mask ignores repetition-bigram (F1 parity with recorded
-    # labels); the opt-in threshold drops the spam doc
-    base = {
-        t: k
-        for t, k in df.select(
-            "text", rules.keep_mask(F.col("text")).alias("k")
-        ).collect()
-    }
-    strict = {
-        t: k
-        for t, k in df.select(
-            "text",
-            rules.keep_mask(
-                F.col("text"), max_repeated_bigram_ratio=0.2
-            ).alias("k"),
-        ).collect()
-    }
-    assert base[spam] and not strict[spam]
-    assert base[good] and strict[good]
 
 
 def test_canonical_url():

@@ -66,10 +66,10 @@ def test_stream_webtext_filters_and_scrubs(spark, tmp_path):
 
 
 def test_stream_webtext_keep_labels_match_batch(spark, tmp_path):
-    """Stream/batch parity: a document gets the SAME keep/drop decision
-    and scrubbed text whether it arrives by streaming ingest or by the
-    batch backfill pipeline (both run the fused enrich UDF + the same
-    threshold rule)."""
+    """Stream/batch parity on whole rows: both paths run the one labeling
+    path (webtext.label), so with the same run_id the stream table has
+    exactly the batch table's columns minus the ``bucket`` partition
+    column, and every row is equal on all of them."""
     from packs_spark.pipeline.generate import generate_pages
     from packs_spark.pipeline.webtext import run_batch
 
@@ -79,20 +79,24 @@ def test_stream_webtext_keep_labels_match_batch(spark, tmp_path):
     spark.createDataFrame(pdf).write.parquet(srcdir, mode="overwrite")
 
     q = stream_webtext(
-        spark, srcdir, str(tmp_path / "s_out"), str(tmp_path / "s_ck")
+        spark, srcdir, str(tmp_path / "s_out"), str(tmp_path / "s_ck"),
+        run_id="parity",
     )
     q.awaitTermination(180)
-    run_batch(spark, srcdir, str(tmp_path / "b_out"), n_buckets=8)
+    run_batch(spark, srcdir, str(tmp_path / "b_out"), n_buckets=8,
+              run_id="parity")
 
-    s = {
-        r["url"]: (r["keep"], r["text_scrubbed"])
-        for r in spark.read.parquet(str(tmp_path / "s_out")).collect()
-    }
-    b = {
-        r["url"]: (r["keep"], r["text_scrubbed"])
-        for r in spark.read.parquet(str(tmp_path / "b_out")).collect()
-    }
-    assert s == b and len(s) == 400
+    s = spark.read.parquet(str(tmp_path / "s_out"))
+    b = spark.read.parquet(str(tmp_path / "b_out")).drop("bucket")
+    assert s.dtypes == b.dtypes
+    cols = b.columns
+
+    def rows(df):
+        return {r["url"]: tuple(r[c] for c in cols) for r in df.collect()}
+
+    got, want = rows(s), rows(b)
+    assert len(want) == 400
+    assert got == want
 
 
 def test_multimodal_metadata(spark, tmp_path):

@@ -112,18 +112,13 @@ def main() -> None:
             repartition_by_bucket,
             url_bucket,
         )
-        from packs_spark.pipeline.udfs import make_enrich_udf
+        from packs_spark.pipeline.webtext import label
 
         df = spark.read.parquet(src).select("url", "warc_ts", "lang", "text")
         df = repartition_by_bucket(
             df.withColumn("bucket", url_bucket(F.col("url"), 128)), 128
         )
-        enrich = make_enrich_udf(spark)
-        labeled = (
-            df.withColumn("__e", enrich(F.col("text")))
-            .select("*", F.col("__e.keep_heuristic").alias("keep"))
-            .drop("__e", "text")
-        )
+        labeled = label(df)
         buf = io.StringIO()
         with redirect_stdout(buf):
             labeled.explain("formatted")

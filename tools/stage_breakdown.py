@@ -182,11 +182,6 @@ How to read this (the falsifiability checks the scaling claim rests on):
    Arrow⇄Python UDF workers, so it measures occupancy, not work; total
    task-time is therefore NOT conserved across parallelism
    ({t8 / 1000:.1f}s @8 → {t32 / 1000:.1f}s @32, ratio {t32 / t8:.2f}).
-   Per-task cpu-time inflation at 32 threads is the shared-memory-bus
-   contention quantified independently by tools/hw_ceiling.py (this box's
-   embarrassingly-parallel ceiling ≈ 0.48): cycles stalled on memory
-   count as cpu-time.  On a real cluster each executor brings its own
-   memory bus, so neither artifact exists there.
 
 ## local[8] — wall {legs[8]["wall_sec"]}s
 
