@@ -5,137 +5,75 @@ reference's third-party check dispatchers:
   from ``pack_conf.json["job"]["expectations"]``; score = passed/total
   (``:58``), each result an envelope ``{expectation, success}``;
 * soda_pack/main.py:53-67 + checks.yaml — SodaCL checks
-  (``row_count > 0`` style) over the same frame.
+  (``row_count > 0`` style) over the same frame;
+* the dqops check catalog (dqops-checks-reference.md).
 
-Both are config-driven pass/fail rules over one dataset, so they share one
-evaluator here.  Design for scale: the WHOLE suite is compiled into a
+All three are config-driven pass/fail rules over one dataset, so they share
+one evaluator here.  Design for scale: the WHOLE suite is compiled into a
 single ``df.agg(...)`` pass (one scan, partial aggregation per partition,
 no shuffles beyond the final merge); schema-level expectations never touch
 data at all.
 
-Supported expectation_types (the public GX names the reference dispatches
-by ``getattr``):
-  table:  expect_table_row_count_to_be_between,
-          expect_table_column_count_to_be_between,
-          expect_table_columns_to_match_set
-  column: expect_column_values_to_not_be_null,
-          expect_column_values_to_be_null,
-          expect_column_values_to_be_between,
-          expect_column_values_to_be_in_set,
-          expect_column_values_to_not_be_in_set,
-          expect_column_values_to_match_regex,
-          expect_column_values_to_not_match_regex,
-          expect_column_values_to_match_strftime_format,
-          expect_column_values_to_be_unique,
-          expect_column_distinct_values_to_be_in_set,
-          expect_column_distinct_values_to_equal_set,
-          expect_column_distinct_values_to_contain_set,
-          expect_column_unique_value_count_to_be_between,
-          expect_column_proportion_of_unique_values_to_be_between,
-          expect_column_mean_to_be_between,
-          expect_column_median_to_be_between,
-          expect_column_quantile_values_to_be_between,
-          expect_column_kl_divergence_to_be_less_than,
-          expect_column_min_to_be_between,
-          expect_column_max_to_be_between,
-          expect_column_sum_to_be_between,
-          expect_column_stdev_to_be_between,
-          expect_column_value_lengths_to_be_between,
-          expect_column_pair_values_a_to_be_greater_than_b,
-          expect_column_pair_values_to_be_equal,
-          expect_compound_columns_to_be_unique,
-          expect_table_row_count_to_equal,
-          expect_column_most_common_value_to_be_in_set,
-          expect_column_values_to_match_like_pattern,
-          expect_column_values_to_not_match_like_pattern,
-          expect_column_value_z_scores_to_be_less_than (single-pass via
-            extreme-z = max(max-mean, mean-min)/std; mostly=1 only),
-          expect_column_values_to_be_of_type,
-          expect_column_values_to_be_in_type_list (schema-level, no data
-            pass),
-          expect_table_column_count_to_equal,
-          expect_column_value_lengths_to_equal,
-          expect_column_values_to_match_regex_list (match_on any/all),
-          expect_column_values_to_not_match_regex_list,
-          expect_column_values_to_be_json_parseable,
-          expect_column_values_to_be_dateutil_parseable (deterministic
-            subset: ISO casts + the reference's sniffable format table),
-          expect_multicolumn_sum_to_equal,
-          expect_select_column_values_to_be_unique_within_record,
-          expect_column_pair_values_to_be_in_set,
-          expect_column_values_to_be_increasing (input-order; own job),
-          expect_column_values_to_be_decreasing (input-order; own job),
-          expect_table_row_count_to_equal_other_table (other table via
-            the session catalog),
-          expect_column_to_exist (schema-level; optional column_index),
-          expect_table_columns_to_match_ordered_list (schema-level),
-          expect_column_values_to_match_like_pattern_list (match_on
-            any/all),
-          expect_column_values_to_not_match_like_pattern_list,
-          expect_column_values_to_match_json_schema (real jsonschema
-            Draft-7 validation in a batched pandas UDF — the suite's one
-            sanctioned Arrow crossing),
-          expect_multicolumn_values_to_be_unique (legacy alias of the
-            select_column form)
-Row-level expectations honour GX's ``mostly`` (fraction of non-null rows
-that must satisfy the predicate; default 1.0).
+The supported checks are the keys of :data:`CATALOG`: the public GX
+``expectation_type`` names the reference dispatches by ``getattr``,
+``soda:<metric>`` (what :func:`parse_sodacl` makes of ``row_count > 0``
+style text) and ``dqops:<check>``.  Each value builds the check's aggregate
+Columns and its verdict over their collected values from a few shared
+parts (row ratio, column metric, pattern, percent), so checks that mean
+the same thing share one definition.  Unknown GX types are skipped like the
+reference's ``continue``; unknown soda/dqops checks fail.  Row-level
+expectations honour GX's ``mostly`` (fraction of non-null rows that must
+satisfy the predicate; default 1.0).
 
-SodaCL checks are translated to the same internal form by
-``parse_sodacl``: ``row_count > 0``, ``missing_count(col) = 0``,
-``duplicate_count(col) < N``, ``min/max/avg/sum(col) <op> N``.
+Deliberate deviations from the pandas GX backend:
 
-dqops-catalog checks (dqops-checks-reference.md) ride the same pass via
-the ``dqops:`` prefix — see :func:`compile_dqops`:
-  WHITESPACE §18: empty_text / whitespace_text / null_placeholder_text /
-                  text_surrounded_by_whitespace, each _found (max_count)
-                  and _percent (max_percent) variants
-  DATETIME  §9:   date_values_in_future_percent, date_in_range_percent,
-                  text_match_date_format_percent
-  UNIQUENESS §17: distinct_count, distinct_percent, duplicate_count,
-                  duplicate_percent (the static checks; the *_change /
-                  *_anomaly variants need a metric history — that lives
-                  in events_metric_history_delta / volume_anomaly_events)
-  PII       §14:  contains_email_percent, contains_ip4_percent,
-                  contains_ip6_percent, contains_usa_zipcode_percent,
-                  contains_usa_phone_percent (max_percent; the shared
-                  PII regex catalog, functions/patterns.py)
-  CUSTOM SQL §7/§4: sql_condition_failed / sql_condition_passed_percent /
-                  sql_aggregate_expression, each _on_column and _on_table —
-                  user SQL fragments ({column}, {alias}./{table}.
-                  placeholders) compiled into the same fused agg; the
-                  sql_query/import_custom_result variants need an external
-                  query/log table and stay out of scope like dbt's
-                  subprocess
+* expect_column_values_to_be_increasing / _decreasing cannot ride the fused
+  agg.  "Row order" is INPUT/scan order — the order pandas-GX reads the
+  same file in — checked as a separate bounded job with per-partition lag
+  windows plus a driver-side boundary stitch (see
+  :func:`_monotone_violations`); run them before any shuffle, since a
+  shuffle destroys the order GX would have seen.
+* expect_table_row_count_to_equal_other_table counts the other table (a
+  session-catalog name) in its own job.
+* expect_column_values_to_be_dateutil_parseable is a deterministic subset
+  of dateutil: ISO casts plus the reference's sniffable format table.
+* expect_column_value_z_scores_to_be_less_than is single-pass via the
+  extreme z = max(max-mean, mean-min)/std, so only mostly=1 is supported.
+* expect_column_values_to_match_json_schema is real Draft-7 validation in a
+  batched pandas UDF — the suite's one sanctioned Arrow crossing.
 
-**Extension point**: the reference dispatches ANY ``expect_*`` name via
-``getattr`` on a GX validator (great_expectations_pack/main.py:45-47);
-here each type is a branch in :func:`compile_expectation` producing a
-``_Compiled`` (aggregate expressions + a verdict closure).  Adding a GX
-type = adding one branch that emits its aggregate columns; it then rides
-the same single-pass ``df.agg``.  The catalog above covers every type
-the reference's shipped configs exercise plus the common-usage GX
-column/table expectations.  The positional types
-expect_column_values_to_be_increasing / _decreasing are supported as a
-separate bounded job (they cannot ride the fused agg): "row order" is
-interpreted as INPUT/scan order — the order pandas-GX reads the same
-file in — checked with per-partition lag windows plus a driver-side
-boundary stitch (see :func:`_monotone_violations`); run them before any
-shuffle, since a shuffle destroys the order GX would have seen.
+dqops checks: percent checks use the dqops 0–100 scale with NON-NULL row
+denominators (the text_validation pack's convention — NULLs are counted by
+the NULLS family, not double-counted here); an empty column passes
+max-bounded checks and fails min-bounded ones.  The *_change / *_anomaly
+variants need a metric history (events_metric_history_delta /
+volume_anomaly_events), and the sql_query / import_custom_result variants
+an external table, so they stay out of scope like dbt's subprocess.
 """
 
 from __future__ import annotations
 
+import math
 import operator
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime
+from functools import reduce
+from typing import Callable
 
 import pandas as pd
 from pyspark.errors import AnalysisException, ParseException
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
+from packs_spark.functions import text as TX
 from packs_spark.functions.datesniff import DATE_REGEX_TABLE
+from packs_spark.functions.patterns import (
+    PII_PATTERNS,
+    USA_PHONE_PATTERN,
+    contains_pattern,
+)
 
 _OPS = {
     ">": operator.gt,
@@ -150,14 +88,14 @@ _OPS = {
 
 @dataclass
 class _Compiled:
-    """One expectation compiled to aggregate columns + a driver-side
-    verdict over the collected values."""
+    """One check compiled to aggregate columns + a driver-side verdict
+    over their collected values."""
 
-    label: str
-    column: str | None
-    aggs: list[Column] = field(default_factory=list)  # named c{i}_{j}
-    # verdict(values: list) -> bool, evaluated on the single collected row
-    verdict: object = None
+    aggs: list[Column]
+    verdict: Callable[[list], bool] | None
+    column: str | None = None  # result label; default kwargs["column"]
+    label: str = ""
+    error: str | None = None
 
 
 def _between(value, lo, hi) -> bool:
@@ -166,52 +104,422 @@ def _between(value, lo, hi) -> bool:
     return (lo is None or value >= lo) and (hi is None or value <= hi)
 
 
-def _pct_at_most(mx: float):
-    """Verdict over [count, total]: count/total percent <= mx.  An empty
-    column passes vacuously (0 violations <= any max)."""
-    return lambda v, mx=mx: (v[1] or 0) == 0 or 100.0 * (v[0] or 0) / v[1] <= mx
+def _col_name(kw: dict) -> str:
+    # without this a missing column would either silently PASS (text
+    # predicates against a None operand are NULL for every row) or raise
+    # a PySpark error naming no check
+    if not kw.get("column"):
+        raise ValueError("check requires a 'column' kwarg")
+    return kw["column"]
 
 
-def _pct_at_least(mn: float):
-    """Verdict over [count, total]: count/total percent >= mn.  An empty
-    column fails (no evidence the minimum is met)."""
-    return lambda v, mn=mn: (v[1] or 0) > 0 and 100.0 * (v[0] or 0) / v[1] >= mn
+def _col(kw: dict) -> Column:
+    return F.col(_col_name(kw))
 
 
-def _ratio_pred(
-    label: str,
-    column: str | None,
-    pred: Column,
-    cond: Column,
-    idx: int,
-    mostly: float,
-) -> _Compiled:
-    """ok/n scaffolding shared by the multi-column row expectations:
-    n counts rows satisfying ``cond`` (the complement of GX's
-    ignore_row_if), ok those also satisfying ``pred``; verdict is
-    ok/n >= mostly with a vacuous pass when no row qualifies."""
-    ok = F.sum((cond & pred).cast("long")).alias(f"c{idx}_ok")
-    n = F.sum(cond.cast("long")).alias(f"c{idx}_n")
+def _mostly(kw: dict) -> float:
+    return float(kw.get("mostly", 1.0))
+
+
+def _any(preds) -> Column:
+    """Or-chain, not Column.isin — wide InSet lists JIT pathologically."""
+    return reduce(operator.or_, preds, F.lit(False))
+
+
+def _all(preds) -> Column:
+    return reduce(operator.and_, preds, F.lit(True))
+
+
+def _in_set(c: Column, values) -> Column:
+    return _any(c == F.lit(v) for v in values)
+
+
+def _in_range(x: Column, lo, hi) -> Column:
+    """lo <= x <= hi, an absent (None) bound left open."""
+    return _all(
+        ([x >= F.lit(lo)] if lo is not None else [])
+        + ([x <= F.lit(hi)] if hi is not None else [])
+    )
+
+
+# -- verdict tests: test(kw) -> predicate over one observed value ----------
+
+
+def _bounds(kw: dict, lo: str = "min_value", hi: str = "max_value"):
+    lo, hi = kw.get(lo), kw.get(hi)
+    return lambda x: _between(x, lo, hi)
+
+
+def _equals(kw: dict):
+    want = kw["value"]
+    return lambda x: x == want
+
+
+def _soda(kw: dict):
+    op, rhs = _OPS[kw["op"]], kw["value"]
+    return lambda x: x is not None and op(x, rhs)
+
+
+def _max_count(kw: dict):
+    mx = kw.get("max_count", 0)
+    return lambda x: (x or 0) <= mx
+
+
+def _max_percent(kw: dict):
+    """An empty column passes (0 violations <= any max)."""
+    mx = float(kw.get("max_percent", 0.0))
+    return lambda p: p is None or p <= mx
+
+
+def _min_percent(kw: dict):
+    """An empty column fails (no evidence the minimum is met)."""
+    mn = float(kw.get("min_percent", 100.0))
+    return lambda p: p is not None and p >= mn
+
+
+def _no_duplicates(kw: dict):
+    # exact from one count and one countDistinct only when no duplicate is
+    # allowed; mostly < 1 needs GX's rows-whose-value-occurs-once count,
+    # i.e. a groupBy subaggregate
+    if _mostly(kw) < 1.0:
+        raise NotImplementedError(
+            "expect_column_values_to_be_unique with mostly<1 needs the "
+            "groupBy path; use duplicates operators instead"
+        )
+    return lambda dup: dup == 0
+
+
+# -- shared compiled forms --------------------------------------------------
+
+
+def _ratio(cond: Column, pred: Column, mostly: float,
+           column: str | None = None) -> _Compiled:
+    """Row ratio: of the n rows satisfying ``cond`` (the complement of GX's
+    ignore_row_if), the ok rows also satisfying ``pred``; verdict ok/n >=
+    mostly, with a vacuous pass when no row qualifies."""
     return _Compiled(
-        label,
+        [F.sum((cond & pred).cast("long")), F.sum(cond.cast("long"))],
+        lambda v: (v[1] or 0) == 0 or (v[0] or 0) / v[1] >= mostly,
         column,
-        [ok, n],
-        lambda v, m=mostly: (v[1] or 0) == 0 or (v[0] or 0) / v[1] >= m,
     )
 
 
-def _mostly_pred(pred: Column, col: Column, idx: int, mostly: float) -> _Compiled:
-    """Row-level expectation: fraction of NON-NULL rows satisfying pred
-    must be >= mostly (GX ignores nulls for value expectations except
-    not_be_null itself)."""
-    ok = F.sum((pred & col.isNotNull()).cast("long")).alias(f"c{idx}_ok")
-    nn = F.sum(col.isNotNull().cast("long")).alias(f"c{idx}_nn")
+def _scalar(agg: Column, ok, column: str | None = None) -> _Compiled:
+    return _Compiled([agg], lambda v: ok(v[0]), column)
+
+
+def _share(num: Column, of: Column, ok, scale: float = 100.0) -> _Compiled:
+    """``ok`` over scale·num/count(of) — None when ``of`` has no non-null
+    row."""
     return _Compiled(
-        label="",
-        column=None,
-        aggs=[ok, nn],
-        verdict=lambda v, m=mostly: (v[1] or 0) == 0 or (v[0] or 0) / v[1] >= m,
+        [num, F.count(of)],
+        lambda v: ok(scale * (v[0] or 0) / v[1] if v[1] else None),
     )
+
+
+# -- column metrics: shared by GX *_to_be_between, SodaCL and dqops ---------
+
+# count metrics are never NULL (0 on an empty frame); value metrics are
+# NULL there, and a None value fails every bound
+_METRICS: dict[str, Callable[[Column], Column]] = {
+    "row_count": lambda c: F.count(F.lit(1)),
+    "missing_count": lambda c: F.count_if(c.isNull()),
+    "distinct_count": F.countDistinct,
+    # Σ max(cnt-1, 0) without a groupBy = count_nonnull - countDistinct
+    "duplicate_count": lambda c: F.count(c) - F.countDistinct(c),
+    "min": F.min,
+    "max": F.max,
+    "mean": F.avg,
+    "avg": F.avg,
+    "sum": F.sum,
+    "stdev": F.stddev_samp,  # GX stdev = sample stddev
+    "median": lambda c: F.percentile(c, 0.5),
+}
+
+
+def _metric(name: str, test=_bounds):
+    """Check ``test(kw)`` on one column metric (row_count ignores the
+    column)."""
+    def build(df, kw):
+        c = None if name == "row_count" else _col(kw)
+        return _scalar(_METRICS[name](c), test(kw))
+    return build
+
+
+def _metric_share(name: str, test, scale: float = 100.0):
+    """Check ``test(kw)`` on a metric as a share of the non-null rows."""
+    def build(df, kw):
+        c = _col(kw)
+        return _share(_METRICS[name](c), c, test(kw), scale)
+    return build
+
+
+# -- row-level families ------------------------------------------------------
+
+
+def _values(pred_of):
+    """``pred_of(c, kw)`` over the column's NON-NULL rows (GX ignores
+    nulls for value expectations except the null checks themselves)."""
+    def build(df, kw):
+        c = _col(kw)
+        return _ratio(c.isNotNull(), pred_of(c, kw), _mostly(kw))
+    return build
+
+
+def _rows(pred_of):
+    """``pred_of(c)`` over every row."""
+    return lambda df, kw: _ratio(F.lit(True), pred_of(_col(kw)), _mostly(kw))
+
+
+def _pattern(key: str, negate: bool = False):
+    """The regex / LIKE family: ``key`` names the pattern kwarg; a *_list
+    matches on any (default) or all of its patterns, the negated form on
+    none of them."""
+    match = Column.like if "like" in key else Column.rlike
+
+    def pred(c, kw):
+        s = c.cast("string")
+        hits = [match(s, p) for p in
+                (kw[key] if key.endswith("_list") else [kw[key]])]
+        if negate:
+            return ~_any(hits)
+        all_of = str(kw.get("match_on", "any")).lower() == "all"
+        return _all(hits) if all_of else _any(hits)
+    return _values(pred)
+
+
+def _pair(pred_of):
+    """Column-pair check under GX's ignore_row_if default
+    both_values_are_missing: a half-null pair IS evaluated and can never
+    satisfy the predicate."""
+    def build(df, kw):
+        a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
+        return _ratio(
+            a.isNotNull() | b.isNotNull(),
+            a.isNotNull() & b.isNotNull() & pred_of(a, b, kw),
+            _mostly(kw), f"{kw['column_A']}~{kw['column_B']}",
+        )
+    return build
+
+
+def _multicolumn(pred_of):
+    """Check over ``column_list`` under GX's ignore_row_if default
+    all_values_are_missing: a partially-null row IS evaluated."""
+    def build(df, kw):
+        cols = [F.col(x) for x in kw["column_list"]]
+        return _ratio(
+            _any(x.isNotNull() for x in cols), pred_of(cols, kw),
+            _mostly(kw), ",".join(kw["column_list"]),
+        )
+    return build
+
+
+# array_distinct collapses duplicate NULLs, so a row with two NULLs and a
+# value counts as having a duplicate — GX's pandas NaN behavior
+_unique_within_record = _multicolumn(
+    lambda cols, kw: F.size(F.array_distinct(F.array(*cols))) == len(cols))
+
+
+_STRFTIME_TO_JAVA = {
+    "%Y": "yyyy", "%y": "yy", "%m": "MM", "%d": "dd",
+    "%H": "HH", "%I": "hh", "%M": "mm", "%S": "ss",
+    "%j": "DDD", "%p": "a", "%%": "%",
+}
+
+
+def _strftime_to_java(fmt: str) -> str:
+    out, i = [], 0
+    while i < len(fmt):
+        if fmt[i] == "%":
+            d = fmt[i : i + 2]
+            if d not in _STRFTIME_TO_JAVA:
+                raise ValueError(
+                    f"unsupported strftime directive {d!r} in format {fmt!r}"
+                )
+            out.append(_STRFTIME_TO_JAVA[d])
+            i += 2
+        else:
+            j = i
+            while j < len(fmt) and fmt[j] != "%":
+                j += 1
+            lit = fmt[i:j]
+            # quote any literal run containing characters java.time does
+            # not treat as plain literals: letters (pattern chars), the
+            # quote itself, optional-section brackets [ ], and the
+            # reserved # { } — leaving them bare silently changes the
+            # pattern ([..] = optional section) or throws at build time
+            if any(ch.isalpha() or ch in "'[]#{}" for ch in lit):
+                out.append("'" + lit.replace("'", "''") + "'")
+            else:
+                out.append(lit)
+            i = j
+    return "".join(out)
+
+
+def _strftime_ok(c: Column, fmt: str) -> Column:
+    """GX/dqops take a C strftime format; it is translated onto Spark's
+    java.time pattern and validated via try_to_timestamp (NULL on
+    mismatch).  Literal runs containing letters are quoted (an unquoted
+    'T' is an unknown java.time pattern letter) and an untranslatable
+    directive raises instead of silently failing every row."""
+    return F.try_to_timestamp(
+        c.cast("string"), F.lit(_strftime_to_java(fmt))
+    ).isNotNull()
+
+
+def _json_parseable(c: Column, kw) -> Column:
+    # get_json_object('$') echoes the document iff it parses as JSON — a
+    # JVM-side parseability probe with no UDF and no schema binding.  The
+    # scalar literal 'null' IS valid JSON (json.loads accepts it, so GX
+    # passes it) but get_json_object returns SQL NULL for it — special-
+    # cased with btrim over the RFC 8259 whitespace set (json.loads accepts
+    # "\tnull").  Other lax edge cases where Spark's parser diverges from
+    # json.loads (e.g. trailing garbage tolerance) keep Spark semantics,
+    # per the deterministic-subset convention
+    s = c.cast("string")
+    return (F.get_json_object(s, "$").isNotNull()
+            | (F.btrim(s, F.lit(" \t\n\r")) == "null"))
+
+
+def _dateutil_parseable(c: Column, kw) -> Column:
+    # engine twin of dateutil.parse: a plain timestamp/date cast (ISO
+    # shapes) coalesced with the reference's sniffable format table
+    # (timeliness_pack/main.py:26-61 — the same cascade as the F9
+    # mixed-format path).  Laxer dateutil inputs ("Jan 3 2020") are not
+    # claimed.  try_cast, not cast: ANSI mode throws on malformed input
+    s = c.cast("string")
+    return F.coalesce(
+        s.try_cast("timestamp"),
+        s.try_cast("date").cast("timestamp"),
+        *[F.try_to_timestamp(s, F.lit(fmt)) for _, fmt in DATE_REGEX_TABLE],
+    ).isNotNull()
+
+
+def _json_schema_valid(c: Column, kw) -> Column:
+    # the GX backend runs jsonschema.validate per value — inexpressible as
+    # a JVM Column, so a scalar pandas UDF (batched, no per-row Python
+    # dispatch) feeds the same fused agg.  Missing lib → contained failure
+    try:
+        import jsonschema
+    except ImportError as e:  # pragma: no cover - lib is baked in
+        raise ValueError(f"jsonschema unavailable: {e}") from e
+    import json
+
+    validator = jsonschema.Draft7Validator(kw["json_schema"])
+
+    @F.pandas_udf("boolean")
+    def _valid(s: pd.Series) -> pd.Series:
+        def one(x):
+            if x is None:
+                return False
+            try:
+                return validator.is_valid(json.loads(x))
+            except (ValueError, TypeError):
+                return False
+
+        return s.map(one)
+
+    return _valid(c.cast("string"))
+
+
+# -- distribution checks ----------------------------------------------------
+
+
+def _distinct_set(test):
+    def build(df, kw):
+        want = set(kw.get("value_set", []))
+        return _scalar(F.collect_set(_col(kw)),
+                       lambda have: test(set(have or []), want))
+    return build
+
+
+def _most_common(df, kw) -> _Compiled:
+    # Spark's mode() picks one value on ties (as does the GX pandas
+    # backend's head-of-modes when ties_okay is unset); callers who care
+    # about ties should pass a value_set covering the tie group.  An empty
+    # / all-NULL column has no mode (mode() → NULL) and FAILS: GX raises on
+    # no data, this engine's convention is a contained failed row
+    want = set(kw.get("value_set", []))
+    return _scalar(F.mode(_col(kw)), lambda m: m in want)
+
+
+def _quantiles(df, kw) -> _Compiled:
+    qr = kw["quantile_ranges"]
+    probs, ranges = qr["quantiles"], qr["value_ranges"]
+    return _scalar(
+        F.percentile(_col(kw), list(probs)),
+        lambda qs: qs is not None
+        and all(_between(q, lo, hi) for q, (lo, hi) in zip(qs, ranges)),
+    )
+
+
+def _kl_divergence(df, kw) -> _Compiled:
+    # GX continuous partition_object: bins edges + expected weights.
+    # Observed per-bin mass from the same single-pass agg; KL = Σ p·ln(p/w)
+    # (natural log — scipy.stats.entropy, GX's backend).  GX default
+    # holdouts are 0, so any observed mass OUTSIDE the partition (or inside
+    # a zero-weight bin) makes KL infinite → fail
+    po = kw["partition_object"]
+    bins, weights = list(po["bins"]), list(po["weights"])
+    threshold = float(kw["threshold"])
+    if len(bins) != len(weights) + 1:
+        raise ValueError("partition_object: len(bins) != len(weights)+1")
+    c = _col(kw)
+    last = len(weights) - 1
+    aggs = [
+        # np.histogram: the last bin is closed
+        F.sum(((c >= F.lit(lo)) & (c <= F.lit(hi) if j == last
+                                   else c < F.lit(hi))).cast("long"))
+        for j, (lo, hi) in enumerate(zip(bins, bins[1:]))
+    ] + [F.count(c)]
+
+    def verdict(v):
+        nn = v[-1] or 0
+        if nn == 0:
+            return False
+        counts = [x or 0 for x in v[:-1]]
+        if sum(counts) < nn:  # mass outside the partition → KL = +inf
+            return False
+        kl = 0.0
+        for cnt, wj in zip(counts, weights):
+            p = cnt / nn
+            if p == 0.0:
+                continue
+            if wj <= 0.0:  # observed mass in a zero-weight bin → +inf
+                return False
+            kl += p * math.log(p / wj)
+        return kl < threshold
+
+    return _Compiled(aggs, verdict)
+
+
+def _z_scores(df, kw) -> _Compiled:
+    # with mostly=1 the extreme z-score is max(max-mean, mean-min)/std
+    # (double-sided) or (max-mean)/std, so the metric aggregates suffice —
+    # no second scan; mostly<1 would need per-row z-scores (two passes)
+    if _mostly(kw) < 1.0:
+        raise NotImplementedError(
+            "expect_column_value_z_scores_to_be_less_than with "
+            "mostly<1 needs a second pass; unsupported"
+        )
+    thr = float(kw["threshold"])
+    double = bool(kw.get("double_sided", True))
+    c = _col(kw)
+
+    def verdict(v):
+        mn, mx, av, sd = v
+        if mn is None or sd is None or sd == 0:
+            return True  # empty, single-row or constant: no z outliers
+        z = (mx - av) / sd
+        if double:
+            z = max(z, (av - mn) / sd)
+        return z < thr
+
+    return _Compiled([_METRICS[m](c) for m in ("min", "max", "mean", "stdev")],
+                     verdict)
+
+
+# -- checks that run their own bounded job ----------------------------------
 
 
 def _monotone_violations(
@@ -233,16 +541,12 @@ def _monotone_violations(
         F.spark_partition_id().alias("__pid"),
         F.monotonically_increasing_id().alias("__mid"),
     ).where(F.col("__v").isNotNull())
-    from pyspark.sql.types import DoubleType, FloatType
-
     if isinstance(aug.schema["__v"].dataType, (FloatType, DoubleType)):
         # NaN is dropped like NULL (pandas-GX drops it with dropna);
         # keeping it would make the verdict partitioning-dependent —
         # Spark sorts NaN greatest in-partition while the driver-side
         # boundary compare follows Python where every NaN compare is False
         aug = aug.where(~F.isnan("__v"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("__pid").orderBy("__mid")
     prev = F.lag("__v").over(w)
     v = F.col("__v")
@@ -275,43 +579,34 @@ def _monotone_violations(
     return int(viol), int(steps)
 
 
-_STRFTIME_TO_JAVA = {
-    "%Y": "yyyy", "%y": "yy", "%m": "MM", "%d": "dd",
-    "%H": "HH", "%I": "hh", "%M": "mm", "%S": "ss",
-    "%j": "DDD", "%p": "a", "%%": "%",
-}
+def _monotone(decreasing: bool):
+    # order-dependent, so it cannot ride the fused agg: its own bounded job
+    # (never a global single-partition window), run before any shuffle
+    def build(df, kw) -> bool:
+        try:
+            viol, steps = _monotone_violations(
+                df, _col(kw), bool(kw.get("strictly", False)), decreasing
+            )
+        except AnalysisException as e:
+            # non-orderable column type etc. — route through the standard
+            # per-expectation compile containment
+            raise ValueError(f"monotone check unevaluable: {e}") from e
+        return (1.0 if steps == 0 else (steps - viol) / steps) >= _mostly(kw)
+    return build
 
 
-def _strftime_to_java(fmt: str) -> str:
-    out, i = [], 0
-    while i < len(fmt):
-        if fmt[i] == "%":
-            d = fmt[i : i + 2]
-            if d not in _STRFTIME_TO_JAVA:
-                raise ValueError(
-                    f"unsupported strftime directive {d!r} in "
-                    f"expect_column_values_to_match_strftime_format "
-                    f"format {fmt!r}"
-                )
-            out.append(_STRFTIME_TO_JAVA[d])
-            i += 2
-        else:
-            j = i
-            while j < len(fmt) and fmt[j] != "%":
-                j += 1
-            lit = fmt[i:j]
-            # quote any literal run containing characters java.time does
-            # not treat as plain literals: letters (pattern chars), the
-            # quote itself, optional-section brackets [ ], and the
-            # reserved # { } — leaving them bare silently changes the
-            # pattern ([..] = optional section) or throws at build time
-            if any(ch.isalpha() or ch in "'[]#{}" for ch in lit):
-                out.append("'" + lit.replace("'", "''") + "'")
-            else:
-                out.append(lit)
-            i = j
-    return "".join(out)
+def _other_table_row_count(df, kw) -> _Compiled:
+    # the other table resolves through the session catalog (a temp view or
+    # catalog table); its count is one bounded eager job, and the suite's
+    # own count stays in the fused agg
+    try:
+        other_n = df.sparkSession.table(kw["other_table_name"]).count()
+    except AnalysisException as e:
+        raise ValueError(f"other table unresolvable: {e}") from e
+    return _scalar(_METRICS["row_count"](None), lambda n: n == other_n)
 
+
+# -- schema-level checks: a bool, no aggregate ------------------------------
 
 _TYPE_ALIASES = {
     "int": {"int", "bigint", "smallint", "tinyint"},
@@ -329,615 +624,103 @@ _TYPE_ALIASES = {
 }
 
 
-def _spark_type_matches(have: str, want: str) -> bool:
-    """GX type_ name (pandas/GX/Spark spelling) vs a Spark simple dtype."""
-    return have == want or have in _TYPE_ALIASES.get(want, set())
+def _type_in(df: DataFrame, kw: dict, wanted) -> bool:
+    """The column's Spark dtype matches one GX type_ name (pandas/GX/Spark
+    spelling)."""
+    have = dict(df.dtypes).get(_col_name(kw), "")
+    return any(
+        have == w or have in _TYPE_ALIASES.get(w, set())
+        for w in (str(t).lower() for t in wanted)
+    )
 
 
-def compile_expectation(df: DataFrame, idx: int, exp: dict) -> _Compiled:
-    etype = exp["expectation_type"]
-    kw = exp.get("kwargs", {})
-    col_name = kw.get("column")
-    c = F.col(col_name) if col_name else None
-    mostly = float(kw.get("mostly", 1.0))
+def _columns_match_set(df, kw) -> bool:
+    want, have = set(kw.get("column_set", [])), set(df.columns)
+    return have == want if kw.get("exact_match", True) else want <= have
 
-    if etype == "expect_table_row_count_to_be_between":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        out = _Compiled(
-            etype,
-            None,
-            [F.count(F.lit(1)).alias(f"c{idx}_n")],
-            lambda v, lo=lo, hi=hi: _between(v[0], lo, hi),
-        )
-    elif etype == "expect_table_columns_to_match_set":
-        want = set(kw.get("column_set", []))
-        have = set(df.columns)
-        exact = bool(kw.get("exact_match", True))
-        success = have == want if exact else want <= have
-        out = _Compiled(etype, None, [], lambda v, s=success: s)
-    elif etype == "expect_column_values_to_not_be_null":
-        ok = F.sum(c.isNotNull().cast("long")).alias(f"c{idx}_ok")
-        n = F.count(F.lit(1)).alias(f"c{idx}_n")
-        out = _Compiled(
-            etype,
-            col_name,
-            [ok, n],
-            lambda v, m=mostly: (v[1] or 0) == 0 or (v[0] or 0) / v[1] >= m,
-        )
-    elif etype == "expect_column_values_to_be_between":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        pred = F.lit(True)
-        if lo is not None:
-            pred = pred & (c >= F.lit(lo))
-        if hi is not None:
-            pred = pred & (c <= F.lit(hi))
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_be_in_set":
-        vals = list(kw.get("value_set", []))
-        # Or-chain, not Column.isin — wide InSet lists JIT pathologically
-        pred = F.lit(False)
-        for val in vals:
-            pred = pred | (c == F.lit(val))
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_match_regex":
-        out = _mostly_pred(c.cast("string").rlike(kw["regex"]), c, idx, mostly)
-    elif etype == "expect_column_values_to_be_unique":
-        # unique-fraction = countDistinct-only-once / non-null; exact via
-        # two aggregates (count, countDistinct) + a duplicate-aware term is
-        # not expressible in one; GX counts rows whose value occurs once.
-        # count(*) - count over window is a shuffle; instead:
-        #   unique_rows = 2*countDistinct - count_nonnull  is WRONG with
-        # multiplicity>2, so use the exact form below (distinct + total +
-        # sum of per-value min(cnt-1,1)) via a groupBy subaggregate only
-        # when mostly < 1; for the common mostly=1.0 case
-        # countDistinct == count_nonnull suffices (no duplicates at all).
-        nn = F.count(c).alias(f"c{idx}_nn")
-        nd = F.countDistinct(c).alias(f"c{idx}_nd")
-        if mostly >= 1.0:
-            out = _Compiled(
-                etype,
-                col_name,
-                [nn, nd],
-                lambda v: (v[0] or 0) == (v[1] or 0),
-            )
-        else:
-            raise NotImplementedError(
-                "expect_column_values_to_be_unique with mostly<1 needs the "
-                "groupBy path; use duplicates operators instead"
-            )
-    elif etype in (
-        "expect_column_mean_to_be_between",
-        "expect_column_min_to_be_between",
-        "expect_column_max_to_be_between",
-        "expect_column_sum_to_be_between",
-        "expect_column_stdev_to_be_between",
-    ):
-        fn = {
-            "mean": F.avg,
-            "min": F.min,
-            "max": F.max,
-            "sum": F.sum,
-            "stdev": F.stddev_samp,  # GX stdev = sample stddev
-        }[etype.split("_")[2]]
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        out = _Compiled(
-            etype,
-            col_name,
-            [fn(c).alias(f"c{idx}_v")],
-            lambda v, lo=lo, hi=hi: _between(v[0], lo, hi),
-        )
-    elif etype in (
-        "expect_column_values_to_be_increasing",
-        "expect_column_values_to_be_decreasing",
-    ):
-        # Order-dependent — cannot ride the fused agg.  Evaluated here as
-        # its own bounded job (see _monotone_violations: per-partition lag
-        # windows + a driver-side boundary stitch over O(n_partitions)
-        # rows; never a global single-partition window).  "Row order"
-        # means INPUT order — well-defined for a file scan, the same
-        # order pandas-GX sees; run it before any shuffle.
-        try:
-            viol, steps = _monotone_violations(
-                df,
-                c,
-                strictly=bool(kw.get("strictly", False)),
-                decreasing=etype.endswith("decreasing"),
-            )
-        except AnalysisException as e:
-            # non-orderable column type etc. — route through the standard
-            # per-expectation compile containment
-            raise ValueError(f"monotone check unevaluable: {e}") from e
-        ok_frac = 1.0 if steps == 0 else (steps - viol) / steps
-        out = _Compiled(
-            etype, col_name, [], lambda v, okf=ok_frac, m=mostly: okf >= m
-        )
-    elif etype == "expect_column_value_lengths_to_be_between":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        ln = F.length(c.cast("string"))
-        pred = F.lit(True)
-        if lo is not None:
-            pred = pred & (ln >= F.lit(lo))
-        if hi is not None:
-            pred = pred & (ln <= F.lit(hi))
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_be_null":
-        ok = F.sum(c.isNull().cast("long")).alias(f"c{idx}_ok")
-        n = F.count(F.lit(1)).alias(f"c{idx}_n")
-        out = _Compiled(
-            etype,
-            col_name,
-            [ok, n],
-            lambda v, m=mostly: (v[1] or 0) == 0 or (v[0] or 0) / v[1] >= m,
-        )
-    elif etype == "expect_column_values_to_not_match_regex":
-        out = _mostly_pred(
-            ~c.cast("string").rlike(kw["regex"]), c, idx, mostly
-        )
-    elif etype == "expect_column_values_to_not_be_in_set":
-        pred = F.lit(True)
-        for val in list(kw.get("value_set", [])):
-            pred = pred & (c != F.lit(val))
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_match_strftime_format":
-        # GX takes a C strftime format; translate it onto Spark's
-        # java.time pattern and validate via try_to_timestamp (NULL on
-        # mismatch).  Literal runs containing letters are quoted (an
-        # unquoted 'T' is an unknown java.time pattern letter) and an
-        # untranslatable directive raises instead of silently producing
-        # a pattern that fails every row.
-        out = _mostly_pred(
-            F.try_to_timestamp(
-                c.cast("string"), F.lit(_strftime_to_java(kw["strftime_format"]))
-            ).isNotNull(),
-            c, idx, mostly,
-        )
-    elif etype == "expect_column_distinct_values_to_be_in_set":
-        # every distinct value ∈ set ⇔ no value outside the set
-        pred = F.lit(False)
-        for val in list(kw.get("value_set", [])):
-            pred = pred | (c == F.lit(val))
-        bad = F.sum((c.isNotNull() & ~pred).cast("long")).alias(f"c{idx}_bad")
-        out = _Compiled(etype, col_name, [bad], lambda v: (v[0] or 0) == 0)
-    elif etype in (
-        "expect_column_distinct_values_to_equal_set",
-        "expect_column_distinct_values_to_contain_set",
-    ):
-        want = set(kw.get("value_set", []))
-        eq = etype.endswith("equal_set")
-        out = _Compiled(
-            etype,
-            col_name,
-            [F.collect_set(c).alias(f"c{idx}_s")],
-            lambda v, w=want, e=eq: (
-                set(v[0] or []) == w if e else w <= set(v[0] or [])
-            ),
-        )
-    elif etype == "expect_column_unique_value_count_to_be_between":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        out = _Compiled(
-            etype,
-            col_name,
-            [F.countDistinct(c).alias(f"c{idx}_nd")],
-            lambda v, lo=lo, hi=hi: _between(v[0], lo, hi),
-        )
-    elif etype == "expect_column_proportion_of_unique_values_to_be_between":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        out = _Compiled(
-            etype,
-            col_name,
-            [F.countDistinct(c).alias(f"c{idx}_nd"),
-             F.count(c).alias(f"c{idx}_nn")],
-            lambda v, lo=lo, hi=hi: _between(
-                (v[0] or 0) / v[1] if v[1] else None, lo, hi
-            ),
-        )
-    elif etype == "expect_column_median_to_be_between":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        out = _Compiled(
-            etype,
-            col_name,
-            [F.expr(f"percentile({col_name}, 0.5)").alias(f"c{idx}_med")],
-            lambda v, lo=lo, hi=hi: _between(v[0], lo, hi),
-        )
-    elif etype == "expect_column_quantile_values_to_be_between":
-        qr = kw["quantile_ranges"]
-        probs, ranges = qr["quantiles"], qr["value_ranges"]
-        arr = ", ".join(str(p) for p in probs)
-        out = _Compiled(
-            etype,
-            col_name,
-            [F.expr(f"percentile({col_name}, array({arr}))").alias(
-                f"c{idx}_qs"
-            )],
-            lambda v, rs=ranges: v[0] is not None
-            and all(_between(q, lo, hi) for q, (lo, hi) in zip(v[0], rs)),
-        )
-    elif etype == "expect_column_kl_divergence_to_be_less_than":
-        # GX continuous partition_object: bins edges + expected weights.
-        # Observed per-bin mass from the same single-pass agg; KL =
-        # Σ p·ln(p/w) (natural log — scipy.stats.entropy, GX's backend).
-        # GX default holdouts are 0, so any observed mass OUTSIDE the
-        # partition (or inside a zero-weight bin) makes KL infinite → fail
-        po = kw["partition_object"]
-        bins, weights = list(po["bins"]), list(po["weights"])
-        threshold = float(kw["threshold"])
-        if len(bins) != len(weights) + 1:
-            raise ValueError("partition_object: len(bins) != len(weights)+1")
-        aggs = []
-        for j in range(len(weights)):
-            in_bin = (c >= F.lit(bins[j])) & (
-                (c <= F.lit(bins[j + 1]))  # np.histogram: last bin closed
-                if j == len(weights) - 1
-                else (c < F.lit(bins[j + 1]))
-            )
-            aggs.append(F.sum(in_bin.cast("long")).alias(f"c{idx}_b{j}"))
-        aggs.append(F.count(c).alias(f"c{idx}_nn"))
 
-        def _kl_verdict(v, w=weights, t=threshold):
-            import math
+def _column_exists(df, kw) -> bool:
+    # optional column_index is GX's 0-based positional assertion
+    name = _col_name(kw)
+    return name in df.columns and (
+        kw.get("column_index") is None
+        or df.columns.index(name) == int(kw["column_index"])
+    )
 
-            nn = v[-1] or 0
-            if nn == 0:
-                return False
-            counts = [x or 0 for x in v[:-1]]
-            if sum(counts) < nn:  # mass outside the partition → KL = +inf
-                return False
-            kl = 0.0
-            for cnt, wj in zip(counts, w):
-                p = cnt / nn
-                if p == 0.0:
-                    continue
-                if wj <= 0.0:  # observed mass in a zero-weight bin → +inf
-                    return False
-                kl += p * math.log(p / wj)
-            return kl < t
 
-        out = _Compiled(etype, col_name, aggs, _kl_verdict)
-    elif etype == "expect_column_pair_values_a_to_be_greater_than_b":
-        a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
-        pred = a >= b if kw.get("or_equal") else a > b
-        # GX pair default ignore_row_if="both_values_are_missing": a
-        # half-null pair IS evaluated (and can never satisfy pred)
-        any_nn = a.isNotNull() | b.isNotNull()
-        out = _ratio_pred(
-            etype, f"{kw['column_A']}~{kw['column_B']}",
-            a.isNotNull() & b.isNotNull() & pred, any_nn, idx, mostly,
-        )
-    elif etype == "expect_compound_columns_to_be_unique":
-        cols = [F.col(x) for x in kw["column_list"]]
-        nn = F.count(F.lit(1)).alias(f"c{idx}_n")
-        nd = F.countDistinct(F.struct(*cols)).alias(f"c{idx}_nd")
-        out = _Compiled(
-            etype,
-            ",".join(kw["column_list"]),
-            [nn, nd],
-            lambda v: (v[0] or 0) == (v[1] or 0),
-        )
-    elif etype == "expect_table_column_count_to_be_between":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        n_cols = len(df.columns)
-        out = _Compiled(
-            etype, None, [], lambda v, s=_between(n_cols, lo, hi): s
-        )
-    elif etype == "expect_table_row_count_to_equal":
-        want = kw["value"]
-        out = _Compiled(
-            etype,
-            None,
-            [F.count(F.lit(1)).alias(f"c{idx}_n")],
-            lambda v, w=want: (v[0] or 0) == w,
-        )
-    elif etype == "expect_table_row_count_to_equal_other_table":
-        # the other table resolves through the session catalog (a temp
-        # view or catalog table); its count is taken eagerly here — one
-        # bounded metadata-ish scan — and the suite's own count stays in
-        # the fused agg
-        try:
-            other_n = df.sparkSession.table(
-                kw["other_table_name"]
-            ).count()
-        except AnalysisException as e:
-            raise ValueError(f"other table unresolvable: {e}") from e
-        out = _Compiled(
-            etype,
-            None,
-            [F.count(F.lit(1)).alias(f"c{idx}_n")],
-            lambda v, w=other_n: (v[0] or 0) == w,
-        )
-    elif etype == "expect_column_most_common_value_to_be_in_set":
-        # Spark's mode() picks one value on ties (as does the GX pandas
-        # backend's head-of-modes when ties_okay is unset); callers who
-        # care about ties should pass a value_set covering the tie group.
-        # An empty / all-NULL column has no mode (mode() → NULL) and
-        # FAILS: GX raises on no data, this engine's convention is a
-        # contained failed row instead of an aborted suite
-        want = set(kw.get("value_set", []))
-        out = _Compiled(
-            etype,
-            col_name,
-            [F.mode(c).alias(f"c{idx}_m")],
-            lambda v, w=want: v[0] in w,
-        )
-    elif etype == "expect_column_pair_values_to_be_equal":
-        a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
-        # ignore_row_if="both_values_are_missing" (GX pair default):
-        # (x, NULL) is evaluated and counts unexpected
-        out = _ratio_pred(
-            etype, f"{kw['column_A']}~{kw['column_B']}",
-            a.isNotNull() & b.isNotNull() & (a == b),
-            a.isNotNull() | b.isNotNull(), idx, mostly,
-        )
-    elif etype == "expect_column_values_to_match_like_pattern":
-        out = _mostly_pred(
-            c.cast("string").like(kw["like_pattern"]), c, idx, mostly
-        )
-    elif etype == "expect_column_values_to_not_match_like_pattern":
-        out = _mostly_pred(
-            ~c.cast("string").like(kw["like_pattern"]), c, idx, mostly
-        )
-    elif etype == "expect_column_values_to_be_in_type_list":
-        have = dict(df.dtypes).get(col_name, "")
-        ok_any = any(
-            _spark_type_matches(have, str(t).lower())
-            for t in kw.get("type_list", [])
-        )
-        out = _Compiled(etype, col_name, [], lambda v, s=ok_any: s)
-    elif etype == "expect_column_value_z_scores_to_be_less_than":
-        # single-pass formulation: with mostly=1 the extreme z-score is
-        # max(max-mean, mean-min)/std (double-sided) or (max-mean)/std,
-        # so min/max/avg/stddev aggregates suffice — no second scan.
-        # mostly<1 would need per-row z-scores (two passes); contained.
-        if mostly < 1.0:
-            raise NotImplementedError(
-                "expect_column_value_z_scores_to_be_less_than with "
-                "mostly<1 needs a second pass; unsupported"
-            )
-        thr = float(kw["threshold"])
-        double = bool(kw.get("double_sided", True))
-        aggs = [
-            F.min(c).alias(f"c{idx}_mn"),
-            F.max(c).alias(f"c{idx}_mx"),
-            F.avg(c).alias(f"c{idx}_av"),
-            F.stddev_samp(c).alias(f"c{idx}_sd"),
-        ]
+# -- dqops families ----------------------------------------------------------
 
-        def _z_verdict(v, thr=thr, double=double):
-            mn, mx, av, sd = v
-            if mn is None or sd is None:
-                return True  # empty or single-row column: no z outliers
-            if sd == 0:
-                return True
-            z = (mx - av) / sd
-            if double:
-                z = max(z, (av - mn) / sd)
-            return z < thr
 
-        out = _Compiled(etype, col_name, aggs, _z_verdict)
-    elif etype == "expect_column_values_to_be_of_type":
-        # schema-level: no data pass (GX type_ names map onto Spark's)
-        want = str(kw.get("type_", "")).lower()
-        have = dict(df.dtypes).get(col_name, "")
-        ok = _spark_type_matches(have, want)
-        out = _Compiled(etype, col_name, [], lambda v, s=ok: s)
-    elif etype == "expect_table_column_count_to_equal":
-        want = int(kw["value"])
-        out = _Compiled(
-            etype, None, [], lambda v, s=(len(df.columns) == want): s
-        )
-    elif etype == "expect_column_value_lengths_to_equal":
-        want = int(kw["value"])
-        # cast-based deviation (like the dateutil/mode entries): GX raises
-        # a type error on non-string columns, this engine evaluates the
-        # string representation's length instead — containment convention
-        # favors a deterministic verdict over a hard failure
-        out = _mostly_pred(
-            F.length(c.cast("string")) == F.lit(want), c, idx, mostly
-        )
-    elif etype == "expect_column_values_to_match_regex_list":
-        pats = list(kw["regex_list"])
-        match_on = str(kw.get("match_on", "any")).lower()
-        s = c.cast("string")
-        pred = F.lit(match_on == "all")
-        for p in pats:
-            pred = (
-                (pred & s.rlike(p)) if match_on == "all" else (pred | s.rlike(p))
-            )
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_not_match_regex_list":
-        s = c.cast("string")
-        pred = F.lit(True)
-        for p in kw["regex_list"]:
-            pred = pred & ~s.rlike(p)
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_be_json_parseable":
-        # get_json_object('$') echoes the document iff it parses as JSON —
-        # a JVM-side parseability probe with no UDF and no schema binding.
-        # The scalar literal 'null' IS valid JSON (json.loads accepts it,
-        # so GX passes it) but get_json_object returns SQL NULL for it —
-        # special-cased below.  Other lax edge cases where Spark's parser
-        # diverges from json.loads (e.g. trailing garbage tolerance) keep
-        # Spark semantics, per the deterministic-subset convention
-        s = c.cast("string")
-        # btrim with the RFC 8259 whitespace set (space/tab/LF/CR), not
-        # plain trim (spaces only): json.loads accepts "\tnull" etc.
-        out = _mostly_pred(
-            F.get_json_object(s, "$").isNotNull()
-            | (F.btrim(s, F.lit(" \t\n\r")) == "null"),
-            c, idx, mostly,
-        )
-    elif etype == "expect_column_values_to_be_dateutil_parseable":
-        # engine twin of dateutil.parse: a plain timestamp/date cast
-        # (ISO shapes) coalesced with the reference's sniffable format
-        # table (timeliness_pack/main.py:26-61 — the same cascade as the
-        # F9 mixed-format path).  Laxer dateutil inputs ("Jan 3 2020")
-        # are not claimed; this is the documented, deterministic subset
-        s = c.cast("string")
-        # try_cast, not cast: ANSI mode throws on malformed datetime input
-        parsed = F.coalesce(
-            s.try_cast("timestamp"),
-            s.try_cast("date").cast("timestamp"),
-            *[F.try_to_timestamp(s, F.lit(fmt))
-              for _, fmt in DATE_REGEX_TABLE],
-        )
-        out = _mostly_pred(parsed.isNotNull(), c, idx, mostly)
-    elif etype == "expect_multicolumn_sum_to_equal":
-        cols = [F.col(x) for x in kw["column_list"]]
-        want = kw["sum_total"]
-        # ignore_row_if="all_values_are_missing" (GX default): a
-        # partially-null row IS evaluated, with the GX pandas backend's
-        # NaN-skipping sum — (4, NULL) sums to 4
-        any_nn = F.lit(False)
-        total = F.lit(0)
-        for x in cols:
-            any_nn = any_nn | x.isNotNull()
-            total = total + F.coalesce(x, F.lit(0))
-        out = _ratio_pred(
-            etype, ",".join(kw["column_list"]),
-            total == F.lit(want), any_nn, idx, mostly,
-        )
-    elif etype in (
-        "expect_select_column_values_to_be_unique_within_record",
-        # legacy GX name for the same check (deprecated alias; the GX
-        # changelog renamed it to the select_column form)
-        "expect_multicolumn_values_to_be_unique",
-    ):
-        # per-row distinctness of the selected columns; rows where every
-        # selected value is NULL are ignored (GX ignore_row_if default
-        # "all_values_are_missing").  array_distinct collapses duplicate
-        # NULLs, so a row with two NULLs and a value counts as having a
-        # duplicate — matching GX's pandas NaN behavior
-        cols = [F.col(x) for x in kw["column_list"]]
-        arr = F.array(*cols)
-        any_nn = F.lit(False)
-        for x in cols:
-            any_nn = any_nn | x.isNotNull()
-        distinct_ok = F.size(F.array_distinct(arr)) == len(cols)
-        out = _ratio_pred(
-            etype, ",".join(kw["column_list"]), distinct_ok, any_nn,
-            idx, mostly,
-        )
-    elif etype == "expect_column_pair_values_to_be_in_set":
-        a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
-        # Or-chain over the pair set (same InSet-JIT rationale as
-        # values_to_be_in_set); ignore_row_if="both_values_are_missing"
-        # — a half-null pair is evaluated and can never be in the set
-        pred = F.lit(False)
-        for pa, pb in kw["value_pairs_set"]:
-            pred = pred | ((a == F.lit(pa)) & (b == F.lit(pb)))
-        out = _ratio_pred(
-            etype, f"{kw['column_A']}~{kw['column_B']}",
-            a.isNotNull() & b.isNotNull() & pred,
-            a.isNotNull() | b.isNotNull(), idx, mostly,
-        )
-    elif etype == "expect_column_to_exist":
-        # schema-level, no data pass; optional column_index is GX's
-        # 0-based positional assertion
-        exists = col_name in df.columns
-        if exists and kw.get("column_index") is not None:
-            exists = df.columns.index(col_name) == int(kw["column_index"])
-        out = _Compiled(etype, col_name, [], lambda v, s=exists: s)
-    elif etype == "expect_table_columns_to_match_ordered_list":
-        want = [str(x) for x in (kw.get("column_list") or [])]
-        ok = list(df.columns) == want
-        out = _Compiled(etype, None, [], lambda v, s=ok: s)
-    elif etype == "expect_column_values_to_match_like_pattern_list":
-        match_on = str(kw.get("match_on", "any")).lower()
-        s = c.cast("string")
-        pred = F.lit(match_on == "all")
-        for p in kw["like_pattern_list"]:
-            pred = (
-                (pred & s.like(p)) if match_on == "all" else (pred | s.like(p))
-            )
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_not_match_like_pattern_list":
-        s = c.cast("string")
-        pred = F.lit(True)
-        for p in kw["like_pattern_list"]:
-            pred = pred & ~s.like(p)
-        out = _mostly_pred(pred, c, idx, mostly)
-    elif etype == "expect_column_values_to_match_json_schema":
-        # real JSON-Schema validation (the GX backend runs
-        # jsonschema.validate per value) — inexpressible as a JVM Column,
-        # so this is the suite's one sanctioned Arrow crossing: a scalar
-        # pandas UDF (batched, no per-row Python dispatch) feeding the
-        # same fused agg.  Missing lib → contained failed row
-        try:
-            import jsonschema
-        except ImportError as e:  # pragma: no cover - lib is baked in
-            raise ValueError(f"jsonschema unavailable: {e}") from e
-        import json as _json
+def _found(flag):
+    """dqops *_found: rows flagged by ``flag(c)`` <= max_count."""
+    return lambda df, kw: _scalar(TX.count_if(flag(_col(kw))), _max_count(kw))
 
-        schema = kw["json_schema"]
-        validator = jsonschema.Draft7Validator(schema)
 
-        @F.pandas_udf("boolean")
-        def _valid(s: pd.Series) -> pd.Series:
-            def one(x):
-                if x is None:
-                    return False
-                try:
-                    return validator.is_valid(_json.loads(x))
-                except (ValueError, TypeError):
-                    return False
+def _percent(flag_of, test):
+    """dqops *_percent: ``flag_of(c, kw)`` -> (flag predicate, the Column
+    whose non-null rows are the denominator); ``test`` bounds the
+    percent."""
+    def build(df, kw):
+        flag, of = flag_of(_col(kw), kw)
+        return _share(TX.count_if(flag), of, test(kw))
+    return build
 
-            return s.map(one)
 
-        out = _mostly_pred(_valid(c.cast("string")), c, idx, mostly)
+def _in_future(c: Column, kw):
+    # an optional fixed ISO 'now' keeps tests and cross-engine oracles
+    # deterministic; it is validated eagerly so an unparseable one fails
+    # the check instead of compiling to cast(NULL), whose `ts > NULL`
+    # silently passes every dataset (non-ANSI) or throws at runtime (ANSI)
+    if "now" in kw:
+        datetime.fromisoformat(str(kw["now"]))
+        now = F.lit(kw["now"]).cast("timestamp")
     else:
-        # reference behavior: silently skip unknown expectations
-        # (great_expectations_pack/main.py:45-46 `if not hasattr: continue`)
-        out = _Compiled(etype, col_name, [], None)
-    out.label = etype
-    # pair/compound branches set a composite column label in the
-    # constructor; only fill in the plain kwargs column when unset
-    if out.column is None:
-        out.column = col_name
-    return out
+        now = F.current_timestamp()
+    ts = c.cast("timestamp")
+    return ts > now, ts
 
 
-_SODA_AGG = re.compile(
-    r"^\s*(row_count|missing_count|duplicate_count|min|max|avg|sum)"
-    r"(?:\(\s*([A-Za-z0-9_]+)\s*\))?\s*(>=|<=|!=|==|=|>|<)\s*(-?[\d.]+)\s*$"
-)
+def _in_date_range(c: Column, kw):
+    d = c.cast("date")
+    lo, hi = (F.lit(kw[k]).cast("date") for k in ("min_date", "max_date"))
+    return (d >= lo) & (d <= hi), d
 
 
-def parse_sodacl(check: str) -> dict:
-    """Translate a SodaCL-style scalar check ("row_count > 0",
-    "duplicate_count(col) = 0") into the internal expectation form."""
-    m = _SODA_AGG.match(check)
-    if not m:
-        raise ValueError(f"unsupported SodaCL check: {check!r}")
-    metric, col, op, rhs = m.groups()
-    return {
-        "expectation_type": f"soda:{metric}",
-        "kwargs": {"column": col, "op": op, "value": float(rhs)},
-        "_raw": check,
-    }
+_TEXT_FLAGS = {
+    "empty_text": TX.is_empty,
+    "whitespace_text": TX.is_whitespace_only,
+    "null_placeholder_text": TX.is_null_placeholder,
+    "text_surrounded_by_whitespace": TX.is_surrounded_by_whitespace,
+}
 
+# PII family (§14): un-anchored containment over the SAME regex catalog the
+# pii scanner and scrub stage use, so a dqops check and the scrub agree on
+# what "contains email" means; usa_phone uses the US-shape pattern (dqops's
+# sensor is US-specific, unlike the scanner's international one)
+_PII = dict(PII_PATTERNS)
+_PII_FLAGS = {
+    "email": _PII["email"],
+    "ip4": _PII["ipv4"],
+    "ip6": _PII["ipv6"],
+    "usa_zipcode": _PII["usa_zipcode"],
+    "usa_phone": USA_PHONE_PATTERN,
+}
 
-def compile_soda(df: DataFrame, idx: int, exp: dict) -> _Compiled:
-    kw = exp["kwargs"]
-    metric = exp["expectation_type"].split(":", 1)[1]
-    col, op, rhs = kw.get("column"), _OPS[kw["op"]], kw["value"]
-    c = F.col(col) if col else None
-    if metric == "row_count":
-        aggs = [F.count(F.lit(1)).alias(f"c{idx}_v")]
-        verdict = lambda v: op(v[0] or 0, rhs)  # noqa: E731
-    elif metric == "missing_count":
-        aggs = [F.sum(c.isNull().cast("long")).alias(f"c{idx}_v")]
-        verdict = lambda v: op(v[0] or 0, rhs)  # noqa: E731
-    elif metric == "duplicate_count":
-        # Σ max(cnt-1, 0) without a groupBy = count_nonnull - countDistinct
-        aggs = [
-            F.count(c).alias(f"c{idx}_nn"),
-            F.countDistinct(c).alias(f"c{idx}_nd"),
-        ]
-        verdict = lambda v: op((v[0] or 0) - (v[1] or 0), rhs)  # noqa: E731
-    else:
-        fn = {"min": F.min, "max": F.max, "avg": F.avg, "sum": F.sum}[metric]
-        aggs = [fn(c).alias(f"c{idx}_v")]
-        verdict = lambda v: v[0] is not None and op(v[0], rhs)  # noqa: E731
-    return _Compiled(exp.get("_raw", metric), col, aggs, verdict)
+# dqops percent checks: check -> (flag_of, percent bound)
+_PERCENT_CHECKS = {
+    **{f"{name}_percent": (lambda c, kw, f=f: (f(c), c), _max_percent)
+       for name, f in _TEXT_FLAGS.items()},
+    **{f"contains_{name}_percent": (
+        lambda c, kw, p=p: (contains_pattern(c.cast("string"), p), c),
+        _max_percent,
+    ) for name, p in _PII_FLAGS.items()},
+    "date_values_in_future_percent": (_in_future, _max_percent),
+    "date_in_range_percent": (_in_date_range, _min_percent),
+    "text_match_date_format_percent": (
+        lambda c, kw: (c.isNotNull() & _strftime_ok(c, kw["date_format"]), c),
+        _min_percent,
+    ),
+}
 
 
 def _dqops_sql_expr(template, column: str | None) -> Column:
@@ -960,257 +743,235 @@ def _dqops_sql_expr(template, column: str | None) -> Column:
         raise ValueError(f"unparseable dqops SQL fragment {s!r}: {e}") from e
 
 
-def compile_dqops(df: DataFrame, idx: int, exp: dict) -> _Compiled:
-    """dqops-catalog checks (dqops-checks-reference.md — WHITESPACE §18,
-    DATETIME §9, UNIQUENESS §17) compiled onto the same single-pass agg.
+def _sql_condition(kw: dict, column: str | None) -> Column:
+    return F.coalesce(
+        _dqops_sql_expr(kw["sql_condition"], column).cast("boolean"),
+        F.lit(False),  # a NULL condition is a failed row, dqops-style
+    )
 
-    Check names use the ``dqops:`` prefix (``dqops:empty_text_found``).
-    Percent checks follow the dqops 0–100 scale; denominators are NON-NULL
-    row counts (the text_validation pack's convention — NULLs are counted
-    by the NULLS family, not double-counted here).  An empty column passes
-    max-bounded checks (0 ≤ max) and fails min-bounded ones.
 
-    ``date_values_in_future_percent`` accepts an optional ``now`` kwarg
-    (ISO timestamp) so tests and cross-engine oracles stay deterministic;
-    production callers omit it and get ``current_timestamp()``.
-    """
-    from packs_spark.functions import text as TX
+# CUSTOM SQL family (§7 column / §4 table): a user SQL condition or
+# aggregate expression compiled straight into the fused agg
+_SQL_CHECKS = {
+    "sql_condition_failed": lambda kw, col: _scalar(
+        TX.count_if(~_sql_condition(kw, col)), _max_count(kw)),
+    # the dqops sensor is 100·passed/count(*) over ALL rows
+    "sql_condition_passed_percent": lambda kw, col: _share(
+        TX.count_if(_sql_condition(kw, col)), F.lit(1), _min_percent(kw)),
+    "sql_aggregate_expression": lambda kw, col: _scalar(
+        _dqops_sql_expr(kw["sql_expression"], col), _bounds(kw)),
+}
 
-    kw = exp.get("kwargs", {})
-    check = exp["expectation_type"].split(":", 1)[1]
-    col_name = kw.get("column")
-    label = exp["expectation_type"]
 
-    # CUSTOM SQL family (§7 column / §4 table): a user SQL condition or
-    # aggregate expression compiled straight into the fused agg.  dqops
-    # placeholder conventions: {column} → the target column, {alias}./
-    # {table}. prefixes → the frame itself (bare names resolve)
-    if check in (
-        "sql_condition_failed_on_column",
-        "sql_condition_passed_percent_on_column",
-        "sql_condition_failed_on_table",
-        "sql_condition_passed_percent_on_table",
-        "sql_aggregate_expression_on_column",
-        "sql_aggregate_expression_on_table",
-    ):
-        if check.endswith("_on_column") and not col_name:
-            raise ValueError(f"dqops check {check!r} requires a 'column' kwarg")
-        if check.startswith("sql_aggregate_expression"):
-            agg = _dqops_sql_expr(kw["sql_expression"], col_name)
-            lo, hi = kw.get("min_value"), kw.get("max_value")
-            return _Compiled(
-                label, col_name,
-                [agg.alias(f"c{idx}_v")],
-                lambda v, lo=lo, hi=hi: _between(v[0], lo, hi),
-            )
-        cond = F.coalesce(
-            _dqops_sql_expr(kw["sql_condition"], col_name).cast("boolean"),
-            F.lit(False),  # a NULL condition is a failed row, dqops-style
-        )
-        if check.startswith("sql_condition_failed"):
-            mx = kw.get("max_count", 0)
-            return _Compiled(
-                label, col_name,
-                [F.sum((~cond).cast("long")).alias(f"c{idx}_v")],
-                lambda v, mx=mx: (v[0] or 0) <= mx,
-            )
-        # passed_percent: dqops sensor is 100·passed/count(*) over ALL rows
-        mn = float(kw.get("min_percent", 100.0))
-        return _Compiled(
-            label, col_name,
-            [F.sum(cond.cast("long")).alias(f"c{idx}_v"),
-             F.count(F.lit(1)).alias(f"c{idx}_n")],
-            _pct_at_least(mn),
-        )
+def _sql_check(build, on_column: bool):
+    return lambda df, kw: build(
+        kw, _col_name(kw) if on_column else kw.get("column")
+    )
 
-    # every dqops check here is column-level; without this, a missing
-    # column would either silently PASS (text predicates against a None
-    # operand are NULL for every row) or raise a PySpark error class the
-    # suite containment doesn't catch
-    if not col_name:
-        raise ValueError(f"dqops check {check!r} requires a 'column' kwarg")
-    c = F.col(col_name)
 
-    _TEXT_PREDS = {
-        "empty_text": TX.is_empty,
-        "whitespace_text": TX.is_whitespace_only,
-        "null_placeholder_text": TX.is_null_placeholder,
-        "text_surrounded_by_whitespace": TX.is_surrounded_by_whitespace,
+# -- the catalog --------------------------------------------------------------
+
+CATALOG: dict[str, Callable[[DataFrame, dict], _Compiled | bool]] = {
+    # table and column metrics
+    "expect_table_row_count_to_be_between": _metric("row_count"),
+    "expect_table_row_count_to_equal": _metric("row_count", _equals),
+    "expect_table_row_count_to_equal_other_table": _other_table_row_count,
+    **{f"expect_column_{m}_to_be_between": _metric(m)
+       for m in ("mean", "median", "min", "max", "sum", "stdev")},
+    "expect_column_unique_value_count_to_be_between":
+        _metric("distinct_count"),
+    "expect_column_proportion_of_unique_values_to_be_between":
+        _metric_share("distinct_count", _bounds, scale=1),
+    "expect_column_values_to_be_unique":
+        _metric("duplicate_count", _no_duplicates),
+    "expect_compound_columns_to_be_unique": lambda df, kw: _scalar(
+        _METRICS["duplicate_count"](F.struct(*map(F.col, kw["column_list"]))),
+        lambda dup: dup == 0, ",".join(kw["column_list"])),
+    **{f"soda:{m}": _metric(m, _soda) for m in (
+        "row_count", "missing_count", "duplicate_count",
+        "min", "max", "avg", "sum")},
+    "dqops:distinct_count": _metric("distinct_count"),
+    "dqops:distinct_percent": _metric_share(
+        "distinct_count", lambda kw: _bounds(kw, "min_percent", "max_percent")),
+    "dqops:duplicate_count": _metric("duplicate_count", _max_count),
+    "dqops:duplicate_percent": _metric_share("duplicate_count", _max_percent),
+    # row-level values
+    "expect_column_values_to_not_be_null": _rows(Column.isNotNull),
+    "expect_column_values_to_be_null": _rows(Column.isNull),
+    "expect_column_values_to_be_between": _values(
+        lambda c, kw: _in_range(c, kw.get("min_value"), kw.get("max_value"))),
+    "expect_column_value_lengths_to_be_between": _values(
+        lambda c, kw: _in_range(F.length(c.cast("string")),
+                                kw.get("min_value"), kw.get("max_value"))),
+    # cast-based deviation: GX raises a type error on non-string columns;
+    # this engine measures the string representation's length instead
+    "expect_column_value_lengths_to_equal": _values(
+        lambda c, kw: F.length(c.cast("string")) == F.lit(int(kw["value"]))),
+    "expect_column_values_to_be_in_set": _values(
+        lambda c, kw: _in_set(c, kw.get("value_set", []))),
+    "expect_column_values_to_not_be_in_set": _values(
+        lambda c, kw: ~_in_set(c, kw.get("value_set", []))),
+    # every distinct value ∈ set ⇔ no non-null value outside it (no mostly)
+    "expect_column_distinct_values_to_be_in_set": lambda df, kw: _ratio(
+        _col(kw).isNotNull(), _in_set(_col(kw), kw.get("value_set", [])), 1.0),
+    "expect_column_values_to_match_regex": _pattern("regex"),
+    "expect_column_values_to_not_match_regex": _pattern("regex", True),
+    "expect_column_values_to_match_regex_list": _pattern("regex_list"),
+    "expect_column_values_to_not_match_regex_list":
+        _pattern("regex_list", True),
+    "expect_column_values_to_match_like_pattern": _pattern("like_pattern"),
+    "expect_column_values_to_not_match_like_pattern":
+        _pattern("like_pattern", True),
+    "expect_column_values_to_match_like_pattern_list":
+        _pattern("like_pattern_list"),
+    "expect_column_values_to_not_match_like_pattern_list":
+        _pattern("like_pattern_list", True),
+    "expect_column_values_to_match_strftime_format": _values(
+        lambda c, kw: _strftime_ok(c, kw["strftime_format"])),
+    "expect_column_values_to_be_json_parseable": _values(_json_parseable),
+    "expect_column_values_to_be_dateutil_parseable":
+        _values(_dateutil_parseable),
+    "expect_column_values_to_match_json_schema": _values(_json_schema_valid),
+    # column pairs and multicolumn rows
+    "expect_column_pair_values_a_to_be_greater_than_b": _pair(
+        lambda a, b, kw: a >= b if kw.get("or_equal") else a > b),
+    "expect_column_pair_values_to_be_equal": _pair(lambda a, b, kw: a == b),
+    "expect_column_pair_values_to_be_in_set": _pair(
+        lambda a, b, kw: _any((a == F.lit(pa)) & (b == F.lit(pb))
+                              for pa, pb in kw["value_pairs_set"])),
+    # the GX pandas backend's NaN-skipping sum: (4, NULL) sums to 4
+    "expect_multicolumn_sum_to_equal": _multicolumn(
+        lambda cols, kw: sum((F.coalesce(x, F.lit(0)) for x in cols),
+                             F.lit(0)) == F.lit(kw["sum_total"])),
+    "expect_select_column_values_to_be_unique_within_record":
+        _unique_within_record,
+    # legacy GX name for the same check (renamed to the select_column form)
+    "expect_multicolumn_values_to_be_unique": _unique_within_record,
+    # distributions
+    "expect_column_distinct_values_to_equal_set": _distinct_set(operator.eq),
+    "expect_column_distinct_values_to_contain_set": _distinct_set(operator.ge),
+    "expect_column_most_common_value_to_be_in_set": _most_common,
+    "expect_column_quantile_values_to_be_between": _quantiles,
+    "expect_column_kl_divergence_to_be_less_than": _kl_divergence,
+    "expect_column_value_z_scores_to_be_less_than": _z_scores,
+    # input order
+    "expect_column_values_to_be_increasing": _monotone(decreasing=False),
+    "expect_column_values_to_be_decreasing": _monotone(decreasing=True),
+    # schema level
+    "expect_table_columns_to_match_set": _columns_match_set,
+    "expect_table_columns_to_match_ordered_list": lambda df, kw: list(
+        df.columns) == [str(x) for x in (kw.get("column_list") or [])],
+    "expect_table_column_count_to_be_between": lambda df, kw: _between(
+        len(df.columns), kw.get("min_value"), kw.get("max_value")),
+    "expect_table_column_count_to_equal":
+        lambda df, kw: len(df.columns) == int(kw["value"]),
+    "expect_column_to_exist": _column_exists,
+    "expect_column_values_to_be_of_type":
+        lambda df, kw: _type_in(df, kw, [kw.get("type_", "")]),
+    "expect_column_values_to_be_in_type_list":
+        lambda df, kw: _type_in(df, kw, kw.get("type_list", [])),
+    # dqops text, PII, date and custom SQL families
+    **{f"dqops:{name}_found": _found(f) for name, f in _TEXT_FLAGS.items()},
+    **{f"dqops:{name}": _percent(*spec)
+       for name, spec in _PERCENT_CHECKS.items()},
+    **{f"dqops:{name}_on_{scope}": _sql_check(build, scope == "column")
+       for name, build in _SQL_CHECKS.items()
+       for scope in ("column", "table")},
+}
+
+
+_SODA_AGG = re.compile(
+    r"^\s*(row_count|missing_count|duplicate_count|min|max|avg|sum)"
+    r"(?:\(\s*([A-Za-z0-9_]+)\s*\))?\s*(>=|<=|!=|==|=|>|<)\s*(-?[\d.]+)\s*$"
+)
+
+
+def parse_sodacl(check: str) -> dict:
+    """Translate a SodaCL-style scalar check ("row_count > 0",
+    "duplicate_count(col) = 0") into the internal expectation form."""
+    m = _SODA_AGG.match(check)
+    if not m:
+        raise ValueError(f"unsupported SodaCL check: {check!r}")
+    metric, col, op, rhs = m.groups()
+    return {
+        "expectation_type": f"soda:{metric}",
+        "kwargs": {"column": col, "op": op, "value": float(rhs)},
+        "_raw": check,
     }
-    for base, predf in _TEXT_PREDS.items():
-        if check == f"{base}_found":
-            mx = kw.get("max_count", 0)
-            return _Compiled(
-                label, col_name,
-                [TX.count_if(predf(c)).alias(f"c{idx}_v")],
-                lambda v, mx=mx: (v[0] or 0) <= mx,
-            )
-        if check == f"{base}_percent":
-            mx = float(kw.get("max_percent", 0.0))
-            return _Compiled(
-                label, col_name,
-                [TX.count_if(predf(c)).alias(f"c{idx}_v"),
-                 F.count(c).alias(f"c{idx}_nn")],
-                _pct_at_most(mx),
-            )
 
-    # PII family (§14): un-anchored containment over the SAME regex
-    # catalog the pii scanner and scrub stage use (functions/patterns.py)
-    # so a dqops check and the scrub agree on what "contains email"
-    # means; usa_phone uses the US-shape pattern (dqops's sensor is
-    # US-specific, unlike the scanner's international one).  Denominator:
-    # non-null rows, the family convention above.
-    if check in (
-        "contains_email_percent",
-        "contains_ip4_percent",
-        "contains_ip6_percent",
-        "contains_usa_zipcode_percent",
-        "contains_usa_phone_percent",
-    ):
-        from packs_spark.functions.patterns import (
-            PII_PATTERNS,
-            USA_PHONE_PATTERN,
-            contains_pattern,
-        )
 
-        pii = dict(PII_PATTERNS)
-        pat = {
-            "contains_email_percent": pii["email"],
-            "contains_ip4_percent": pii["ipv4"],
-            "contains_ip6_percent": pii["ipv6"],
-            "contains_usa_zipcode_percent": pii["usa_zipcode"],
-            "contains_usa_phone_percent": USA_PHONE_PATTERN,
-        }[check]
-        mx = float(kw.get("max_percent", 0.0))
-        pred = contains_pattern(c.cast("string"), pat)
-        return _Compiled(
-            label, col_name,
-            [TX.count_if(pred).alias(f"c{idx}_v"),
-             F.count(c).alias(f"c{idx}_nn")],
-            _pct_at_most(mx),
-        )
+def _label(exp) -> str:
+    if not isinstance(exp, dict):
+        return "<missing type>"
+    if "_raw" in exp:
+        return str(exp["_raw"])
+    return str(exp.get("expectation_type") or "<missing type>")
 
-    if check == "date_values_in_future_percent":
-        if "now" in kw:
-            # validate eagerly: an unparseable 'now' must surface as a
-            # failed row (via the suite containment), not compile to
-            # cast(NULL) whose `ts > NULL` predicate silently passes
-            # every dataset (non-ANSI) or throws at runtime (ANSI)
-            datetime.fromisoformat(str(kw["now"]))
-            now = F.lit(kw["now"]).cast("timestamp")
-        else:
-            now = F.current_timestamp()
-        ts = c.cast("timestamp")
-        mx = float(kw.get("max_percent", 0.0))
-        return _Compiled(
-            label, col_name,
-            [TX.count_if(ts > now).alias(f"c{idx}_v"),
-             F.count(ts).alias(f"c{idx}_nn")],
-            _pct_at_most(mx),
-        )
-    if check == "date_in_range_percent":
-        d = c.cast("date")
-        lo = F.lit(kw["min_date"]).cast("date")
-        hi = F.lit(kw["max_date"]).cast("date")
-        mn = float(kw.get("min_percent", 100.0))
-        return _Compiled(
-            label, col_name,
-            [TX.count_if((d >= lo) & (d <= hi)).alias(f"c{idx}_v"),
-             F.count(d).alias(f"c{idx}_nn")],
-            _pct_at_least(mn),
-        )
-    if check == "text_match_date_format_percent":
-        fmt = _strftime_to_java(kw["date_format"])
-        ok = F.try_to_timestamp(c.cast("string"), F.lit(fmt)).isNotNull()
-        mn = float(kw.get("min_percent", 100.0))
-        return _Compiled(
-            label, col_name,
-            [TX.count_if(c.isNotNull() & ok).alias(f"c{idx}_v"),
-             F.count(c).alias(f"c{idx}_nn")],
-            _pct_at_least(mn),
-        )
 
-    if check == "distinct_count":
-        lo, hi = kw.get("min_value"), kw.get("max_value")
-        return _Compiled(
-            label, col_name,
-            [F.countDistinct(c).alias(f"c{idx}_nd")],
-            lambda v, lo=lo, hi=hi: _between(v[0] or 0, lo, hi),
-        )
-    if check == "distinct_percent":
-        lo = kw.get("min_percent")
-        hi = kw.get("max_percent")
-        return _Compiled(
-            label, col_name,
-            [F.countDistinct(c).alias(f"c{idx}_nd"),
-             F.count(c).alias(f"c{idx}_nn")],
-            lambda v, lo=lo, hi=hi: (v[1] or 0) > 0
-            and _between(100.0 * (v[0] or 0) / v[1], lo, hi),
-        )
-    if check == "duplicate_count":
-        mx = kw.get("max_count", 0)
-        return _Compiled(
-            label, col_name,
-            [F.count(c).alias(f"c{idx}_nn"),
-             F.countDistinct(c).alias(f"c{idx}_nd")],
-            lambda v, mx=mx: (v[0] or 0) - (v[1] or 0) <= mx,
-        )
-    if check == "duplicate_percent":
-        mx = float(kw.get("max_percent", 0.0))
-        return _Compiled(
-            label, col_name,
-            [F.count(c).alias(f"c{idx}_nn"),
-             F.countDistinct(c).alias(f"c{idx}_nd")],
-            lambda v, mx=mx: (v[0] or 0) == 0
-            or 100.0 * ((v[0] or 0) - (v[1] or 0)) / v[0] <= mx,
-        )
-    raise ValueError(f"unsupported dqops check: {check!r}")
+def _error(e: Exception) -> str:
+    lines = str(e).strip().splitlines()
+    return f"{type(e).__name__}: {lines[0] if lines else ''}"
+
+
+def _compile(df: DataFrame, exp: dict) -> _Compiled | None:
+    if not isinstance(exp, dict):
+        raise TypeError(f"suite entry is a {type(exp).__name__}, not a dict")
+    if "expectation_type" not in exp and "_raw" in exp:
+        exp = parse_sodacl(exp["_raw"])
+    etype = exp["expectation_type"]
+    kw = exp.get("kwargs", {})
+    build = CATALOG.get(etype)
+    if build is None:
+        if etype.startswith(("soda:", "dqops:")):
+            raise ValueError(f"unsupported check: {etype!r}")
+        # reference behavior: silently skip unknown expectations
+        # (great_expectations_pack/main.py:45-46 `if not hasattr: continue`)
+        return None
+    out = build(df, kw)
+    if isinstance(out, bool):
+        out = _Compiled([], lambda v, s=out: s)
+    out.column = out.column or kw.get("column")
+    return out
 
 
 def evaluate_suite(df: DataFrame, expectations: list[dict]) -> list[dict]:
     """Evaluate the whole suite in ONE aggregation pass.  Returns
     [{expectation, column, success}] in suite order (skipped/unknown
-    expectations omitted, matching the reference's `continue`)."""
-    compiled: list[_Compiled] = []
-    for i, exp in enumerate(expectations):
+    expectations omitted, matching the reference's `continue`).
+
+    A check that fails at compile, analysis or verdict time rather than on
+    the data also carries ``error`` ("<ExceptionType>: <message>").  An
+    entry ``{"_raw": text}`` is SodaCL text, parsed here so that a bad
+    check fails alone, labelled with its text."""
+    checks: list[_Compiled] = []
+    for exp in expectations:
         try:
-            etype = exp["expectation_type"]
-            if etype.startswith("soda:"):
-                compiled.append(compile_soda(df, i, exp))
-            elif etype.startswith("dqops:"):
-                compiled.append(compile_dqops(df, i, exp))
-            else:
-                compiled.append(compile_expectation(df, i, exp))
+            comp = _compile(df, exp)
         except (ValueError, KeyError, NotImplementedError, TypeError,
-                AttributeError):
+                AttributeError) as e:
             # one uncompilable expectation (an unmapped strftime directive
             # like %f, an unsupported SodaCL check, a malformed kwargs
             # dict, a non-numeric threshold → TypeError, a non-dict
             # expectation entry → AttributeError) must not abort the whole
             # suite run — record it as failed and keep evaluating the rest
             # (the reference's dispatch likewise skips what it can't
-            # handle).  .get here: the missing key may BE expectation_type
-            # itself, and the fallback must not re-raise from inside the
-            # containment
-            get = exp.get if isinstance(exp, dict) else (lambda *_: None)
-            kwargs = get("kwargs")
-            compiled.append(
-                _Compiled(
-                    str(get("expectation_type") or "<missing type>"),
-                    kwargs.get("column") if isinstance(kwargs, dict) else None,
-                    [],
-                    lambda v: False,
-                )
+            # handle)
+            kwargs = exp.get("kwargs") if isinstance(exp, dict) else None
+            comp = _Compiled(
+                [], None,
+                kwargs.get("column") if isinstance(kwargs, dict) else None,
+                error=_error(e),
             )
+        if comp is not None:
+            comp.label = _label(exp)
+            checks.append(comp)
 
-    all_aggs = [a for comp in compiled for a in comp.aggs]
+    for i, comp in enumerate(checks):
+        comp.aggs = [a.alias(f"c{i}_{j}") for j, a in enumerate(comp.aggs)]
+    all_aggs = [a for comp in checks for a in comp.aggs]
     try:
-        row = df.agg(*all_aggs).collect()[0] if all_aggs else None
-        values = []
-        pos = 0
-        for comp in compiled:
-            values.append([row[pos + j] for j in range(len(comp.aggs))])
-            pos += len(comp.aggs)
+        row = iter(df.agg(*all_aggs).collect()[0] if all_aggs else [])
+        values = [[next(row) for _ in comp.aggs] for comp in checks]
     except AnalysisException:
         # one expression that compiled but fails analysis (e.g. a
         # value_set entry whose literal type mismatches the column:
@@ -1219,35 +980,34 @@ def evaluate_suite(df: DataFrame, expectations: list[dict]) -> list[dict]:
         # expectation fails.  Error path only: the fused plan stays the
         # fast path
         values = []
-        for comp in compiled:
+        for comp in checks:
             try:
-                r = df.agg(*comp.aggs).collect()[0] if comp.aggs else None
-                values.append([r[j] for j in range(len(comp.aggs))])
-            except AnalysisException:
+                values.append(
+                    list(df.agg(*comp.aggs).collect()[0]) if comp.aggs else []
+                )
+            except AnalysisException as e:
+                comp.error = _error(e)
                 values.append(None)
 
     results = []
-    for comp, vals in zip(compiled, values):
-        if comp.verdict is None:
-            continue  # unknown expectation — reference skips it
-        if vals is None:
-            success = False  # this expectation's own aggs failed analysis
-        else:
+    for comp, vals in zip(checks, values):
+        success = False
+        if comp.error is None:
             try:
                 success = bool(comp.verdict(vals))
-            except (TypeError, ValueError, ZeroDivisionError, KeyError):
-                # verdict-time errors (e.g. a string min_value compared
-                # to a numeric aggregate) are contained per-expectation,
-                # same as compile-time ones — one bad bound must not kill
-                # the suite
-                success = False
-        results.append(
-            {
-                "expectation": comp.label,
-                "column": comp.column,
-                "success": success,
-            }
-        )
+            except (TypeError, ValueError, ZeroDivisionError, KeyError) as e:
+                # verdict-time errors (e.g. a string min_value compared to
+                # a numeric aggregate) are contained per-expectation, same
+                # as compile-time ones
+                comp.error = _error(e)
+        result = {
+            "expectation": comp.label,
+            "column": comp.column,
+            "success": success,
+        }
+        if comp.error is not None:
+            result["error"] = comp.error
+        results.append(result)
     return results
 
 

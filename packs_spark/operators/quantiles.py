@@ -48,11 +48,10 @@ def quantile_values_multi(
     """Driver-side quantile values for ``probs`` per column, batched:
     2 jobs total regardless of ``len(cols)`` in either mode.  A column
     that is empty / all-NULL yields ``[None, ...]``."""
-    arr = ", ".join(str(p) for p in probs)
     if exact:
         row = df.agg(
             *[
-                F.expr(f"percentile({c}, array({arr}))").alias(f"q_{i}")
+                F.percentile(F.col(c), list(probs)).alias(f"q_{i}")
                 for i, c in enumerate(cols)
             ]
         ).collect()[0]

@@ -723,13 +723,12 @@ def run_pack(
 
     if pack_name == "soda":
         from packs_spark.io.envelope import metric_rows_to_df
-        from packs_spark.operators.expectations import (
-            evaluate_suite,
-            parse_sodacl,
-        )
+        from packs_spark.operators.expectations import evaluate_suite
 
-        suite = [parse_sodacl(c) for c in job.get("checks", [])]
-        res = evaluate_suite(df, suite)
+        # raw SodaCL text is parsed inside the suite's containment: an
+        # unsupported or non-string check becomes one failed row labelled
+        # with its text instead of aborting the pack run
+        res = evaluate_suite(df, [{"_raw": c} for c in job.get("checks", [])])
         rows = [
             (r["expectation"], str(r["success"]), "dataset", dataset, None)
             for r in res
@@ -744,9 +743,9 @@ def run_pack(
         # dqops-catalog checks (dqops-checks-reference.md): job.checks is
         # [{"check": "<name>", "column": ..., <params>}]; each rides the
         # same single-pass evaluate_suite agg via the dqops: prefix.
-        # malformed entries become dqops:<missing check>, which
-        # compile_dqops rejects and the suite records as failed instead of
-        # the whole pack run aborting: a bare string is promoted to a
+        # malformed entries become dqops:<missing check>, which the check
+        # catalog rejects and the suite records as failed instead of the
+        # whole pack run aborting: a bare string is promoted to a
         # parameterless check, a non-dict non-string entry to a rejected
         # placeholder (c.get on it would raise AttributeError pre-suite)
         suite = []

@@ -914,3 +914,351 @@ def test_gx_json_schema_expectation(spark):
         ],
     )
     assert [r["success"] for r in res] == [False, True, True]
+
+
+def test_percentile_checks_take_column_names_verbatim(spark):
+    """The median and quantile checks read a column named ``a-b`` or
+    ``unit price`` as that column; pasted into SQL text, ``a-b`` was
+    evaluated as ``a - b`` and ``unit price`` did not parse."""
+    df = spark.createDataFrame(
+        [(10.0, 1.0, 1, 2), (20.0, 2.0, 1, 2), (30.0, 3.0, 1, 2)],
+        "`a-b` double, `unit price` double, a int, b int",
+    )
+    res = evaluate_suite(
+        df,
+        [
+            {"expectation_type": "expect_column_median_to_be_between",
+             "kwargs": {"column": "a-b", "min_value": 15, "max_value": 25}},
+            # a - b = -1 lies here; the a-b column's median does not
+            {"expectation_type": "expect_column_median_to_be_between",
+             "kwargs": {"column": "a-b", "min_value": -2, "max_value": 0}},
+            {"expectation_type": "expect_column_median_to_be_between",
+             "kwargs": {"column": "unit price", "min_value": 1,
+                        "max_value": 3}},
+            {"expectation_type":
+                 "expect_column_quantile_values_to_be_between",
+             "kwargs": {"column": "a-b", "quantile_ranges": {
+                 "quantiles": [0.5], "value_ranges": [[15, 25]]}}},
+            {"expectation_type":
+                 "expect_column_quantile_values_to_be_between",
+             "kwargs": {"column": "unit price", "quantile_ranges": {
+                 "quantiles": [0.0, 1.0], "value_ranges": [[1, 1], [3, 3]]}}},
+        ],
+    )
+    assert [r["success"] for r in res] == [True, False, True, True, True]
+    assert all("error" not in r for r in res)
+
+
+def test_results_name_their_errors(spark):
+    """A check that fails at compile, analysis or verdict time carries
+    ``error`` ("<ExceptionType>: <message>"); one the data fails does not,
+    and the rest of the suite still evaluates."""
+    res = evaluate_suite(
+        _df(spark),
+        [
+            # the data fails it: cat has a NULL
+            {"expectation_type": "expect_column_values_to_not_be_null",
+             "kwargs": {"column": "cat"}},
+            # compile time: %f has no java.time twin
+            {"expectation_type":
+                 "expect_column_values_to_match_strftime_format",
+             "kwargs": {"column": "cat", "strftime_format": "%Y %f"}},
+            # analysis time: the column does not exist
+            {"expectation_type": "expect_column_values_to_not_be_null",
+             "kwargs": {"column": "no_such_col"}},
+            # verdict time: a string bound against a numeric count
+            {"expectation_type": "expect_table_row_count_to_be_between",
+             "kwargs": {"min_value": "one"}},
+            {"expectation_type": "expect_table_row_count_to_be_between",
+             "kwargs": {"min_value": 1}},
+        ],
+    )
+    assert [r["success"] for r in res] == [False, False, False, False, True]
+    assert "error" not in res[0] and "error" not in res[4]
+    assert res[1]["error"].startswith(
+        "ValueError: unsupported strftime directive '%f'")
+    assert res[2]["error"].startswith("AnalysisException: ")
+    assert "no_such_col" in res[2]["error"]
+    assert res[3]["error"].startswith("TypeError: ")
+
+
+def _catalog_df(spark):
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "id": [1, 2, 3, 4, 5],
+                "b": [9, 8, 7, 6, 5],
+                "cat": ["a", "b", "a", "c", None],
+                "val": [10.0, 20.0, None, 40.0, 50.0],
+                "txt": ["ok", "", "  ", " pad ", "n/a"],
+                "ts": ["2020-01-05 00:00:00", "2020-06-01 00:00:00",
+                       "2099-01-01 00:00:00", None, "2020-03-01 00:00:00"],
+                "js": ['{"k":1}', "[1,2]", "not json", None, '{"n":"a"}'],
+                "pii": ["mail a.b@example.com", "host 10.1.2.3",
+                        "call (555) 123-4567", "zip 90210", "fe80::1"],
+            }
+        )
+    )
+
+
+_COLS = ["id", "b", "cat", "val", "txt", "ts", "js", "pii"]
+
+# catalog key -> (kwargs that pass, kwargs that fail) on _catalog_df; a
+# string is SodaCL text.  val's non-null values are 10, 20, 40, 50; cat's
+# a, b, a, c; each text/PII flag hits 1 of 5 rows (surrounded: 2)
+_CATALOG_CASES = {
+    "expect_table_row_count_to_be_between": (
+        {"min_value": 1, "max_value": 10}, {"min_value": 6}),
+    "expect_table_row_count_to_equal": ({"value": 5}, {"value": 4}),
+    "expect_table_row_count_to_equal_other_table": (
+        {"other_table_name": "catalog_five"},
+        {"other_table_name": "catalog_four"}),
+    "expect_column_mean_to_be_between": (
+        {"column": "val", "min_value": 29, "max_value": 31},
+        {"column": "val", "min_value": 31}),
+    "expect_column_median_to_be_between": (
+        {"column": "val", "min_value": 30, "max_value": 30},
+        {"column": "val", "min_value": 31}),
+    "expect_column_min_to_be_between": (
+        {"column": "val", "min_value": 10, "max_value": 10},
+        {"column": "val", "min_value": 11}),
+    "expect_column_max_to_be_between": (
+        {"column": "val", "min_value": 50, "max_value": 50},
+        {"column": "val", "max_value": 49}),
+    "expect_column_sum_to_be_between": (
+        {"column": "val", "min_value": 120, "max_value": 120},
+        {"column": "val", "min_value": 1000}),
+    "expect_column_stdev_to_be_between": (
+        {"column": "val", "min_value": 18, "max_value": 19},
+        {"column": "val", "max_value": 10}),
+    "expect_column_unique_value_count_to_be_between": (
+        {"column": "cat", "min_value": 3, "max_value": 3},
+        {"column": "cat", "min_value": 4}),
+    "expect_column_proportion_of_unique_values_to_be_between": (
+        {"column": "cat", "min_value": 0.75, "max_value": 0.75},
+        {"column": "cat", "min_value": 0.8}),
+    "expect_column_values_to_be_unique": (
+        {"column": "id"}, {"column": "cat"}),
+    "expect_compound_columns_to_be_unique": (
+        {"column_list": ["id", "cat"]}, {"column_list": ["cat", "cat"]}),
+    "soda:row_count": ("row_count > 0", "row_count > 5"),
+    "soda:missing_count": ("missing_count(val) = 1", "missing_count(val) = 0"),
+    "soda:duplicate_count": (
+        "duplicate_count(cat) = 1", "duplicate_count(id) > 0"),
+    "soda:min": ("min(val) >= 10", "min(val) > 10"),
+    "soda:max": ("max(val) <= 50", "max(val) < 50"),
+    "soda:avg": ("avg(val) = 30", "avg(val) != 30"),
+    "soda:sum": ("sum(id) = 15", "sum(id) < 15"),
+    "dqops:distinct_count": (
+        {"column": "cat", "min_value": 3, "max_value": 3},
+        {"column": "cat", "min_value": 4}),
+    "dqops:distinct_percent": (
+        {"column": "id", "min_percent": 100.0},
+        {"column": "cat", "max_percent": 70.0}),  # 3 of 4 = 75%
+    "dqops:duplicate_count": (
+        {"column": "cat", "max_count": 1}, {"column": "cat"}),
+    "dqops:duplicate_percent": (
+        {"column": "cat", "max_percent": 25.0},
+        {"column": "cat", "max_percent": 20.0}),
+    "expect_column_values_to_not_be_null": ({"column": "id"}, {"column": "cat"}),
+    "expect_column_values_to_be_null": (
+        {"column": "cat", "mostly": 0.2}, {"column": "cat"}),
+    "expect_column_values_to_be_between": (
+        {"column": "val", "min_value": 10, "max_value": 50},
+        {"column": "val", "min_value": 0, "max_value": 45}),
+    "expect_column_value_lengths_to_be_between": (
+        {"column": "cat", "min_value": 1, "max_value": 1},
+        {"column": "cat", "min_value": 2}),
+    "expect_column_value_lengths_to_equal": (
+        {"column": "cat", "value": 1}, {"column": "cat", "value": 2}),
+    "expect_column_values_to_be_in_set": (
+        {"column": "cat", "value_set": ["a", "b", "c"]},
+        {"column": "cat", "value_set": ["a", "b"]}),
+    "expect_column_values_to_not_be_in_set": (
+        {"column": "cat", "value_set": ["x", "y"]},
+        {"column": "cat", "value_set": ["a"]}),
+    # a NULL in value_set must not excuse the out-of-set 'c'
+    "expect_column_distinct_values_to_be_in_set": (
+        {"column": "cat", "value_set": ["a", "b", "c", "d"]},
+        {"column": "cat", "value_set": ["a", "b", None]}),
+    "expect_column_values_to_match_regex": (
+        {"column": "cat", "regex": "^[a-c]$"},
+        {"column": "cat", "regex": "^a"}),
+    "expect_column_values_to_not_match_regex": (
+        {"column": "cat", "regex": "^z"}, {"column": "cat", "regex": "^a"}),
+    "expect_column_values_to_match_regex_list": (
+        {"column": "cat", "regex_list": ["^a$", "^[bc]$"]},
+        {"column": "cat", "regex_list": ["^a$", "^[bc]$"],
+         "match_on": "all"}),
+    "expect_column_values_to_not_match_regex_list": (
+        {"column": "cat", "regex_list": ["^z", "^y"]},
+        {"column": "cat", "regex_list": ["^z", "^a"]}),
+    "expect_column_values_to_match_like_pattern": (
+        {"column": "cat", "like_pattern": "_"},
+        {"column": "cat", "like_pattern": "a%"}),
+    "expect_column_values_to_not_match_like_pattern": (
+        {"column": "cat", "like_pattern": "z%"},
+        {"column": "cat", "like_pattern": "a%"}),
+    "expect_column_values_to_match_like_pattern_list": (
+        {"column": "cat", "like_pattern_list": ["a%", "b%", "c%"]},
+        {"column": "cat", "like_pattern_list": ["a%", "_"],
+         "match_on": "all"}),
+    "expect_column_values_to_not_match_like_pattern_list": (
+        {"column": "cat", "like_pattern_list": ["__%", "z%"]},
+        {"column": "cat", "like_pattern_list": ["a%"]}),
+    "expect_column_values_to_match_strftime_format": (
+        {"column": "ts", "strftime_format": "%Y-%m-%d %H:%M:%S"},
+        {"column": "ts", "strftime_format": "%Y/%m/%d"}),
+    "expect_column_values_to_be_json_parseable": (
+        {"column": "js", "mostly": 0.75}, {"column": "js"}),
+    "expect_column_values_to_be_dateutil_parseable": (
+        {"column": "ts"}, {"column": "cat"}),
+    "expect_column_values_to_match_json_schema": (
+        {"column": "js", "json_schema": {"type": "object"}, "mostly": 0.5},
+        {"column": "js", "json_schema": {"type": "object"}}),
+    "expect_column_pair_values_a_to_be_greater_than_b": (
+        {"column_A": "b", "column_B": "id", "or_equal": True},
+        {"column_A": "b", "column_B": "id"}),
+    "expect_column_pair_values_to_be_equal": (
+        {"column_A": "id", "column_B": "id"},
+        {"column_A": "id", "column_B": "b"}),
+    "expect_column_pair_values_to_be_in_set": (
+        {"column_A": "id", "column_B": "b",
+         "value_pairs_set": [[1, 9], [2, 8], [3, 7], [4, 6], [5, 5]]},
+        {"column_A": "id", "column_B": "b", "value_pairs_set": [[1, 9]]}),
+    "expect_multicolumn_sum_to_equal": (
+        {"column_list": ["id", "b"], "sum_total": 10},
+        {"column_list": ["id", "b"], "sum_total": 11}),
+    "expect_select_column_values_to_be_unique_within_record": (
+        {"column_list": ["id", "val"]}, {"column_list": ["id", "b"]}),
+    "expect_multicolumn_values_to_be_unique": (
+        {"column_list": ["id", "val"]}, {"column_list": ["id", "b"]}),
+    "expect_column_distinct_values_to_equal_set": (
+        {"column": "cat", "value_set": ["a", "b", "c"]},
+        {"column": "cat", "value_set": ["a", "b"]}),
+    "expect_column_distinct_values_to_contain_set": (
+        {"column": "cat", "value_set": ["a", "b"]},
+        {"column": "cat", "value_set": ["a", "z"]}),
+    "expect_column_most_common_value_to_be_in_set": (
+        {"column": "cat", "value_set": ["a"]},
+        {"column": "cat", "value_set": ["b"]}),
+    "expect_column_quantile_values_to_be_between": (
+        {"column": "val", "quantile_ranges": {
+            "quantiles": [0.25, 0.75], "value_ranges": [[10, 20], [40, 50]]}},
+        {"column": "val", "quantile_ranges": {
+            "quantiles": [0.25], "value_ranges": [[45, 50]]}}),
+    "expect_column_kl_divergence_to_be_less_than": (
+        {"column": "val", "threshold": 0.05, "partition_object": {
+            "bins": [0, 30, 60], "weights": [0.5, 0.5]}},
+        {"column": "val", "threshold": 0.05, "partition_object": {
+            "bins": [0, 30, 60], "weights": [0.9, 0.1]}}),
+    "expect_column_value_z_scores_to_be_less_than": (
+        {"column": "val", "threshold": 2.0},
+        {"column": "val", "threshold": 1.0}),
+    "expect_column_values_to_be_increasing": ({"column": "id"}, {"column": "b"}),
+    "expect_column_values_to_be_decreasing": ({"column": "b"}, {"column": "id"}),
+    "expect_table_columns_to_match_set": (
+        {"column_set": _COLS}, {"column_set": ["id", "b"]}),
+    "expect_table_columns_to_match_ordered_list": (
+        {"column_list": _COLS}, {"column_list": _COLS[::-1]}),
+    "expect_table_column_count_to_be_between": (
+        {"min_value": 8, "max_value": 8}, {"min_value": 9}),
+    "expect_table_column_count_to_equal": ({"value": 8}, {"value": 9}),
+    "expect_column_to_exist": ({"column": "cat"}, {"column": "nope"}),
+    "expect_column_values_to_be_of_type": (
+        {"column": "id", "type_": "int64"}, {"column": "id", "type_": "str"}),
+    "expect_column_values_to_be_in_type_list": (
+        {"column": "val", "type_list": ["int", "float64"]},
+        {"column": "val", "type_list": ["str"]}),
+    "dqops:empty_text_found": (
+        {"column": "txt", "max_count": 1}, {"column": "txt"}),
+    "dqops:whitespace_text_found": (
+        {"column": "txt", "max_count": 1}, {"column": "txt"}),
+    "dqops:null_placeholder_text_found": (
+        {"column": "txt", "max_count": 1}, {"column": "txt"}),
+    "dqops:text_surrounded_by_whitespace_found": (
+        {"column": "txt", "max_count": 2},
+        {"column": "txt", "max_count": 1}),
+    "dqops:empty_text_percent": (
+        {"column": "txt", "max_percent": 20.0}, {"column": "txt"}),
+    "dqops:whitespace_text_percent": (
+        {"column": "txt", "max_percent": 20.0}, {"column": "txt"}),
+    "dqops:null_placeholder_text_percent": (
+        {"column": "txt", "max_percent": 20.0}, {"column": "txt"}),
+    "dqops:text_surrounded_by_whitespace_percent": (
+        {"column": "txt", "max_percent": 40.0},
+        {"column": "txt", "max_percent": 30.0}),
+    "dqops:contains_email_percent": (
+        {"column": "pii", "max_percent": 20.0}, {"column": "pii"}),
+    "dqops:contains_ip4_percent": (
+        {"column": "pii", "max_percent": 20.0}, {"column": "pii"}),
+    "dqops:contains_ip6_percent": (
+        {"column": "pii", "max_percent": 20.0}, {"column": "pii"}),
+    "dqops:contains_usa_zipcode_percent": (
+        {"column": "pii", "max_percent": 20.0}, {"column": "pii"}),
+    "dqops:contains_usa_phone_percent": (
+        {"column": "pii", "max_percent": 20.0}, {"column": "pii"}),
+    # 1 of 4 non-null ts values is after 2030
+    "dqops:date_values_in_future_percent": (
+        {"column": "ts", "max_percent": 25.0, "now": "2030-01-01 00:00:00"},
+        {"column": "ts", "now": "2030-01-01 00:00:00"}),
+    "dqops:date_in_range_percent": (
+        {"column": "ts", "min_date": "2020-01-01", "max_date": "2020-12-31",
+         "min_percent": 75.0},
+        {"column": "ts", "min_date": "2020-01-01", "max_date": "2020-12-31",
+         "min_percent": 80.0}),
+    "dqops:text_match_date_format_percent": (
+        {"column": "ts", "date_format": "%Y-%m-%d %H:%M:%S"},
+        {"column": "ts", "date_format": "%Y/%m/%d"}),
+    "dqops:sql_condition_failed_on_column": (
+        {"column": "id", "sql_condition": "{column} > 0"},
+        {"column": "id", "sql_condition": "{column} > 1"}),
+    "dqops:sql_condition_failed_on_table": (
+        {"sql_condition": "{table}.id + {table}.b = 10"},
+        {"sql_condition": "id < b"}),
+    # val's NULL row is a failed row: 4 of 5 pass
+    "dqops:sql_condition_passed_percent_on_column": (
+        {"column": "val", "sql_condition": "{column} > 0",
+         "min_percent": 80.0},
+        {"column": "val", "sql_condition": "{column} > 0"}),
+    "dqops:sql_condition_passed_percent_on_table": (
+        {"sql_condition": "id <= 5"}, {"sql_condition": "id < 5"}),
+    "dqops:sql_aggregate_expression_on_column": (
+        {"column": "val", "sql_expression": "max({column}) - min({column})",
+         "min_value": 40, "max_value": 40},
+        {"column": "val", "sql_expression": "max({column}) - min({column})",
+         "min_value": 41}),
+    "dqops:sql_aggregate_expression_on_table": (
+        {"sql_expression": "sum(id) / count(*)", "min_value": 3,
+         "max_value": 3},
+        {"sql_expression": "sum(id) / count(*)", "min_value": 4}),
+}
+
+
+def test_every_catalog_key_passes_and_fails(spark):
+    """Every catalog key, once with kwargs the data meets and once with
+    kwargs it misses, in ONE evaluate_suite call (one aggregation pass
+    plus the bounded monotone/other-table jobs)."""
+    from packs_spark.operators.expectations import CATALOG
+
+    assert set(_CATALOG_CASES) == set(CATALOG)
+    spark.range(5).createOrReplaceTempView("catalog_five")
+    spark.range(4).createOrReplaceTempView("catalog_four")
+
+    def entry(etype, case):
+        if isinstance(case, str):
+            parsed = parse_sodacl(case)
+            assert parsed["expectation_type"] == etype
+            return parsed
+        return {"expectation_type": etype, "kwargs": case}
+
+    suite = [entry(etype, case)
+             for etype, cases in _CATALOG_CASES.items() for case in cases]
+    res = evaluate_suite(_catalog_df(spark), suite)
+    assert len(res) == len(suite)
+    got = {}
+    for i, etype in enumerate(_CATALOG_CASES):
+        ok, bad = res[2 * i], res[2 * i + 1]
+        assert "error" not in ok and "error" not in bad, (ok, bad)
+        got[etype] = (ok["success"], bad["success"])
+    assert {k: v for k, v in got.items() if v != (True, False)} == {}

@@ -411,3 +411,18 @@ def test_dqops_pack_contains_non_dict_check_entries(spark, tmp_path):
     assert m["dqops:distinct_count"] == "True"
     assert m["dqops:<malformed entry: int>"] == "False"
     assert m["score"] == "0.33"
+
+
+def test_soda_pack_contains_bad_checks(spark, tmp_path):
+    """An unsupported SodaCL check and a non-string check each become one
+    failed row labelled with their text; the good check still runs."""
+    src = tmp_path / "s.csv"
+    src.write_text("id\n1\n2\n")
+    out = run_pack(
+        spark, "soda",
+        {"type": "csv", "path": str(src), "name": "s"},
+        {"job": {"checks": ["row_count > 0", "freshness(ts) < 1d", 5]}},
+    )
+    m = {r.key: r.value for r in out["metrics"].collect()}
+    assert m == {"row_count > 0": "True", "freshness(ts) < 1d": "False",
+                 "5": "False"}

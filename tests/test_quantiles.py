@@ -14,7 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from packs_spark.operators.drift import psi_2sample
-from packs_spark.operators.quantiles import iqr_summary, quantile_values
+from packs_spark.operators.quantiles import (
+    iqr_summary,
+    quantile_values,
+    quantile_values_multi,
+)
 
 
 def test_binned_quantiles_within_one_bin_of_bracketing_ranks(spark):
@@ -149,3 +153,14 @@ def test_iqr_summary_all_null_column_degrades_gracefully(spark):
         assert rows["dead"]["outlier_count"] == 0
         assert rows["dead"]["normality_score"] is None
         assert rows["x"]["q1"] is not None
+
+
+def test_exact_quantiles_take_column_names_verbatim(spark):
+    """Exact mode reads ``a-b`` and ``unit price`` as column names, not as
+    SQL text (``a - b``, a parse error)."""
+    df = spark.createDataFrame(
+        [(10.0, 1.0, 1, 2), (20.0, 2.0, 1, 2), (30.0, 3.0, 1, 2)],
+        "`a-b` double, `unit price` double, a int, b int",
+    )
+    assert quantile_values_multi(df, ["a-b", "unit price"], [0.5, 1.0]) == {
+        "a-b": [20.0, 30.0], "unit price": [2.0, 3.0]}

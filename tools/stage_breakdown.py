@@ -8,8 +8,9 @@ or (c) one stage dominating wall-clock with few tasks.  The table lets the
 judge check all three instead of trusting the prose.
 
 Usage:
-  python tools/stage_breakdown.py --leg 8|32   # one leg, prints JSON
-  python tools/stage_breakdown.py              # both legs -> BENCH/STAGES.md
+  python tools/stage_breakdown.py --leg N   # one leg at local[N], prints JSON
+  python tools/stage_breakdown.py           # legs N // 4 and N (usable CPUs)
+                                            # -> BENCH/STAGES.md
 """
 
 from __future__ import annotations
@@ -134,10 +135,13 @@ def main() -> None:
     if len(sys.argv) > 2 and sys.argv[1] == "--leg":
         print(json.dumps(run_leg(int(sys.argv[2]))))
         return
+    # legs from this machine: N usable CPUs and N // 4, as bench.py --scaling
+    cores = sorted(os.sched_getaffinity(0))
+    small, big = max(1, len(cores) // 4), len(cores)
     legs = {}
-    for cpus in (8, 32):
-        cmd = ["taskset", "-c", f"0-{cpus - 1}", sys.executable, __file__,
-               "--leg", str(cpus)]
+    for cpus in (small, big):
+        cmd = ["taskset", "-c", ",".join(map(str, cores[:cpus])),
+               sys.executable, __file__, "--leg", str(cpus)]
         out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO)
         json_lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
         if out.returncode != 0 or not json_lines:
@@ -150,20 +154,21 @@ def main() -> None:
         print(f"local[{cpus}]: wall {legs[cpus]['wall_sec']}s, "
               f"task-time {legs[cpus]['total_task_time_ms'] / 1000:.1f}s",
               file=sys.stderr)
-    t8 = legs[8]["total_task_time_ms"]
-    t32 = legs[32]["total_task_time_ms"]
-    s8 = {r["stage_id"]: r for r in legs[8]["stages"]}
-    s32 = {r["stage_id"]: r for r in legs[32]["stages"]}
-    same_shape = sorted(s8) == sorted(s32) and all(
-        s8[i]["tasks"] == s32[i]["tasks"]
-        and s8[i]["shuffle_write_mb"] == s32[i]["shuffle_write_mb"]
-        for i in s8
+    t_small = legs[small]["total_task_time_ms"]
+    t_big = legs[big]["total_task_time_ms"]
+    s_small = {r["stage_id"]: r for r in legs[small]["stages"]}
+    s_big = {r["stage_id"]: r for r in legs[big]["stages"]}
+    same_shape = sorted(s_small) == sorted(s_big) and all(
+        s_small[i]["tasks"] == s_big[i]["tasks"]
+        and s_small[i]["shuffle_write_mb"] == s_big[i]["shuffle_write_mb"]
+        for i in s_small
     )
     md = f"""# Per-stage task-time breakdown (measured pipeline run, {N_DOCS} docs)
 
 Best-of-2 measured runs per leg in fresh taskset-pinned subprocesses after
 an unmeasured warm-up run + page-cache prime (same methodology as
-BENCH/BASELINE.md).  Data source: the Spark app status store — the same
+BENCH/BASELINE.md).  Legs: local[{small}] and local[{big}] (N // 4 and N,
+N = usable CPUs).  Data source: the Spark app status store — the same
 numbers the UI REST API serves.
 
 How to read this (the falsifiability checks the scaling claim rests on):
@@ -173,30 +178,34 @@ How to read this (the falsifiability checks the scaling claim rests on):
    coordination stages or re-shuffles, it would show here.
    Measured: {"IDENTICAL" if same_shape else "DIFFERS — investigate"}.
 2. **No low-task-count stage matters** — a serial bottleneck would be a
-   stage with few tasks and a large share of task-time.  Every
-   non-trivial stage below has ≥ 45 tasks (≥ cores at both legs); the
-   1-task stages are sub-50 ms metadata reads and the final O(buckets)
-   commit — the driver-side costs the plan audit already bounds.
-3. **Run-time vs cpu-time** — in the enrich stage (the 128-task shuffle
-   consumer) task *run*-time is mostly executor threads blocked on the
+   stage with few tasks and a large share of task-time.  Check that every
+   non-trivial stage below has at least as many tasks as cores at both
+   legs; 1-task stages should be sub-50 ms metadata reads and the final
+   O(buckets) commit — the driver-side costs the plan audit already
+   bounds.
+3. **Run-time vs cpu-time** — in the enrich stage (the shuffle consumer)
+   task *run*-time is mostly executor threads blocked on the
    Arrow⇄Python UDF workers, so it measures occupancy, not work; total
    task-time is therefore NOT conserved across parallelism
-   ({t8 / 1000:.1f}s @8 → {t32 / 1000:.1f}s @32, ratio {t32 / t8:.2f}).
+   ({t_small / 1000:.1f}s @{small} → {t_big / 1000:.1f}s @{big}, ratio
+   {t_big / t_small:.2f}).
 
-## local[8] — wall {legs[8]["wall_sec"]}s
+## local[{small}] — wall {legs[small]["wall_sec"]}s
 
-{_table(legs[8])}
+{_table(legs[small])}
 
-## local[32] — wall {legs[32]["wall_sec"]}s
+## local[{big}] — wall {legs[big]["wall_sec"]}s
 
-{_table(legs[32])}
+{_table(legs[big])}
 """
     path = os.path.join(REPO, "BENCH", "STAGES.md")
     with open(path, "w") as f:
         f.write(md)
     print(json.dumps({
-        "task_time_ratio_32_vs_8": round(t32 / t8, 3),
-        "wall_8": legs[8]["wall_sec"], "wall_32": legs[32]["wall_sec"],
+        "legs": [small, big],
+        "task_time_ratio": round(t_big / t_small, 3),
+        f"wall_{small}": legs[small]["wall_sec"],
+        f"wall_{big}": legs[big]["wall_sec"],
         "written": path,
     }))
 
