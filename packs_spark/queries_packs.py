@@ -202,10 +202,7 @@ def q_profiling_numeric(spark, sf_dir):
             F.sum(c.cast("decimal(18,4)") * c.cast("decimal(18,4)"))
             .cast("double")
             .alias("s2"),
-            F.expr(f"percentile({col}, 0.10)").alias("p10"),
-            F.expr(f"percentile({col}, 0.25)").alias("p25"),
-            F.expr(f"percentile({col}, 0.75)").alias("p75"),
-            F.expr(f"percentile({col}, 0.90)").alias("p90"),
+            *(F.percentile(c, p / 100).alias(f"p{p}") for p in (10, 25, 75, 90)),
         )
         nn, s1, s2 = F.col("nn"), F.col("s1"), F.col("s2")
         css = s2 - s1 * s1 / nn  # centered sum of squares, double

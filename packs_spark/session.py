@@ -13,6 +13,16 @@ Scale notes (100 TB / 1000-executor design point):
   for pathological producer skew lives in ``packs_spark.pipeline.partitioning``.
 * Arrow batches between the JVM and Python workers are capped at 10k rows so
   pandas-UDF memory stays bounded regardless of partition size.
+
+Python worker daemon: every task runs ``importlib.invalidate_caches()``
+(``pyspark.worker_util.setup_spark_files``).  Before CPython 3.13 that makes
+each cached ``zipimporter`` re-read its whole archive directory, and the
+workers' path holds pyspark.zip (1.3k entries, a dozen importers) and the
+spark-core jar (5.4k entries): ~200 ms of every task.  3.13 made the
+invalidation lazy; ``packs_spark.pyworker`` backports that, so local
+sessions start their workers through it.  Cluster masters keep the stock
+daemon: executors get the package per task through ``--py-files``, after
+their daemon has started, so it could not import ``packs_spark.pyworker``.
 """
 
 from __future__ import annotations
@@ -33,6 +43,8 @@ _MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": str(1 << 30),
     "MALLOC_TRIM_THRESHOLD_": str(1 << 30),
 }
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -99,6 +111,11 @@ def get_spark(
         # spark-submit, not here.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     }
+    if master.split("[")[0] == "local":
+        # fork Python workers from the lazy-zip-invalidation daemon; the
+        # package root on PYTHONPATH lets it start from any cwd
+        conf["spark.python.daemon.module"] = "packs_spark.pyworker"
+        conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_ROOT
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -113,7 +130,10 @@ def _parallelism_of(master: str) -> int | None:
     if master.startswith("local["):
         inner = master[len("local[") : -1]
         if inner == "*":
-            return os.cpu_count() or 8
+            try:
+                return len(os.sched_getaffinity(0))
+            except AttributeError:  # no affinity API on this platform
+                return os.cpu_count() or 8
         try:
             return int(inner)
         except ValueError:
