@@ -9,10 +9,18 @@ reference's third-party check dispatchers:
 * the dqops check catalog (dqops-checks-reference.md).
 
 All three are config-driven pass/fail rules over one dataset, so they share
-one evaluator here.  Design for scale: the WHOLE suite is compiled into a
-single ``df.agg(...)`` pass (one scan, partial aggregation per partition,
-no shuffles beyond the final merge); schema-level expectations never touch
-data at all.
+one evaluator here.  Design for scale: the whole suite is compiled into at
+most two ``df.agg(...)`` passes, each one scan with partial aggregation per
+partition and no shuffle beyond the final merge; schema-level expectations
+never touch data at all.  The first pass holds every plain and object
+aggregate (counts, sums, percentile, mode, collect_set); the second only
+the checks that use ``countDistinct`` (distinct/duplicate counts and
+compound-column uniqueness), and a pass with no check is skipped.  One
+fused pass would cost more than the two: a DISTINCT aggregate makes
+Catalyst's distinct rewrite Expand every row once per distinct group and
+carry every other aggregate's buffer through an ObjectHashAggregate
+grouped by the distinct keys, a shuffle of those buffers and a
+SortAggregate merge.
 
 The supported checks are the keys of :data:`CATALOG`: the public GX
 ``expectation_type`` names the reference dispatches by ``getattr``,
@@ -63,6 +71,7 @@ from typing import Callable
 
 import pandas as pd
 from pyspark.errors import AnalysisException, ParseException
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
@@ -96,6 +105,8 @@ class _Compiled:
     column: str | None = None  # result label; default kwargs["column"]
     label: str = ""
     error: str | None = None
+    distinct: bool = False  # aggs use countDistinct: the second pass
+    values: list | None = None  # the collected aggs
 
 
 def _between(value, lo, hi) -> bool:
@@ -204,16 +215,19 @@ def _ratio(cond: Column, pred: Column, mostly: float,
     )
 
 
-def _scalar(agg: Column, ok, column: str | None = None) -> _Compiled:
-    return _Compiled([agg], lambda v: ok(v[0]), column)
+def _scalar(agg: Column, ok, column: str | None = None,
+            distinct: bool = False) -> _Compiled:
+    return _Compiled([agg], lambda v: ok(v[0]), column, distinct=distinct)
 
 
-def _share(num: Column, of: Column, ok, scale: float = 100.0) -> _Compiled:
+def _share(num: Column, of: Column, ok, scale: float = 100.0,
+           distinct: bool = False) -> _Compiled:
     """``ok`` over scale·num/count(of) — None when ``of`` has no non-null
     row."""
     return _Compiled(
         [num, F.count(of)],
         lambda v: ok(scale * (v[0] or 0) / v[1] if v[1] else None),
+        distinct=distinct,
     )
 
 
@@ -235,6 +249,7 @@ _METRICS: dict[str, Callable[[Column], Column]] = {
     "stdev": F.stddev_samp,  # GX stdev = sample stddev
     "median": lambda c: F.percentile(c, 0.5),
 }
+_DISTINCT_METRICS = {"distinct_count", "duplicate_count"}  # second pass
 
 
 def _metric(name: str, test=_bounds):
@@ -242,7 +257,8 @@ def _metric(name: str, test=_bounds):
     column)."""
     def build(df, kw):
         c = None if name == "row_count" else _col(kw)
-        return _scalar(_METRICS[name](c), test(kw))
+        return _scalar(_METRICS[name](c), test(kw),
+                       distinct=name in _DISTINCT_METRICS)
     return build
 
 
@@ -250,7 +266,8 @@ def _metric_share(name: str, test, scale: float = 100.0):
     """Check ``test(kw)`` on a metric as a share of the non-null rows."""
     def build(df, kw):
         c = _col(kw)
-        return _share(_METRICS[name](c), c, test(kw), scale)
+        return _share(_METRICS[name](c), c, test(kw), scale,
+                      distinct=name in _DISTINCT_METRICS)
     return build
 
 
@@ -786,7 +803,7 @@ CATALOG: dict[str, Callable[[DataFrame, dict], _Compiled | bool]] = {
         _metric("duplicate_count", _no_duplicates),
     "expect_compound_columns_to_be_unique": lambda df, kw: _scalar(
         _METRICS["duplicate_count"](F.struct(*map(F.col, kw["column_list"]))),
-        lambda dup: dup == 0, ",".join(kw["column_list"])),
+        lambda dup: dup == 0, ",".join(kw["column_list"]), distinct=True),
     **{f"soda:{m}": _metric(m, _soda) for m in (
         "row_count", "missing_count", "duplicate_count",
         "min", "max", "avg", "sum")},
@@ -934,8 +951,31 @@ def _compile(df: DataFrame, exp: dict) -> _Compiled | None:
     return out
 
 
+def _aggregate(df: DataFrame, checks: list[_Compiled]) -> None:
+    """Collect the aggregates of ``checks`` into their ``values`` in one
+    ``df.agg``; no job when they have no aggregate."""
+    aggs = [a for comp in checks for a in comp.aggs]
+    try:
+        row = iter(df.agg(*aggs).collect()[0] if aggs else [])
+        for comp in checks:
+            comp.values = [next(row) for _ in comp.aggs]
+    except CapturedException:
+        # one expression that fails analysis (a value_set literal whose
+        # type mismatches the column: `cat = array('a')`) or at run time
+        # (an ANSI cast of 'abc') must not kill the whole pass — fall back
+        # to one agg per check so only the offending check fails.  Error
+        # path only: the fused plan stays the fast path
+        for comp in checks:
+            try:
+                comp.values = (list(df.agg(*comp.aggs).collect()[0])
+                               if comp.aggs else [])
+            except CapturedException as e:
+                comp.error = _error(e)
+
+
 def evaluate_suite(df: DataFrame, expectations: list[dict]) -> list[dict]:
-    """Evaluate the whole suite in ONE aggregation pass.  Returns
+    """Evaluate the whole suite in at most two aggregation passes (see the
+    module docstring).  Returns
     [{expectation, column, success}] in suite order (skipped/unknown
     expectations omitted, matching the reference's `continue`).
 
@@ -968,33 +1008,15 @@ def evaluate_suite(df: DataFrame, expectations: list[dict]) -> list[dict]:
 
     for i, comp in enumerate(checks):
         comp.aggs = [a.alias(f"c{i}_{j}") for j, a in enumerate(comp.aggs)]
-    all_aggs = [a for comp in checks for a in comp.aggs]
-    try:
-        row = iter(df.agg(*all_aggs).collect()[0] if all_aggs else [])
-        values = [[next(row) for _ in comp.aggs] for comp in checks]
-    except AnalysisException:
-        # one expression that compiled but fails analysis (e.g. a
-        # value_set entry whose literal type mismatches the column:
-        # `cat = array('a')`) must not kill the fused single-pass agg —
-        # fall back to per-expectation aggregation so only the offending
-        # expectation fails.  Error path only: the fused plan stays the
-        # fast path
-        values = []
-        for comp in checks:
-            try:
-                values.append(
-                    list(df.agg(*comp.aggs).collect()[0]) if comp.aggs else []
-                )
-            except AnalysisException as e:
-                comp.error = _error(e)
-                values.append(None)
+    for distinct in (False, True):
+        _aggregate(df, [comp for comp in checks if comp.distinct == distinct])
 
     results = []
-    for comp, vals in zip(checks, values):
+    for comp in checks:
         success = False
         if comp.error is None:
             try:
-                success = bool(comp.verdict(vals))
+                success = bool(comp.verdict(comp.values))
             except (TypeError, ValueError, ZeroDivisionError, KeyError) as e:
                 # verdict-time errors (e.g. a string min_value compared to
                 # a numeric aggregate) are contained per-expectation, same

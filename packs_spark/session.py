@@ -104,6 +104,13 @@ def get_spark(
         # those plans to interpreted mode — raise it so wide single-pass
         # aggregations stay inside codegen.
         "spark.sql.codegen.maxFields": "500",
+        # PySpark 4 records the Python call site of every DataFrame and
+        # Column call (pyspark.errors.utils._with_origin): an active-session
+        # lookup, a conf read and a JVM origin set + clear, about two thirds
+        # of the py4j round trips of compiling a 55-check suite.  Off,
+        # analysis errors lose only the Python file:line "DataFrame query
+        # context" appended after their message.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # NOTE: keep the local driver heap right-sized, not maximal — with a
         # 48g heap the first large whole-stage-codegen compile takes >60s
         # (JIT/GC ergonomics); 8g shows none of that and comfortably holds

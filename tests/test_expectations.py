@@ -1237,7 +1237,7 @@ _CATALOG_CASES = {
 
 def test_every_catalog_key_passes_and_fails(spark):
     """Every catalog key, once with kwargs the data meets and once with
-    kwargs it misses, in ONE evaluate_suite call (one aggregation pass
+    kwargs it misses, in ONE evaluate_suite call (two aggregation passes
     plus the bounded monotone/other-table jobs)."""
     from packs_spark.operators.expectations import CATALOG
 
@@ -1262,3 +1262,100 @@ def test_every_catalog_key_passes_and_fails(spark):
         assert "error" not in ok and "error" not in bad, (ok, bad)
         got[etype] = (ok["success"], bad["success"])
     assert {k: v for k, v in got.items() if v != (True, False)} == {}
+
+
+def test_runtime_error_fails_only_its_check(spark):
+    """A check that fails at run time (an ANSI cast of 'abc' to a number)
+    fails alone; the rest of its pass still evaluates."""
+    df = spark.createDataFrame([("1",), ("abc",), ("3",)], "s string")
+    res = evaluate_suite(
+        df,
+        [
+            {"expectation_type": "expect_column_values_to_be_between",
+             "kwargs": {"column": "s", "min_value": 0, "max_value": 5}},
+            {"expectation_type": "expect_table_row_count_to_be_between",
+             "kwargs": {"min_value": 1}},
+        ],
+    )
+    assert res[0]["success"] is False
+    assert res[0]["error"].startswith("NumberFormatException:")
+    assert res[1] == {"expectation": "expect_table_row_count_to_be_between",
+                      "column": None, "success": True}
+
+
+def _orders_df(spark):
+    """Orders-shaped: o_custkey 10 and 30 repeat, and every column but the
+    key holds a NULL."""
+    from datetime import datetime
+
+    return spark.createDataFrame(
+        [
+            (1, 10, "O", 1500.0, datetime(1995, 1, 2), "1-URGENT"),
+            (2, 10, "F", 250000.5, datetime(1996, 3, 4), "2-HIGH"),
+            (3, 20, None, None, None, None),
+            (4, None, "P", 99.0, datetime(1998, 5, 6), "5-LOW"),
+            (5, 30, "O", 410000.0, datetime(1994, 7, 8), "3-MEDIUM"),
+            (6, 30, "X", 12.0, datetime(2020, 1, 1), " 4-NOT SPECIFIED"),
+        ],
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+    )
+
+
+def test_split_passes_keep_results(spark):
+    """The registry's GX and SodaCL suites give, field for field, what
+    their checks give one at a time."""
+    from packs_spark.queries_packs import _GX_SUITE, _SODA_CHECKS
+
+    df = _orders_df(spark)
+    df.createOrReplaceTempView("suite_other_orders")
+    for suite in (_GX_SUITE, [parse_sodacl(c) for c in _SODA_CHECKS]):
+        one_at_a_time = [r for exp in suite for r in evaluate_suite(df, [exp])]
+        assert evaluate_suite(df, suite) == one_at_a_time
+
+
+def test_distinct_checks_run_in_their_own_pass(spark, monkeypatch):
+    """Plain and object aggregates share one df.agg; the countDistinct
+    checks get a second one, and only they do."""
+    import re
+
+    df = _orders_df(spark)
+    calls = []
+    agg = type(df).agg
+
+    def spy(self, *cols):
+        calls.append({int(m) for m in
+                      re.findall(r" AS c(\d+)_\d+'>$", "\n".join(map(repr, cols)),
+                                 re.M)})
+        return agg(self, *cols)
+
+    monkeypatch.setattr(type(df), "agg", spy)
+    plain = [
+        {"expectation_type": "expect_table_row_count_to_be_between",
+         "kwargs": {"min_value": 1}},
+        {"expectation_type": "expect_column_median_to_be_between",
+         "kwargs": {"column": "o_totalprice", "min_value": 1}},
+        {"expectation_type": "expect_column_most_common_value_to_be_in_set",
+         "kwargs": {"column": "o_orderstatus", "value_set": ["O"]}},
+        {"expectation_type": "expect_table_column_count_to_equal",
+         "kwargs": {"value": 6}},
+    ]
+    evaluate_suite(df, plain)
+    assert calls == [{0, 1, 2}]
+
+    calls.clear()
+    distinct = [
+        {"expectation_type": "expect_column_values_to_be_unique",
+         "kwargs": {"column": "o_orderkey"}},
+        {"expectation_type": "expect_compound_columns_to_be_unique",
+         "kwargs": {"column_list": ["o_orderkey", "o_custkey"]}},
+        parse_sodacl("duplicate_count(o_custkey) > 0"),
+        {"expectation_type": "dqops:distinct_percent",
+         "kwargs": {"column": "o_orderkey", "min_percent": 100.0}},
+        {"expectation_type":
+             "expect_column_unique_value_count_to_be_between",
+         "kwargs": {"column": "o_orderstatus", "min_value": 2}},
+    ]
+    res = evaluate_suite(df, [plain[0], *distinct, plain[1]])
+    assert calls == [{0, 6}, {1, 2, 3, 4, 5}]
+    assert [r["success"] for r in res] == [True] * 7

@@ -1,5 +1,5 @@
-"""Session factory: the lazy-zip-invalidation worker daemon and local[*]
-parallelism."""
+"""Session factory: the lazy-zip-invalidation worker daemon, local[*]
+parallelism and the DataFrame call-site capture it turns off."""
 
 from __future__ import annotations
 
@@ -125,3 +125,36 @@ def test_parallelism_of_local_star_honours_affinity(monkeypatch):
     assert session._parallelism_of("local[*]") == 5
     assert session._parallelism_of("local[3]") == 3
     assert session._parallelism_of("yarn") is None
+
+
+def test_dataframe_call_site_capture_is_off(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_compiling_the_gx_suite_makes_few_py4j_calls(spark, sf_dir, monkeypatch):
+    """Building the registry GX suite's Columns (plus its other-table
+    count job) takes ~1.3k-1.9k py4j round trips; with call-site capture
+    on it took ~4.9k-5.4k.  The count does not depend on timing."""
+    import py4j.clientserver
+    import pyspark.errors.utils
+
+    from packs_spark.operators.expectations import _compile
+    from packs_spark.queries_packs import _GX_SUITE
+    from packs_spark.registry import load
+
+    df = load(spark, sf_dir, "orders")
+    df.createOrReplaceTempView("suite_other_orders")
+    # read the flag from this session's conf, not a cached earlier answer
+    monkeypatch.setattr(pyspark.errors.utils, "_enable_debugging_cache", None)
+    conn = py4j.clientserver.ClientServerConnection
+    send, calls = conn.send_command, []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(conn, "send_command", counting)
+    for exp in _GX_SUITE:
+        _compile(df, exp)
+    monkeypatch.setattr(conn, "send_command", send)
+    assert 0 < len(calls) <= 2500
