@@ -2,50 +2,219 @@
 
 The north rule requires per-partition checkpointed/resumable outputs with
 lineage.  On a real cluster this is an Iceberg table written with
-``df.writeTo(tbl).overwritePartitions()`` — the commit log below is exactly
-the piece Iceberg's snapshot metadata provides.  This sandbox has no Iceberg
-runtime jar (no network), so the same semantics are built from primitives
-that ship with Spark:
+``label(df).writeTo(table).overwritePartitions()`` — the commit log below
+is exactly the piece Iceberg's snapshot metadata provides.  This sandbox
+has no Iceberg runtime jar (no network), so the same semantics are built
+from primitives that ship with Spark and pyarrow:
 
 * data: one parquet file per url-hash bucket, ``bucket-<b>.parquet``, flat
   under the table root (the ``bucket`` column is stored IN the file).  The
-  pipeline's ``repartition_by_bucket`` places bucket b in task-partition b
-  exactly, so the plain parquet writer emits exactly one part file per
-  bucket — which the driver then moves to its final name with an atomic
-  ``os.replace``.  Re-processing a bucket is an **idempotent file
-  replacement**, never a duplicate append.
+  input is one bucket per partition (``repartition_by_bucket``), and each
+  write task — a ``mapInArrow`` Python task — applies the caller's
+  ``transform`` (run_batch's labeling) to its Arrow batches, checks every
+  batch holds its one bucket, writes them with a pyarrow ``ParquetWriter``
+  (the session's ``spark.sql.parquet.compression.codec``, row groups of up
+  to ``_ROW_GROUP_BYTES`` of Arrow data)
+  to ``_staging-*/bucket-<b>-a<taskAttemptId>.parquet`` and yields one
+  summary row: bucket, path, rows, bytes and the caller's ``metrics`` of
+  the rows written.  The driver ``collect()``s the summaries and moves
+  exactly the reported files to their final names with an atomic
+  ``os.replace``; a file of a failed or duplicate task attempt has no
+  summary and goes with the staging directory.  Re-processing a bucket is
+  an **idempotent file replacement**, never a duplicate append.
 * commit log: one JSON marker per completed bucket under ``_progress/``,
-  written by the driver only *after* the wave's files are in place.  A
-  marker is the unit of resume: buckets with markers are skipped on
-  restart, buckets without are recomputed (their partial output, if any,
-  is overwritten).
+  written by the driver only *after* the wave's files are in place, with
+  the bucket's rows, bytes and metrics row.  A marker is the unit of
+  resume: buckets with markers are skipped on restart, buckets without are
+  recomputed (their partial output, if any, is overwritten).  Per-bucket
+  metrics are read from the markers (``bucket_metrics``), so no job reads
+  the table back.
 
-Why not ``partitionBy("bucket")`` + dynamic partition overwrite: that path
-stages every file and serially re-links one directory per bucket in the
-driver's commit — measurably slower than the task write itself at high
-core counts, and none of it buys anything when partition == bucket == one
-file by construction.
+Why not Spark's own parquet writer: its per-task cost (the write job's
+task binary, the commit protocol's files; ~100 ms a task at local[4]) is
+paid on top of moving every labeled row from the Python worker back to the
+JVM and encoding it there, while the Python task already holds the rows
+in Arrow.  (``partitionBy("bucket")`` with dynamic partition overwrite
+adds a serial per-directory re-link in the driver's commit on top.)
 
-Swap-in for Iceberg: replace ``_write_wave`` with
-``df.writeTo(table).overwritePartitions()`` and ``completed_buckets`` with a
-scan of the table's snapshot summary; the pipeline code does not change.
+The output root must be a POSIX path that both the driver and the
+executors can open: the tasks write the staged files and the driver
+renames them.
+
+Swap-in for Iceberg: write ``label(df).writeTo(table).overwritePartitions()``
+per wave instead of ``_write_wave``, and read ``completed_buckets`` and the
+metrics from the table's snapshot summaries; the pipeline code does not
+change.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
+import threading
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PROGRESS_DIR = "_progress"
 
-_PART_RE = re.compile(r"^part-(\d+)-.*\.parquet$")
+# one row per written bucket; ``metrics`` is the JSON of the caller's row
+_SUMMARY = "bucket int, path string, rows long, bytes long, metrics string"
+# Dictionary-encode only columns whose values repeat within a bucket: a
+# dictionary of unique values (url, text, the float signals) is pure
+# overhead.  Statistics only on the bucket column, the one column readers
+# prune on.
+_DICT_MAX_DISTINCT = 0.25
+# Row-group target in bytes of uncompressed Arrow data, which is also what
+# a write task buffers.  The generated web text's labeled rows take 2.2x
+# their parquet bytes in Arrow, so a row group is ~58 MiB encoded, where
+# Spark's writer buffers up to 128 MiB (``parquet.block.size``).
+_ROW_GROUP_BYTES = 128 << 20
+
+
+def _identity(rb):
+    return rb
+
+
+def _drain(batches: Iterable) -> None:
+    for _ in batches:
+        pass
+
+
+class _BucketFile:
+    """The staged parquet file of one write task: every batch checked to
+    hold only that file's bucket, and batches buffered into row groups of
+    about ``_ROW_GROUP_BYTES`` of Arrow data — ``write_batch`` per Arrow
+    batch would start a row group every ``maxRecordsPerBatch`` rows, where
+    Spark's writer fills them up to ``parquet.block.size`` (128 MiB)."""
+
+    def __init__(
+        self,
+        staging: str,
+        bucket_col: str,
+        attempt: int,
+        compression: str,
+    ):
+        self.staging, self.bucket_col, self.attempt = staging, bucket_col, attempt
+        self.compression = compression
+        self.bucket = self.path = self._writer = None
+        self.rows = 0
+        self._buffer, self._buffered = [], 0
+
+    def write(self, rb) -> None:
+        import pyarrow.compute as pc
+
+        seen = set(pc.unique(rb.column(self.bucket_col)).to_pylist())
+        if self.bucket is not None:
+            seen.add(self.bucket)
+        if len(seen) != 1 or None in seen:
+            raise RuntimeError(
+                f"one write task got rows of buckets {sorted(seen, key=str)}"
+                " — input is not one-bucket-per-partition (use "
+                "repartition_by_bucket with the writer's n_buckets)"
+            )
+        if self.bucket is None:
+            self.bucket = seen.pop()
+            self.path = os.path.join(
+                self.staging, f"bucket-{self.bucket}-a{self.attempt}.parquet"
+            )
+        self._buffer.append(rb)
+        self._buffered += rb.nbytes
+        self.rows += rb.num_rows
+        if self._buffered >= _ROW_GROUP_BYTES:
+            self.flush()
+
+    def flush(self) -> None:
+        """Write the buffered batches as one row group."""
+        import pyarrow as pa
+
+        if not self._buffer:
+            return
+        table = pa.Table.from_batches(self._buffer)
+        if self._writer is None:
+            self._open(table)
+        table = pa.Table.from_arrays(table.columns, schema=self._writer.schema)
+        self._writer.write_table(table, row_group_size=table.num_rows)
+        self._buffer, self._buffered = [], 0
+
+    def _open(self, table) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        # the first row group decides which columns repeat enough for a
+        # dictionary
+        repeats = [
+            f.name
+            for f, col in zip(table.schema, table.columns)
+            if not (pa.types.is_floating(f.type) or pa.types.is_nested(f.type))
+            and pc.count_distinct(col).as_py()
+            <= _DICT_MAX_DISTINCT * table.num_rows
+        ]
+        # every column nullable, as Spark's writer stores them
+        schema = pa.schema([f.with_nullable(True) for f in table.schema])
+        self._writer = pq.ParquetWriter(
+            self.path,
+            schema,
+            compression=self.compression,
+            use_dictionary=repeats,
+            write_statistics=[self.bucket_col],
+            store_schema=False,
+        )
+
+    def close(self) -> int:
+        """Close the file, without writing what is still buffered; its
+        size in bytes (0 if it was never opened)."""
+        if self._writer is None:
+            return 0
+        self._writer.close()
+        return os.path.getsize(self.path)
+
+
+def _write_task(
+    batches: Iterator,
+    staging: str,
+    bucket_col: str,
+    transform: Callable,
+    metrics: Callable,
+    compression: str,
+) -> Iterator:
+    """One write task: ``transform`` each Arrow batch of the partition,
+    write the rows to its bucket's staged file and yield one ``_SUMMARY``
+    row with ``metrics`` of the rows written.  A partition without rows
+    yields nothing; a failed task yields nothing either, and the driver
+    drops its file with the staging directory."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    attempt = TaskContext.get().taskAttemptId()
+    out = _BucketFile(staging, bucket_col, attempt, compression)
+
+    def written():
+        for rb in batches:
+            rb = transform(rb)
+            if rb.num_rows:
+                out.write(rb)
+                yield rb
+
+    try:
+        row = metrics(written())
+        out.flush()
+    finally:
+        size = out.close()
+    if out.bucket is not None:
+        yield pa.RecordBatch.from_pydict(
+            {
+                "bucket": pa.array([out.bucket], pa.int32()),
+                "path": [out.path],
+                "rows": pa.array([out.rows], pa.int64()),
+                "bytes": pa.array([size], pa.int64()),
+                "metrics": [json.dumps(row)],
+            }
+        )
 
 
 class CheckpointedWriter:
@@ -117,7 +286,9 @@ class CheckpointedWriter:
 
     def _commit(self, bucket: int, lineage: dict) -> None:
         marker = os.path.join(self._progress_path, f"bucket-{bucket}.json")
-        tmp = marker + ".tmp"
+        # a tmp name of our own: bucket_metrics may rewrite an old marker
+        # while another run does the same, outside the writer lock
+        tmp = f"{marker}.{os.getpid()}.{threading.get_ident()}.tmp"
         with open(tmp, "w") as f:
             json.dump(lineage, f)
         os.replace(tmp, marker)  # atomic on POSIX
@@ -126,58 +297,86 @@ class CheckpointedWriter:
     def _bucket_file(self, bucket: int) -> str:
         return os.path.join(self.base_path, f"bucket-{bucket:05d}.parquet")
 
-    def _file_bucket(self, path: str) -> int | None:
-        """Bucket id of a staged part file from its parquet footer
-        statistics (driver-side metadata read, no data scan).  None for an
-        empty file; raises if the file mixes buckets — the one-bucket-per-
-        file invariant is what makes per-bucket overwrite idempotent."""
-        import pyarrow.parquet as pq
+    def _marker(self, bucket: int) -> dict:
+        with open(os.path.join(self._progress_path, f"bucket-{bucket}.json")) as f:
+            return json.load(f)
 
-        meta = pq.ParquetFile(path).metadata
-        if meta.num_rows == 0:
-            return None
-        col_idx = meta.schema.names.index(self.bucket_col)
-        lo = hi = None
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(col_idx).statistics
-            if st is None or not st.has_min_max:
-                raise RuntimeError(f"no bucket statistics in {path}")
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if lo != hi:
-            raise RuntimeError(
-                f"staged file {path} spans buckets {lo}..{hi} — input is not "
-                f"one-bucket-per-partition (use repartition_by_bucket with "
-                f"n_buckets={self.n_buckets})"
-            )
-        return int(lo)
-
-    def _write_wave(self, wave_df: DataFrame, wave: list[int]) -> None:
-        """One Spark action: plain parquet write to a staging dir (the
-        upstream repartition_by_bucket makes every task's output a single
-        bucket), then atomic per-file renames into place.  Bucket identity
-        comes from each file's footer stats, not its task index — robust to
-        AQE renumbering partitions on filtered resume waves.  A crash
+    def _write_wave(
+        self, wave_df: DataFrame, wave: list[int], transform, metrics
+    ) -> dict[int, dict]:
+        """One Spark action: every task writes its bucket's staged file
+        (``_write_task``), then the driver renames exactly the files the
+        collected summaries report — bucket identity comes from each
+        file's rows, not its task index, so AQE renumbering partitions on
+        filtered resume waves cannot misplace a file.  Returns the rows,
+        bytes and metrics of each wave bucket; an empty bucket gets the
+        metrics of no rows and loses any file a crashed run left.  A crash
         between renames re-runs the wave; os.replace is idempotent."""
         staging = os.path.join(self.base_path, f"_staging-{os.getpid()}-{wave[0]}")
-        wave_df.write.mode("overwrite").parquet(staging)
+        os.makedirs(staging, exist_ok=True)
+        bucket_col = self.bucket_col
+        codec = wave_df.sparkSession.conf.get(
+            "spark.sql.parquet.compression.codec", "snappy"
+        ).lower()
+        # Spark's codec names where pyarrow's differ
+        compression = {"uncompressed": "none", "lz4_raw": "lz4"}.get(codec, codec)
+
+        def write_bucket(batches):
+            return _write_task(
+                batches, staging, bucket_col, transform, metrics, compression
+            )
+
         wave_set = set(wave)
         try:
-            for name in os.listdir(staging):
-                if not _PART_RE.match(name):
-                    continue
-                src = os.path.join(staging, name)
-                bucket = self._file_bucket(src)
-                if bucket is None:
-                    continue  # empty placeholder file
-                if bucket not in wave_set:
+            summaries = wave_df.mapInArrow(write_bucket, _SUMMARY).collect()
+            written = {}
+            for s in summaries:
+                if s.bucket not in wave_set:
                     raise RuntimeError(
-                        f"staged file {name} holds bucket {bucket}, outside "
-                        f"the wave {sorted(wave_set)} — wave filter broke"
+                        f"a task wrote bucket {s.bucket}, outside the wave "
+                        f"{sorted(wave_set)} — wave filter broke"
                     )
-                os.replace(src, self._bucket_file(bucket))
+                if s.bucket in written:
+                    raise RuntimeError(
+                        f"bucket {s.bucket} was written by two tasks — input "
+                        "is not one-bucket-per-partition"
+                    )
+                written[s.bucket] = s
+            for b, s in written.items():
+                os.replace(s.path, self._bucket_file(b))
         finally:
             shutil.rmtree(staging, ignore_errors=True)
+        out = {}
+        for b in wave:
+            s = written.get(b)
+            if s is None:  # no rows: drop what a crashed run may have left
+                if os.path.exists(self._bucket_file(b)):
+                    os.remove(self._bucket_file(b))
+                out[b] = {"rows": 0, "bytes": 0, "metrics": metrics(())}
+            else:
+                out[b] = {"rows": s.rows, "bytes": s.bytes,
+                          "metrics": json.loads(s.metrics)}
+        return out
+
+    def bucket_metrics(self, metrics: Callable[[Iterable], dict]) -> dict[int, dict]:
+        """Each committed bucket's metrics row, as its marker stores it.  A
+        marker without one (committed before markers carried metrics) gets
+        ``metrics`` of the bucket's file, computed once and stored."""
+        import pyarrow.parquet as pq
+
+        out = {}
+        for b in sorted(self.completed_buckets()):
+            marker = self._marker(b)
+            if marker.get("metrics") is None:
+                path = self._bucket_file(b)
+                if os.path.exists(path):
+                    with pq.ParquetFile(path) as f:
+                        marker["metrics"] = metrics(f.iter_batches())
+                else:
+                    marker["metrics"] = metrics(())
+                self._commit(b, marker)
+            out[b] = marker["metrics"]
+        return out
 
     def write_resumable(
         self,
@@ -185,9 +384,17 @@ class CheckpointedWriter:
         wave_size: int | None = None,
         on_wave: Callable[[list[int]], None] | None = None,
         assume_placed: bool = False,
+        transform: Callable | None = None,
+        metrics: Callable[[Iterable], dict] | None = None,
     ) -> dict:
         """Write ``df`` (which must carry ``bucket_col``) skipping buckets
         already committed, committing markers per wave.
+
+        ``transform(rb) -> rb`` runs on each Arrow batch inside the write
+        task, before the write (identity by default; run_batch labels
+        there).  ``metrics(batches) -> dict`` gets the rows a task writes,
+        as they are written; its row is stored in the bucket's marker
+        (``bucket_metrics`` reads it back).
 
         ``assume_placed=True`` promises the input is already
         one-bucket-per-partition (pipeline.partitioning.repartition_by_bucket
@@ -205,8 +412,10 @@ class CheckpointedWriter:
             return stats
         self._acquire_lock()
         try:
-            return self._write_pending(df, pending, stats, wave_size,
-                                       on_wave, assume_placed)
+            return self._write_pending(
+                df, pending, stats, wave_size, on_wave, assume_placed,
+                transform or _identity, metrics or _drain,
+            )
         finally:
             self._release_lock()
 
@@ -379,6 +588,8 @@ class CheckpointedWriter:
         wave_size: int | None,
         on_wave,
         assume_placed: bool,
+        transform: Callable,
+        metrics: Callable,
     ) -> dict:
         if not assume_placed:
             from packs_spark.pipeline.partitioning import repartition_by_bucket
@@ -395,7 +606,7 @@ class CheckpointedWriter:
             else:
                 wave_df = df.where(F.col(self.bucket_col).isin(wave))
             t0 = time.time()
-            self._write_wave(wave_df, wave)
+            written = self._write_wave(wave_df, wave, transform, metrics)
             elapsed = time.time() - t0
             for b in wave:
                 self._commit(
@@ -405,6 +616,7 @@ class CheckpointedWriter:
                         "committed_at_unix": time.time(),
                         "wave": wave,
                         "wave_seconds": elapsed,
+                        **written[b],
                     },
                 )
             stats["written"] += len(wave)

@@ -4,15 +4,19 @@ the reference packs' text checks — SURVEY §2.4 A8, §2.8 F1-F5).
 Everything here is a native Column expression (JVM-side, codegen'd); each
 rule also has an ANSI-SQL rendering so the whole rule set is DuckDB-checkable.
 Model-backed signals (langid confidence, perplexity) join in at the pipeline
-level (packs_spark.pipeline.webtext) — they are pandas-UDF stages and are
-verified by pytest against a pandas oracle instead.
+level (packs_spark.pipeline.webtext) — they are computed in the pipeline's
+Arrow batch function (pipeline.udfs) and are verified by pytest against a
+pandas oracle instead.
 
-The keep rule is written once, ``heuristic_keep``, over the ``q_*`` signal
-columns with the ``DEFAULTS`` thresholds; ``sql_keep_mask`` is its DuckDB
+The keep rule is written once, ``heuristic_keep``, over the ``q_*`` quality
+signals with the ``DEFAULTS`` thresholds — as a Column over signal columns,
+or over the pipeline's numpy signal arrays; ``sql_keep_mask`` is its DuckDB
 oracle twin.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -103,23 +107,28 @@ def repeated_bigram_ratio(c: Column) -> Column:
     )
 
 
-def heuristic_keep() -> Column:
+def heuristic_keep(sig: Callable = F.col):
     """THE heuristic keep rule (True = keep): the conjunction of every
-    ``DEFAULTS`` threshold over the ``q_*`` quality-signal columns.  Both
-    the pipeline (``webtext.label``, signals from the enrich UDF) and the
-    flagship query (``webtext.quality_columns``, JVM signals) apply it.
-    A NULL text (NULL ``q_n_chars``) is dropped, never NULL-labeled."""
+    ``DEFAULTS`` threshold over the ``q_*`` quality signals, each looked up
+    with ``sig(name)``.  With the default ``F.col`` it is a Column for the
+    flagship query (``webtext.quality_columns``, JVM signals), where a
+    NULL text (NULL ``q_n_chars``) is dropped, never NULL-labeled; the
+    pipeline's ``udfs.make_label_batch`` passes its numpy signal arrays
+    and gets a bool array (a NULL text has 0 chars there, so it fails
+    ``min_chars``)."""
     t = DEFAULTS
-    n_chars = F.col("q_n_chars")
-    return (
-        n_chars.isNotNull()
-        & (n_chars >= t["min_chars"])
+    n_chars = sig("q_n_chars")
+    keep = (
+        (n_chars >= t["min_chars"])
         & (n_chars <= t["max_chars"])
-        & (F.col("q_n_words") >= t["min_words"])
-        & (F.col("q_symbol_ratio") <= t["max_symbol_ratio"])
-        & (F.col("q_stopword_ratio") >= t["min_stopword_ratio"])
-        & (F.col("q_distinct_ratio") >= t["min_distinct_ratio"])
+        & (sig("q_n_words") >= t["min_words"])
+        & (sig("q_symbol_ratio") <= t["max_symbol_ratio"])
+        & (sig("q_stopword_ratio") >= t["min_stopword_ratio"])
+        & (sig("q_distinct_ratio") >= t["min_distinct_ratio"])
     )
+    if isinstance(keep, Column):
+        keep = n_chars.isNotNull() & keep
+    return keep
 
 
 # Tracking query parameters stripped by url canonicalization (public

@@ -5,8 +5,8 @@ labels, whose patterns are Python ``re`` regexes
 (pii_scanner_pack/pack_conf.json:4-13).  Java regex (Spark
 ``regexp_replace``) differs from Python ``re`` in enough corners (\\b
 around unicode, alternation tie-breaks) that the scrub hot path runs
-Python ``re`` inside an Arrow-batched pandas UDF — the only Python in
-the whole pipeline.
+Python ``re`` inside the pipeline's Arrow batch function
+(``udfs.make_label_batch``).
 
 Scrub semantics: ONE combined alternation pattern
 (email | ipv4 | ipv6 | ssn | blocklist), leftmost match wins, ties at the
@@ -53,8 +53,10 @@ def combined_pattern() -> "re.Pattern[str]":
 # (ipv6), a digit (ipv4/ssn) or a blocklist term — a single char-class
 # scan (re's bitmap fast path, ~10× cheaper per byte than the alternation)
 # plus C-level substring checks skip the expensive scan for the ~90% of
-# web documents that cannot match anything.
-_PREFILTER = re.compile(r"[@:0-9]")
+# web documents that cannot match anything.  "A digit" is ``\d``: usa_ssn
+# is ``\d{3}-\d{2}-\d{4}``, and Python's ``\d`` matches every Unicode
+# decimal digit ('１２３-４５-６７８９', '١٢٣-٤٥-٦٧٨٩').
+_PREFILTER = re.compile(r"[@:\d]")
 # casefold, not lower: re.IGNORECASE uses Unicode case folding, so e.g.
 # 'ſlurword' (U+017F long s) matches (?i:slurword) while 'ſ'.lower() stays
 # 'ſ' — lower() here would be a false-negative prefilter (missed scrub)

@@ -1,23 +1,73 @@
-"""The pipeline's one pandas UDF: the fused enrich UDF around the
-broadcast models + scrub.
+"""The pipeline's labeling kernels over the broadcast models + scrub, and
+the one Arrow batch function that labels a batch with them.
 
 Pattern (mandated by BASELINE.json input_hint): models are built ONCE on
-the driver, shipped via ``sc.broadcast``, and materialized lazily inside
-the UDF — one deserialization per Python worker process, then every Arrow
+the driver, shipped via ``sc.broadcast``, and materialized lazily in the
+Python worker — one deserialization per worker process, then every Arrow
 batch is scored with a single vectorized call.  No per-row Python at the
 Spark layer.
+
+``make_label_batch`` returns ``label_batch(rb) -> rb``: every signal of the
+batch's ``text`` (``enrich_signals``: langid + perplexity, scrub, the
+heuristic signals), the one keep rule and ``run_id``, built straight into
+Arrow arrays.  ``webtext.label`` applies it with ``mapInArrow``;
+``run_batch`` hands it to the lakehouse writer, which applies it inside
+each write task, so labeled rows never travel back to the JVM.
+``make_enrich_udf`` is the same signals as a pandas UDF; the pipeline does
+not call it (perfbench's layer probes time its body).
 """
 
 from __future__ import annotations
 
 import re as _re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from packs_spark.pipeline.rules import STOPWORDS
+
 _SYM_RE = _re.compile(r"[^A-Za-z0-9\s]")
+_STOP_SET = frozenset(STOPWORDS)
+
+# the signal columns of ``enrich_signals``, in output order
+SIGNALS = T.StructType(
+    [
+        T.StructField("lang_pred", T.StringType()),
+        T.StructField("lang_margin", T.DoubleType()),
+        T.StructField("ppl", T.DoubleType()),
+        T.StructField("text_scrubbed", T.StringType()),
+        T.StructField(
+            "scrub_spans",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("kind", T.StringType()),
+                        T.StructField("start", T.IntegerType()),
+                        T.StructField("end", T.IntegerType()),
+                    ]
+                )
+            ),
+        ),
+        T.StructField("pii_hits", T.IntegerType()),
+        T.StructField("q_n_chars", T.LongType()),
+        T.StructField("q_n_words", T.LongType()),
+        T.StructField("q_symbol_ratio", T.DoubleType()),
+        T.StructField("q_stopword_ratio", T.DoubleType()),
+        T.StructField("q_distinct_ratio", T.DoubleType()),
+    ]
+)
+# the columns ``label_batch`` appends to its input (minus ``text``)
+LABELS = T.StructType(
+    SIGNALS.fields
+    + [
+        T.StructField("keep_heuristic", T.BooleanType()),
+        T.StructField("keep", T.BooleanType()),
+        T.StructField("run_id", T.StringType()),
+    ]
+)
 
 
 def _heuristic_batch(tl, stop_set):
@@ -26,10 +76,8 @@ def _heuristic_batch(tl, stop_set):
     unicode whitespace, Python-re symbol class).  One C-level tokenize pass
     per document inside the batch; all arithmetic on numpy arrays.  Moved
     here from JVM Column expressions: the split/array_distinct/isin chain
-    cost more JVM time than this whole UDF, and Python semantics make the
+    cost more JVM time than this whole kernel, and Python semantics make the
     keep/drop parity with the oracle exact instead of F1≈1."""
-    import numpy as np
-
     n = len(tl)
     n_chars = np.zeros(n, dtype=np.int64)
     n_words = np.zeros(n, dtype=np.int64)
@@ -60,93 +108,94 @@ def _heuristic_batch(tl, stop_set):
     return n_chars, n_words, symbol_ratio, stopword_ratio, distinct_ratio, isnull
 
 
-def make_enrich_udf(spark: SparkSession):
-    """Fused pipeline UDF: one Arrow round-trip of the text column computes
-    langid + perplexity + heuristics + scrub together (separate pandas UDFs
-    would ship the same strings to Python several times — at 10^12 docs the
-    Arrow transfer IS the cost, so the fusion is a ~4× cut of
-    Python-boundary traffic).  The heuristic keep rule is NOT applied here:
-    ``webtext.label`` applies ``rules.heuristic_keep`` to the returned
-    signals in the JVM."""
-    import numpy as np
-
+def _broadcast_models(spark: SparkSession):
+    """One broadcast: langid tables + perplexity table stacked, so a batch
+    scores all of them in a single normalize+codes pass
+    (ml.ngram.fused_predict).  Float64: score_batch accumulates in float64
+    and asarray's the tables — shipping them as float64 once (still <2 MB)
+    makes that a no-op per Arrow batch instead of a copy."""
     from packs_spark.ml.ngram import LangIdModel, PerplexityModel
 
     langid_model = LangIdModel.train()
     ppl_model = PerplexityModel.train()
-    # one broadcast: langid tables + perplexity table stacked, so the UDF
-    # scores all of them in a single normalize+codes pass (ml.ngram.
-    # fused_predict)
-    # broadcast float64: score_batch accumulates in float64 and asarray's
-    # the tables — shipping them as float64 once (still <2 MB) makes that
-    # a no-op per Arrow batch instead of a copy
     stacked = np.concatenate(
         [langid_model.tables, ppl_model.table[None, :]], axis=0
     ).astype(np.float64)
-    bc = spark.sparkContext.broadcast((stacked, list(langid_model.langs)))
+    return spark.sparkContext.broadcast((stacked, list(langid_model.langs)))
 
-    schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("margin", T.DoubleType()),
-            T.StructField("ppl", T.DoubleType()),
-            T.StructField("scrubbed", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("start", T.IntegerType()),
-                            T.StructField("end", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField("n_hits", T.IntegerType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("n_words", T.LongType()),
-            T.StructField("symbol_ratio", T.DoubleType()),
-            T.StructField("stopword_ratio", T.DoubleType()),
-            T.StructField("distinct_ratio", T.DoubleType()),
-        ]
-    )
 
-    from packs_spark.pipeline.rules import STOPWORDS
+def enrich_signals(tl: list, tables: np.ndarray, langs: list[str]) -> dict:
+    """Every ``SIGNALS`` column of one batch of texts, by name, in order:
+    langid + perplexity, scrub and the heuristic signals (one kernel call
+    each over the whole batch)."""
+    from packs_spark.ml.ngram import fused_predict
+    from packs_spark.pipeline.scrub import scrub_batch
 
-    stop_set = frozenset(STOPWORDS)
+    idx, margin, ppl = fused_predict(tl, tables, len(langs))
+    scrubbed, spans = scrub_batch(tl)
+    n_chars, n_words, sym_r, stop_r, dist_r, _ = _heuristic_batch(tl, _STOP_SET)
+    return {
+        "lang_pred": [langs[i] if i >= 0 else "unknown" for i in idx],
+        "lang_margin": margin,
+        "ppl": ppl,
+        "text_scrubbed": scrubbed,
+        "scrub_spans": spans,
+        "pii_hits": np.fromiter(map(len, spans), np.int32, len(spans)),
+        "q_n_chars": n_chars,
+        "q_n_words": n_words,
+        "q_symbol_ratio": sym_r,
+        "q_stopword_ratio": stop_r,
+        "q_distinct_ratio": dist_r,
+    }
 
-    @F.pandas_udf(schema)
-    def enrich_udf(texts: pd.Series) -> pd.DataFrame:
-        from packs_spark.ml.ngram import fused_predict
-        from packs_spark.pipeline.scrub import scrub_batch
 
+def make_label_batch(spark: SparkSession, thresholds: dict, run_id: str):
+    """The labeling step as one Arrow batch function: ``label_batch(rb)``
+    drops ``rb``'s ``text`` column, keeps every other column in order and
+    appends the ``LABELS`` columns — the signals, ``keep_heuristic`` =
+    ``rules.heuristic_keep`` over them, ``keep`` = that ∧ a known language
+    ∧ ``thresholds`` (``min_margin``, ``max_ppl``), and ``run_id``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from packs_spark.pipeline.rules import heuristic_keep
+
+    bc = _broadcast_models(spark)
+    fields = list(to_arrow_schema(LABELS))
+    min_margin, max_ppl = thresholds["min_margin"], thresholds["max_ppl"]
+
+    def label_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
         # Broadcast.value deserializes once per Python worker process and
-        # memoizes — that IS the lazy per-executor model load.  (An extra
-        # cache keyed by id(bc) collided when CPython reused object
-        # addresses across batches — do not reintroduce one.)
+        # memoizes — that IS the lazy per-executor model load.
         tables, langs = bc.value
-        tl = texts.tolist()
-        idx, margin, ppl = fused_predict(tl, tables, len(langs))
-        labels = [langs[i] if i >= 0 else "unknown" for i in idx]
-        scrubbed, spans = scrub_batch(tl)
-        n_chars, n_words, sym_r, stop_r, dist_r, _ = _heuristic_batch(
-            tl, stop_set
+        sig = enrich_signals(rb.column("text").to_pylist(), tables, langs)
+        keep_h = heuristic_keep(sig.__getitem__)
+        keep = (
+            keep_h
+            & (np.asarray(sig["lang_pred"], dtype=object) != "unknown")
+            & (sig["lang_margin"] >= min_margin)
+            & (sig["ppl"] <= max_ppl)
         )
-        return pd.DataFrame(
-            {
-                "lang": labels,
-                "margin": margin,
-                "ppl": ppl,
-                "scrubbed": scrubbed,
-                "spans": spans,
-                "n_hits": [len(s) for s in spans],
-                "n_chars": n_chars,
-                "n_words": n_words,
-                "symbol_ratio": sym_r,
-                "stopword_ratio": stop_r,
-                "distinct_ratio": dist_r,
-            }
+        values = [*sig.values(), keep_h, keep]
+        rest = [i for i, name in enumerate(rb.schema.names) if name != "text"]
+        return pa.RecordBatch.from_arrays(
+            [rb.column(i) for i in rest]
+            + [pa.array(v, type=f.type) for v, f in zip(values, fields)]
+            + [pa.repeat(pa.scalar(run_id, pa.string()), rb.num_rows)],
+            schema=pa.schema([rb.schema.field(i) for i in rest] + fields),
         )
+
+    return label_batch
+
+
+def make_enrich_udf(spark: SparkSession):
+    """``enrich_signals`` as a pandas UDF returning a ``SIGNALS`` struct of
+    the text column."""
+    bc = _broadcast_models(spark)
+
+    @F.pandas_udf(SIGNALS)
+    def enrich_udf(texts: pd.Series) -> pd.DataFrame:
+        tables, langs = bc.value
+        return pd.DataFrame(enrich_signals(texts.tolist(), tables, langs))
 
     return enrich_udf

@@ -11,20 +11,30 @@ Stages over a Common-Crawl-style table (url, warc_ts, html, text, lang):
                     stopword and distinct-word ratios)
   5. scrub        — Python-`re` PII/toxicity scrub (byte-parity with the
                     reference patterns)
-                    (2-5 run as ONE fused pandas UDF with a per-executor
-                    lazily-loaded broadcast model, udfs.make_enrich_udf)
-  6. keep/drop    — rules.heuristic_keep ∧ model thresholds (``label``)
-  7. write        — partitioned by url-hash bucket (salted for hot hosts),
-                    per-partition metrics + lineage, resumable checkpoints
-                    (packs_spark.io.lakehouse)
+  6. keep/drop    — rules.heuristic_keep ∧ model thresholds
+                    (2-6 are ONE Arrow batch function over a per-executor
+                    lazily-loaded broadcast model, udfs.make_label_batch)
+  7. write        — one parquet file per url-hash bucket, written by the
+                    Python task that labeled the bucket, with per-bucket
+                    metrics in the commit markers + lineage, resumable
+                    checkpoints (packs_spark.io.lakehouse)
 
-``run_batch`` is the full pipeline; ``label`` is its labeling step (2-6),
-shared with the streaming pipeline; ``flagship_summary`` is the compact
-driver smoke query over the generic ``documents`` testdata table.
+``run_batch`` is the full pipeline; ``label`` is its labeling step (2-6)
+as a DataFrame, used by the streaming pipeline; ``bucket_metrics`` is the
+per-bucket metrics row; ``flagship_summary`` is the compact driver smoke
+query over the generic ``documents`` testdata table.
 """
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
+import time
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,21 +51,11 @@ DEFAULT_THRESHOLDS = dict(
 )
 
 
-def label(
-    df: DataFrame, thresholds: dict | None = None, run_id: str = "run-0"
-) -> DataFrame:
-    """The one labeling path, shared by ``run_batch`` (after its bucket
-    shuffle) and ``streaming.pipeline.stream_webtext``: the fused enrich
-    UDF's signals as columns, then keep = ``rules.heuristic_keep`` ∧ the
-    model thresholds, plus ``run_id`` lineage.  ``df`` carries a ``text``
-    column, which the output drops.
-
-    ``thresholds`` overrides ``DEFAULT_THRESHOLDS``; any other key raises
-    ``ValueError`` (a typo or a heuristic key would otherwise run with the
-    defaults and silently give a different answer — heuristic thresholds
-    are the ``rules.DEFAULTS`` constants)."""
-    from packs_spark.pipeline.udfs import make_enrich_udf
-
+def _checked_thresholds(thresholds: dict | None) -> dict:
+    """``DEFAULT_THRESHOLDS`` overridden by ``thresholds``; any other key
+    raises ``ValueError`` (a typo or a heuristic key would otherwise run
+    with the defaults and silently give a different answer — heuristic
+    thresholds are the ``rules.DEFAULTS`` constants)."""
     unknown = sorted(set(thresholds or {}) - set(DEFAULT_THRESHOLDS))
     if unknown:
         raise ValueError(
@@ -63,47 +63,147 @@ def label(
             f"{sorted(DEFAULT_THRESHOLDS)} (heuristic thresholds are the "
             "fixed rules.DEFAULTS)"
         )
-    t = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
-    enrich_udf = make_enrich_udf(df.sparkSession)
+    return {**DEFAULT_THRESHOLDS, **(thresholds or {})}
 
-    # The fused UDF computes EVERY signal per document in one Arrow pass —
-    # langid, perplexity, scrub AND the heuristic quality signals (Python
-    # string semantics, exactly the oracle's; see udfs._heuristic_batch).
-    # The flagship query's quality_columns() computes the same signals as
-    # JVM expressions; both apply the one keep rule, rules.heuristic_keep.
-    enriched = (
-        df.withColumn("__e", enrich_udf(F.col("text")))
-        .select(
-            "*",
-            F.col("__e.lang").alias("lang_pred"),
-            F.col("__e.margin").alias("lang_margin"),
-            F.col("__e.ppl").alias("ppl"),
-            F.col("__e.scrubbed").alias("text_scrubbed"),
-            F.col("__e.spans").alias("scrub_spans"),
-            F.col("__e.n_hits").alias("pii_hits"),
-            F.col("__e.n_chars").alias("q_n_chars"),
-            F.col("__e.n_words").alias("q_n_words"),
-            F.col("__e.symbol_ratio").alias("q_symbol_ratio"),
-            F.col("__e.stopword_ratio").alias("q_stopword_ratio"),
-            F.col("__e.distinct_ratio").alias("q_distinct_ratio"),
-        )
-        .drop("__e")
-        .withColumn("keep_heuristic", rules.heuristic_keep())
+
+def label(
+    df: DataFrame, thresholds: dict | None = None, run_id: str = "run-0"
+) -> DataFrame:
+    """The one labeling path as a DataFrame: ``udfs.make_label_batch``'s
+    Arrow batch function applied with ``mapInArrow`` — the signals, keep =
+    ``rules.heuristic_keep`` ∧ the model thresholds, and ``run_id``
+    lineage.  ``streaming.pipeline.stream_webtext`` labels through it;
+    ``run_batch`` applies the same batch function inside its write tasks.
+    ``df`` carries a ``text`` column, which the output drops; every other
+    column passes through in order, followed by ``udfs.LABELS``.
+
+    ``thresholds`` overrides ``DEFAULT_THRESHOLDS``; any other key raises
+    ``ValueError``."""
+    from pyspark.sql import types as T
+
+    from packs_spark.pipeline.udfs import LABELS, make_label_batch
+
+    label_batch = make_label_batch(
+        df.sparkSession, _checked_thresholds(thresholds), run_id
+    )
+    schema = T.StructType(
+        [f for f in df.schema.fields if f.name != "text"] + LABELS.fields
     )
 
-    return (
-        enriched.withColumn(
-            "keep",
-            F.col("keep_heuristic")
-            & (F.col("lang_pred") != "unknown")
-            & (F.col("lang_margin") >= t["min_margin"])
-            & (F.col("ppl") <= t["max_ppl"]),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        # the sink row is the scrubbed document + labels/metrics/lineage;
-        # the raw text is reproducible from (url, run_id) against the
-        # source table and would otherwise be the largest written column
-        .drop("text")
+    def label_batches(batches):
+        return map(label_batch, batches)
+
+    return df.mapInArrow(label_batches, schema)
+
+
+def _round_half_up(x: float, scale: int) -> float:
+    """Spark's ``round`` of a double: HALF_UP on its decimal string."""
+    if not math.isfinite(x):
+        return x
+    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP)
+    return float(q)
+
+
+def _add(a, b):
+    """Spark's sum of two partial sums: NULL only when both are."""
+    return a if b is None else b if a is None else a + b
+
+
+def bucket_metrics(batches) -> dict:
+    """One bucket's ``_metrics`` row from its labeled rows, in file order:
+    the aggregates of the table's per-bucket groupBy, with Spark's
+    semantics — sums skip NULLs and are NULL when no value is set, and the
+    averages add left to right (as Spark's Average does) before rounding
+    HALF_UP.  With ``media_format`` rows it adds the multimodal columns and
+    ``media_format_counts``, the bucket's [format, rows] pairs.  The write
+    task computes it while it writes the bucket (the commit marker stores
+    it); ``CheckpointedWriter.bucket_metrics`` computes it from the
+    bucket's file for a marker written without one."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def total(col):
+        return pc.sum(col.cast(pa.int64()), min_count=1).as_py()
+
+    row = dict(
+        n_docs=0, n_keep=None, n_drop=None, n_docs_with_pii=None,
+        total_pii_hits=None,
+    )
+    avgs = {"avg_ppl": ("ppl", 4), "avg_symbol_ratio": ("q_symbol_ratio", 6)}
+    acc = {name: (0.0, 0) for name in avgs}
+    formats: Counter | None = None
+    for rb in batches:
+        row["n_docs"] += rb.num_rows
+        keep, hits = rb.column("keep"), rb.column("pii_hits")
+        for name, col in (
+            ("n_keep", keep),
+            ("n_drop", pc.invert(keep)),
+            ("n_docs_with_pii", pc.greater(hits, 0)),
+            ("total_pii_hits", hits),
+        ):
+            row[name] = _add(row[name], total(col))
+        for name, (col, _) in avgs.items():
+            x = rb.column(col).drop_null().to_numpy()
+            s, n = acc[name]
+            # cumsum adds in order; np.sum would add pairwise
+            acc[name] = (float(np.cumsum(np.append(s, x))[-1]), n + len(x))
+        if "media_format" in rb.schema.names:
+            fmt = rb.column("media_format")
+            if formats is None:
+                formats = Counter()
+                row.update(n_html_docs=None, total_media_bytes=None)
+            formats.update(fmt.to_pylist())
+            row["n_html_docs"] = _add(
+                row["n_html_docs"], total(pc.equal(fmt, "html"))
+            )
+            row["total_media_bytes"] = _add(
+                row["total_media_bytes"], total(rb.column("media_bytes"))
+            )
+    for name, (_, scale) in avgs.items():
+        s, n = acc[name]
+        row[name] = _round_half_up(s / n, scale) if n else None
+    if formats is not None:
+        row["n_media_formats"] = sum(1 for f in formats if f is not None)
+        row["media_format_counts"] = list(formats.items())
+    return row
+
+
+# the ``_metrics`` table: one row per non-empty bucket, Spark's types
+_METRICS_COLUMNS = [
+    ("n_docs", "int64"), ("n_keep", "int64"), ("n_drop", "int64"),
+    ("n_docs_with_pii", "int64"), ("total_pii_hits", "int64"),
+    ("avg_ppl", "float64"), ("avg_symbol_ratio", "float64"),
+]
+_MEDIA_COLUMNS = [
+    ("n_media_formats", "int64"), ("n_html_docs", "int64"),
+    ("total_media_bytes", "int64"),
+]
+
+
+def _write_metrics(
+    per_bucket: dict[int, dict], path: str, run_id: str, multimodal: bool
+) -> None:
+    """``per_bucket``'s rows as the single-file parquet table ``path``
+    (replaced), stamped with this run's ``run_id``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = _METRICS_COLUMNS + (_MEDIA_COLUMNS if multimodal else [])
+    schema = pa.schema(
+        [("bucket", pa.int32())]
+        + [(name, pa.type_for_alias(t)) for name, t in cols]
+        + [("run_id", pa.string())]
+    )
+    rows = [
+        {"bucket": b, **m, "run_id": run_id}
+        for b, m in sorted(per_bucket.items())
+        if m["n_docs"]
+    ]
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema),
+        os.path.join(path, "part-00000.parquet"),
     )
 
 
@@ -121,6 +221,14 @@ def run_batch(
     table: langid → perplexity → heuristics → scrub → keep/drop → bucketed,
     checkpointed, resumable parquet write with lineage + per-bucket metrics.
 
+    One Spark job per wave: scan → bucket shuffle → one Python task per
+    bucket that labels its rows (``udfs.make_label_batch``), writes them to
+    the bucket's parquet file and reports the bucket's metrics row
+    (``bucket_metrics``); the driver renames the reported files and writes
+    each commit marker with its metrics row.  ``<output_path>_metrics`` is
+    then built from the markers, so no Spark job writes the table or reads
+    it back, and a resume never re-reads committed buckets.
+
     ``multimodal=True`` adds an enrich stage over the ``html`` binary
     column (format sniff + payload bytes via one Arrow pass,
     operators/multimodal.media_metadata_col) BEFORE the bucket shuffle —
@@ -131,11 +239,15 @@ def run_batch(
     is byte-identical with the flag off — pinned by
     tests/test_pipeline.py::test_multimodal_enrich_stage.
 
-    Returns the CheckpointedWriter stats dict (buckets written/skipped).
+    Returns the CheckpointedWriter stats dict (buckets written/skipped)
+    plus ``write_s`` and ``metrics_s``.
     """
     from packs_spark.io.lakehouse import CheckpointedWriter
     from packs_spark.pipeline.partitioning import repartition_by_bucket, url_bucket
+    from packs_spark.pipeline.udfs import make_label_batch
 
+    # before any output directory exists
+    checked = _checked_thresholds(thresholds)
     df = spark.read.parquet(source) if isinstance(source, str) else source
 
     # Project away the raw html payload BEFORE the shuffle: extraction
@@ -162,67 +274,47 @@ def run_batch(
     df = df.withColumn("bucket", url_bucket(F.col("url"), n_buckets))
     # Shuffle once, by bucket, BEFORE the expensive stages: (a) parallelism
     # becomes n_buckets regardless of the input file layout (a single fat
-    # row group would otherwise serialize every UDF), (b) the partitionBy
-    # write emits one file per bucket instead of n_input_splits × n_buckets
-    # small files.  At 10^12-doc scale this is the only full shuffle in the
-    # job and it is unavoidable for a bucketed table layout.
+    # row group would otherwise serialize every Python task), (b) each
+    # write task holds one bucket, so it writes that bucket's one file.
+    # At 10^12-doc scale this is the only full shuffle in the job and it
+    # is unavoidable for a bucketed table layout.
     # Exact one-bucket-per-partition placement via a precomputed murmur3
     # partition key (partitioning.repartition_by_bucket): even parallelism
-    # AND one output file per bucket directory.  A plain hash repartition
-    # on the bucket id leaves ~1/e of partitions empty (measured: only ~15
-    # of 32 python workers busy); repartitionByRange fixes that but adds a
+    # AND one output file per bucket.  A plain hash repartition on the
+    # bucket id leaves ~1/e of partitions empty (measured: only ~15 of 32
+    # python workers busy); repartitionByRange fixes that but adds a
     # hidden range-sampling job — a full extra scan of the input per run.
     df = repartition_by_bucket(df, n_buckets)
-
-    labeled = label(df, thresholds, run_id)
-
-    import time as _time
 
     writer = CheckpointedWriter(
         output_path,
         n_buckets,
         schema_tag="multimodal" if multimodal else "",
     )
-    t0 = _time.time()
-    stats = writer.write_resumable(labeled, wave_size=wave_size, assume_placed=True)
-    stats["write_s"] = round(_time.time() - t0, 2)
+    t0 = time.time()
+    stats = writer.write_resumable(
+        df,
+        wave_size=wave_size,
+        assume_placed=True,
+        transform=make_label_batch(spark, checked, run_id),
+        metrics=bucket_metrics,
+    )
+    stats["write_s"] = round(time.time() - t0, 2)
 
     # per-bucket rule-level metrics (north rule: per-partition metrics),
-    # computed from the committed table so metrics always reflect what was
-    # actually written
-    written = spark.read.parquet(output_path)
-    agg_cols = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.sum((~F.col("keep")).cast("long")).alias("n_drop"),
-        F.sum((F.col("pii_hits") > 0).cast("long")).alias("n_docs_with_pii"),
-        F.sum("pii_hits").alias("total_pii_hits"),
-        F.round(F.avg("ppl"), 4).alias("avg_ppl"),
-        F.round(F.avg(F.col("q_symbol_ratio")), 6).alias("avg_symbol_ratio"),
-    ]
-    if "media_format" in written.columns:
-        agg_cols += [
-            F.countDistinct("media_format").alias("n_media_formats"),
-            F.sum((F.col("media_format") == "html").cast("long")).alias(
-                "n_html_docs"
-            ),
-            F.sum("media_bytes").alias("total_media_bytes"),
-        ]
-    metrics = written.groupBy("bucket").agg(*agg_cols)
-    t0 = _time.time()
-    metrics.withColumn("run_id", F.lit(run_id)).write.mode("overwrite").parquet(
-        f"{output_path}_metrics"
-    )
-    stats["metrics_s"] = round(_time.time() - t0, 2)
-    if "media_format" in written.columns:
+    # from the commit markers: each bucket's row was computed from exactly
+    # the rows its task wrote
+    t0 = time.time()
+    per_bucket = writer.bucket_metrics(bucket_metrics)
+    _write_metrics(per_bucket, f"{output_path}_metrics", run_id, multimodal)
+    stats["metrics_s"] = round(time.time() - t0, 2)
+    if multimodal:
         # corpus-level format counts (a handful of rows: one per container
         # format) — the pipeline-summary view of the multimodal stage
-        stats["media_format_counts"] = {
-            r["media_format"]: r["n"]
-            for r in written.groupBy("media_format")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        counts: Counter = Counter()
+        for m in per_bucket.values():
+            counts.update(dict(m.get("media_format_counts", [])))
+        stats["media_format_counts"] = dict(counts)
     return stats
 
 

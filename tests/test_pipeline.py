@@ -97,6 +97,152 @@ def test_pipeline_resume_skips_completed(spark, pages_pd, pipeline_out):
     assert got.count() == N_DOCS  # idempotent overwrite
 
 
+def _rows_but_run_id(spark, out):
+    df = spark.read.parquet(out)
+    rows = df.drop("run_id").toPandas().sort_values("url").reset_index(drop=True)
+    return df.dtypes, rows
+
+
+def _metrics_but_run_id(spark, out):
+    m = spark.read.parquet(f"{out}_metrics")
+    return m.dtypes, m.drop("run_id").toPandas().sort_values("bucket").reset_index(
+        drop=True
+    )
+
+
+def test_resumed_table_equals_fresh(spark, pages_pd, tmp_path):
+    """Deleting k commit markers and resuming gives the fresh run's table,
+    row for row on every column but run_id, with the same dtypes, and the
+    fresh run's ``_metrics``.  Markers without a metrics row (committed
+    before markers carried one) still resume: their rows are computed once
+    from the bucket files and stored in the markers."""
+    import json
+
+    sdf = spark.createDataFrame(pages_pd.head(800))
+    fresh, resumed = str(tmp_path / "fresh"), str(tmp_path / "resumed")
+    run_batch(spark, sdf, fresh, n_buckets=8, run_id="fresh")
+    run_batch(spark, sdf, resumed, n_buckets=8, run_id="first")
+    prog = os.path.join(resumed, "_progress")
+    for b in (1, 4, 6):
+        os.remove(os.path.join(prog, f"bucket-{b}.json"))
+    for b in (0, 2):
+        path = os.path.join(prog, f"bucket-{b}.json")
+        marker = json.load(open(path))
+        del marker["metrics"]
+        with open(path, "w") as f:
+            json.dump(marker, f)
+
+    stats = run_batch(spark, sdf, resumed, n_buckets=8, run_id="resume")
+    assert (stats["written"], stats["skipped"]) == (3, 5)
+    got_dtypes, got = _rows_but_run_id(spark, resumed)
+    want_dtypes, want = _rows_but_run_id(spark, fresh)
+    assert got_dtypes == want_dtypes
+    assert len(got) == 800
+    pd.testing.assert_frame_equal(got, want)
+    got_dtypes, got = _metrics_but_run_id(spark, resumed)
+    want_dtypes, want = _metrics_but_run_id(spark, fresh)
+    assert got_dtypes == want_dtypes
+    pd.testing.assert_frame_equal(got, want)
+    run_ids = spark.read.parquet(f"{resumed}_metrics").select("run_id").distinct()
+    assert [r.run_id for r in run_ids.collect()] == ["resume"]
+    for b in (0, 2):
+        marker = json.load(open(os.path.join(prog, f"bucket-{b}.json")))
+        assert marker["metrics"]["n_docs"] == int(want.n_docs[want.bucket == b].iloc[0])
+
+
+def test_fresh_run_launches_no_write_or_read_back_job(spark, pages_pd, tmp_path):
+    """A fresh run_batch is two Spark jobs, the bucket shuffle and the
+    write wave: its Python tasks write the files, and ``_metrics`` comes
+    from the commit markers, so no job writes the table or reads it back."""
+    sc = spark.sparkContext
+    sdf = spark.createDataFrame(pages_pd.head(200))
+    sc.setJobGroup("fresh-run-jobs", "run_batch")
+    try:
+        run_batch(spark, sdf, str(tmp_path / "t"), n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-run-jobs")) == 2
+
+
+def test_writer_refuses_a_partition_of_two_buckets(spark, tmp_path):
+    """The one-bucket-per-file guard runs in the write task: a partition
+    holding two buckets fails the write, naming them, and leaves no commit
+    marker, no staging directory and no bucket file — the files the other
+    tasks wrote are renamed only when their summaries come back."""
+    from packs_spark.io.lakehouse import CheckpointedWriter
+
+    out = str(tmp_path / "tbl")
+    # partition 0 (ids 0-99) holds buckets 0 and 1; partitions 1-3 hold
+    # buckets 2, 3 and 4
+    df = spark.range(0, 400, numPartitions=4).withColumn(
+        "bucket",
+        F.when(F.col("id") < 100, F.col("id") % 2)
+        .otherwise(F.floor(F.col("id") / 100) + 1)
+        .cast("int"),
+    )
+    w = CheckpointedWriter(out, n_buckets=5)
+    with pytest.raises(Exception, match=re.escape("buckets [0, 1]")):
+        w.write_resumable(df, assume_placed=True)
+    assert w.completed_buckets() == set()
+    left = [f for f in os.listdir(out) if f != "_progress"]
+    assert left == []
+    assert os.listdir(os.path.join(out, "_progress")) == ["_meta.json"]
+
+
+def test_bucket_of_many_arrow_batches_is_one_row_group(spark, tmp_path):
+    """A bucket larger than maxRecordsPerBatch still fills one row group,
+    and the task writer follows Spark's parquet codec setting."""
+    import pyarrow.parquet as pq
+
+    from packs_spark.io.lakehouse import CheckpointedWriter
+
+    out = str(tmp_path / "tbl")
+    df = spark.range(0, 2000, numPartitions=2).withColumn(
+        "bucket", (F.col("id") % 2).cast("int")
+    )
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "100",
+        "spark.sql.parquet.compression.codec": "zstd",
+    }
+    before = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        CheckpointedWriter(out, n_buckets=2).write_resumable(df)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    for b in (0, 1):
+        meta = pq.ParquetFile(os.path.join(out, f"bucket-{b:05d}.parquet")).metadata
+        assert (meta.num_rows, meta.num_row_groups) == (1000, 1)
+        assert meta.row_group(0).column(0).compression == "ZSTD"
+
+
+def test_bucket_file_starts_a_row_group_per_byte_target(tmp_path, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from packs_spark.io import lakehouse
+
+    rb = pa.RecordBatch.from_pydict(
+        {"id": pa.array(range(100), pa.int64()), "bucket": pa.array([3] * 100, pa.int32())}
+    )
+    monkeypatch.setattr(lakehouse, "_ROW_GROUP_BYTES", 2 * rb.nbytes)
+    out = lakehouse._BucketFile(str(tmp_path), "bucket", 7, "snappy")
+    for _ in range(5):
+        out.write(rb)
+    out.flush()
+    size = out.close()
+    assert out.path == os.path.join(str(tmp_path), "bucket-3-a7.parquet")
+    assert size == os.path.getsize(out.path)
+    meta = pq.ParquetFile(out.path).metadata
+    assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] == [
+        200,
+        200,
+        100,
+    ]
+
+
 @pytest.mark.parametrize(
     "thresholds, bad",
     [({"max_pp": 900}, "max_pp"), ({"min_words": 5}, "min_words")],

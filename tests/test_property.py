@@ -25,6 +25,8 @@ _fragments = st.sampled_from(
         "10.0.0.1",
         "999.999.999.999",
         "123-45-6789",
+        "１２３-４５-６７８９",  # fullwidth digits: Python's \d matches them
+        "١٢٣-٤٥-٦٧٨٩",  # Arabic-Indic digits
         "12345-6789",
         "badword1",
         "BADWORD1",
@@ -50,6 +52,15 @@ def test_prefilter_never_false_negative(text):
     a prefilter false negative would silently skip a scrub."""
     if not _may_match(text):
         assert combined_pattern().search(text) is None
+
+
+def test_scrub_redacts_ssn_in_non_ascii_digits():
+    """usa_ssn's ``\\d`` matches any Unicode decimal digit, so the prefilter
+    must let such documents through to the scan."""
+    from packs_spark.pipeline.scrub import scrub_text
+
+    assert scrub_text("my ssn is １２３-４５-６７８９ ok") == "my ssn is <SSN> ok"
+    assert scrub_text("id ١٢٣-٤٥-٦٧٨٩ here") == "id <SSN> here"
 
 
 @given(_texts)

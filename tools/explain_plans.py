@@ -11,6 +11,7 @@ from __future__ import annotations
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -103,35 +104,38 @@ def main() -> None:
         out.append(buf.getvalue().rstrip())
         out.append("```")
         out.append("")
-    # the north-star pipeline's pre-sink plan (run_batch's `labeled` frame)
+    # the north-star pipeline's labeling plan; run_batch's write wave is
+    # this plan with the parquet write inside the same Python task
+    from pyspark.sql import functions as F
+
+    from packs_spark.pipeline.partitioning import repartition_by_bucket, url_bucket
+    from packs_spark.pipeline.webtext import label
+
     src = os.path.join(REPO, "BENCH", "data", "webpages_200000.parquet")
-    if os.path.exists(src):
-        from pyspark.sql import functions as F
+    if not os.path.exists(src):
+        from packs_spark.pipeline.generate import generate_pages
 
-        from packs_spark.pipeline.partitioning import (
-            repartition_by_bucket,
-            url_bucket,
-        )
-        from packs_spark.pipeline.webtext import label
-
-        df = spark.read.parquet(src).select("url", "warc_ts", "lang", "text")
-        df = repartition_by_bucket(
-            df.withColumn("bucket", url_bucket(F.col("url"), 128)), 128
-        )
-        labeled = label(df)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            labeled.explain("formatted")
-        out.append("## webtext pipeline (run_batch pre-sink plan)")
-        out.append(
-            "*expect: pruned parquet scan (no html column read) → ONE "
-            "Exchange (the bucket repartition) → ArrowEvalPython (the single "
-            "fused UDF) — no second shuffle before the bucketed write*"
-        )
-        out.append("```")
-        out.append(buf.getvalue().rstrip())
-        out.append("```")
-        out.append("")
+        src = os.path.join(tempfile.mkdtemp(), "webpages.parquet")
+        generate_pages(2000, seed=0).to_parquet(src)
+    df = spark.read.parquet(src).select("url", "warc_ts", "lang", "text")
+    df = repartition_by_bucket(
+        df.withColumn("bucket", url_bucket(F.col("url"), 128)), 128
+    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        label(df).explain("formatted")
+    out.append("## webtext pipeline (run_batch labeling plan)")
+    out.append(
+        "*expect: pruned parquet scan (no html column read) → ONE "
+        "Exchange (the bucket repartition) → MapInArrow (label_batch: "
+        "signals, keep, run_id in one Python pass) — no second shuffle; "
+        "run_batch's write wave runs this plan with each task also "
+        "writing its bucket's parquet file*"
+    )
+    out.append("```")
+    out.append(buf.getvalue().rstrip())
+    out.append("```")
+    out.append("")
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote EXPLAIN.md")
