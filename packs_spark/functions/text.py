@@ -36,11 +36,6 @@ NULL_PLACEHOLDERS = [
 ]
 
 
-def text_length(c: Column) -> Column:
-    """Character length (F1 in SURVEY §2.8)."""
-    return F.length(c)
-
-
 def is_empty(c: Column) -> Column:
     """Empty-string test; NULLs are not empty (reference drops them first)."""
     return c == F.lit("")

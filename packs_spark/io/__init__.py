@@ -1,2 +1,2 @@
-from packs_spark.io.envelope import metric_rows_to_df, wide_row_to_envelopes  # noqa: F401
+from packs_spark.io.envelope import envelope  # noqa: F401
 from packs_spark.io.lakehouse import CheckpointedWriter  # noqa: F401

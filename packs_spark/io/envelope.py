@@ -7,16 +7,17 @@ shape is a long-format DataFrame ``(key, value, perimeter, scope,
 parent_scope)`` so metric streams stay distributed and can be written
 per-partition (north rule: per-partition metrics + lineage).
 
-Envelope *values* are stringified with the reference's rounding behavior
-(Python ``round`` = banker's rounding, then ``str``) so that metric-level
-equality tests against a pandas oracle pass bit-for-bit.
+Every envelope row, and so every value string, is made by :func:`envelope`:
+a value computed on the driver is spelled by :func:`format_value` (the
+reference's ``str``), a Column value by Spark's string cast.
 """
 
 from __future__ import annotations
 
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ENVELOPE_SCHEMA = T.StructType(
@@ -74,24 +75,48 @@ def format_value(v: Any, ndigits: int | None = None) -> str:
     return str(v)
 
 
-def metric_rows_to_df(
+def envelope(
     spark: SparkSession,
-    rows: Iterable[tuple[str, Any, str, str, str | None]],
+    rows: Iterable[tuple],
+    frame: DataFrame | None = None,
 ) -> DataFrame:
-    """Build an envelope DataFrame from (key, value, perimeter, scope,
-    parent_scope) tuples computed on the driver (results are tiny — the data
-    pass itself stays distributed)."""
-    data = [
-        Row(
-            key=k,
-            value=format_value(v),
-            perimeter=p,
-            scope=s,
-            parent_scope=ps,
+    """The one builder of envelope rows: a metric row per ``(key, value,
+    perimeter, scope, parent_scope)`` tuple.
+
+    Without ``frame`` the fields are values computed on the driver (results
+    are tiny; the data pass itself stays distributed) and each value string
+    is :func:`format_value`'s.  With ``frame`` any field may be a Column
+    over it, every frame row yields one row per tuple (a per-column result
+    frame melts into column-scope rows, no shuffle), and Spark casts each
+    value to string.  The two renderings differ in three ways: floats
+    (Spark writes ``8.33E-4`` where Python writes ``0.000833``), booleans
+    (``true`` vs ``True``) and missing values (a SQL NULL vs the string
+    ``null``).  A pack keeps the one it has always emitted; moving a pack
+    from one to the other changes its strings, which
+    ``tests/test_pack_characterization.py`` pins.
+    """
+    if frame is None:
+        data = [
+            Row(key=k, value=format_value(v), perimeter=p, scope=s,
+                parent_scope=ps)
+            for (k, v, p, s, ps) in rows
+        ]
+        return spark.createDataFrame(data, ENVELOPE_SCHEMA)
+
+    def col(x):
+        return x if isinstance(x, Column) else F.lit(x)
+
+    structs = [
+        F.struct(
+            col(k).alias("key"),
+            col(v).cast("string").alias("value"),
+            col(p).alias("perimeter"),
+            col(s).cast("string").alias("scope"),
+            col(ps).cast("string").alias("parent_scope"),
         )
         for (k, v, p, s, ps) in rows
     ]
-    return spark.createDataFrame(data, ENVELOPE_SCHEMA)
+    return frame.select(F.inline(F.array(*structs)))
 
 
 def recommendation_rows_to_df(
@@ -164,8 +189,6 @@ def text_validation_recommendations(
     one row per column; each rule is a filtered projection, unioned).
     Emits a row only when the offending count is > 0, exactly like the
     reference's conditional appends."""
-    from pyspark.sql import functions as F
-
     parts = []
     for rtype, count_col, level, template in _TEXT_RECO_RULES:
         lim = min_length if count_col == "below_min" else max_length
@@ -191,25 +214,3 @@ def text_validation_recommendations(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def wide_row_to_envelopes(
-    spark: SparkSession,
-    wide: dict[str, Any],
-    dataset: str,
-    per_column: dict[str, dict[str, Any]] | None = None,
-    rounding: dict[str, int] | None = None,
-) -> DataFrame:
-    """Convert a one-row wide aggregate (dataset-level metrics) plus optional
-    per-column metric dicts into the envelope stream."""
-    rounding = rounding or {}
-    out: list[tuple[str, Any, str, str, str | None]] = []
-    for k, v in wide.items():
-        out.append((k, format_value(v, rounding.get(k)), "dataset", dataset, None))
-    if per_column:
-        for col, metrics in per_column.items():
-            for k, v in metrics.items():
-                out.append(
-                    (k, format_value(v, rounding.get(k)), "column", col, dataset)
-                )
-    return metric_rows_to_df(spark, out)

@@ -344,40 +344,27 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    n_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
+def minhash_estimates(
+    sigs: DataFrame, bands: int = 16, rows_per_band: int = 4
 ) -> DataFrame:
-    """LSH candidates refined by signature-estimated Jaccard
-    (fraction of agreeing minhashes) ≥ threshold."""
-    rows_per_band = n_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, k, n_hashes).persist()
+    """(id_a, id_b, est_jaccard) of every LSH candidate pair of the
+    ``(id, sig)`` minhash signatures: the fraction of agreeing minhashes
+    estimates the pair's Jaccard similarity."""
     cand = lsh_candidate_pairs(sigs, bands, rows_per_band)
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
+    agree = F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
+    )
+    return (
         cand.join(a, "id_a")
         .join(b, "id_b")
         .select(
             "id_a",
             "id_b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda eq: eq,
-                    )
-                )
-                / F.lit(float(n_hashes))
-            ).alias("est_jaccard"),
+            (agree / F.size("sig_a")).alias("est_jaccard"),
         )
     )
-    return est.where(F.col("est_jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------

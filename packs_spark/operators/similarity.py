@@ -43,6 +43,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank): the k best-scoring neighbors
+    per query of (query_id, neighbor_id, qv, cv) pairs, cosine rounded to 6
+    digits and ties broken by neighbor id ascending for determinism."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -62,18 +81,8 @@ def topk_bruteforce(
         )
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k(
+        q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -101,15 +110,7 @@ def hyperplane_buckets(
 ) -> DataFrame:
     """Attach an LSH bucket id: bit j = sign(<v, plane_j>).  ``table``
     seeds an independent plane family (multi-table LSH)."""
-    planes = _planes(dim, n_planes, seed=7 + 131 * table)
-    bucket = F.lit(0)
-    for j, p in enumerate(planes):
-        plane_arr = F.array(*[F.lit(x) for x in p])
-        bit = F.when(dot(F.col(vec_col), plane_arr) >= 0, F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        bucket = bucket + F.shiftleft(bit, j)
-    return df.withColumn(out_col, bucket)
+    return df.withColumn(out_col, _bucket_expr(vec_col, dim, n_planes, table))
 
 
 def _bucket_expr(vec_col: str, dim: int, n_planes: int, table: int):
@@ -203,23 +204,13 @@ def topk_lsh(
         n_planes,
         n_tables,
     )
-    scored = (
+    pairs = (
         qb.join(cb, ["tbl", "bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "qv", "cv")
         .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(pairs, k)
 
 
 # ---------------------------------------------------------------------------
@@ -324,24 +315,12 @@ class IvfIndex:
         corpus = spark.read.parquet(f"{self.path}/cells").where(
             F.col("cell").isin(probed)
         )
-        scored = (
+        pairs = (
             q.join(corpus, "cell")
             .where(F.col("query_id") != F.col("neighbor_id"))
             .dropDuplicates(["query_id", "neighbor_id"])
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-            )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-        )
+        return _top_k(pairs, k)
 
 
 # ---------------------------------------------------------------------------
@@ -457,19 +436,9 @@ def topk_ivf(
         "qv",
         nprobe=nprobe,
     ).select("query_id", "qv", F.explode("cell").alias("cell"))
-    scored = (
+    pairs = (
         q.join(c, "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(pairs, k)

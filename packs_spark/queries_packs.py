@@ -12,7 +12,13 @@ from pyspark.sql import functions as F
 
 from packs_spark.functions import numeric as NUM
 from packs_spark.functions import text as TX
-from packs_spark.functions.patterns import FORMAT_PATTERNS, PII_PATTERNS
+from packs_spark.functions.patterns import (
+    FORMAT_PATTERNS,
+    PII_PATTERNS,
+    any_pii,
+    pii_hit_count,
+)
+from packs_spark.operators import pack_metrics as PM
 from packs_spark.operators import text_validation
 from packs_spark.registry import load, register
 
@@ -72,7 +78,9 @@ def q_completeness(spark, sf_dir):
             F.lit(c).alias("column"),
             F.col(f"nn_{c}").alias("non_null"),
             (F.col("__n") - F.col(f"nn_{c}")).alias("missing"),
-            F.round(F.col(f"nn_{c}") / F.col("__n"), 4).alias("completeness"),
+            PM.completeness(F.col(f"nn_{c}"), F.col("__n"), 4).alias(
+                "completeness"
+            ),
         )
         for c in cols
     ]
@@ -115,11 +123,6 @@ def q_profiling_stats(spark, sf_dir):
     # row) rides the same single scan — consolidated to fit the driver's
     # 50-query correctness window (round-2 verdict).
     df = load(spark, sf_dir, "events")
-    cols = df.columns
-    n_var = len(cols)
-    missing = sum(
-        F.sum(F.col(c).isNull().cast("long")) for c in cols
-    )
     valid = (
         F.col("event_id").isNotNull()
         & F.col("ts").isNotNull()
@@ -130,10 +133,7 @@ def q_profiling_stats(spark, sf_dir):
         & F.col("props").startswith("{")
     )
     return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.lit(n_var).alias("n_var"),
-        missing.alias("n_cells_missing"),
-        F.round(missing / (F.count(F.lit(1)) * n_var), 6).alias("p_cells_missing"),
+        *PM.cells_missing(df.columns),
         F.countDistinct("event_type").alias("n_distinct_event_type"),
         F.countDistinct("user_id").alias("n_distinct_user"),
         F.sum(valid.cast("long")).alias("valid_rows"),
@@ -302,17 +302,13 @@ FROM events
 """,
 )
 def q_pattern_validation(spark, sf_dir):
-    from packs_spark.functions.patterns import matches_format
-
     def one(table, col, pat_name):
         df = load(spark, sf_dir, table)
-        invalid = TX.count_if(~matches_format(F.col(col), FORMAT_PATTERNS[pat_name]))
         return df.agg(
             F.lit(col).alias("column"),
             F.lit(pat_name).alias("pattern"),
-            invalid.alias("invalid_count"),
-            F.round(invalid / F.count(F.lit(1)), 4).alias("invalid_percent"),
-        )
+            *PM.pattern_check(col, pat_name),
+        ).select("column", "pattern", "invalid_count", "invalid_percent")
 
     return one("orders", "o_orderpriority", "alphanumeric").unionByName(
         one("events", "event_type", "alphanumeric")
@@ -370,30 +366,19 @@ def q_pii_scan(spark, sf_dir):
     over one scan: per-column any-pattern predicates are OR-chains inside
     codegen; the row-level union is a disjunction of the column
     predicates (no shuffle, no second scan)."""
-    from packs_spark.functions.patterns import contains_pattern
-
     df = load(spark, sf_dir, "documents")
     keep = [(k, rx) for k, rx in PII_PATTERNS if k in _PII_ROW_KEYS]
-
-    def any_pii(col):
-        pred = F.lit(False)
-        for _, rx in keep:
-            pred = pred | contains_pattern(F.col(col), rx)
-        return pred
-
+    rxs = [rx for _, rx in keep]
     scan_cols = ["text", "source"]
     row_any = F.lit(False)
     for c in scan_cols:
-        row_any = row_any | any_pii(c)
+        row_any = row_any | any_pii(F.col(c), rxs)
     wide = df.agg(
-        *[
-            F.sum(contains_pattern(F.col("text"), rx).cast("long")).alias(f"h_{k}")
-            for k, rx in keep
-        ],
+        *[pii_hit_count(F.col("text"), rx).alias(f"h_{k}") for k, rx in keep],
         F.sum(row_any.cast("long")).alias("h_any_row"),
         F.count(F.lit(1)).alias("h_total"),
         *[
-            F.sum(any_pii(c).cast("long")).alias(f"hc_{c}")
+            F.sum(any_pii(F.col(c), rxs).cast("long")).alias(f"hc_{c}")
             for c in scan_cols
         ],
     )
@@ -437,15 +422,12 @@ FROM lineitem
 )
 def q_duplicates(spark, sf_dir):
     df = load(spark, sf_dir, "lineitem")
-    keys = F.struct("l_partkey", "l_suppkey")
-    n = F.count(F.lit(1))
-    d = F.countDistinct(keys)
-    return df.agg(
-        n.alias("total_rows"),
-        d.alias("distinct_keys"),
-        (n - d).alias("duplicate_rows"),
-        F.round((n - d) / n, 4).alias("duplicate_percent"),
-        F.round(d / n, 2).alias("score"),
+    return df.agg(*PM.duplicates(["l_partkey", "l_suppkey"])).select(
+        F.col("n_rows").alias("total_rows"),
+        F.col("distinct_count").alias("distinct_keys"),
+        F.col("duplicates").alias("duplicate_rows"),
+        "duplicate_percent",
+        "score",
     )
 
 
@@ -490,26 +472,13 @@ SELECT CAST((SELECT count(*) FROM orders o
 """,
 )
 def q_referential(spark, sf_dir):
-    """J2/J3 in ONE pass: left join against the parent key set, then a
-    conditional aggregate — orphan_count and child_count come from the same
-    scan (no separate child.count() action).  No forced broadcast hint: AQE
-    picks BroadcastHashJoin when the distinct parent key set fits (plan test
-    asserts it does on the fixture), and degrades to a shuffle join for a
-    fact-sized parent instead of failing at the broadcast limit."""
-    child = load(spark, sf_dir, "orders")
-    parent = load(spark, sf_dir, "customer")
-    joined = child.join(
-        parent.select("c_custkey").dropDuplicates(),
-        child.o_custkey == F.col("c_custkey"),
-        "left",
-    )
-    is_orphan = (
-        F.col("o_custkey").isNotNull() & F.col("c_custkey").isNull()
-    ).cast("long")
-    return joined.agg(
-        F.sum(is_orphan).alias("orphan_count"),
-        F.count(F.lit(1)).alias("child_count"),
-        F.round(F.sum(is_orphan) / F.count(F.lit(1)), 4).alias("orphan_ratio"),
+    """J2/J3 in ONE pass: orphan_count and child_count come from the same
+    scan (no separate child.count() action); AQE picks BroadcastHashJoin
+    when the distinct parent key set fits (the plan test asserts it does on
+    the fixture)."""
+    return PM.orphans(
+        load(spark, sf_dir, "orders"), "o_custkey",
+        load(spark, sf_dir, "customer"), "c_custkey",
     )
 
 
@@ -869,10 +838,8 @@ FROM cols
 )
 def q_schema_scan(spark, sf_dir):
     df = load(spark, sf_dir, "lineitem")
-    names = sorted(df.columns)
-    return spark.range(1).select(
-        F.lit(len(names)).alias("n_columns"),
-        F.md5(F.lit(",".join(names))).alias("columns_hash"),
+    return spark.range(1).select(*PM.schema_signature(df)).withColumnRenamed(
+        "column_count", "n_columns"
     )
 
 
@@ -900,31 +867,9 @@ SELECT (SELECT digits FROM m) AS modal_digits,
 """,
 )
 def q_accuracy_precision(spark, sf_dir):
-    """A7 mode in ONE pass: non_null is the SUM of the digit histogram —
-    no second table scan.  The modal row is a struct-max over the (tiny)
-    histogram: max (cnt, -digits) = highest count, ties to the smallest
-    digit count, matching the oracle's ORDER BY cnt DESC, digits ASC."""
-    df = load(spark, sf_dir, "orders")
-    d = (
-        df.where(F.col("o_totalprice").isNotNull())
-        .select(NUM.decimal_digits(F.col("o_totalprice")).alias("digits"))
-        .groupBy("digits")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    agg = d.agg(
-        F.max(
-            F.struct(F.col("cnt"), (-F.col("digits")).alias("neg_digits"))
-        ).alias("m"),
-        F.sum("cnt").alias("non_null"),
-    )
-    return agg.select(
-        (-F.col("m.neg_digits")).alias("modal_digits"),
-        F.col("m.cnt").alias("modal_count"),
-        F.col("non_null"),
-        F.round(F.col("m.cnt") / F.col("non_null"), 4).alias(
-            "proportion_at_modal"
-        ),
-    )
+    """A7 mode in ONE pass over the digit histogram, ties to the fewest
+    digits like the oracle's ORDER BY cnt DESC, digits ASC."""
+    return PM.decimal_precision(load(spark, sf_dir, "orders"), "o_totalprice")
 
 
 # ---------------------------------------------------------------------------

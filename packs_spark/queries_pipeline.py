@@ -335,7 +335,7 @@ FROM est
 """,
 )
 def q_dedup_minhash(spark, sf_dir):
-    from packs_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
+    from packs_spark.operators.dedup import minhash_estimates, minhash_signatures
 
     df = load(spark, sf_dir, "documents")
     # one signature computation materialized once (checkpoint doubles as
@@ -345,24 +345,7 @@ def q_dedup_minhash(spark, sf_dir):
         "minhash_sigs",
         sf_dir,
     )
-    cand = lsh_candidate_pairs(sigs, bands=16, rows_per_band=4)
-    a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda eq: eq,
-                    )
-                )
-                / F.lit(64.0)
-            ).alias("est_jaccard")
-        )
-    )
+    est = minhash_estimates(sigs, bands=16, rows_per_band=4)
     n_docs = df.count()
     row = est.agg(
         F.count(F.lit(1)).alias("n_candidate_pairs"),

@@ -8,7 +8,7 @@ import os
 import pandas as pd
 from pyspark.sql import functions as F
 
-from packs_spark.io.envelope import format_value, wide_row_to_envelopes
+from packs_spark.io.envelope import envelope, format_value
 from packs_spark.io.lakehouse import CheckpointedWriter
 from packs_spark.operators.drift import drift_score, ks_2sample, ks_pvalue_asymp
 
@@ -35,17 +35,24 @@ def test_envelope_rounding_matches_reference():
 
 
 def test_envelope_dataframe_shape(spark):
-    df = wide_row_to_envelopes(
+    df = envelope(
         spark,
-        {"score": 0.875, "n": 10},
-        dataset="ds",
-        per_column={"c1": {"null_count": 3}},
-        rounding={"score": 2},
+        [
+            ("score", round(0.875, 2), "dataset", "ds", None),
+            ("n", 10, "dataset", "ds", None),
+            ("null_count", 3, "column", "c1", "ds"),
+        ],
     )
     rows = {(r["key"], r["perimeter"]): r["value"] for r in df.collect()}
     assert rows[("score", "dataset")] == "0.88"
     assert rows[("n", "dataset")] == "10"
     assert rows[("null_count", "column")] == "3"
+    # Column values over a frame are spelled by Spark's string cast
+    wide = spark.range(1).select(F.lit(0.000833).alias("p"))
+    (row,) = envelope(spark, [("p", F.col("p"), "dataset", "ds", None)], wide).collect()
+    assert (row.key, row.value, row.scope, row.parent_scope) == (
+        "p", "8.33E-4", "ds", None,
+    )
 
 
 def test_checkpointed_writer_resume(spark, tmp_path):

@@ -3,7 +3,7 @@ per-pack contract (qalita_core.pack.Pack metrics/recommendations/schemas)."""
 
 import pytest
 
-from packs_spark.pack_api import run_pack
+from packs_spark.pack_api import _ADAPTERS, run_pack
 
 
 @pytest.fixture()
@@ -82,8 +82,12 @@ def test_schema_scanner_pack_streams(spark, csv_source):
 
 
 def test_unknown_pack_raises(spark, csv_source):
-    with pytest.raises(ValueError, match="unknown pack"):
+    with pytest.raises(ValueError, match="unknown pack") as err:
         run_pack(spark, "nope", csv_source)
+    # the message lists every pack run_pack dispatches, dbt_checks included
+    assert "dbt_checks" in _ADAPTERS and len(_ADAPTERS) == 18
+    for name in _ADAPTERS:
+        assert name in str(err.value)
 
 
 def test_numeric_validation_pack_streams(spark, csv_source):
@@ -222,6 +226,20 @@ def test_remaining_pack_adapters(spark, tmp_path):
                             "patterns": {"mail": r"[^@]+@[^@]+\.[a-z]+"}}})
     m = {r.key: r.value for r in out["metrics"].collect()}
     assert m["total_records"] == "4" and m["valid_records"] == "3"
+
+
+def test_pattern_validation_counts_empty_cells_valid(spark, tmp_path):
+    """A NULL or empty cell is valid in the numerator AND the denominator:
+    both run over count(*), like the registry row pattern_validation_builtin
+    (the numerator used to count them while the denominator was
+    count(col), which gave valid_percent_email = 1.5 here)."""
+    src = tmp_path / "e.csv"
+    src.write_text("id,email\n1,a@x.com\n2,\n3,\n4,bad-email\n")
+    out = run_pack(spark, "pattern_validation",
+                   {"type": "csv", "path": str(src), "name": "e"},
+                   {"job": {"checks": [{"column": "email", "pattern": "email"}]}})
+    m = {r.key: r.value for r in out["metrics"].collect()}
+    assert m == {"valid_email": "3", "valid_percent_email": "0.75"}
 
 
 def test_numeric_validation_no_rules_is_empty(spark, csv_source):
