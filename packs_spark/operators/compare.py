@@ -83,9 +83,12 @@ def compare(
         ),
         n_mismatch_cells.cast("long").alias("cell_mismatches"),
         F.sum(F.when(both & all_match, 1).otherwise(0)).alias("rows_fully_matched"),
+        # NULL, not a division by zero, when no row is in common
         F.round(
-            F.sum(F.when(both & all_match, 1).otherwise(0))
-            / F.sum(F.when(both, 1).otherwise(0)),
+            F.try_divide(
+                F.sum(F.when(both & all_match, 1).otherwise(0)),
+                F.sum(F.when(both, 1).otherwise(0)),
+            ),
             4,
         ).alias("match_rate"),
     )

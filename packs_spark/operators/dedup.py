@@ -1,27 +1,34 @@
 """Deduplication operators for training-data pipelines.
 
-Four tiers, all expressed Spark-first:
+Five tiers, all expressed Spark-first:
 
 * **exact** — hash-groupBy on the full text (one shuffle of 16-byte keys,
   never of the documents themselves);
 * **n-gram Jaccard** — shingle → explode → self-join on shingle → count
   intersections; document-frequency capping keeps hot shingles from
   exploding the join at web scale;
-* **MinHash + LSH** — signatures built entirely JVM-side
-  (``array_min(transform(shingles, s -> xxhash64(seed, s)))``) — no Python
-  in the hot path; banding turns near-dup search into an equi-join on
+* **MinHash + LSH** — each shingle hashed once by JVM xxhash64, the
+  ``n_hashes`` families derived by a multiply-add remix min-reduced in a
+  numpy pandas UDF; banding turns near-dup search into an equi-join on
   (band, band_hash), which Spark shuffles/broadcasts like any other join;
-* **SimHash** — 64-bit bit-majority fingerprint over token hashes,
-  vectorized in a pandas UDF (numpy bit ops), hamming-distance candidates
-  via band equi-join on 4×16-bit chunks.
+* **SimHash** — 64-bit bit-majority fingerprint over xxhash64 token
+  hashes, folded by a JVM groupBy of 64 conditional sums; hamming-distance
+  candidates via an equi-join on 4×16-bit chunks;
+* **embedding cosine** — all pairs, or the pairs that share a
+  random-hyperplane bucket, scored by exact cosine.
 
-Scale notes: every tier reduces the pairwise O(N²) problem to an
-equi-join keyed on something shuffle-friendly (hash, shingle, band, chunk).
-The only quadratic step left is *within* a bucket/band group, bounded by
-``max_df`` / band width.  Skewed buckets (boilerplate shingles) are dropped
-by document-frequency capping exactly like hot-host salting in the
-pipeline.
+The candidate keys, keyed self-joins and payload attach are the pair
+layer's (``operators/pairs.py``); this module holds the shingling and the
+pair scores (set Jaccard, cosine).
+
+Scale notes: every tier but the all-pairs cosine reduces the pairwise
+O(N²) problem to an equi-join keyed on something shuffle-friendly (hash,
+shingle, band, chunk, bucket).  The only quadratic step left is *within*
+a key group, bounded by ``max_df`` / band width.  Skewed buckets
+(boilerplate shingles) are dropped by document-frequency capping exactly
+like hot-host salting in the pipeline.
 """
+
 
 from __future__ import annotations
 
@@ -29,8 +36,10 @@ import logging
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from packs_spark.operators.pairs import attach, candidates, keys, self_join
 
 _LOG = logging.getLogger("packs_spark.operators.dedup")
 
@@ -70,11 +79,13 @@ def char_shingles(c: F.Column, k: int = 5) -> F.Column:
 
 
 def word_shingles(c: F.Column, k: int = 3) -> F.Column:
-    """Distinct word k-grams (space-joined)."""
-    w = F.split(F.trim(c), r"\s+")
-    n = F.size(w) - (k - 1)
-    return F.when(F.trim(c) == "", F.array().cast("array<string>")).otherwise(
-        F.when(n <= 0, F.array(F.array_join(w, " "))).otherwise(
+    """Distinct word k-grams (space-joined).  The word array is bound once,
+    as the argument of a one-element ``aggregate``: a lambda that referred
+    to ``split(trim(c))`` itself would re-split the text once per k-gram."""
+
+    def kgrams(_, w):
+        n = F.size(w) - (k - 1)
+        return F.when(n <= 0, F.array(F.array_join(w, " "))).otherwise(
             F.array_distinct(
                 F.transform(
                     F.sequence(F.lit(0), n - 1),
@@ -82,6 +93,10 @@ def word_shingles(c: F.Column, k: int = 3) -> F.Column:
                 )
             )
         )
+
+    empty = F.array().cast("array<string>")
+    return F.when(F.trim(c) == "", empty).otherwise(
+        F.aggregate(F.array(F.split(F.trim(c), r"\s+")), empty, kgrams)
     )
 
 
@@ -122,8 +137,7 @@ def jaccard_pairs(
     """Near-duplicate pairs with exact shingle-Jaccard ≥ threshold.
 
     Plan: shingle → explode (one row per (doc, shingle)) →
-    document-frequency cap → self-equi-join on shingle → count shared
-    shingles per pair → |A∩B| / (|A|+|B|-|A∩B|).  Output columns:
+    document-frequency cap → :func:`_set_jaccard`.  Output columns:
     (id_a, id_b, inter, size_a, size_b, jaccard), id_a < id_b.
 
     ``max_df`` defaults ON (1000): at web scale a single boilerplate
@@ -138,43 +152,60 @@ def jaccard_pairs(
         F.col(id_col).alias("id"),
         char_shingles(F.col(text_col), k).alias("sh"),
     )
-    ex = sh.select("id", F.explode("sh").alias("s"))
+    ex = sh.select("id", F.size("sh").alias("size"), F.explode("sh").alias("s"))
     if max_df is not None:
         # stays fully lazy: no persist (a pinned cache entry would leak
         # for the session lifetime) and no eager count (constructing the
         # pair PLAN must not run jobs).  Dropped-shingle stats on demand:
         #   hot_shingles(df, ...).count()
         hot = hot_shingles(df, text_col=text_col, k=k, max_df=max_df)
-        ex = ex.join(F.broadcast(hot), "s", "left_anti")
-    # per-doc set sizes from the SAME (capped) shingle space; joined at
-    # pair granularity (one row per doc — a dim-sized join, not a second
-    # shuffle of the exploded frame)
-    sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = ex.select(F.col("id").alias("id_a"), F.col("s"))
-    b = ex.select(F.col("id").alias("id_b"), F.col("s"))
-    pairs = (
-        a.join(b, "s")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(
-            sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("size_a")),
-            "id_a",
+        ex = ex.join(F.broadcast(hot), "s", "left_anti").withColumn(
+            "size", F.count(F.lit(1)).over(Window.partitionBy("id"))
         )
-        .join(
-            sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("size_b")),
-            "id_b",
-        )
+    return _set_jaccard(ex).where(F.col("jaccard") >= threshold)
+
+
+def word_jaccard_pairs(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
+) -> DataFrame:
+    """(id_a, id_b, inter, size_a, size_b, jaccard) of every pair of
+    documents sharing at least one word k-gram, over the sets of
+    :func:`_word_sets` (no document-frequency cap, no threshold)."""
+    sets = _word_sets(df, id_col, text_col, k)
+    return _set_jaccard(sets.select("id", "size", F.explode("sh").alias("s")))
+
+
+def _word_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, sh, size): the distinct word-k-gram set of every document with
+    non-blank text and at least ``k`` words."""
+    t = F.col(text_col)
+    return (
+        df.where(F.trim(t) != "")
+        .where(F.size(F.split(F.trim(t), r"\s+")) >= k)
+        .select(F.col(id_col).alias("id"), word_shingles(t, k).alias("sh"))
+        .withColumn("size", F.size("sh"))
     )
-    jac = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
+
+
+def _jaccard(inter: Column, size_a: Column, size_b: Column) -> Column:
+    """|A∩B| / |A∪B| from the intersection and set sizes, rounded to 6."""
+    return F.round(inter / (size_a + size_b - inter), 6)
+
+
+def _set_jaccard(ex: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter, size_a, size_b, jaccard) of every pair of sets
+    sharing an element, from an exploded (id, size, s) frame that carries
+    each set's size on its elements: a self-equi-join on the element,
+    then one count per pair."""
+    pairs = (
+        self_join(ex, ["s"], ["size"])
+        .groupBy("id_a", "id_b", "size_a", "size_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
     return pairs.select(
-        "id_a",
-        "id_b",
-        "inter",
-        "size_a",
-        "size_b",
-        F.round(jac, 6).alias("jaccard"),
-    ).where(F.round(jac, 6) >= threshold)
+        "id_a", "id_b", "inter", "size_a", "size_b",
+        _jaccard(F.col("inter"), F.col("size_a"), F.col("size_b")).alias("jaccard"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -269,29 +300,15 @@ def lsh_verified_pairs(
     so a given corpus always yields the same pair set.
     """
     rows_per_band = n_hashes // bands
-    w = F.split(F.trim(F.col(text_col)), r"\s+")
-    sh = (
-        df.where(F.trim(F.col(text_col)) != "")
-        .where(F.size(w) >= shingle_k)
-        .select(
-            F.col(id_col).alias("id"),
-            word_shingles(F.col(text_col), shingle_k).alias("sh"),
-        )
-        .withColumn("sz", F.size("sh"))
-        .persist()  # reused by signatures AND both sides of the verify join
-    )
+    # reused by the signatures AND both sides of the verify join
+    sh = _word_sets(df, id_col, text_col, shingle_k).persist()
     sigs = signatures_from_shingles(sh.select("id", "sh"), n_hashes)
     cand = lsh_candidate_pairs(sigs, bands, rows_per_band)
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-                  F.col("sz").alias("size_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-                  F.col("sz").alias("size_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    j = F.round(inter / (F.col("size_a") + F.col("size_b") - inter), 6)
     verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", j.alias("j"))
+        attach(cand, sh, ["sh", "size"])
+        .select("id_a", "id_b",
+                _jaccard(inter, F.col("size_a"), F.col("size_b")).alias("j"))
         .where(F.col("j") >= threshold)
     )
     # Materialize the (tiny, ~linear-in-true-dups) pair list while the
@@ -315,33 +332,17 @@ def lsh_candidate_pairs(
     With b bands of r rows the match probability is 1-(1-s^r)^b — the
     standard S-curve; b=16, r=4 centers near s≈0.5.
     """
-    bandified = sig_df.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col("sig")[bi * rows_per_band + ri]
-                                for ri in range(rows_per_band)
-                            ]
-                        ).alias("bh"),
-                    )
-                    for bi in range(bands)
-                ]
+    bandified = keys(
+        sig_df.select("id", "sig"),
+        ("band", "bh"),
+        [
+            F.xxhash64(
+                *[F.col("sig")[bi * rows_per_band + ri] for ri in range(rows_per_band)]
             )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.bh")
-    l = bandified.select(F.col("id").alias("id_a"), "band", "bh")
-    r = bandified.select(F.col("id").alias("id_b"), "band", "bh")
-    return (
-        l.join(r, ["band", "bh"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+            for bi in range(bands)
+        ],
     )
+    return candidates(bandified.select("id", "band", "bh"), ["band", "bh"])
 
 
 def minhash_estimates(
@@ -351,19 +352,11 @@ def minhash_estimates(
     ``(id, sig)`` minhash signatures: the fraction of agreeing minhashes
     estimates the pair's Jaccard similarity."""
     cand = lsh_candidate_pairs(sigs, bands, rows_per_band)
-    a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     agree = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
     )
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (agree / F.size("sig_a")).alias("est_jaccard"),
-        )
+    return attach(cand, sigs, ["sig"]).select(
+        "id_a", "id_b", (agree / F.size("sig_a")).alias("est_jaccard")
     )
 
 
@@ -409,33 +402,18 @@ def simhash_candidates(fp_df: DataFrame, chunk_bits: int = 16) -> DataFrame:
     (guarantees recall for hamming distance < number of chunks)."""
     n_chunks = SIMHASH_BITS // chunk_bits
     mask = (1 << chunk_bits) - 1
-    chunks = fp_df.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright(F.col("simhash"), i * chunk_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("v"),
-                    )
-                    for i in range(n_chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "c.chunk", "c.v")
-    l = chunks.select(F.col("id").alias("id_a"), "chunk", "v")
-    r = chunks.select(F.col("id").alias("id_b"), "chunk", "v")
-    return (
-        l.join(r, ["chunk", "v"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    chunks = keys(
+        fp_df.select("id", "simhash"),
+        ("chunk", "v"),
+        [
+            F.shiftright(F.col("simhash"), i * chunk_bits).bitwiseAND(F.lit(mask))
+            for i in range(n_chunks)
+        ],
     )
+    return candidates(chunks, ["chunk", "v"])
 
 
-def hamming_distance(a: F.Column, b: F.Column) -> Column:  # noqa: F821
+def hamming_distance(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
@@ -444,30 +422,40 @@ def hamming_distance(a: F.Column, b: F.Column) -> Column:  # noqa: F821
 # ---------------------------------------------------------------------------
 
 
+def cosine_pairs(
+    emb_df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """(id_a, id_b, cosine) of EVERY pair of vectors, id_a < id_b, cosine
+    rounded to 6 digits: the brute-force O(N²) pair list (a nested-loop
+    join), correct at any scale but quadratic."""
+    return _cosine_scored(self_join(_vectors(emb_df, id_col, vec_col), [], ["v"]))
+
+
+def _vectors(emb_df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return emb_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+
+
+def _cosine_scored(pairs: DataFrame) -> DataFrame:
+    """(id_a, id_b, cosine) of a pair frame carrying both vectors as
+    (v_a, v_b), cosine rounded to 6 digits."""
+    from packs_spark.operators.similarity import cosine
+
+    return pairs.select(
+        "id_a", "id_b",
+        F.round(cosine(F.col("v_a"), F.col("v_b")), 6).alias("cosine"),
+    )
+
+
 def embedding_near_dups(
     emb_df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
 ) -> DataFrame:
-    """Pairs with cosine ≥ threshold.  Brute-force O(N²) baseline — correct
-    at any scale but quadratic; the scale path buckets by random-hyperplane
-    LSH first (packs_spark.operators.similarity.hyperplane_buckets) and
-    runs this only within buckets."""
-    from packs_spark.operators.similarity import cosine
-
-    a = emb_df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb_df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    """Pairs with cosine ≥ threshold among all pairs (:func:`cosine_pairs`).
+    The scale tier is :func:`embedding_near_dups_lsh`, which scores only
+    the pairs that share a random-hyperplane bucket."""
+    return cosine_pairs(emb_df, id_col, vec_col).where(F.col("cosine") >= threshold)
 
 
 def embedding_near_dups_lsh(
@@ -490,31 +478,17 @@ def embedding_near_dups_lsh(
     join is keyed on bucket ids (shuffle-friendly), candidate pairs are
     deduped BEFORE vectors are re-attached, so wide embedding arrays cross
     the shuffle once per candidate pair, not once per table."""
-    from packs_spark.operators.similarity import bucket_keys, cosine
+    from packs_spark.operators.similarity import bucket_keys
 
-    ids = emb_df.select(id_col, vec_col)
-    keys = bucket_keys(ids, vec_col, dim, n_planes, n_tables).select(
-        F.col(id_col).alias("id"), "tbl", "bucket"
+    keyed = bucket_keys(
+        emb_df.select(id_col, vec_col), vec_col, dim, n_planes, n_tables
     )
-    l = keys.select(F.col("id").alias("id_a"), "tbl", "bucket")
-    r = keys.select(F.col("id").alias("id_b"), "tbl", "bucket")
-    cand = (
-        l.join(r, ["tbl", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    cand = candidates(
+        keyed.select(F.col(id_col).alias("id"), "tbl", "bucket"), ["tbl", "bucket"]
     )
-    va = emb_df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = emb_df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
+    vecs = _vectors(emb_df, id_col, vec_col)
+    return _cosine_scored(attach(cand, vecs, ["v"])).where(
+        F.col("cosine") >= threshold
     )
 
 

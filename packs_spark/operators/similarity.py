@@ -8,9 +8,14 @@
 * ``hyperplane_buckets`` / ``topk_lsh`` — random-hyperplane LSH: sign bits
   of <v, p_j> form a bucket key; queries only score candidates in their own
   bucket.  Sub-linear at scale; recall measured in tests vs brute force.
+* ``topk_ivf`` / ``IvfIndex`` — inverted file: k-means centroids trained
+  on a driver-side sample, each corpus vector in its nearest cell, each
+  query probing its ``nprobe`` nearest cells.
 
-All arithmetic is double-precision fold (``aggregate`` over ``zip_with``),
-JVM-side — no UDFs.
+The candidate joins are the pair layer's (``operators/pairs.py``).  Cosine
+and the bucket signs are double-precision folds (``aggregate`` over
+``zip_with``) in the JVM; the IVF cell assignment (``assign_cells``) is a
+numpy pandas UDF.
 """
 
 from __future__ import annotations
@@ -19,6 +24,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from packs_spark.operators.pairs import keys, probe
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -75,15 +82,21 @@ def topk_bruteforce(
     Ties broken by neighbor id ascending for determinism; self-matches
     (same id) excluded.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+    q = F.broadcast(_queries(queries, query_id_col, vec_col))
+    c = _corpus(corpus, id_col, vec_col)
     return _top_k(
         q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")), k
     )
+
+
+def _queries(queries: DataFrame, query_id_col: str, vec_col: str) -> DataFrame:
+    return queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+
+
+def _corpus(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
 
 
 def _planes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -157,18 +170,10 @@ def bucket_keys(
     All families are computed in ONE projection (array of structs →
     explode) so the source is scanned once — the previous union-of-tables
     form re-scanned the corpus ``n_tables`` times."""
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _bucket_expr(vec_col, dim, n_planes, t).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    return df.withColumn("__tb", F.explode(entries)).select(
-        *df.columns, F.col("__tb.tbl").alias("tbl"),
-        F.col("__tb.bucket").alias("bucket"),
+    return keys(
+        df,
+        ("tbl", "bucket"),
+        [_bucket_expr(vec_col, dim, n_planes, t) for t in range(n_tables)],
     )
 
 
@@ -188,29 +193,10 @@ def topk_lsh(
     random-hyperplane LSH — hit prob 1-(1-p^r)^L with p = 1 - θ/π).
     Candidate reduction ≈ 2^n_planes / n_tables; recall measured vs brute
     force in tests/test_similarity.py."""
-    cb = bucket_keys(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        "cv",
-        dim,
-        n_planes,
-        n_tables,
-    )
-    qb = bucket_keys(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "qv",
-        dim,
-        n_planes,
-        n_tables,
-    )
-    pairs = (
-        qb.join(cb, ["tbl", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qv", "cv")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _top_k(pairs, k)
+    q = _queries(queries, query_id_col, vec_col)
+    qb = bucket_keys(q, "qv", dim, n_planes, n_tables)
+    cb = bucket_keys(_corpus(corpus, id_col, vec_col), "cv", dim, n_planes, n_tables)
+    return _top_k(probe(qb, cb, ["tbl", "bucket"]), k)
 
 
 # ---------------------------------------------------------------------------
@@ -244,23 +230,11 @@ class IvfIndex:
         n_cells: int = 16,
         sample: int = 2000,
     ) -> "IvfIndex":
-        spark = corpus.sparkSession
         cents = train_centroids(corpus, vec_col, id_col, n_cells, sample)
-        assigned = assign_cells(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-            ),
-            cents,
-            "cv",
-            nprobe=1,
-        ).select("neighbor_id", "cv", F.element_at("cell", 1).alias("cell"))
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/cells"
-        )
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, centroid array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/centroids.parquet")
+        _corpus_cells(corpus, cents, id_col, vec_col).write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(f"{path}/cells")
+        write_centroids(corpus.sparkSession, cents, f"{path}/centroids.parquet")
         return cls(path, cents)
 
     @classmethod
@@ -282,20 +256,15 @@ class IvfIndex:
         nprobe: int = 4,
     ) -> DataFrame:
         spark = queries.sparkSession
+        qs = _queries(queries, query_id_col, vec_col)
         # collect the (query_id, cells) assignment ONCE — queries are the
         # small side of an ANN search by contract, and ids+cell-ids are a
         # few bytes per query (vectors stay distributed, joined back by
         # id below).  Deriving the probe set AND the join input from this
         # one collect avoids executing the centroid-scoring plan twice.
-        assigned = assign_cells(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-            ),
-            self.centroids,
-            "qv",
-            nprobe=nprobe,
-        ).select("query_id", "cell").collect()
+        assigned = assign_cells(qs, self.centroids, "qv", nprobe=nprobe).select(
+            "query_id", "cell"
+        ).collect()
         pairs = [
             (r["query_id"], int(c)) for r in assigned for c in r["cell"]
         ]
@@ -303,24 +272,13 @@ class IvfIndex:
         qid_type = dict(queries.dtypes)[query_id_col]
         q = spark.createDataFrame(
             pairs, f"query_id {qid_type}, cell int"
-        ).join(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-            ),
-            "query_id",
-        )
+        ).join(qs, "query_id")
         # the probed cell set is ≤ n_cells ids — prune the partitioned
         # scan with a literal filter (directories never read)
         corpus = spark.read.parquet(f"{self.path}/cells").where(
             F.col("cell").isin(probed)
         )
-        pairs = (
-            q.join(corpus, "cell")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .dropDuplicates(["query_id", "neighbor_id"])
-        )
-        return _top_k(pairs, k)
+        return _top_k(probe(q, corpus, ["cell"]), k)
 
 
 # ---------------------------------------------------------------------------
@@ -373,7 +331,6 @@ def assign_cells(
     """Attach the ``nprobe`` nearest centroid ids (array<int>) via one
     Arrow-batched pandas UDF; centroids broadcast once per executor."""
     import numpy as np
-    import pandas as pd
 
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(centroids)
@@ -390,6 +347,21 @@ def assign_cells(
         return pd.Series([row.tolist() for row in order])
 
     return df.withColumn(out_col, nearest_cells(F.col(vec_col)))
+
+
+def _corpus_cells(corpus: DataFrame, centroids, id_col: str, vec_col: str) -> DataFrame:
+    """(neighbor_id, cv, cell): each corpus vector in its nearest cell."""
+    return assign_cells(
+        _corpus(corpus, id_col, vec_col), centroids, "cv", nprobe=1
+    ).select("neighbor_id", "cv", F.element_at("cell", 1).alias("cell"))
+
+
+def write_centroids(spark, centroids, path: str) -> None:
+    """Write (cell, centroid array<double>) rows to parquet at ``path``."""
+    spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "cell int, centroid array<double>",
+    ).write.mode("overwrite").parquet(path)
 
 
 def topk_ivf(
@@ -422,23 +394,8 @@ def topk_ivf(
         if centroids is not None
         else train_centroids(corpus, vec_col, id_col, n_cells, sample)
     )
-    c = assign_cells(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        cents,
-        "cv",
-        nprobe=1,
-    ).select("neighbor_id", "cv", F.element_at("cell", 1).alias("cell"))
+    c = _corpus_cells(corpus, cents, id_col, vec_col)
     q = assign_cells(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        cents,
-        "qv",
-        nprobe=nprobe,
+        _queries(queries, query_id_col, vec_col), cents, "qv", nprobe=nprobe
     ).select("query_id", "qv", F.explode("cell").alias("cell"))
-    pairs = (
-        q.join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _top_k(pairs, k)
+    return _top_k(probe(q, c, ["cell"]), k)

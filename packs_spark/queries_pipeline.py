@@ -144,37 +144,6 @@ def q_dedup_exact(spark, sf_dir):
 _JACCARD_T = 0.05
 
 
-def _word3_jaccard_frame(spark, sf_dir):
-    """(id_a, id_b, j) for every shingle-sharing document pair — the word
-    3-gram exact-jaccard plan shared by the pair summary and the
-    connected-components clustering query."""
-    from packs_spark.operators.dedup import word_shingles
-
-    df = load(spark, sf_dir, "documents")
-    sh = (
-        df.where(F.trim(F.col("text")) != "")
-        .select(
-            F.col("doc_id").alias("id"),
-            word_shingles(F.col("text"), 3).alias("sh"),
-        )
-        .where(F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 3)
-        .withColumn("sz", F.size("sh"))
-    )
-    ex = sh.select("id", "sz", F.explode("sh").alias("s"))
-    a = ex.select(F.col("id").alias("id_a"), F.col("sz").alias("size_a"), "s")
-    b = ex.select(F.col("id").alias("id_b"), F.col("sz").alias("size_b"), "s")
-    pairs = (
-        a.join(b, "s")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    j = F.round(
-        F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
-    )
-    return pairs.select("id_a", "id_b", j.alias("j"))
-
-
 @register(
     "dedup_jaccard_documents",
     oracle=f"""
@@ -205,13 +174,15 @@ FROM jac
 """,
 )
 def q_dedup_jaccard(spark, sf_dir):
-    jac = _word3_jaccard_frame(spark, sf_dir).select("j")
+    from packs_spark.operators.dedup import word_jaccard_pairs
+
+    j = F.col("jaccard")
+    jac = word_jaccard_pairs(load(spark, sf_dir, "documents"), k=3).select(j)
     return jac.agg(
-        F.sum((F.col("j") >= _JACCARD_T).cast("long")).alias("n_pairs"),
-        F.coalesce(F.round(F.max("j"), 6), F.lit(0.0)).alias("max_jaccard"),
+        F.sum((j >= _JACCARD_T).cast("long")).alias("n_pairs"),
+        F.coalesce(F.round(F.max(j), 6), F.lit(0.0)).alias("max_jaccard"),
         F.coalesce(
-            F.round(F.avg(F.when(F.col("j") >= _JACCARD_T, F.col("j"))), 6),
-            F.lit(0.0),
+            F.round(F.avg(F.when(j >= _JACCARD_T, j)), 6), F.lit(0.0)
         ).alias("avg_jaccard"),
     )
 
@@ -393,16 +364,13 @@ def q_dedup_simhash(spark, sf_dir):
         simhash,
         simhash_candidates,
     )
+    from packs_spark.operators.pairs import attach
 
     df = load(spark, sf_dir, "documents")
     fp = _materialize(simhash(df, "doc_id", "text"), "simhash_fp", sf_dir)
     cand = simhash_candidates(fp, chunk_bits=16)
-    a = fp.select(F.col("id").alias("id_a"), F.col("simhash").alias("ha"))
-    b = fp.select(F.col("id").alias("id_b"), F.col("simhash").alias("hb"))
-    verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(hamming_distance(F.col("ha"), F.col("hb")).alias("d"))
+    verified = attach(cand, fp, ["simhash"]).select(
+        hamming_distance(F.col("simhash_a"), F.col("simhash_b")).alias("d")
     )
     return verified.agg(
         F.count(F.lit(1)).alias("n_candidate_pairs"),
@@ -441,14 +409,9 @@ FROM c
 """,
 )
 def q_dedup_embedding(spark, sf_dir):
-    from packs_spark.operators.similarity import cosine
+    from packs_spark.operators.dedup import cosine_pairs
 
-    emb = load(spark, sf_dir, "embeddings")
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).select(
-        F.round(cosine(F.col("ea"), F.col("eb")), 6).alias("cosine")
-    )
+    pairs = cosine_pairs(load(spark, sf_dir, "embeddings")).select("cosine")
     return pairs.agg(
         F.sum((F.col("cosine") >= 0.3).cast("long")).alias("n_pairs_ge_03"),
         F.round(F.max("cosine"), 6).alias("max_cosine"),
@@ -523,6 +486,16 @@ def q_dedup_embedding_lsh(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _embeddings_and_queries(spark, sf_dir):
+    """The embeddings table, and its vectors with id < 10 as the
+    (query_id, embedding) queries of the top-k rows."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    return emb, queries
+
+
 @register(
     "similarity_topk_bruteforce",
     oracle="""
@@ -548,10 +521,7 @@ QUALIFY rank <= 5
 def q_topk_bruteforce(spark, sf_dir):
     from packs_spark.operators.similarity import topk_bruteforce
 
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    emb, queries = _embeddings_and_queries(spark, sf_dir)
     return topk_bruteforce(emb, queries, k=5, query_id_col="query_id")
 
 
@@ -598,10 +568,7 @@ def q_topk_lsh(spark, sf_dir):
     DuckDB recomputation)."""
     from packs_spark.operators.similarity import topk_lsh
 
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    emb, queries = _embeddings_and_queries(spark, sf_dir)
     return topk_lsh(emb, queries, k=5, query_id_col="query_id", dim=64, n_planes=4, n_tables=8)
 
 
@@ -673,17 +640,15 @@ def q_topk_ivf(spark, sf_dir):
     the candidate cell-join, and exact cosine top-k with the same
     round-then-rank tie-break.  Recall vs brute force is additionally
     asserted in tests/test_similarity.py."""
-    from packs_spark.operators.similarity import topk_ivf, train_centroids
-
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    from packs_spark.operators.similarity import (
+        topk_ivf,
+        train_centroids,
+        write_centroids,
     )
+
+    emb, queries = _embeddings_and_queries(spark, sf_dir)
     cents = train_centroids(emb, "embedding", "vec_id", n_cells=16, sample=2000)
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(_oracle_io_path("ivf_centroids", sf_dir))
+    write_centroids(spark, cents, _oracle_io_path("ivf_centroids", sf_dir))
     return topk_ivf(
         emb, queries, k=5, query_id_col="query_id", n_cells=16, nprobe=4,
         centroids=cents,

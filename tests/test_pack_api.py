@@ -142,6 +142,33 @@ def test_data_compare_pack_streams(spark, tmp_path):
     assert m["rows_source_only"] == "1" and m["rows_target_only"] == "1"
 
 
+@pytest.mark.parametrize(
+    "source, source_only",
+    [("id,v\n", "0"), ("id,v\n5,10.0\n6,20.0\n", "2")],
+    ids=["header_only", "disjoint_ids"],
+)
+def test_data_compare_no_rows_in_common(spark, tmp_path, source, source_only):
+    """With no row in common the match rate is NULL, not a division by
+    zero."""
+    src = tmp_path / "a.csv"
+    tgt = tmp_path / "b.csv"
+    src.write_text(source)
+    tgt.write_text("id,v\n1,10.0\n2,20.0\n")
+    out = run_pack(
+        spark,
+        "data_compare",
+        {"type": "csv", "path": str(src), "name": "a"},
+        {"job": {"target": {"type": "csv", "path": str(tgt)},
+                 "id_columns": ["id"]}},
+    )
+    m = {r.key: r.value for r in out["metrics"].collect()}
+    assert m == {
+        "rows_in_common": "0", "rows_source_only": source_only,
+        "rows_target_only": "2", "cell_mismatches": "0",
+        "rows_fully_matched": "0", "match_rate": None,
+    }
+
+
 def test_timeliness_pack_streams(spark, tmp_path):
     p = tmp_path / "t.csv"
     p.write_text(

@@ -78,3 +78,56 @@ def test_conversions_consolidated_plan_bounded_scans(spark):
     plan = _plan(spark, "conversions_validity_orders")
     assert plan.count("Scan parquet") <= 3, plan.count("Scan parquet")
     assert "CartesianProduct" not in plan
+
+
+def _executed_plans(spark, name: str) -> list[str]:
+    """The physical plan of every SQL execution that running the row and
+    collecting its result starts, eager steps inside the row (a persisted
+    pair list, a driver-side collect) included."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id():
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    bus.waitUntilEmpty()
+    first = last_id()
+    entry_mod.queries()[name](spark, SF).collect()
+    bus.waitUntilEmpty()
+    n = store.executionsCount()
+    execs = store.executionsList(max(n - 100, 0), 100)
+    execs = [execs.apply(i) for i in range(execs.size())]
+    return [e.physicalPlanDescription() for e in execs if e.executionId() > first]
+
+
+@pytest.mark.parametrize(
+    "name, n_split",
+    # word_shingles binds the word array once; a lambda that referred to
+    # split(trim(text)) printed (and ran) it once per use: 52 and 15
+    [("dedup_jaccard_documents", 16), ("dedup_clusters_documents", 6)],
+)
+def test_word_shingles_split_once(spark, name, n_split):
+    plans = _executed_plans(spark, name)
+    assert sum(p.count("split(") for p in plans) == n_split
+
+
+@pytest.mark.parametrize(
+    "name, on",
+    [
+        ("dedup_minhash_documents", "band#"),
+        ("dedup_simhash_documents", "chunk#"),
+        ("dedup_embedding_lsh_documents", "tbl#"),
+        ("similarity_topk_lsh", "tbl#"),
+        ("similarity_topk_ivf", "cell#"),
+    ],
+)
+def test_candidate_joins_are_keyed(spark, name, on):
+    """The pair layer's candidate join is an equi-join on its key columns,
+    never an all-pairs nested loop."""
+    plan = "\n".join(_executed_plans(spark, name))
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+    assert any(
+        ln.startswith("Left keys") and f"[{on}" in ln for ln in plan.splitlines()
+    ), name
+    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
@@ -55,7 +56,7 @@ def value_hash(rows, colnames):
 def main(argv):
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from packs_spark.session import get_spark
 
