@@ -5,9 +5,16 @@ alphabet {a..z, space}):
 
 * a model is a dense ``float32[27^3]`` table of log-probabilities per
   language (Laplace-smoothed trigram LM over normalized text);
-* scoring a *batch* of documents is pure numpy — no per-row Python:
-  normalize → byte-map → rolling trigram codes over one concatenated
-  buffer → ``np.add.reduceat`` per-document segment sums;
+* scoring a *batch* of documents is pure numpy over the batch's Arrow
+  string column, read in place: the data buffer (every document's UTF-8
+  bytes, back to back) is byte-mapped to symbols and rolled into one
+  trigram code per byte position, and the offsets buffer gives each
+  document's segment ``[start, end - 2)`` — exactly the windows that lie
+  inside it — for ``np.add.reduceat``.  No per-document ``encode``, no
+  separator bytes between documents;
+* a window holding a NUL byte is invalid: NUL maps past every code, so
+  its window is clamped to index ``N_CODES``, a zero column padded onto
+  the tables — the gather needs no ``np.where`` mask;
 * inside Spark the tables ride a broadcast variable and are materialized
   once per executor (lazy init inside the pandas UDF), so Arrow batches
   stream through a single vectorized scoring call.
@@ -20,110 +27,117 @@ against the Arrow traffic, which is the actual bottleneck knob
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 ALPHABET = 27  # a..z + space
 N_CODES = ALPHABET**3
 
 # byte value -> symbol id (0..26), everything non-alpha collapses to space
+# (langid over this alphabet is ASCII-transliteration based by
+# construction); NUL maps to N_CODES, so every window holding one codes
+# past the table and is clamped onto the zero column (``_window_codes``)
 _BYTE_MAP = np.zeros(256, dtype=np.int32)
 for i in range(256):
     c = chr(i).lower()
     _BYTE_MAP[i] = (ord(c) - ord("a") + 1) if "a" <= c <= "z" else 0
+_BYTE_MAP[0] = N_CODES
 
 
-def _normalize_to_bytes(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate texts with a separator, return (symbol ids, doc boundary
-    offsets).  Non-ASCII bytes map to space via the byte table (langid over
-    this alphabet is ASCII-transliteration based by construction)."""
-    # every separator byte must be invalid (NUL → symbol -1): with a
-    # mixed separator like b" \x00 " the flanking spaces form VALID windows
-    # with the last two chars of the previous doc and the first two of the
-    # next, contaminating scores across batch neighbors (and making
-    # keep/drop depend on Arrow batch composition).  Three NULs guarantee
-    # every window that touches the gap contains a -1 and is dropped.
-    sep = b"\x00\x00\x00"
-    # encode each text exactly once (encoding is a real cost at batch size)
-    enc = [
-        (t if t is not None else "").encode("utf-8", errors="replace")
-        for t in texts
-    ]
-    joined = sep.join(enc) + sep
-    raw = np.frombuffer(joined, dtype=np.uint8)
-    syms = _BYTE_MAP[raw]
-    # NUL (0x00) maps to 0 (space) via the table; mark separators explicitly
-    sep_mask = raw == 0
-    syms = np.where(sep_mask, -1, syms)
-    # compute per-doc start offsets in the symbol stream
-    lengths = np.array([len(e) for e in enc], dtype=np.int64)
-    sep_len = len(sep)
-    starts = np.zeros(len(texts), dtype=np.int64)
-    if len(texts) > 1:
-        starts[1:] = np.cumsum(lengths[:-1] + sep_len)
-    return syms, starts
+def text_array(texts) -> pa.Array:
+    """``texts`` as an Arrow string array: an Arrow array passes through
+    as is, a list is converted.  Arrow cannot hold a lone surrogate, so a
+    list holding one is converted as ``str.encode(errors="replace")``
+    would encode it (each lone surrogate becomes ``?``)."""
+    if isinstance(texts, pa.Array):
+        return texts
+    try:
+        return pa.array(texts, type=pa.string())
+    except UnicodeEncodeError:
+        return pa.array(
+            [None if t is None else t.encode("utf-8", "replace").decode("utf-8")
+             for t in texts],
+            type=pa.string(),
+        )
 
 
-def trigram_codes(syms: np.ndarray) -> np.ndarray:
-    """Rolling trigram codes; windows containing a separator get code -1."""
-    if len(syms) < 3:
-        return np.empty(0, dtype=np.int64)
-    a, b, c = syms[:-2], syms[1:-1], syms[2:]
-    valid = (a >= 0) & (b >= 0) & (c >= 0)
-    codes = a * (ALPHABET * ALPHABET) + b * ALPHABET + c
-    return np.where(valid, codes, -1)
+def utf8_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, data) of a string array as numpy views of its buffers:
+    ``offsets`` (intp, rebased to 0, one more entry than ``arr``) and the
+    bytes of document ``i`` are ``data[offsets[i]:offsets[i + 1]]``.  A
+    null reads as an empty document."""
+    if arr.null_count:
+        arr = arr.fill_null("")
+    width = np.dtype(np.int64 if pa.types.is_large_string(arr.type) else np.int32)
+    _, off_buf, data_buf = arr.buffers()
+    off = np.frombuffer(off_buf, width, len(arr) + 1, arr.offset * width.itemsize)
+    data = np.frombuffer(data_buf or b"", np.uint8)
+    return off.astype(np.intp) - off[0], data[off[0] : off[-1]]
+
+
+def _window_codes(data: np.ndarray) -> np.ndarray:
+    """Trigram code of the window starting at each byte of ``data``
+    (intp, the gather's native index type), ``N_CODES`` for a window
+    holding a NUL byte and for the last two bytes, which start no full
+    window."""
+    codes = np.full(len(data), N_CODES, dtype=np.intp)
+    if len(data) >= 3:
+        s = np.take(_BYTE_MAP, data)
+        c = s[:-2] * (ALPHABET * ALPHABET)
+        c += s[1:-1] * ALPHABET
+        c += s[2:]
+        np.minimum(c, N_CODES, out=codes[:-2])
+    return codes
+
+
+def _windows(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(window codes, segment bounds, has-a-window mask) of a batch.  The
+    bounds interleave ``start, end - 2`` of every document of three bytes
+    or more, so the even segments of ``np.add.reduceat(x, bounds)`` are
+    those documents' own windows — a window never spans two documents, and
+    a shorter document has no segment (it keeps the 0 it starts with)."""
+    off, data = utf8_buffers(text_array(texts))
+    has = np.diff(off) >= 3
+    bounds = np.empty(2 * int(has.sum()), dtype=np.intp)
+    bounds[0::2] = off[:-1][has]
+    bounds[1::2] = off[1:][has] - 2
+    return _window_codes(data), bounds, has
 
 
 def train_trigram_logprobs(text: str, alpha: float = 0.5) -> np.ndarray:
     """Laplace-smoothed trigram log-probability table from a seed text."""
-    syms, _ = _normalize_to_bytes([text])
-    codes = trigram_codes(syms)
-    codes = codes[codes >= 0]
-    counts = np.bincount(codes, minlength=N_CODES).astype(np.float64)
+    codes, _, _ = _windows([text])
+    counts = np.bincount(codes, minlength=N_CODES + 1)[:N_CODES].astype(np.float64)
     probs = (counts + alpha) / (counts.sum() + alpha * N_CODES)
     return np.log(probs).astype(np.float32)
 
 
-def score_batch(
-    texts: list[str], tables: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
+def score_batch(texts, tables: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Sum-of-logprob scores for a batch against L tables at once.
 
-    Returns (scores[L, n_docs], n_trigrams[n_docs]).  One pass of numpy —
-    the per-document segmentation is np.add.reduceat over doc boundaries.
-    """
-    n_docs = len(texts)
-    L = tables.shape[0]
-    syms, starts = _normalize_to_bytes(texts)
-    codes = trigram_codes(syms)
-    valid = codes >= 0
-    safe_codes = np.where(valid, codes, 0)
-    # reduceat boundaries: trigram at position i belongs to the doc whose
-    # byte range contains i (separators produce invalid windows between docs)
-    boundaries = np.clip(starts, 0, max(len(codes), 1))
-    n_tri = np.add.reduceat(valid.astype(np.int64), boundaries) if len(codes) else np.zeros(n_docs, dtype=np.int64)
-    if len(codes) == 0:
-        return np.zeros((L, n_docs), dtype=np.float64), np.zeros(n_docs, dtype=np.int64)
-    scores = np.empty((L, n_docs), dtype=np.float64)
-    # gather from a float64 view of the (tiny, 27^3-entry) tables so the
-    # segment sums accumulate in float64 — batch-size-independent to 1e-9
-    # and bit-compatible with a per-document python-float loop.  asarray
-    # is a no-op when the broadcast already carries float64 tables.
-    tables64 = np.asarray(tables, dtype=np.float64)
-    for li in range(L):
-        vals = np.where(valid, tables64[li][safe_codes], 0.0)
-        scores[li] = np.add.reduceat(vals, boundaries)
-    # reduceat quirk: duplicate boundaries (empty docs) repeat the next
-    # segment — zero them out
-    empty = n_tri <= 0
-    if empty.any():
-        seg_end = np.append(boundaries[1:], len(codes))
-        really_empty = boundaries >= seg_end
-        scores[:, really_empty] = 0.0
-        n_tri = np.where(really_empty, 0, n_tri)
+    ``texts`` is an Arrow string array (or a list, see ``text_array``).
+    Returns (scores[L, n_docs], n_trigrams[n_docs]): per table one gather
+    through the zero-padded table and one ``np.add.reduceat`` over the
+    document segments of ``_windows``.  The gather reads a float64 copy of
+    the (tiny, 27^3-entry) tables.  Their entries are float32 values, and
+    the trained ones all lie below log 0.5, so float64 sums of them are
+    exact for any document under millions of windows: a score is
+    bit-identical whatever the summation order — in any batch, alone, or
+    in a per-document python-float loop."""
+    codes, bounds, has = _windows(texts)
+    n_docs = len(has)
+    scores = np.zeros((tables.shape[0], n_docs), dtype=np.float64)
+    n_tri = np.zeros(n_docs, dtype=np.int64)
+    if bounds.size:
+        n_tri[has] = np.add.reduceat(codes != N_CODES, bounds, dtype=np.int64)[0::2]
+        padded = np.zeros((tables.shape[0], N_CODES + 1), dtype=np.float64)
+        padded[:, :N_CODES] = tables
+        for li, table in enumerate(padded):
+            scores[li, has] = np.add.reduceat(table[codes], bounds)[0::2]
     return scores, n_tri
 
 
 def fused_predict(
-    texts: list[str], stacked_tables: np.ndarray, n_langs: int
+    texts, stacked_tables: np.ndarray, n_langs: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One normalize+codes pass scoring langid tables AND the perplexity
     table together (``stacked_tables`` = [lid_0..lid_{n_langs-1}, ppl]).
@@ -135,7 +149,7 @@ def fused_predict(
     denom = np.maximum(n_tri, 1)
     per_tri = scores[:n_langs] / denom
     order = np.argsort(-per_tri, axis=0)
-    cols = np.arange(len(texts))
+    cols = np.arange(len(n_tri))
     margin = per_tri[order[0], cols] - per_tri[order[1], cols]
     best = np.where(n_tri > 0, order[0], -1)
     margin = np.where(n_tri > 0, margin, 0.0)

@@ -115,9 +115,7 @@ def hot_shingles(
     :func:`jaccard_pairs` drops.  Exposed separately so callers can count
     or inspect drops without forcing the pair plan to run jobs at
     construction time."""
-    ex = df.select(
-        F.explode(char_shingles(F.col(text_col), k)).alias("s")
-    )
+    ex = _elements(df.select(char_shingles(F.col(text_col), k).alias("sh")))
     return (
         ex.groupBy("s")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -152,7 +150,7 @@ def jaccard_pairs(
         F.col(id_col).alias("id"),
         char_shingles(F.col(text_col), k).alias("sh"),
     )
-    ex = sh.select("id", F.size("sh").alias("size"), F.explode("sh").alias("s"))
+    ex = _elements(sh.withColumn("size", F.size("sh")))
     if max_df is not None:
         # stays fully lazy: no persist (a pinned cache entry would leak
         # for the session lifetime) and no eager count (constructing the
@@ -172,7 +170,7 @@ def word_jaccard_pairs(
     documents sharing at least one word k-gram, over the sets of
     :func:`_word_sets` (no document-frequency cap, no threshold)."""
     sets = _word_sets(df, id_col, text_col, k)
-    return _set_jaccard(sets.select("id", "size", F.explode("sh").alias("s")))
+    return _set_jaccard(_elements(sets))
 
 
 def _word_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
@@ -184,6 +182,19 @@ def _word_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
         .where(F.size(F.split(F.trim(t), r"\s+")) >= k)
         .select(F.col(id_col).alias("id"), word_shingles(t, k).alias("sh"))
         .withColumn("size", F.size("sh"))
+    )
+
+
+def _elements(sets: DataFrame) -> DataFrame:
+    """``sets`` with its shingle array ``sh`` replaced by one row per
+    element ``s``.  ``explode_outer`` plus a filter on the element, not
+    ``explode``: from an inner explode Spark infers ``size(sh) > 0 AND
+    isnotnull(sh)`` and pushes it below the projection that builds ``sh``,
+    so the scan's Filter would build every set twice more.  No set holds a
+    null, so the rows are those of ``explode``."""
+    cols = [c for c in sets.columns if c != "sh"]
+    return sets.select(*cols, F.explode_outer("sh").alias("s")).where(
+        F.col("s").isNotNull()
     )
 
 

@@ -23,13 +23,19 @@ import re as _re
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from packs_spark.ml.ngram import text_array, utf8_buffers
 from packs_spark.pipeline.rules import STOPWORDS
 
 _SYM_RE = _re.compile(r"[^A-Za-z0-9\s]")
+# _SYM_RE's verdict on each byte read as a character (exact for ASCII)
+_SYM_BYTE = np.array(
+    [_SYM_RE.match(chr(b)) is not None for b in range(256)], dtype=np.uint8
+)
 _STOP_SET = frozenset(STOPWORDS)
 
 # the signal columns of ``enrich_signals``, in output order
@@ -70,33 +76,40 @@ LABELS = T.StructType(
 )
 
 
-def _heuristic_batch(tl, stop_set):
-    """Quality-signal arrays for one Arrow batch, Python-string semantics
-    (identical to tests/pandas_oracle.heuristics_oracle — str.split() on
-    unicode whitespace, Python-re symbol class).  One C-level tokenize pass
-    per document inside the batch; all arithmetic on numpy arrays.  Moved
-    here from JVM Column expressions: the split/array_distinct/isin chain
-    cost more JVM time than this whole kernel, and Python semantics make the
-    keep/drop parity with the oracle exact instead of F1≈1."""
-    n = len(tl)
-    n_chars = np.zeros(n, dtype=np.int64)
-    n_words = np.zeros(n, dtype=np.int64)
-    n_sym = np.zeros(n, dtype=np.int64)
-    stop_hits = np.zeros(n, dtype=np.int64)
-    n_distinct = np.zeros(n, dtype=np.int64)
-    isnull = np.zeros(n, dtype=bool)
-    for i, t in enumerate(tl):
-        if t is None:
-            isnull[i] = True
-            continue
-        n_chars[i] = len(t)
-        n_sym[i] = len(_SYM_RE.findall(t))
-        ws = t.split()
-        n_words[i] = len(ws)
-        if ws:
-            low = [w.lower() for w in ws]
-            stop_hits[i] = sum(1 for w in low if w in stop_set)
-            n_distinct[i] = len(set(low))
+def _heuristic_batch(texts, stop_set):
+    """Quality-signal arrays for one batch (an Arrow string array, or a
+    list, see ``ngram.text_array``), Python-string semantics (identical to
+    tests/pandas_oracle.heuristics_oracle — str.split() on unicode
+    whitespace, Python-re symbol class).  ``n_chars`` is Arrow's
+    ``utf8_length``; an ASCII document's symbol count is a sum of
+    ``_SYM_BYTE`` over its bytes, the rest keep ``_SYM_RE.findall``; words
+    are one C-level lower+split per document.  Moved here from JVM Column
+    expressions: the split/array_distinct/isin chain cost more JVM time
+    than this whole kernel, and Python semantics make the keep/drop parity
+    with the oracle exact instead of F1≈1."""
+    arr = text_array(texts)
+    isnull = arr.is_null().to_numpy(zero_copy_only=False)
+    if arr.null_count:
+        arr = arr.fill_null("")
+    off, data = utf8_buffers(arr)
+    n_chars = pc.utf8_length(arr).to_numpy().astype(np.int64)
+    n_sym = np.zeros(len(arr), dtype=np.int64)
+    # an empty document holds no bytes, so each non-empty document's
+    # reduceat segment ends where the next non-empty one starts
+    nonempty = off[1:] > off[:-1]
+    if nonempty.any():
+        n_sym[nonempty] = np.add.reduceat(
+            np.take(_SYM_BYTE, data), off[:-1][nonempty], dtype=np.int64
+        )
+    tl = arr.to_pylist()
+    # a document is ASCII when it has as many characters as bytes
+    for i in np.flatnonzero(n_chars != np.diff(off)):
+        n_sym[i] = len(_SYM_RE.findall(tl[i]))
+    words = (t.lower().split() for t in tl)
+    counts = [
+        (len(ws), sum(map(stop_set.__contains__, ws)), len(set(ws))) for ws in words
+    ]
+    n_words, stop_hits, n_distinct = np.array(counts, dtype=np.int64).reshape(-1, 3).T
     with np.errstate(divide="ignore", invalid="ignore"):
         symbol_ratio = np.where(n_chars > 0, n_sym / np.maximum(n_chars, 1), 0.0)
         stopword_ratio = np.where(
@@ -124,18 +137,20 @@ def _broadcast_models(spark: SparkSession):
     return spark.sparkContext.broadcast((stacked, list(langid_model.langs)))
 
 
-def enrich_signals(tl: list, tables: np.ndarray, langs: list[str]) -> dict:
-    """Every ``SIGNALS`` column of one batch of texts, by name, in order:
-    langid + perplexity, scrub and the heuristic signals (one kernel call
-    each over the whole batch)."""
+def enrich_signals(texts, tables: np.ndarray, langs: list[str]) -> dict:
+    """Every ``SIGNALS`` column of one batch of texts (an Arrow string
+    array, or a list), by name, in order: langid + perplexity, scrub and
+    the heuristic signals (one kernel call each over the whole batch)."""
     from packs_spark.ml.ngram import fused_predict
     from packs_spark.pipeline.scrub import scrub_batch
 
-    idx, margin, ppl = fused_predict(tl, tables, len(langs))
-    scrubbed, spans = scrub_batch(tl)
-    n_chars, n_words, sym_r, stop_r, dist_r, _ = _heuristic_batch(tl, _STOP_SET)
+    arr = text_array(texts)
+    idx, margin, ppl = fused_predict(arr, tables, len(langs))
+    scrubbed, spans = scrub_batch(arr)
+    n_chars, n_words, sym_r, stop_r, dist_r, _ = _heuristic_batch(arr, _STOP_SET)
     return {
-        "lang_pred": [langs[i] if i >= 0 else "unknown" for i in idx],
+        # idx -1 (no trigram) picks the trailing "unknown"
+        "lang_pred": np.array([*langs, "unknown"], dtype=object)[idx],
         "lang_margin": margin,
         "ppl": ppl,
         "text_scrubbed": scrubbed,
@@ -168,11 +183,11 @@ def make_label_batch(spark: SparkSession, thresholds: dict, run_id: str):
         # Broadcast.value deserializes once per Python worker process and
         # memoizes — that IS the lazy per-executor model load.
         tables, langs = bc.value
-        sig = enrich_signals(rb.column("text").to_pylist(), tables, langs)
+        sig = enrich_signals(rb.column("text"), tables, langs)
         keep_h = heuristic_keep(sig.__getitem__)
         keep = (
             keep_h
-            & (np.asarray(sig["lang_pred"], dtype=object) != "unknown")
+            & (sig["lang_pred"] != "unknown")
             & (sig["lang_margin"] >= min_margin)
             & (sig["ppl"] <= max_ppl)
         )

@@ -104,8 +104,10 @@ def _executed_plans(spark, name: str) -> list[str]:
 @pytest.mark.parametrize(
     "name, n_split",
     # word_shingles binds the word array once; a lambda that referred to
-    # split(trim(text)) printed (and ran) it once per use: 52 and 15
-    [("dedup_jaccard_documents", 16), ("dedup_clusters_documents", 6)],
+    # split(trim(text)) printed (and ran) it once per use: 52 and 15.  The
+    # jaccard row's 16 were 8 until its explode stopped pushing the set's
+    # aggregate into the scan's Filter (dedup._elements)
+    [("dedup_jaccard_documents", 8), ("dedup_clusters_documents", 6)],
 )
 def test_word_shingles_split_once(spark, name, n_split):
     plans = _executed_plans(spark, name)
@@ -131,3 +133,21 @@ def test_candidate_joins_are_keyed(spark, name, on):
         ln.startswith("Left keys") and f"[{on}" in ln for ln in plan.splitlines()
     ), name
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
+
+
+def test_word_shingle_set_built_once_per_join_side(spark):
+    """The word-shingle aggregate runs once per side of the pair join.  An
+    inner ``explode`` of the set let Spark push ``size(sh) > 0 AND
+    isnotnull(sh)`` below the projection, so every scan's Filter built the
+    set twice more."""
+    from packs_spark.operators.dedup import word_jaccard_pairs
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y")], "doc_id long, text string"
+    )
+    pairs = word_jaccard_pairs(df)
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2, 2, 3, 3, 0.5)]
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    sides = plan.count("Generate explode")
+    assert sides >= 2 and plan.count("aggregate(") == sides
+    assert not any("Filter" in ln and "aggregate(" in ln for ln in plan.splitlines())

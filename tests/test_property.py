@@ -11,6 +11,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from packs_spark.pipeline.scrub import (
+    _ALTERNATIVES,
+    _NEED_RX,
+    _TERMS_FOLDED,
     REPLACEMENT,
     _may_match,
     combined_pattern,
@@ -168,3 +171,210 @@ def test_score_batch_independent_of_neighbors_hypothesis(texts):
 from packs_spark.ml.ngram import LangIdModel as _LangIdModel  # noqa: E402
 
 _NGRAM_MODEL = _LangIdModel.train()
+
+
+# ---------------------------------------------------------------------------
+# The Arrow labeling kernels against per-document Python semantics
+# ---------------------------------------------------------------------------
+
+_WHITESPACE = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+_SIGNAL_FRAGMENTS = st.sampled_from(
+    [
+        "the quick brown fox jumps over the lazy dog",
+        "le chat est sur la table et il dort",
+        "The THE the Und UND",  # case-duplicate words and stopwords
+        "ΑΣ Α",  # final sigma before a space
+        "ὈΔΥΣΣΕΎΣ",
+        "a\x00b",  # in-text NUL: no trigram window may hold it
+        "\x00\x00\x00",
+        "ſlurword",
+        "Kbadword2",
+        "１２３-４５-６７８９",
+        "١٢٣-٤٥-٦٧٨٩",
+        "mail john.doe@example.com or 10.0.0.1",
+        "fe80::1 and 2001:db8:0:0:0:0:2:1",
+        "in 2019 about 3.5 of 12-34",
+        "!!! ### $$$",
+        "",
+    ]
+)
+_signal_docs = st.lists(
+    st.one_of(_SIGNAL_FRAGMENTS, st.text(max_size=30)), max_size=6
+).flatmap(
+    lambda parts: st.lists(
+        st.sampled_from(_WHITESPACE), min_size=len(parts), max_size=len(parts)
+    ).map(lambda seps: "".join(p + s for p, s in zip(parts, seps)))
+)
+
+
+def _reference_scores(texts, tables):
+    """Trigram scores and counts per document, as the scorer computed them
+    from Python strings: windows over ``encode(errors="replace")``, any
+    window holding NUL invalid, float64 sums of the table entries."""
+    import numpy as np
+
+    from packs_spark.ml.ngram import ALPHABET
+
+    def sym(byte):
+        ch = chr(byte).lower()
+        return ord(ch) - ord("a") + 1 if "a" <= ch <= "z" else 0
+
+    scores = np.zeros((len(tables), len(texts)))
+    n_tri = np.zeros(len(texts), dtype=np.int64)
+    for j, t in enumerate(texts):
+        b = (t or "").encode("utf-8", errors="replace")
+        for i in range(len(b) - 2):
+            if 0 in b[i : i + 3]:
+                continue
+            code = (sym(b[i]) * ALPHABET + sym(b[i + 1])) * ALPHABET + sym(b[i + 2])
+            n_tri[j] += 1
+            for li in range(len(tables)):
+                scores[li, j] += float(tables[li][code])
+    return scores, n_tri
+
+
+def _reference_signals(texts, tables, langs):
+    """``enrich_signals`` written per document, as the kernels computed it
+    from Python strings: ``_reference_scores``, ``scrub_with_spans`` for
+    every document, and the pandas oracle's heuristics (per-word lower of
+    ``str.split()``)."""
+    import numpy as np
+
+    from tests.pandas_oracle import heuristics_oracle
+
+    scores, n_tri = _reference_scores(texts, tables)
+    n_langs, found = len(langs), n_tri > 0
+    denom = np.maximum(n_tri, 1)
+    per_tri = scores[:n_langs] / denom
+    order = np.argsort(-per_tri, axis=0)
+    cols = np.arange(len(texts))
+    margin = per_tri[order[0], cols] - per_tri[order[1], cols]
+    scrub = [scrub_with_spans(t) for t in texts]
+    heur = heuristics_oracle(pd.Series(texts, dtype=object))
+    return {
+        "lang_pred": [langs[i] if f else "unknown" for i, f in zip(order[0], found)],
+        "lang_margin": np.where(found, margin, 0.0),
+        "ppl": np.where(found, np.exp(-scores[n_langs] / denom), np.inf),
+        "text_scrubbed": [s for s, _ in scrub],
+        "scrub_spans": [sp for _, sp in scrub],
+        "pii_hits": [len(sp) for _, sp in scrub],
+        "q_n_chars": heur["n_chars"].tolist(),
+        "q_n_words": heur["n_words"].tolist(),
+        "q_symbol_ratio": heur["symbol_ratio"].to_numpy(np.float64),
+        "q_stopword_ratio": heur["stopword_ratio"].to_numpy(np.float64),
+        "q_distinct_ratio": heur["distinct_ratio"].to_numpy(np.float64),
+    }
+
+
+def _bits(values):
+    """A column as comparable Python values; floats by their bit pattern."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(values, pa.Array):
+        return values.to_pylist()
+    if isinstance(values, np.ndarray) and values.dtype.kind == "f":
+        return values.astype(np.float64).view(np.int64).tolist()
+    return list(values)
+
+
+_SIGNAL_TABLES = None
+
+
+def _signal_tables():
+    global _SIGNAL_TABLES
+    if _SIGNAL_TABLES is None:
+        import numpy as np
+
+        from packs_spark.ml.ngram import PerplexityModel
+
+        ppl = PerplexityModel.train().table
+        _SIGNAL_TABLES = np.vstack([_NGRAM_MODEL.tables, ppl[None, :]])
+        _SIGNAL_TABLES = _SIGNAL_TABLES.astype(np.float64)
+    return _SIGNAL_TABLES
+
+
+@given(
+    st.lists(st.one_of(st.none(), _signal_docs), max_size=8),
+    st.integers(0, 3),
+    st.booleans(),
+)
+@settings(max_examples=150, deadline=None)
+def test_enrich_signals_on_arrow_equals_per_document_semantics(texts, skip, large):
+    """Every signal column that ``enrich_signals`` computes from an Arrow
+    array's buffers equals, bit for bit, the per-document reference — on
+    arrays with nulls, sliced so that ``offset != 0``, with 32- and 64-bit
+    offsets."""
+    import pyarrow as pa
+
+    from packs_spark.pipeline.udfs import enrich_signals
+
+    kind = pa.large_string() if large else pa.string()
+    arr = pa.array(["skipped ΑΣ"] * skip + texts, type=kind).slice(skip)
+    assert arr.offset == skip
+    tables, langs = _signal_tables(), _NGRAM_MODEL.langs
+    got = enrich_signals(arr, tables, langs)
+    want = _reference_signals(texts, tables, langs)
+    assert list(got) == list(want)
+    for name in want:
+        assert _bits(got[name]) == _bits(want[name]), name
+
+
+def test_score_batch_lone_surrogate_scores_as_replaced():
+    """A list may hold a lone surrogate, which Arrow cannot: it scores as
+    ``encode(errors="replace")`` encodes it, a ``?``."""
+    from packs_spark.ml.ngram import score_batch
+
+    texts = ["ab\ud800cd", None, "x\udfffy z", "plain text"]
+    tables = _NGRAM_MODEL.tables
+    got, want = score_batch(texts, tables), _reference_scores(texts, tables)
+    assert _bits(got[0].ravel()) == _bits(want[0].ravel())
+    assert got[1].tolist() == want[1].tolist() == [3, 0, 3, 8]
+
+
+def test_lower_then_split_equals_split_then_lower():
+    """The heuristics lower a document once, then split it; that equals
+    lowering each word of ``str.split()`` for every Unicode whitespace
+    character (29 of them) in every final-sigma context — no whitespace
+    character is case-ignorable, so Σ sees the same neighbours."""
+    assert len(_WHITESPACE) == 29
+    contexts = ["ΑΣ{}Α", "ΑΣ{}", "Σ{}Α", "{}ΑΣ", "ΑΣ{}{}Α", "Α'Σ{}Α",
+                "ΑΣ'{}Α", "ΑΣ{}'Α", "ὈΔΥΣΣΕΎΣ{}ΣΑ", "İΣ{}ſ{}K"]
+    for w in _WHITESPACE:
+        for ctx in contexts:
+            t = ctx.format(w, w)
+            assert t.lower().split() == [x.lower() for x in t.split()], hex(ord(w))
+
+
+@given(
+    st.sampled_from(_ALTERNATIVES).flatmap(
+        lambda alt: st.tuples(st.just(alt), st.from_regex(alt, fullmatch=True))
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_scrub_alternative_matches_hold_their_need(alt_text):
+    """Every string a scrub alternative matches holds that alternative's
+    need (the blocklist's: a casefolded term), so the reduced alternation
+    never drops an alternative that could match — a pattern edit that
+    breaks a need fails here."""
+    alt, text = alt_text
+    kind = next(iter(re.compile(alt).groupindex))
+    if kind == "blocklist":
+        assert any(term in text.casefold() for term in _TERMS_FOLDED), text
+    else:
+        assert _NEED_RX[kind].search(text), (kind, text)
+
+
+@given(st.lists(st.one_of(st.none(), _texts, _signal_docs), max_size=8))
+@settings(max_examples=300, deadline=None)
+def test_scrub_batch_equals_reference_scrub(texts):
+    """The batch scrub (Arrow prefilter, reduced alternation) returns the
+    reference's scrubbed text and spans for every document."""
+    import pyarrow as pa
+
+    from packs_spark.pipeline.scrub import scrub_batch
+
+    scrubbed, spans = scrub_batch(pa.array(texts, type=pa.string()))
+    want = [scrub_with_spans(t) for t in texts]
+    assert scrubbed.to_pylist() == [s for s, _ in want]
+    assert spans == [sp for _, sp in want]

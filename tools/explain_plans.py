@@ -112,18 +112,20 @@ def main() -> None:
     from packs_spark.pipeline.webtext import label
 
     src = os.path.join(REPO, "BENCH", "data", "webpages_200000.parquet")
-    if not os.path.exists(src):
-        from packs_spark.pipeline.generate import generate_pages
+    # the generated pages must outlive the explain, which lists the files
+    with tempfile.TemporaryDirectory() as tmp:
+        if not os.path.exists(src):
+            from packs_spark.pipeline.generate import generate_pages
 
-        src = os.path.join(tempfile.mkdtemp(), "webpages.parquet")
-        generate_pages(2000, seed=0).to_parquet(src)
-    df = spark.read.parquet(src).select("url", "warc_ts", "lang", "text")
-    df = repartition_by_bucket(
-        df.withColumn("bucket", url_bucket(F.col("url"), 128)), 128
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        label(df).explain("formatted")
+            src = os.path.join(tmp, "webpages.parquet")
+            generate_pages(2000, seed=0).to_parquet(src)
+        df = spark.read.parquet(src).select("url", "warc_ts", "lang", "text")
+        df = repartition_by_bucket(
+            df.withColumn("bucket", url_bucket(F.col("url"), 128)), 128
+        )
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            label(df).explain("formatted")
     out.append("## webtext pipeline (run_batch labeling plan)")
     out.append(
         "*expect: pruned parquet scan (no html column read) → ONE "
