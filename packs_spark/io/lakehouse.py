@@ -8,20 +8,23 @@ has no Iceberg runtime jar (no network), so the same semantics are built
 from primitives that ship with Spark and pyarrow:
 
 * data: one parquet file per url-hash bucket, ``bucket-<b>.parquet``, flat
-  under the table root (the ``bucket`` column is stored IN the file).  The
-  input is one bucket per partition (``repartition_by_bucket``), and each
-  write task — a ``mapInArrow`` Python task — applies the caller's
-  ``transform`` (run_batch's labeling) to its Arrow batches, checks every
-  batch holds its one bucket, writes them with a pyarrow ``ParquetWriter``
-  (the session's ``spark.sql.parquet.compression.codec``, row groups of up
-  to ``_ROW_GROUP_BYTES`` of Arrow data)
-  to ``_staging-*/bucket-<b>-a<taskAttemptId>.parquet`` and yields one
-  summary row: bucket, path, rows, bytes and the caller's ``metrics`` of
-  the rows written.  The driver ``collect()``s the summaries and moves
-  exactly the reported files to their final names with an atomic
-  ``os.replace``; a file of a failed or duplicate task attempt has no
-  summary and goes with the staging directory.  Re-processing a bucket is
-  an **idempotent file replacement**, never a duplicate append.
+  under the table root (the ``bucket`` column is stored IN the file).  Each
+  wave is placed by ``pipeline.partitioning.place_buckets``: its buckets
+  densely on ``min(len(wave), 2 × defaultParallelism)`` partitions, every
+  bucket whole in one of them.  Each write task — a ``mapInArrow`` Python
+  task — applies the caller's ``transform`` (run_batch's labeling) to its
+  Arrow batches, splits each batch by bucket (a stable sort, so a bucket's
+  rows keep their order), and writes each bucket with its own pyarrow
+  ``ParquetWriter`` (the session's ``spark.sql.parquet.compression.codec``,
+  row groups of up to ``_ROW_GROUP_BYTES`` of Arrow data, which also
+  bounds what the task buffers over all its buckets) to
+  ``_staging-*/bucket-<b>-a<taskAttemptId>.parquet``.  It yields one
+  summary row per bucket: bucket, path, rows, bytes and the caller's
+  ``metrics`` of the rows written.  The driver ``collect()``s the
+  summaries and moves exactly the reported files to their final names with
+  an atomic ``os.replace``; a file of a failed or duplicate task attempt
+  has no summary and goes with the staging directory.  Re-processing a
+  bucket is an **idempotent file replacement**, never a duplicate append.
 * commit log: one JSON marker per completed bucket under ``_progress/``,
   written by the driver only *after* the wave's files are in place, with
   the bucket's rows, bytes and metrics row.  A marker is the unit of
@@ -36,6 +39,11 @@ paid on top of moving every labeled row from the Python worker back to the
 JVM and encoding it there, while the Python task already holds the rows
 in Arrow.  (``partitionBy("bucket")`` with dynamic partition overwrite
 adds a serial per-directory re-link in the driver's commit on top.)
+
+Why several buckets per task: a Python task costs ~45 ms beyond its
+payload at local[4] (most of it waiting for the JVM's first Arrow
+message), so one task per bucket paid that once per bucket — 64 times a
+64-bucket run, 56 of them for empty partitions on a resume.
 
 The output root must be a POSIX path that both the driver and the
 executors can open: the tasks write the staged files and the driver
@@ -54,7 +62,7 @@ import os
 import shutil
 import threading
 import time
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,53 +87,62 @@ def _identity(rb):
     return rb
 
 
-def _drain(batches: Iterable) -> None:
-    for _ in batches:
+class _NoMetrics:
+    """The default ``metrics`` fold: no row."""
+
+    def add(self, rb) -> None:
         pass
+
+    def row(self) -> None:
+        return None
+
+
+def _split_by_bucket(rb, bucket_col: str) -> list:
+    """``[(bucket, rows)]`` of one Arrow batch, each bucket's rows in batch
+    order (a stable argsort).  Each part is its own ``take``, not a slice
+    of one sorted copy: a buffered part then holds only its own bytes."""
+    import numpy as np
+    import pyarrow as pa
+
+    col = rb.column(bucket_col)
+    if col.null_count:
+        raise RuntimeError(f"a write task got rows with no {bucket_col}")
+    ids = col.to_numpy()
+    if (ids == ids[0]).all():
+        return [(int(ids[0]), rb)]
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+    ends = np.r_[starts[1:], len(ids)]
+    return [
+        (int(ids[a]), rb.take(pa.array(order[a:b])))
+        for a, b in zip(starts, ends)
+    ]
 
 
 class _BucketFile:
-    """The staged parquet file of one write task: every batch checked to
-    hold only that file's bucket, and batches buffered into row groups of
-    about ``_ROW_GROUP_BYTES`` of Arrow data — ``write_batch`` per Arrow
-    batch would start a row group every ``maxRecordsPerBatch`` rows, where
-    Spark's writer fills them up to ``parquet.block.size`` (128 MiB)."""
+    """One bucket's staged parquet file in a write task: its rows buffered
+    into row groups (``flush``) — ``write_batch`` per Arrow batch would
+    start a row group every ``maxRecordsPerBatch`` rows, where Spark's
+    writer fills them up to ``parquet.block.size`` (128 MiB) — and the
+    caller's ``metrics`` folded over the rows written."""
 
     def __init__(
-        self,
-        staging: str,
-        bucket_col: str,
-        attempt: int,
-        compression: str,
+        self, staging: str, bucket: int, attempt: int, compression: str,
+        bucket_col: str, metrics: Callable,
     ):
-        self.staging, self.bucket_col, self.attempt = staging, bucket_col, attempt
+        self.bucket, self.bucket_col = bucket, bucket_col
+        self.path = os.path.join(staging, f"bucket-{bucket}-a{attempt}.parquet")
         self.compression = compression
-        self.bucket = self.path = self._writer = None
-        self.rows = 0
-        self._buffer, self._buffered = [], 0
+        self.metrics = metrics()
+        self.rows = self.buffered = 0
+        self._buffer, self._writer = [], None
 
-    def write(self, rb) -> None:
-        import pyarrow.compute as pc
-
-        seen = set(pc.unique(rb.column(self.bucket_col)).to_pylist())
-        if self.bucket is not None:
-            seen.add(self.bucket)
-        if len(seen) != 1 or None in seen:
-            raise RuntimeError(
-                f"one write task got rows of buckets {sorted(seen, key=str)}"
-                " — input is not one-bucket-per-partition (use "
-                "repartition_by_bucket with the writer's n_buckets)"
-            )
-        if self.bucket is None:
-            self.bucket = seen.pop()
-            self.path = os.path.join(
-                self.staging, f"bucket-{self.bucket}-a{self.attempt}.parquet"
-            )
+    def add(self, rb) -> None:
         self._buffer.append(rb)
-        self._buffered += rb.nbytes
+        self.buffered += rb.nbytes
         self.rows += rb.num_rows
-        if self._buffered >= _ROW_GROUP_BYTES:
-            self.flush()
+        self.metrics.add(rb)
 
     def flush(self) -> None:
         """Write the buffered batches as one row group."""
@@ -138,7 +155,7 @@ class _BucketFile:
             self._open(table)
         table = pa.Table.from_arrays(table.columns, schema=self._writer.schema)
         self._writer.write_table(table, row_group_size=table.num_rows)
-        self._buffer, self._buffered = [], 0
+        self._buffer, self.buffered = [], 0
 
     def _open(self, table) -> None:
         import pyarrow as pa
@@ -174,6 +191,44 @@ class _BucketFile:
         return os.path.getsize(self.path)
 
 
+class _StagedFiles:
+    """A write task's staged files, one ``_BucketFile`` per bucket it
+    meets, whose buffers together hold at most ``_ROW_GROUP_BYTES`` of
+    Arrow data: a batch that would pass that first flushes the largest
+    buffer, so a task's memory does not grow with its buckets."""
+
+    def __init__(
+        self, staging: str, bucket_col: str, attempt: int, compression: str,
+        metrics: Callable,
+    ):
+        self.staging, self.bucket_col, self.attempt = staging, bucket_col, attempt
+        self.compression, self.metrics = compression, metrics
+        self.files: dict[int, _BucketFile] = {}
+
+    def write(self, rb) -> None:
+        for bucket, part in _split_by_bucket(rb, self.bucket_col):
+            out = self.files.get(bucket)
+            if out is None:
+                out = self.files[bucket] = _BucketFile(
+                    self.staging, bucket, self.attempt, self.compression,
+                    self.bucket_col, self.metrics,
+                )
+            buffered = sum(f.buffered for f in self.files.values())
+            while buffered and buffered + part.nbytes > _ROW_GROUP_BYTES:
+                largest = max(self.files.values(), key=lambda f: f.buffered)
+                buffered -= largest.buffered
+                largest.flush()
+            out.add(part)
+
+    def flush(self) -> None:
+        for out in self.files.values():
+            out.flush()
+
+    def close(self) -> dict[int, int]:
+        """Close every file (see ``_BucketFile.close``); bucket → size."""
+        return {b: out.close() for b, out in self.files.items()}
+
+
 def _write_task(
     batches: Iterator,
     staging: str,
@@ -183,36 +238,32 @@ def _write_task(
     compression: str,
 ) -> Iterator:
     """One write task: ``transform`` each Arrow batch of the partition,
-    write the rows to its bucket's staged file and yield one ``_SUMMARY``
-    row with ``metrics`` of the rows written.  A partition without rows
+    write each bucket's rows to its staged file and yield one ``_SUMMARY``
+    row per bucket with its ``metrics`` row.  A partition without rows
     yields nothing; a failed task yields nothing either, and the driver
-    drops its file with the staging directory."""
+    drops its files with the staging directory."""
     import pyarrow as pa
     from pyspark import TaskContext
 
     attempt = TaskContext.get().taskAttemptId()
-    out = _BucketFile(staging, bucket_col, attempt, compression)
-
-    def written():
+    out = _StagedFiles(staging, bucket_col, attempt, compression, metrics)
+    try:
         for rb in batches:
             rb = transform(rb)
             if rb.num_rows:
                 out.write(rb)
-                yield rb
-
-    try:
-        row = metrics(written())
         out.flush()
     finally:
-        size = out.close()
-    if out.bucket is not None:
+        sizes = out.close()
+    files = list(out.files.values())
+    if files:
         yield pa.RecordBatch.from_pydict(
             {
-                "bucket": pa.array([out.bucket], pa.int32()),
-                "path": [out.path],
-                "rows": pa.array([out.rows], pa.int64()),
-                "bytes": pa.array([size], pa.int64()),
-                "metrics": [json.dumps(row)],
+                "bucket": pa.array([f.bucket for f in files], pa.int32()),
+                "path": [f.path for f in files],
+                "rows": pa.array([f.rows for f in files], pa.int64()),
+                "bytes": pa.array([sizes[f.bucket] for f in files], pa.int64()),
+                "metrics": [json.dumps(f.metrics.row()) for f in files],
             }
         )
 
@@ -304,14 +355,15 @@ class CheckpointedWriter:
     def _write_wave(
         self, wave_df: DataFrame, wave: list[int], transform, metrics
     ) -> dict[int, dict]:
-        """One Spark action: every task writes its bucket's staged file
-        (``_write_task``), then the driver renames exactly the files the
-        collected summaries report — bucket identity comes from each
-        file's rows, not its task index, so AQE renumbering partitions on
-        filtered resume waves cannot misplace a file.  Returns the rows,
-        bytes and metrics of each wave bucket; an empty bucket gets the
-        metrics of no rows and loses any file a crashed run left.  A crash
-        between renames re-runs the wave; os.replace is idempotent."""
+        """One Spark action: every task writes the staged files of its
+        buckets (``_write_task``), then the driver renames exactly the
+        files the collected summaries report — bucket identity comes from
+        each file's rows, not its task index, and a bucket reported by two
+        tasks (rows placed in two partitions) fails the wave before any
+        rename.  Returns the rows, bytes and metrics of each wave bucket;
+        an empty bucket gets the metrics of no rows and loses any file a
+        crashed run left.  A crash between renames re-runs the wave;
+        os.replace is idempotent."""
         staging = os.path.join(self.base_path, f"_staging-{os.getpid()}-{wave[0]}")
         os.makedirs(staging, exist_ok=True)
         bucket_col = self.bucket_col
@@ -321,14 +373,14 @@ class CheckpointedWriter:
         # Spark's codec names where pyarrow's differ
         compression = {"uncompressed": "none", "lz4_raw": "lz4"}.get(codec, codec)
 
-        def write_bucket(batches):
+        def write_buckets(batches):
             return _write_task(
                 batches, staging, bucket_col, transform, metrics, compression
             )
 
         wave_set = set(wave)
         try:
-            summaries = wave_df.mapInArrow(write_bucket, _SUMMARY).collect()
+            summaries = wave_df.mapInArrow(write_buckets, _SUMMARY).collect()
             written = {}
             for s in summaries:
                 if s.bucket not in wave_set:
@@ -338,8 +390,8 @@ class CheckpointedWriter:
                     )
                 if s.bucket in written:
                     raise RuntimeError(
-                        f"bucket {s.bucket} was written by two tasks — input "
-                        "is not one-bucket-per-partition"
+                        f"bucket {s.bucket} was written by two tasks — its "
+                        "rows lie in two partitions of the placed input"
                     )
                 written[s.bucket] = s
             for b, s in written.items():
@@ -352,28 +404,30 @@ class CheckpointedWriter:
             if s is None:  # no rows: drop what a crashed run may have left
                 if os.path.exists(self._bucket_file(b)):
                     os.remove(self._bucket_file(b))
-                out[b] = {"rows": 0, "bytes": 0, "metrics": metrics(())}
+                out[b] = {"rows": 0, "bytes": 0, "metrics": metrics().row()}
             else:
                 out[b] = {"rows": s.rows, "bytes": s.bytes,
                           "metrics": json.loads(s.metrics)}
         return out
 
-    def bucket_metrics(self, metrics: Callable[[Iterable], dict]) -> dict[int, dict]:
+    def bucket_metrics(self, metrics: Callable) -> dict[int, dict]:
         """Each committed bucket's metrics row, as its marker stores it.  A
         marker without one (committed before markers carried metrics) gets
-        ``metrics`` of the bucket's file, computed once and stored."""
+        the ``metrics`` fold of the bucket's file, computed once and
+        stored."""
         import pyarrow.parquet as pq
 
         out = {}
         for b in sorted(self.completed_buckets()):
             marker = self._marker(b)
             if marker.get("metrics") is None:
+                acc = metrics()
                 path = self._bucket_file(b)
                 if os.path.exists(path):
                     with pq.ParquetFile(path) as f:
-                        marker["metrics"] = metrics(f.iter_batches())
-                else:
-                    marker["metrics"] = metrics(())
+                        for rb in f.iter_batches():
+                            acc.add(rb)
+                marker["metrics"] = acc.row()
                 self._commit(b, marker)
             out[b] = marker["metrics"]
         return out
@@ -385,21 +439,24 @@ class CheckpointedWriter:
         on_wave: Callable[[list[int]], None] | None = None,
         assume_placed: bool = False,
         transform: Callable | None = None,
-        metrics: Callable[[Iterable], dict] | None = None,
+        metrics: Callable | None = None,
     ) -> dict:
         """Write ``df`` (which must carry ``bucket_col``) skipping buckets
         already committed, committing markers per wave.
 
         ``transform(rb) -> rb`` runs on each Arrow batch inside the write
         task, before the write (identity by default; run_batch labels
-        there).  ``metrics(batches) -> dict`` gets the rows a task writes,
-        as they are written; its row is stored in the bucket's marker
-        (``bucket_metrics`` reads it back).
+        there).  ``metrics()`` makes a fold with ``add(rb)`` and ``row()``:
+        each bucket's fold gets the rows written to it, batch by batch, and
+        its ``row()`` is stored in the bucket's marker (``bucket_metrics``
+        reads it back); no row by default.
 
-        ``assume_placed=True`` promises the input is already
-        one-bucket-per-partition (pipeline.partitioning.repartition_by_bucket
-        upstream of expensive stages); otherwise the writer adds that
-        shuffle itself.
+        The writer places each wave itself
+        (``pipeline.partitioning.place_buckets``: the wave's buckets
+        densely on ``min(len(wave), 2 × defaultParallelism)`` partitions).
+        ``assume_placed=True`` promises instead that each bucket's rows
+        already lie in one partition of ``df``; a bucket found in two
+        fails the wave.
 
         ``wave_size`` trades checkpoint granularity against job count: one
         wave = one Spark action over ``wave_size`` buckets.  With the default
@@ -414,7 +471,7 @@ class CheckpointedWriter:
         try:
             return self._write_pending(
                 df, pending, stats, wave_size, on_wave, assume_placed,
-                transform or _identity, metrics or _drain,
+                transform or _identity, metrics or _NoMetrics,
             )
         finally:
             self._release_lock()
@@ -591,10 +648,8 @@ class CheckpointedWriter:
         transform: Callable,
         metrics: Callable,
     ) -> dict:
-        if not assume_placed:
-            from packs_spark.pipeline.partitioning import repartition_by_bucket
+        from packs_spark.pipeline.partitioning import place_buckets
 
-            df = repartition_by_bucket(df, self.n_buckets, self.bucket_col)
         wave_size = wave_size or len(pending)
         for i in range(0, len(pending), wave_size):
             wave = pending[i : i + wave_size]
@@ -605,6 +660,8 @@ class CheckpointedWriter:
                 wave_df = df
             else:
                 wave_df = df.where(F.col(self.bucket_col).isin(wave))
+            if not assume_placed:
+                wave_df = place_buckets(wave_df, wave, bucket_col=self.bucket_col)
             t0 = time.time()
             written = self._write_wave(wave_df, wave, transform, metrics)
             elapsed = time.time() - t0

@@ -4,6 +4,11 @@
   ``bucket = pmod(xxhash64(url), n_buckets)``.  Uniform regardless of host
   skew (url granularity), deterministic across runs → the unit of
   checkpointing/resume (io.lakehouse) and of per-partition metrics.
+* **bucket placement** — ``place_buckets`` shuffles the buckets of one
+  write wave densely onto a few partitions (by default
+  ``min(len(wave), 2 × defaultParallelism)``), each bucket whole in one of
+  them: the write tasks scale with the cores, not with the buckets, and a
+  resume of k buckets runs at most k tasks.
 * **salted per-host aggregation** — host-level metric rollups would shuffle
   every row of a hot host (Zipf head) to one reducer.  Standard fix,
   applied explicitly: two-phase aggregation with a salt key
@@ -13,6 +18,8 @@
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,44 +55,63 @@ def _murmur3_long(x: int, seed: int = 42) -> int:
 _PKEY_CACHE: dict[int, list[int]] = {}
 
 
-def partition_keys(n_buckets: int) -> list[int]:
-    """``keys[b]`` = smallest long j with pmod(murmur3(j), n_buckets) == b.
+def partition_keys(n_partitions: int) -> list[int]:
+    """``keys[p]`` = smallest long j with pmod(murmur3(j), n_partitions) == p.
 
-    Lets ``repartition(n, key_col)`` place each bucket in exactly its own
-    partition — the even one-bucket-per-partition layout of
-    ``repartitionByRange`` WITHOUT its hidden range-sampling job (an extra
-    full input scan per run).  Search is driver-side over small ints
-    (coupon-collector: ~n·ln n probes, microseconds for n ≤ 4096)."""
-    if n_buckets not in _PKEY_CACHE:
-        keys: list[int | None] = [None] * n_buckets
+    Lets ``repartition(n, key_col)`` send the rows keyed ``keys[p]`` to
+    exactly partition p — the even layout of ``repartitionByRange``
+    WITHOUT its hidden range-sampling job (an extra full input scan per
+    run).  Search is driver-side over small ints (coupon-collector: ~n·ln n
+    probes, microseconds for n ≤ 4096)."""
+    if n_partitions not in _PKEY_CACHE:
+        keys: list[int | None] = [None] * n_partitions
         found, j = 0, 0
-        while found < n_buckets:
-            b = _murmur3_long(j) % n_buckets
-            if keys[b] is None:
-                keys[b] = j
+        while found < n_partitions:
+            p = _murmur3_long(j) % n_partitions
+            if keys[p] is None:
+                keys[p] = j
                 found += 1
             j += 1
-        _PKEY_CACHE[n_buckets] = keys  # type: ignore[assignment]
-    return _PKEY_CACHE[n_buckets]
+        _PKEY_CACHE[n_partitions] = keys  # type: ignore[assignment]
+    return _PKEY_CACHE[n_partitions]
+
+
+def place_buckets(
+    df: DataFrame,
+    wave: Sequence[int],
+    n_partitions: int | None = None,
+    bucket_col: str = "bucket",
+) -> DataFrame:
+    """One shuffle that lands the bucket at position i of ``wave`` in
+    partition ``i mod n_partitions`` exactly: every bucket whole in one
+    partition, no partition empty (unlike a plain hash repartition on the
+    bucket id, which leaves ~1/e of partitions empty and piles 2-3 buckets
+    on others) and no extra scan (unlike repartitionByRange).
+    ``n_partitions`` defaults to ``min(len(wave), 2 × defaultParallelism)``.
+    ``df`` must hold only rows of ``wave``'s buckets."""
+    if n_partitions is None:
+        slots = 2 * df.sparkSession.sparkContext.defaultParallelism
+        n_partitions = min(len(wave), slots)
+    keys = partition_keys(n_partitions)
+    by_bucket = [keys[0]] * (max(wave) + 1)
+    for i, b in enumerate(wave):
+        by_bucket[b] = keys[i % n_partitions]
+    pk = F.element_at(
+        F.array(*[F.lit(k) for k in by_bucket]), F.col(bucket_col) + 1
+    ).cast("long")
+    return (
+        df.withColumn("__pk", pk)
+        .repartition(n_partitions, F.col("__pk"))
+        .drop("__pk")
+    )
 
 
 def repartition_by_bucket(
     df: DataFrame, n_buckets: int, bucket_col: str = "bucket"
 ) -> DataFrame:
-    """One shuffle that lands bucket b in partition b exactly — even UDF
-    parallelism and one output file per bucket directory, with no extra
-    scan (unlike repartitionByRange) and no empty partitions (unlike a
-    plain hash repartition on the bucket id, which leaves ~1/e of
-    partitions empty and piles 2-3 buckets on others)."""
-    keys = partition_keys(n_buckets)
-    pk = F.element_at(
-        F.array(*[F.lit(k) for k in keys]), F.col(bucket_col) + 1
-    ).cast("long")
-    return (
-        df.withColumn("__pk", pk)
-        .repartition(n_buckets, F.col("__pk"))
-        .drop("__pk")
-    )
+    """Bucket b of ``range(n_buckets)`` in partition b: ``place_buckets``
+    with one bucket per partition."""
+    return place_buckets(df, range(n_buckets), n_buckets, bucket_col)
 
 
 def host_of(url: Column) -> Column:

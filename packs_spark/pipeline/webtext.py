@@ -20,8 +20,8 @@ Stages over a Common-Crawl-style table (url, warc_ts, html, text, lang):
                     checkpoints (packs_spark.io.lakehouse)
 
 ``run_batch`` is the full pipeline; ``label`` is its labeling step (2-6)
-as a DataFrame, used by the streaming pipeline; ``bucket_metrics`` is the
-per-bucket metrics row; ``flagship_summary`` is the compact driver smoke
+as a DataFrame, used by the streaming pipeline; ``BucketMetrics`` folds
+the per-bucket metrics row; ``flagship_summary`` is the compact driver smoke
 query over the generic ``documents`` testdata table.
 """
 
@@ -109,30 +109,37 @@ def _add(a, b):
     return a if b is None else b if a is None else a + b
 
 
-def bucket_metrics(batches) -> dict:
-    """One bucket's ``_metrics`` row from its labeled rows, in file order:
-    the aggregates of the table's per-bucket groupBy, with Spark's
-    semantics — sums skip NULLs and are NULL when no value is set, and the
-    averages add left to right (as Spark's Average does) before rounding
-    HALF_UP.  With ``media_format`` rows it adds the multimodal columns and
-    ``media_format_counts``, the bucket's [format, rows] pairs.  The write
-    task computes it while it writes the bucket (the commit marker stores
-    it); ``CheckpointedWriter.bucket_metrics`` computes it from the
-    bucket's file for a marker written without one."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+_AVGS = {"avg_ppl": ("ppl", 4), "avg_symbol_ratio": ("q_symbol_ratio", 6)}
 
-    def total(col):
-        return pc.sum(col.cast(pa.int64()), min_count=1).as_py()
 
-    row = dict(
-        n_docs=0, n_keep=None, n_drop=None, n_docs_with_pii=None,
-        total_pii_hits=None,
-    )
-    avgs = {"avg_ppl": ("ppl", 4), "avg_symbol_ratio": ("q_symbol_ratio", 6)}
-    acc = {name: (0.0, 0) for name in avgs}
-    formats: Counter | None = None
-    for rb in batches:
+class BucketMetrics:
+    """One bucket's ``_metrics`` row as a fold over its labeled rows, in
+    file order (``add`` per Arrow batch, then ``row``): the aggregates of
+    the table's per-bucket groupBy, with Spark's semantics — sums skip
+    NULLs and are NULL when no value is set, and the averages add left to
+    right (as Spark's Average does) before rounding HALF_UP.  With
+    ``media_format`` rows it adds the multimodal columns and
+    ``media_format_counts``, the bucket's [format, rows] pairs.  Each write
+    task keeps one per bucket while it writes (the commit marker stores the
+    row); ``CheckpointedWriter.bucket_metrics`` folds a bucket's file for a
+    marker written without one."""
+
+    def __init__(self):
+        self._row = dict(
+            n_docs=0, n_keep=None, n_drop=None, n_docs_with_pii=None,
+            total_pii_hits=None,
+        )
+        self._acc = {name: (0.0, 0) for name in _AVGS}
+        self._formats: Counter | None = None
+
+    def add(self, rb) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def total(col):
+            return pc.sum(col.cast(pa.int64()), min_count=1).as_py()
+
+        row = self._row
         row["n_docs"] += rb.num_rows
         keep, hits = rb.column("keep"), rb.column("pii_hits")
         for name, col in (
@@ -142,30 +149,33 @@ def bucket_metrics(batches) -> dict:
             ("total_pii_hits", hits),
         ):
             row[name] = _add(row[name], total(col))
-        for name, (col, _) in avgs.items():
+        for name, (col, _) in _AVGS.items():
             x = rb.column(col).drop_null().to_numpy()
-            s, n = acc[name]
+            s, n = self._acc[name]
             # cumsum adds in order; np.sum would add pairwise
-            acc[name] = (float(np.cumsum(np.append(s, x))[-1]), n + len(x))
+            self._acc[name] = (float(np.cumsum(np.append(s, x))[-1]), n + len(x))
         if "media_format" in rb.schema.names:
             fmt = rb.column("media_format")
-            if formats is None:
-                formats = Counter()
+            if self._formats is None:
+                self._formats = Counter()
                 row.update(n_html_docs=None, total_media_bytes=None)
-            formats.update(fmt.to_pylist())
+            self._formats.update(fmt.to_pylist())
             row["n_html_docs"] = _add(
                 row["n_html_docs"], total(pc.equal(fmt, "html"))
             )
             row["total_media_bytes"] = _add(
                 row["total_media_bytes"], total(rb.column("media_bytes"))
             )
-    for name, (_, scale) in avgs.items():
-        s, n = acc[name]
-        row[name] = _round_half_up(s / n, scale) if n else None
-    if formats is not None:
-        row["n_media_formats"] = sum(1 for f in formats if f is not None)
-        row["media_format_counts"] = list(formats.items())
-    return row
+
+    def row(self) -> dict:
+        row = dict(self._row)
+        for name, (_, scale) in _AVGS.items():
+            s, n = self._acc[name]
+            row[name] = _round_half_up(s / n, scale) if n else None
+        if self._formats is not None:
+            row["n_media_formats"] = sum(1 for f in self._formats if f is not None)
+            row["media_format_counts"] = list(self._formats.items())
+        return row
 
 
 # the ``_metrics`` table: one row per non-empty bucket, Spark's types
@@ -221,11 +231,13 @@ def run_batch(
     table: langid → perplexity → heuristics → scrub → keep/drop → bucketed,
     checkpointed, resumable parquet write with lineage + per-bucket metrics.
 
-    One Spark job per wave: scan → bucket shuffle → one Python task per
-    bucket that labels its rows (``udfs.make_label_batch``), writes them to
-    the bucket's parquet file and reports the bucket's metrics row
-    (``bucket_metrics``); the driver renames the reported files and writes
-    each commit marker with its metrics row.  ``<output_path>_metrics`` is
+    One Spark job per wave: scan → bucket shuffle (the writer places the
+    wave's buckets on ``min(len(wave), 2 × defaultParallelism)``
+    partitions, each bucket whole in one) → Python tasks that label their
+    rows (``udfs.make_label_batch``), write each bucket's rows to its
+    parquet file and report each bucket's metrics row (``BucketMetrics``);
+    the driver renames the reported files and writes each commit marker
+    with its metrics row.  ``<output_path>_metrics`` is
     then built from the markers, so no Spark job writes the table or reads
     it back, and a resume never re-reads committed buckets.
 
@@ -243,7 +255,7 @@ def run_batch(
     plus ``write_s`` and ``metrics_s``.
     """
     from packs_spark.io.lakehouse import CheckpointedWriter
-    from packs_spark.pipeline.partitioning import repartition_by_bucket, url_bucket
+    from packs_spark.pipeline.partitioning import url_bucket
     from packs_spark.pipeline.udfs import make_label_batch
 
     # before any output directory exists
@@ -271,20 +283,13 @@ def run_batch(
         )
     else:
         df = df.select("url", "warc_ts", "lang", "text")
+    # The writer shuffles each wave once, by bucket, BEFORE the expensive
+    # stages (partitioning.place_buckets): the Python tasks scale with the
+    # cores whatever the input file layout (a single fat row group would
+    # otherwise serialize them), and each bucket lies whole in one task,
+    # which writes its one file.  At 10^12-doc scale this is the only full
+    # shuffle in the job and it is unavoidable for a bucketed table layout.
     df = df.withColumn("bucket", url_bucket(F.col("url"), n_buckets))
-    # Shuffle once, by bucket, BEFORE the expensive stages: (a) parallelism
-    # becomes n_buckets regardless of the input file layout (a single fat
-    # row group would otherwise serialize every Python task), (b) each
-    # write task holds one bucket, so it writes that bucket's one file.
-    # At 10^12-doc scale this is the only full shuffle in the job and it
-    # is unavoidable for a bucketed table layout.
-    # Exact one-bucket-per-partition placement via a precomputed murmur3
-    # partition key (partitioning.repartition_by_bucket): even parallelism
-    # AND one output file per bucket.  A plain hash repartition on the
-    # bucket id leaves ~1/e of partitions empty (measured: only ~15 of 32
-    # python workers busy); repartitionByRange fixes that but adds a
-    # hidden range-sampling job — a full extra scan of the input per run.
-    df = repartition_by_bucket(df, n_buckets)
 
     writer = CheckpointedWriter(
         output_path,
@@ -295,9 +300,8 @@ def run_batch(
     stats = writer.write_resumable(
         df,
         wave_size=wave_size,
-        assume_placed=True,
         transform=make_label_batch(spark, checked, run_id),
-        metrics=bucket_metrics,
+        metrics=BucketMetrics,
     )
     stats["write_s"] = round(time.time() - t0, 2)
 
@@ -305,7 +309,7 @@ def run_batch(
     # from the commit markers: each bucket's row was computed from exactly
     # the rows its task wrote
     t0 = time.time()
-    per_bucket = writer.bucket_metrics(bucket_metrics)
+    per_bucket = writer.bucket_metrics(BucketMetrics)
     _write_metrics(per_bucket, f"{output_path}_metrics", run_id, multimodal)
     stats["metrics_s"] = round(time.time() - t0, 2)
     if multimodal:

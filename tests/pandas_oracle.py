@@ -23,13 +23,17 @@ from packs_spark.pipeline.webtext import DEFAULT_THRESHOLDS
 _SYMBOL_RE = re.compile(r"[A-Za-z0-9\s]")
 
 
-def _sym_ids(text: str) -> list[int]:
+def _sym_ids(text: str) -> list[int | None]:
     """Byte-level normalization identical in spec to ngram._BYTE_MAP:
-    ASCII letters → 1..26, everything else → 0 (space)."""
+    ASCII letters → 1..26, NUL → None (it invalidates every window that
+    holds it), everything else → 0 (space)."""
     out = []
     for byte in text.encode("utf-8", errors="replace"):
         ch = chr(byte).lower()
-        out.append(ord(ch) - ord("a") + 1 if "a" <= ch <= "z" else 0)
+        if byte == 0:
+            out.append(None)
+        else:
+            out.append(ord(ch) - ord("a") + 1 if "a" <= ch <= "z" else 0)
     return out
 
 
@@ -38,6 +42,7 @@ def _trigram_codes(text: str) -> list[int]:
     return [
         s[i] * ALPHABET * ALPHABET + s[i + 1] * ALPHABET + s[i + 2]
         for i in range(len(s) - 2)
+        if None not in s[i : i + 3]
     ]
 
 

@@ -91,3 +91,26 @@ def test_fused_predict_stable_under_permutation(model):
             assert math.isinf(ppl_b[i])
         else:
             assert math.isclose(ppl_a[j], ppl_b[i], rel_tol=0, abs_tol=1e-9)
+
+
+@pytest.mark.parametrize(
+    "text", ["\x00\x00\x00ab", "the cat\x00 sat on the mat with the dog"]
+)
+def test_oracle_drops_nul_windows_as_the_scorer_does(model, text):
+    """A window holding NUL scores nowhere: the pandas oracle's langid,
+    margin and perplexity equal ``fused_predict``'s for text with a NUL."""
+    from tests.pandas_oracle import langid_oracle, perplexity_oracle
+
+    pplm = PerplexityModel.train()
+    stacked = np.vstack([model.tables, pplm.table[None, :]])
+    (best,), (margin,), (ppl,) = fused_predict([text], stacked, len(model.langs))
+    ((lang, margin_ref),) = langid_oracle([text], model)
+    (ppl_ref,) = perplexity_oracle([text], pplm)
+    assert lang == (model.langs[best] if best >= 0 else "unknown")
+    assert math.isclose(margin, margin_ref, rel_tol=1e-12, abs_tol=1e-12)
+    if math.isinf(ppl):
+        assert math.isinf(ppl_ref)
+    else:
+        assert math.isclose(ppl, ppl_ref, rel_tol=1e-12)
+    if text.startswith("\x00"):
+        assert (lang, ppl) == ("unknown", math.inf)

@@ -164,29 +164,133 @@ def test_fresh_run_launches_no_write_or_read_back_job(spark, pages_pd, tmp_path)
     assert len(sc.statusTracker().getJobIdsForGroup("fresh-run-jobs")) == 2
 
 
-def test_writer_refuses_a_partition_of_two_buckets(spark, tmp_path):
-    """The one-bucket-per-file guard runs in the write task: a partition
-    holding two buckets fails the write, naming them, and leaves no commit
-    marker, no staging directory and no bucket file — the files the other
-    tasks wrote are renamed only when their summaries come back."""
+def _file_metrics(path):
+    import pyarrow.parquet as pq
+
+    from packs_spark.pipeline.webtext import BucketMetrics
+
+    acc = BucketMetrics()
+    with pq.ParquetFile(path) as f:
+        for rb in f.iter_batches():
+            acc.add(rb)
+    return acc.row()
+
+
+def test_writer_writes_a_partition_of_two_buckets(spark, tmp_path):
+    """A write task whose partition holds two buckets writes one file per
+    bucket, each with its own rows in order, and each marker's metrics
+    are those of its file."""
+    import pyarrow.parquet as pq
+
     from packs_spark.io.lakehouse import CheckpointedWriter
+    from packs_spark.pipeline.webtext import BucketMetrics
 
     out = str(tmp_path / "tbl")
     # partition 0 (ids 0-99) holds buckets 0 and 1; partitions 1-3 hold
-    # buckets 2, 3 and 4
-    df = spark.range(0, 400, numPartitions=4).withColumn(
-        "bucket",
+    # buckets 2, 3 and 4; the other columns are the ones BucketMetrics folds
+    df = spark.range(0, 400, numPartitions=4).select(
+        "id",
         F.when(F.col("id") < 100, F.col("id") % 2)
         .otherwise(F.floor(F.col("id") / 100) + 1)
-        .cast("int"),
+        .cast("int")
+        .alias("bucket"),
+        (F.col("id") % 3 == 0).alias("keep"),
+        (F.col("id") % 4).cast("int").alias("pii_hits"),
+        (F.col("id") * 1.5).alias("ppl"),
+        (F.col("id") / 1000).alias("q_symbol_ratio"),
     )
     w = CheckpointedWriter(out, n_buckets=5)
-    with pytest.raises(Exception, match=re.escape("buckets [0, 1]")):
+    stats = w.write_resumable(df, assume_placed=True, metrics=BucketMetrics)
+    assert stats == {"skipped": 0, "written": 5}
+    for b, ids in [(0, range(0, 100, 2)), (1, range(1, 100, 2)), (3, range(200, 300))]:
+        path = os.path.join(out, f"bucket-{b:05d}.parquet")
+        assert pq.read_table(path).column("id").to_pylist() == list(ids)
+    for b in range(5):
+        path = os.path.join(out, f"bucket-{b:05d}.parquet")
+        marker = w._marker(b)
+        assert marker["metrics"] == _file_metrics(path)
+        assert marker["rows"] == pq.ParquetFile(path).metadata.num_rows
+
+
+def test_writer_refuses_a_bucket_split_across_partitions(spark, tmp_path):
+    """The placement guard runs in the driver: under ``assume_placed``, a
+    bucket whose rows lie in two partitions fails the write, naming it,
+    and leaves no commit marker, no staging directory and no bucket file —
+    the files the tasks wrote are renamed only when every summary checks
+    out."""
+    from packs_spark.io.lakehouse import CheckpointedWriter
+
+    out = str(tmp_path / "tbl")
+    # ids 0-99 are partition 0, 100-199 partition 1, ...: bucket 3 (ids
+    # 150-249) lies in partitions 1 and 2
+    df = spark.range(0, 400, numPartitions=4).withColumn(
+        "bucket",
+        F.when(F.col("id") < 150, F.floor(F.col("id") / 100))
+        .when(F.col("id") < 250, F.lit(3))
+        .otherwise(F.floor(F.col("id") / 100) + 2)
+        .cast("int"),
+    )
+    w = CheckpointedWriter(out, n_buckets=6)
+    with pytest.raises(Exception, match="bucket 3 was written by two tasks"):
         w.write_resumable(df, assume_placed=True)
     assert w.completed_buckets() == set()
     left = [f for f in os.listdir(out) if f != "_progress"]
     assert left == []
     assert os.listdir(os.path.join(out, "_progress")) == ["_meta.json"]
+
+
+def test_written_table_does_not_depend_on_placement(spark, pages_pd, tmp_path):
+    """One frame written with one bucket per task and with the writer's
+    own placement (several buckets per task) gives byte-identical bucket
+    files and equal markers' metrics."""
+    from packs_spark.io.lakehouse import CheckpointedWriter
+    from packs_spark.pipeline.partitioning import repartition_by_bucket, url_bucket
+    from packs_spark.pipeline.udfs import make_label_batch
+    from packs_spark.pipeline.webtext import DEFAULT_THRESHOLDS, BucketMetrics
+
+    n = 6 * spark.sparkContext.defaultParallelism  # 3 buckets per task
+    df = (
+        spark.createDataFrame(pages_pd.head(900))
+        .select("url", "warc_ts", "lang", "text")
+        .withColumn("bucket", url_bucket(F.col("url"), n))
+    )
+    label = make_label_batch(spark, DEFAULT_THRESHOLDS, "r")
+    one, own = str(tmp_path / "one"), str(tmp_path / "own")
+    w_one, w_own = CheckpointedWriter(one, n), CheckpointedWriter(own, n)
+    w_one.write_resumable(repartition_by_bucket(df, n), assume_placed=True,
+                          transform=label, metrics=BucketMetrics)
+    w_own.write_resumable(df, transform=label, metrics=BucketMetrics)
+    files = sorted(f for f in os.listdir(one) if f.startswith("bucket-"))
+    assert len(files) == n
+    assert files == sorted(f for f in os.listdir(own) if f.startswith("bucket-"))
+    for f in files:
+        with open(os.path.join(one, f), "rb") as a, open(os.path.join(own, f), "rb") as b:
+            assert a.read() == b.read(), f
+    assert w_one.bucket_metrics(BucketMetrics) == w_own.bucket_metrics(BucketMetrics)
+
+
+def test_resume_runs_one_write_task_per_pending_bucket(spark, pages_pd, tmp_path):
+    """A resume of k pending buckets (k ≤ 2 × defaultParallelism) runs
+    exactly k write tasks."""
+    sc = spark.sparkContext
+    sdf = spark.createDataFrame(pages_pd.head(400))
+    out = str(tmp_path / "t")
+    run_batch(spark, sdf, out, n_buckets=16)
+    for b in (2, 7, 11):
+        os.remove(os.path.join(out, "_progress", f"bucket-{b}.json"))
+    sc.setJobGroup("resume-tasks", "run_batch resume")
+    try:
+        stats = run_batch(spark, sdf, out, n_buckets=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["written"] == 3
+    tracker = sc.statusTracker()
+    stages = [
+        s
+        for j in tracker.getJobIdsForGroup("resume-tasks")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert tracker.getStageInfo(max(stages)).numTasks == 3
 
 
 def test_bucket_of_many_arrow_batches_is_one_row_group(spark, tmp_path):
@@ -218,9 +322,23 @@ def test_bucket_of_many_arrow_batches_is_one_row_group(spark, tmp_path):
         assert meta.row_group(0).column(0).compression == "ZSTD"
 
 
+def _staged_files(tmp_path):
+    from packs_spark.io import lakehouse
+
+    return lakehouse._StagedFiles(
+        str(tmp_path), "bucket", 7, "snappy", lakehouse._NoMetrics
+    )
+
+
+def _row_groups(path):
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    return [meta.row_group(i).num_rows for i in range(meta.num_row_groups)]
+
+
 def test_bucket_file_starts_a_row_group_per_byte_target(tmp_path, monkeypatch):
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from packs_spark.io import lakehouse
 
@@ -228,19 +346,49 @@ def test_bucket_file_starts_a_row_group_per_byte_target(tmp_path, monkeypatch):
         {"id": pa.array(range(100), pa.int64()), "bucket": pa.array([3] * 100, pa.int32())}
     )
     monkeypatch.setattr(lakehouse, "_ROW_GROUP_BYTES", 2 * rb.nbytes)
-    out = lakehouse._BucketFile(str(tmp_path), "bucket", 7, "snappy")
+    out = _staged_files(tmp_path)
     for _ in range(5):
         out.write(rb)
     out.flush()
-    size = out.close()
-    assert out.path == os.path.join(str(tmp_path), "bucket-3-a7.parquet")
-    assert size == os.path.getsize(out.path)
-    meta = pq.ParquetFile(out.path).metadata
-    assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] == [
-        200,
-        200,
-        100,
-    ]
+    sizes = out.close()
+    path = out.files[3].path
+    assert path == os.path.join(str(tmp_path), "bucket-3-a7.parquet")
+    assert sizes == {3: os.path.getsize(path)}
+    assert _row_groups(path) == [200, 200, 100]
+
+
+def test_task_buffers_stay_within_the_byte_target(tmp_path, monkeypatch):
+    """A task's buffers over all its buckets stay within the row-group
+    target: a batch that would pass it flushes the largest buffer first.
+    Each bucket's rows keep their batch order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from packs_spark.io import lakehouse
+
+    def batch(start, buckets):
+        return pa.RecordBatch.from_pydict(
+            {"id": pa.array(range(start, start + len(buckets)), pa.int64()),
+             "bucket": pa.array(buckets, pa.int32())}
+        )
+
+    mixed = batch(0, [0, 0, 1] * 40)  # 80 rows of bucket 0, 40 of bucket 1
+    # room for the two parts' validity bitmaps, not for 30 more rows
+    target = mixed.nbytes + 100
+    monkeypatch.setattr(lakehouse, "_ROW_GROUP_BYTES", target)
+    out = _staged_files(tmp_path)
+    out.write(mixed)
+    assert out.files[0].buffered > out.files[1].buffered > 0
+    out.write(batch(120, [1] * 30))  # would pass the target: bucket 0 goes
+    assert out.files[0].buffered == 0
+    assert 0 < out.files[1].buffered <= target
+    out.flush()
+    out.close()
+    ids = {b: pq.read_table(f.path).column("id").to_pylist() for b, f in out.files.items()}
+    assert ids[0] == [i for i in range(120) if i % 3 != 2]
+    assert ids[1] == [i for i in range(120) if i % 3 == 2] + list(range(120, 150))
+    assert _row_groups(out.files[0].path) == [80]
+    assert _row_groups(out.files[1].path) == [70]
 
 
 @pytest.mark.parametrize(

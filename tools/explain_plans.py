@@ -104,11 +104,12 @@ def main() -> None:
         out.append(buf.getvalue().rstrip())
         out.append("```")
         out.append("")
-    # the north-star pipeline's labeling plan; run_batch's write wave is
-    # this plan with the parquet write inside the same Python task
+    # the north-star pipeline's labeling plan over one full wave placed as
+    # the writer places it; run_batch's write wave is this plan with the
+    # parquet writes inside the same Python task
     from pyspark.sql import functions as F
 
-    from packs_spark.pipeline.partitioning import repartition_by_bucket, url_bucket
+    from packs_spark.pipeline.partitioning import place_buckets, url_bucket
     from packs_spark.pipeline.webtext import label
 
     src = os.path.join(REPO, "BENCH", "data", "webpages_200000.parquet")
@@ -120,19 +121,20 @@ def main() -> None:
             src = os.path.join(tmp, "webpages.parquet")
             generate_pages(2000, seed=0).to_parquet(src)
         df = spark.read.parquet(src).select("url", "warc_ts", "lang", "text")
-        df = repartition_by_bucket(
-            df.withColumn("bucket", url_bucket(F.col("url"), 128)), 128
+        df = place_buckets(
+            df.withColumn("bucket", url_bucket(F.col("url"), 128)), range(128)
         )
+        n_parts = df.rdd.getNumPartitions()
         buf = io.StringIO()
         with redirect_stdout(buf):
             label(df).explain("formatted")
     out.append("## webtext pipeline (run_batch labeling plan)")
     out.append(
-        "*expect: pruned parquet scan (no html column read) → ONE "
-        "Exchange (the bucket repartition) → MapInArrow (label_batch: "
+        "*expect: pruned parquet scan (no html column read) → one "
+        f"Exchange into P partitions (the wave's 128 buckets placed on P = "
+        f"min(128, 2 × cores) = {n_parts}) → MapInArrow (label_batch: "
         "signals, keep, run_id in one Python pass) — no second shuffle; "
-        "run_batch's write wave runs this plan with each task also "
-        "writing its bucket's parquet file*"
+        "each task writes its buckets' files*"
     )
     out.append("```")
     out.append(buf.getvalue().rstrip())
