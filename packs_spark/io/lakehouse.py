@@ -275,6 +275,7 @@ class CheckpointedWriter:
         n_buckets: int,
         bucket_col: str = "bucket",
         schema_tag: str = "",
+        fingerprint: dict | None = None,
     ):
         self.base_path = base_path
         self.n_buckets = n_buckets
@@ -288,15 +289,25 @@ class CheckpointedWriter:
         # mid-table would commit buckets with two different column sets,
         # and a plain (non-mergeSchema) read would then silently drop or
         # null the extra columns depending on which footer wins.
+        # ``fingerprint`` (JSON values by name, e.g. run_batch's
+        # thresholds) extends it to options that change the rows: a
+        # resume under other thresholds would commit buckets labeled two
+        # ways.  A writer without one checks none.
+        if fingerprint is not None:
+            fingerprint = json.loads(json.dumps(fingerprint))
         meta_path = os.path.join(self._progress_path, "_meta.json")
         if os.path.exists(meta_path):
             meta = json.load(open(meta_path))
-            if "schema_tag" not in meta:
-                # legacy checkpoint (pre-schema_tag): its actual schema is
-                # unknown, so accept this resume and RECORD the caller's
-                # tag — the guard becomes effective from here on instead
-                # of refusing every pre-upgrade in-flight table
-                meta["schema_tag"] = schema_tag
+            # a checkpoint written before a guard existed: its value is
+            # unknown, so accept this resume and RECORD the caller's — the
+            # guard becomes effective from here on instead of refusing
+            # every pre-upgrade in-flight table
+            legacy = {"schema_tag": schema_tag, "fingerprint": fingerprint}
+            legacy = {
+                k: v for k, v in legacy.items() if k not in meta and v is not None
+            }
+            if legacy:
+                meta.update(legacy)
                 with open(meta_path, "w") as f:
                     json.dump(meta, f)
             if (
@@ -312,16 +323,30 @@ class CheckpointedWriter:
                     f"(schema_tag={schema_tag!r}) — use a fresh path "
                     f"or matching config"
                 )
-        else:
-            with open(meta_path, "w") as f:
-                json.dump(
-                    {
-                        "n_buckets": n_buckets,
-                        "bucket_col": bucket_col,
-                        "schema_tag": schema_tag,
-                    },
-                    f,
+            if fingerprint is not None:
+                old = meta["fingerprint"]
+                differ = sorted(
+                    k for k in old.keys() | fingerprint.keys()
+                    if old.get(k) != fingerprint.get(k)
                 )
+                if differ:
+                    was = {k: old.get(k) for k in differ}
+                    got = {k: fingerprint.get(k) for k in differ}
+                    raise ValueError(
+                        f"checkpoint at {base_path} was written with {was}, "
+                        f"got {got} (keys {differ} differ) — use a fresh "
+                        f"path or matching config"
+                    )
+        else:
+            meta = {
+                "n_buckets": n_buckets,
+                "bucket_col": bucket_col,
+                "schema_tag": schema_tag,
+            }
+            if fingerprint is not None:
+                meta["fingerprint"] = fingerprint
+            with open(meta_path, "w") as f:
+                json.dump(meta, f)
 
     # ---- commit log -------------------------------------------------
     def completed_buckets(self) -> set[int]:

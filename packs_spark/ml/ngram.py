@@ -11,7 +11,9 @@ alphabet {a..z, space}):
   trigram code per byte position, and the offsets buffer gives each
   document's segment ``[start, end - 2)`` — exactly the windows that lie
   inside it — for ``np.add.reduceat``.  No per-document ``encode``, no
-  separator bytes between documents;
+  separator bytes between documents.  A batch is scored a slice of
+  documents at a time (about ``SLICE_BYTES`` of UTF-8), so the per-byte
+  codes and gathers stay cache-sized;
 * a window holding a NUL byte is invalid: NUL maps past every code, so
   its window is clamped to index ``N_CODES``, a zero column padded onto
   the tables — the gather needs no ``np.where`` mask;
@@ -74,6 +76,26 @@ def utf8_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return off.astype(np.intp) - off[0], data[off[0] : off[-1]]
 
 
+# documents per ``score_batch`` slice: about this many bytes of UTF-8, so
+# its intp codes and float64 gathers (8 bytes per byte each, 1 MiB here)
+# stay in a core's L2 instead of ~80 MB per 10k-document batch.  With one
+# process per core (4-core box, 10k-doc batches of generated pages)
+# fused_predict read 4.8-5.0 µs/doc at 64-128 KiB, 8.9-10.5 at 2 MiB
+# and 10-12 unsliced.
+SLICE_BYTES = 128 << 10
+
+
+def _slices(off: np.ndarray) -> list[tuple[int, int]]:
+    """[lo, hi) document ranges covering ``off``'s documents, each
+    starting at the first document that starts at or past a multiple of
+    ``SLICE_BYTES``: slices of about that many bytes, a longer document in
+    a slice of its own."""
+    n_docs = len(off) - 1
+    cuts = np.searchsorted(off[:-1], np.arange(SLICE_BYTES, off[-1], SLICE_BYTES))
+    edges = np.unique(np.concatenate([[0], cuts, [n_docs]]))
+    return list(zip(edges[:-1].tolist(), edges[1:].tolist()))
+
+
 def _window_codes(data: np.ndarray) -> np.ndarray:
     """Trigram code of the window starting at each byte of ``data``
     (intp, the gather's native index type), ``N_CODES`` for a window
@@ -89,13 +111,15 @@ def _window_codes(data: np.ndarray) -> np.ndarray:
     return codes
 
 
-def _windows(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(window codes, segment bounds, has-a-window mask) of a batch.  The
-    bounds interleave ``start, end - 2`` of every document of three bytes
-    or more, so the even segments of ``np.add.reduceat(x, bounds)`` are
-    those documents' own windows — a window never spans two documents, and
-    a shorter document has no segment (it keeps the 0 it starts with)."""
-    off, data = utf8_buffers(text_array(texts))
+def _windows(
+    off: np.ndarray, data: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(window codes, segment bounds, has-a-window mask) of the documents
+    of ``utf8_buffers``' (``off``, ``data``).  The bounds interleave
+    ``start, end - 2`` of every document of three bytes or more, so the
+    even segments of ``np.add.reduceat(x, bounds)`` are those documents'
+    own windows — a window never spans two documents, and a shorter
+    document has no segment (it keeps the 0 it starts with)."""
     has = np.diff(off) >= 3
     bounds = np.empty(2 * int(has.sum()), dtype=np.intp)
     bounds[0::2] = off[:-1][has]
@@ -105,7 +129,7 @@ def _windows(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def train_trigram_logprobs(text: str, alpha: float = 0.5) -> np.ndarray:
     """Laplace-smoothed trigram log-probability table from a seed text."""
-    codes, _, _ = _windows([text])
+    codes, _, _ = _windows(*utf8_buffers(text_array([text])))
     counts = np.bincount(codes, minlength=N_CODES + 1)[:N_CODES].astype(np.float64)
     probs = (counts + alpha) / (counts.sum() + alpha * N_CODES)
     return np.log(probs).astype(np.float32)
@@ -117,22 +141,30 @@ def score_batch(texts, tables: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     ``texts`` is an Arrow string array (or a list, see ``text_array``).
     Returns (scores[L, n_docs], n_trigrams[n_docs]): per table one gather
     through the zero-padded table and one ``np.add.reduceat`` over the
-    document segments of ``_windows``.  The gather reads a float64 copy of
-    the (tiny, 27^3-entry) tables.  Their entries are float32 values, and
-    the trained ones all lie below log 0.5, so float64 sums of them are
-    exact for any document under millions of windows: a score is
-    bit-identical whatever the summation order — in any batch, alone, or
-    in a per-document python-float loop."""
-    codes, bounds, has = _windows(texts)
-    n_docs = len(has)
+    document segments of ``_windows``, a slice of documents at a time
+    (``_slices``), so the per-byte temporaries stay cache-sized.  The
+    gather reads a float64 copy of the (tiny, 27^3-entry) tables.  Their
+    entries are float32 values, and the trained ones all lie below
+    log 0.5, so float64 sums of them are exact for any document under
+    millions of windows: a score is bit-identical whatever the summation
+    order — in any batch, any slicing, alone, or in a per-document
+    python-float loop."""
+    off, data = utf8_buffers(text_array(texts))
+    n_docs = len(off) - 1
     scores = np.zeros((tables.shape[0], n_docs), dtype=np.float64)
     n_tri = np.zeros(n_docs, dtype=np.int64)
-    if bounds.size:
-        n_tri[has] = np.add.reduceat(codes != N_CODES, bounds, dtype=np.int64)[0::2]
-        padded = np.zeros((tables.shape[0], N_CODES + 1), dtype=np.float64)
-        padded[:, :N_CODES] = tables
+    padded = np.zeros((tables.shape[0], N_CODES + 1), dtype=np.float64)
+    padded[:, :N_CODES] = tables
+    for lo, hi in _slices(off):
+        codes, bounds, has = _windows(
+            off[lo : hi + 1] - off[lo], data[off[lo] : off[hi]]
+        )
+        if not bounds.size:
+            continue
+        rows = np.flatnonzero(has) + lo
+        n_tri[rows] = np.add.reduceat(codes != N_CODES, bounds, dtype=np.int64)[0::2]
         for li, table in enumerate(padded):
-            scores[li, has] = np.add.reduceat(table[codes], bounds)[0::2]
+            scores[li, rows] = np.add.reduceat(table[codes], bounds)[0::2]
     return scores, n_tri
 
 

@@ -96,9 +96,12 @@ def place_buckets(
     by_bucket = [keys[0]] * (max(wave) + 1)
     for i, b in enumerate(wave):
         by_bucket[b] = keys[i % n_partitions]
-    pk = F.element_at(
-        F.array(*[F.lit(k) for k in by_bucket]), F.col(bucket_col) + 1
-    ).cast("long")
+    # one parsed expression, not a Column per key: each F.lit is a py4j
+    # round trip, ~66 of them per wave
+    pk = F.expr(
+        f"CAST(element_at(array({', '.join(map(str, by_bucket))}), "
+        f"`{bucket_col}` + 1) AS BIGINT)"
+    )
     return (
         df.withColumn("__pk", pk)
         .repartition(n_partitions, F.col("__pk"))

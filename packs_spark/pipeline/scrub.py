@@ -24,7 +24,10 @@ The batch path ``scrub_batch`` does two things the reference
   ASCII case, or any non-ASCII character — and only those reach Python;
 * it scans each candidate with the alternation reduced to the
   alternatives whose necessary substring occurs in it, in their original
-  order.  An alternative that cannot match anywhere in the text never
+  order.  Which needs occur is one RE2 pass per alternative over the
+  candidates (``_keys``), exact on ASCII text; a non-ASCII candidate is
+  checked in Python (``_key``), whose ``\\d`` and case folding are
+  Unicode.  An alternative that cannot match anywhere in the text never
   wins a position, so dropping it leaves every match and tie unchanged;
   it does cut the cost: the ipv4 and ssn alternatives try every position
   of a document (≈60 µs for one with a mere year in it), and the email
@@ -81,14 +84,17 @@ if BLOCKLIST_TERMS:
     _terms = "|".join(re.escape(t) for t in BLOCKLIST_TERMS)
     _ALTERNATIVES.append(rf"(?P<blocklist>(?i:\b(?:{_terms})\b))")
 
-# The batch prefilter (RE2, over the UTF-8 buffer): in an ASCII document
-# RE2's ``\d`` is Python's, and casefold is ASCII lowering, so a document
-# this misses cannot hold a need or a blocklist term; every non-ASCII
-# document is a candidate.
-_CANDIDATE_RE2 = "|".join(
-    [*_NEEDS.values(), r"[^\x00-\x7f]"]
-    + ([f"(?i:{_terms})"] if BLOCKLIST_TERMS else [])
+# ``_key``'s checks as RE2 patterns, one per alternative, in order: in an
+# ASCII document RE2's ``\d`` is Python's, and casefold is ASCII lowering
+# (the terms are ASCII), so on ASCII text each matches exactly where
+# ``_key``'s Python check does.
+_KEY_RE2 = [_NEEDS[key] for key, _ in SCRUB_PATTERNS] + (
+    [f"(?i:{_terms})"] if BLOCKLIST_TERMS else []
 )
+# The batch prefilter (RE2, over the UTF-8 buffer): an ASCII document this
+# misses cannot hold a need or a blocklist term; every non-ASCII document
+# is a candidate.
+_CANDIDATE_RE2 = "|".join([*_KEY_RE2, r"[^\x00-\x7f]"])
 
 
 @lru_cache(maxsize=None)
@@ -113,6 +119,25 @@ def _key(text: str) -> tuple[bool, ...]:
         folded = text.casefold()
         key += (any(term in folded for term in _TERMS_FOLDED),)
     return key
+
+
+def _keys(arr: pa.Array, texts: list[str]) -> list[tuple[bool, ...]]:
+    """``_key`` of each document of ``arr`` (non-null, ``texts`` its
+    strings): one RE2 pass per ``_KEY_RE2`` entry over the ASCII
+    documents, and ``_key`` itself for the others."""
+    ascii_ = pc.equal(pc.utf8_length(arr), pc.binary_length(arr))
+    ascii_ = ascii_.to_numpy(zero_copy_only=False)
+    keys = [None if a else _key(t) for a, t in zip(ascii_.tolist(), texts)]
+    rows = np.flatnonzero(ascii_)
+    if len(rows):
+        sub = arr if len(rows) == len(arr) else arr.take(rows)
+        flags = np.column_stack(
+            [pc.match_substring_regex(sub, rx).to_numpy(zero_copy_only=False)
+             for rx in _KEY_RE2]
+        )
+        for i, key in zip(rows.tolist(), map(tuple, flags.tolist())):
+            keys[i] = key
+    return keys
 
 
 # Conservative reference prefilter: every scrub pattern needs '@' (email),
@@ -170,8 +195,9 @@ def scrub_batch(texts) -> tuple[pa.Array, list[list[tuple[str, int, int]]]]:
     rows = np.flatnonzero(cand.to_numpy(zero_copy_only=False))
     hit = np.zeros(len(arr), dtype=bool)
     scrubbed = []
-    for i, text in zip(rows, arr.take(rows).to_pylist()):
-        key = _key(text)
+    cands = arr.take(rows)
+    texts = cands.to_pylist()
+    for i, text, key in zip(rows, texts, _keys(cands, texts)):
         if not any(key):
             continue
         s, sp = _scan(_pattern(key), text)

@@ -5,7 +5,10 @@ Pattern (mandated by BASELINE.json input_hint): models are built ONCE on
 the driver, shipped via ``sc.broadcast``, and materialized lazily in the
 Python worker — one deserialization per worker process, then every Arrow
 batch is scored with a single vectorized call.  No per-row Python at the
-Spark layer.
+Spark layer, and none in the kernels for an ASCII document: they read
+the batch's buffers through Arrow compute and numpy, and only documents
+whose Python string semantics Arrow cannot reproduce (non-ASCII text,
+the 0x1C-0x1F separators) are read as Python strings.
 
 ``make_label_batch`` returns ``label_batch(rb) -> rb``: every signal of the
 batch's ``text`` (``enrich_signals``: langid + perplexity, scrub, the
@@ -23,6 +26,7 @@ import re as _re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +36,16 @@ from packs_spark.ml.ngram import text_array, utf8_buffers
 from packs_spark.pipeline.rules import STOPWORDS
 
 _SYM_RE = _re.compile(r"[^A-Za-z0-9\s]")
-# _SYM_RE's verdict on each byte read as a character (exact for ASCII)
-_SYM_BYTE = np.array(
-    [_SYM_RE.match(chr(b)) is not None for b in range(256)], dtype=np.uint8
+# Per byte: 1 where _SYM_RE matches it as an ASCII character, _ROUTE where
+# a document holding it needs Python strings for its words — any
+# non-ASCII byte, and the separators 0x1C-0x1F, on which ``str.split()``
+# splits and Arrow's ``ascii_split_whitespace`` does not.  A
+# ``bytes.translate`` table: it maps a buffer in one C pass, where
+# ``np.take`` first widens every byte to an intp index.
+_ROUTE = 2
+_BYTE_CLASS = bytes(
+    _ROUTE if b >= 0x80 or 0x1C <= b < 0x20 else int(bool(_SYM_RE.match(chr(b))))
+    for b in range(256)
 )
 _STOP_SET = frozenset(STOPWORDS)
 
@@ -76,40 +87,90 @@ LABELS = T.StructType(
 )
 
 
+def _segment_reduce(ufunc, values, bounds, dtype=None) -> np.ndarray:
+    """``ufunc.reduceat`` of ``values`` over each segment
+    ``[bounds[i], bounds[i + 1])`` (``bounds[-1] == len(values)``); an
+    empty segment reads 0.  It holds no values, so each non-empty
+    segment's reduceat ends where the next non-empty one starts."""
+    out = np.zeros(len(bounds) - 1, dtype=dtype or values.dtype)
+    nonempty = bounds[1:] > bounds[:-1]
+    if nonempty.any():
+        out[nonempty] = ufunc.reduceat(values, bounds[:-1][nonempty], dtype=dtype)
+    return out
+
+
+def _ascii_word_counts(arr, stop_set) -> tuple[np.ndarray, ...]:
+    """(n_words, stopword hits, distinct words) of each document of an
+    ASCII string array without 0x1C-0x1F bytes, where ``str.split()`` of
+    ``str.lower()`` is Arrow's ``ascii_split_whitespace`` of
+    ``ascii_lower`` minus the empty tokens it keeps at leading and
+    trailing whitespace.  Words are dictionary codes: stopword and
+    non-empty flags come once per distinct word and are gathered by code
+    and summed per document over the list offsets; distinct words are the
+    first occurrences of ``row × n_vocab + code`` in sorted order, which
+    keeps each document's n_words keys together, in row order."""
+    tokens = pc.ascii_split_whitespace(pc.ascii_lower(arr))
+    lo = tokens.offsets.to_numpy()
+    words = tokens.flatten().dictionary_encode()
+    vocab, code = words.dictionary, words.indices.to_numpy()
+    is_word = pc.binary_length(vocab).to_numpy() > 0
+    is_stop = pc.is_in(vocab, value_set=pa.array(list(stop_set), pa.string()))
+    is_stop = is_stop.to_numpy(zero_copy_only=False) & is_word
+    keep = is_word[code]
+    n_words = _segment_reduce(np.add, keep, lo, np.int64)
+    stop_hits = _segment_reduce(np.add, is_stop[code], lo, np.int64)
+    row = np.repeat(np.arange(len(arr)), np.diff(lo))[keep]
+    n_vocab = len(vocab)
+    # int32 keys sort twice as fast as int64 ones
+    dtype = np.int32 if len(arr) * n_vocab < 2**31 else np.int64
+    key = np.sort(row.astype(dtype) * dtype(n_vocab) + code[keep].astype(dtype))
+    first = np.ones(len(key), dtype=bool)
+    np.not_equal(key[1:], key[:-1], out=first[1:])
+    by_row = np.concatenate([[0], np.cumsum(n_words)])
+    return n_words, stop_hits, _segment_reduce(np.add, first, by_row, np.int64)
+
+
 def _heuristic_batch(texts, stop_set):
     """Quality-signal arrays for one batch (an Arrow string array, or a
     list, see ``ngram.text_array``), Python-string semantics (identical to
     tests/pandas_oracle.heuristics_oracle — str.split() on unicode
-    whitespace, Python-re symbol class).  ``n_chars`` is Arrow's
-    ``utf8_length``; an ASCII document's symbol count is a sum of
-    ``_SYM_BYTE`` over its bytes, the rest keep ``_SYM_RE.findall``; words
-    are one C-level lower+split per document.  Moved here from JVM Column
-    expressions: the split/array_distinct/isin chain cost more JVM time
-    than this whole kernel, and Python semantics make the keep/drop parity
-    with the oracle exact instead of F1≈1."""
+    whitespace, Python-re symbol class, words looked up in ``stop_set``).
+    ``n_chars`` is Arrow's ``utf8_length``.  One ``_BYTE_CLASS`` pass over
+    the data buffer gives each document's ASCII symbol count and whether
+    it routes to Python; the other documents' words come from Arrow
+    (``_ascii_word_counts``).  A routed document keeps one
+    ``t.lower().split()`` and ``_SYM_RE.findall``.  Moved here from JVM
+    Column expressions: the split/array_distinct/isin chain cost more JVM
+    time than this whole kernel, and Python semantics make the keep/drop
+    parity with the oracle exact instead of F1≈1."""
     arr = text_array(texts)
     isnull = arr.is_null().to_numpy(zero_copy_only=False)
     if arr.null_count:
         arr = arr.fill_null("")
     off, data = utf8_buffers(arr)
     n_chars = pc.utf8_length(arr).to_numpy().astype(np.int64)
-    n_sym = np.zeros(len(arr), dtype=np.int64)
-    # an empty document holds no bytes, so each non-empty document's
-    # reduceat segment ends where the next non-empty one starts
-    nonempty = off[1:] > off[:-1]
-    if nonempty.any():
-        n_sym[nonempty] = np.add.reduceat(
-            np.take(_SYM_BYTE, data), off[:-1][nonempty], dtype=np.int64
-        )
-    tl = arr.to_pylist()
-    # a document is ASCII when it has as many characters as bytes
-    for i in np.flatnonzero(n_chars != np.diff(off)):
-        n_sym[i] = len(_SYM_RE.findall(tl[i]))
-    words = (t.lower().split() for t in tl)
-    counts = [
-        (len(ws), sum(map(stop_set.__contains__, ws)), len(set(ws))) for ws in words
-    ]
-    n_words, stop_hits, n_distinct = np.array(counts, dtype=np.int64).reshape(-1, 3).T
+    cls = np.frombuffer(data.tobytes().translate(_BYTE_CLASS), np.uint8)
+    n_sym = _segment_reduce(np.add, cls, off, np.int64)
+    routed = _segment_reduce(np.maximum, cls, off) == _ROUTE
+    n_words = np.zeros(len(arr), dtype=np.int64)
+    stop_hits, n_distinct = n_words.copy(), n_words.copy()
+
+    def take(rows):
+        return arr if len(rows) == len(arr) else arr.take(rows)
+
+    rows = np.flatnonzero(~routed)
+    if len(rows):
+        counts = _ascii_word_counts(take(rows), stop_set)
+        n_words[rows], stop_hits[rows], n_distinct[rows] = counts
+    rows = np.flatnonzero(routed)
+    if len(rows):
+        tl = take(rows).to_pylist()
+        n_sym[rows] = [len(_SYM_RE.findall(t)) for t in tl]
+        counts = [
+            (len(ws), sum(map(stop_set.__contains__, ws)), len(set(ws)))
+            for ws in (t.lower().split() for t in tl)
+        ]
+        n_words[rows], stop_hits[rows], n_distinct[rows] = np.array(counts).T
     with np.errstate(divide="ignore", invalid="ignore"):
         symbol_ratio = np.where(n_chars > 0, n_sym / np.maximum(n_chars, 1), 0.0)
         stopword_ratio = np.where(
@@ -170,7 +231,6 @@ def make_label_batch(spark: SparkSession, thresholds: dict, run_id: str):
     appends the ``LABELS`` columns — the signals, ``keep_heuristic`` =
     ``rules.heuristic_keep`` over them, ``keep`` = that ∧ a known language
     ∧ ``thresholds`` (``min_margin``, ``max_ppl``), and ``run_id``."""
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from packs_spark.pipeline.rules import heuristic_keep

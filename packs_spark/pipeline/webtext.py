@@ -239,7 +239,9 @@ def run_batch(
     the driver renames the reported files and writes each commit marker
     with its metrics row.  ``<output_path>_metrics`` is
     then built from the markers, so no Spark job writes the table or reads
-    it back, and a resume never re-reads committed buckets.
+    it back, and a resume never re-reads committed buckets.  A resume
+    raises ``ValueError`` when its effective thresholds or
+    ``rules.DEFAULTS`` differ from those the checkpoint recorded.
 
     ``multimodal=True`` adds an enrich stage over the ``html`` binary
     column (format sniff + payload bytes via one Arrow pass,
@@ -295,6 +297,9 @@ def run_batch(
         output_path,
         n_buckets,
         schema_tag="multimodal" if multimodal else "",
+        # every threshold the labels depend on: a resume under others
+        # raises instead of committing buckets labeled two ways
+        fingerprint={**rules.DEFAULTS, **checked},
     )
     t0 = time.time()
     stats = writer.write_resumable(

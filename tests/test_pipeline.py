@@ -674,6 +674,53 @@ def test_lakehouse_writer_refuses_schema_tag_change(tmp_path):
         CheckpointedWriter(legacy, n_buckets=4, schema_tag="")
 
 
+def test_lakehouse_writer_refuses_fingerprint_change(tmp_path):
+    """A resume whose fingerprint differs raises and names the differing
+    keys; a writer without one checks none; a checkpoint written before
+    fingerprints existed records the caller's on its first resume."""
+    import json as _json
+    import os as _os
+
+    import pytest as _pytest
+
+    from packs_spark.io.lakehouse import CheckpointedWriter
+
+    out = str(tmp_path / "tbl")
+    CheckpointedWriter(out, n_buckets=4, fingerprint={"a": 1, "b": 2.0})
+    with _pytest.raises(ValueError, match=re.escape("keys ['b', 'c'] differ")):
+        CheckpointedWriter(out, n_buckets=4, fingerprint={"a": 1, "b": 3.0, "c": 0})
+    CheckpointedWriter(out, n_buckets=4, fingerprint={"b": 2.0, "a": 1})
+    CheckpointedWriter(out, n_buckets=4)
+
+    legacy = str(tmp_path / "legacy")
+    CheckpointedWriter(legacy, n_buckets=4)
+    meta_path = _os.path.join(legacy, "_progress", "_meta.json")
+    assert "fingerprint" not in _json.load(open(meta_path))
+    CheckpointedWriter(legacy, n_buckets=4, fingerprint={"a": 1})
+    assert _json.load(open(meta_path))["fingerprint"] == {"a": 1}
+    with _pytest.raises(ValueError, match=re.escape("keys ['a'] differ")):
+        CheckpointedWriter(legacy, n_buckets=4, fingerprint={"a": 2})
+
+
+def test_resume_with_other_thresholds_raises(spark, tmp_path):
+    """A resume under other thresholds would commit buckets labeled two
+    ways (``max_ppl`` 1.0 keeps nothing), so it raises, naming the key,
+    and commits nothing; the unchanged resume then skips every committed
+    bucket."""
+    sdf = spark.createDataFrame(generate_pages(4000, seed=7, n_hosts=50))
+    out = str(tmp_path / "t")
+    run_batch(spark, sdf, out, n_buckets=8)
+    prog = os.path.join(out, "_progress")
+    for b in (3, 5):
+        os.remove(os.path.join(prog, f"bucket-{b}.json"))
+    with pytest.raises(ValueError, match=re.escape("keys ['max_ppl'] differ")):
+        run_batch(spark, sdf, out, n_buckets=8, thresholds={"max_ppl": 1.0})
+    markers = [f for f in os.listdir(prog) if f.startswith("bucket-")]
+    assert len(markers) == 6
+    stats = run_batch(spark, sdf, out, n_buckets=8)
+    assert (stats["written"], stats["skipped"]) == (2, 6)
+
+
 def test_canonical_url_port_scheme_pairing():
     from packs_spark.pipeline.rules import canonical_url
     from packs_spark.session import get_spark

@@ -103,6 +103,70 @@ def test_heuristic_batch_matches_pandas_oracle(text):
     assert dist_r[0] == ref["distinct_ratio"]
 
 
+# documents that route to Python (non-ASCII, or a 0x1C-0x1F separator)
+# interleaved with ones whose words come from Arrow
+_ROUTE_DOCS = [
+    "the quick brown fox jumps over the lazy dog",
+    "one\x1ctwo\x1dthree\x1efour\x1ffive",
+    "  leading and trailing whitespace \t\n",
+    "word\xa0glued\x85by\u2028separators",
+    " \t\r\n\x0b\x0c ",
+    "",
+    None,
+    "The THE the Und UND und",
+    "ΑΣ Α",
+    "a\x0bb\x0cc\rd",
+    "¡hola! ¿qué tal? #$% — «citation» ©",
+    "!!! ### $$$ and ... words",
+    "naïve café, the end",
+    "x",
+]
+
+
+def test_heuristic_batch_routes_on_sliced_array():
+    """On a sliced Arrow array (offset != 0) that interleaves Arrow-path
+    and routed documents — separators Arrow does not split on, leading,
+    trailing and only whitespace, empty and null, case duplicates, final
+    sigma, symbols outside ASCII — every heuristic signal equals the
+    pandas oracle's, bit for bit."""
+    import numpy as np
+    import pyarrow as pa
+
+    from packs_spark.pipeline.rules import STOPWORDS
+    from packs_spark.pipeline.udfs import _heuristic_batch
+    from tests.pandas_oracle import heuristics_oracle
+
+    docs = _ROUTE_DOCS + list(reversed(_ROUTE_DOCS))
+    arr = pa.array(["skipped ΑΣ", "skipped"] + docs, pa.string()).slice(2)
+    assert arr.offset == 2
+    n_chars, n_words, sym_r, stop_r, dist_r, isnull = _heuristic_batch(
+        arr, frozenset(STOPWORDS)
+    )
+    ref = heuristics_oracle(pd.Series(docs, dtype=object))
+    assert n_chars.tolist() == ref["n_chars"].tolist()
+    assert n_words.tolist() == ref["n_words"].tolist()
+    for got, col in [(sym_r, "symbol_ratio"), (stop_r, "stopword_ratio"),
+                     (dist_r, "distinct_ratio")]:
+        want = ref[col].to_numpy(np.float64)
+        assert got.view(np.int64).tolist() == want.view(np.int64).tolist(), col
+    assert isnull.tolist() == [d is None for d in docs]
+
+
+def test_heuristic_batch_honours_stop_set():
+    """``stopword_ratio`` counts the words of the ``stop_set`` passed, on
+    the Arrow path and the routed one alike (words are lowered first, so
+    an upper-case entry never matches)."""
+    import pyarrow as pa
+
+    from packs_spark.pipeline.udfs import _heuristic_batch
+
+    docs = ["alpha beta gamma delta", "alpha\x1cbeta gamma délta", "the a"]
+    stop_r = _heuristic_batch(pa.array(docs), frozenset({"alpha", "Beta"}))[3]
+    assert stop_r.tolist() == [0.25, 0.25, 0.0]
+    stop_r = _heuristic_batch(docs, frozenset({"the", "gamma", "beta"}))[3]
+    assert stop_r.tolist() == [0.5, 0.5, 0.5]
+
+
 @given(st.text(max_size=200))
 @settings(max_examples=300, deadline=None)
 def test_classify_value_total_and_stable(s):
@@ -318,6 +382,25 @@ def test_enrich_signals_on_arrow_equals_per_document_semantics(texts, skip, larg
     assert list(got) == list(want)
     for name in want:
         assert _bits(got[name]) == _bits(want[name]), name
+
+
+def test_score_batch_slices_score_as_whole(monkeypatch):
+    """With slices of a few bytes a batch scores in many slices, some
+    documents longer than a slice: every score and trigram count still
+    equals the per-document reference, bit for bit."""
+    import pyarrow as pa
+
+    from packs_spark.ml import ngram
+
+    texts = ["", "ab", "the quick brown fox", None, "a\x00bc", "xyz",
+             "ΑΣ Α naïve", "le chat est sur la table", "q"] * 3
+    arr = pa.array(["skipped"] + texts, pa.string()).slice(1)
+    tables = _signal_tables()
+    monkeypatch.setattr(ngram, "SLICE_BYTES", 5)
+    assert len(ngram._slices(ngram.utf8_buffers(arr)[0])) > 10
+    got, want = ngram.score_batch(arr, tables), _reference_scores(texts, tables)
+    assert _bits(got[0].ravel()) == _bits(want[0].ravel())
+    assert got[1].tolist() == want[1].tolist()
 
 
 def test_score_batch_lone_surrogate_scores_as_replaced():
