@@ -58,7 +58,7 @@ def is_null_placeholder(c: Column) -> Column:
     lc = F.lower(c)
     pred = F.lit(False)
     for p in NULL_PLACEHOLDERS:
-        pred = pred | (lc == F.lit(p))
+        pred = pred | (lc == p)
     return pred
 
 

@@ -9,16 +9,19 @@ per-partition (north rule: per-partition metrics + lineage).
 
 Every envelope row, and so every value string, is made by :func:`envelope`:
 a value computed on the driver is spelled by :func:`format_value` (the
-reference's ``str``), a Column value by Spark's string cast.
+reference's ``str``), a Column value by Spark's string cast.  Rows made on
+the driver become a frame through :func:`local_frame`.
 """
 
 from __future__ import annotations
 
 from typing import Any, Iterable
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 ENVELOPE_SCHEMA = T.StructType(
     [
@@ -62,6 +65,31 @@ def recommendation_level(proportion: float) -> str:
     return "info"
 
 
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType
+) -> DataFrame:
+    """A small frame of driver-side ``rows`` with exactly ``schema``, built
+    from an Arrow table.  It plans as a LocalRelation, so collecting it
+    runs no Spark job; ``createDataFrame`` of Python rows runs a
+    Python-worker job to unpickle them.  A None in a non-nullable field
+    raises ValueError."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
+_ONE_ROW = T.StructType([T.StructField("id", T.LongType(), False)])
+
+
+def one_row(spark: SparkSession) -> DataFrame:
+    """``spark.range(1)`` as a local frame: a select of driver-side values
+    over it stays a LocalRelation (the optimizer folds the projection), so
+    collecting it runs no job; ``spark.range(1)`` runs one."""
+    return local_frame(spark, [(0,)], _ONE_ROW)
+
+
 def format_value(v: Any, ndigits: int | None = None) -> str:
     """Stringify like the reference: ``str(round(x, n))`` for floats
     (banker's rounding — profiling_pack/main.py:336), plain ``str``
@@ -96,12 +124,8 @@ def envelope(
     ``tests/test_pack_characterization.py`` pins.
     """
     if frame is None:
-        data = [
-            Row(key=k, value=format_value(v), perimeter=p, scope=s,
-                parent_scope=ps)
-            for (k, v, p, s, ps) in rows
-        ]
-        return spark.createDataFrame(data, ENVELOPE_SCHEMA)
+        data = [(k, format_value(v), p, s, ps) for (k, v, p, s, ps) in rows]
+        return local_frame(spark, data, ENVELOPE_SCHEMA)
 
     def col(x):
         return x if isinstance(x, Column) else F.lit(x)
@@ -125,12 +149,9 @@ def recommendation_rows_to_df(
 ) -> DataFrame:
     """Build a recommendation DataFrame from (content, type, perimeter,
     scope, parent_scope, level) tuples."""
-    data = [
-        Row(content=c, type=t, perimeter=p, scope=s, parent_scope=ps, level=lv)
-        for (c, t, p, s, ps, lv) in rows
-    ]
-    assert all(r.level in RECOMMENDATION_LEVELS for r in data)
-    return spark.createDataFrame(data, RECOMMENDATION_SCHEMA)
+    data = list(rows)
+    assert all(r[5] in RECOMMENDATION_LEVELS for r in data)
+    return local_frame(spark, data, RECOMMENDATION_SCHEMA)
 
 
 def schema_stream(spark: SparkSession, df: DataFrame, dataset: str) -> DataFrame:
@@ -138,26 +159,9 @@ def schema_stream(spark: SparkSession, df: DataFrame, dataset: str) -> DataFrame
     plus the ``dataset`` row (schema_scanner_pack/main.py:61-72,
     profiling_pack/main.py:486-492).  Column names are driver metadata —
     no data pass."""
-    rows = [
-        Row(
-            key="column",
-            value=c,
-            perimeter="column",
-            scope=c,
-            parent_scope=dataset,
-        )
-        for c in df.columns
-    ]
-    rows.append(
-        Row(
-            key="dataset",
-            value=dataset,
-            perimeter="dataset",
-            scope=dataset,
-            parent_scope=None,
-        )
-    )
-    return spark.createDataFrame(rows, SCHEMA_STREAM_SCHEMA)
+    rows = [("column", c, "column", c, dataset) for c in df.columns]
+    rows.append(("dataset", dataset, "dataset", dataset, None))
+    return local_frame(spark, rows, SCHEMA_STREAM_SCHEMA)
 
 
 # (type label, summary column, level, message template) — one per

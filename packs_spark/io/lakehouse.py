@@ -23,8 +23,10 @@ from primitives that ship with Spark and pyarrow:
   ``metrics`` of the rows written.  The driver ``collect()``s the
   summaries and moves exactly the reported files to their final names with
   an atomic ``os.replace``; a file of a failed or duplicate task attempt
-  has no summary and goes with the staging directory.  Re-processing a
-  bucket is an **idempotent file replacement**, never a duplicate append.
+  has no summary and goes with the staging directory.  A killed run leaves
+  its staging directory behind; the next run to take the writer lock
+  removes it.  Re-processing a bucket is an **idempotent file
+  replacement**, never a duplicate append.
 * commit log: one JSON marker per completed bucket under ``_progress/``,
   written by the driver only *after* the wave's files are in place, with
   the bucket's rows, bytes and metrics row.  A marker is the unit of
@@ -494,12 +496,23 @@ class CheckpointedWriter:
             return stats
         self._acquire_lock()
         try:
+            self._collect_staging()
             return self._write_pending(
                 df, pending, stats, wave_size, on_wave, assume_placed,
                 transform or _identity, metrics or _NoMetrics,
             )
         finally:
             self._release_lock()
+
+    def _collect_staging(self) -> None:
+        """Remove the staging directories of other runs.  Only the lock
+        holder calls this: the lock proves their writers are gone, and a
+        killed run never reaches the ``rmtree`` of its own."""
+        own = f"_staging-{os.getpid()}-"
+        for name in os.listdir(self.base_path):
+            if name.startswith("_staging-") and not name.startswith(own):
+                shutil.rmtree(os.path.join(self.base_path, name),
+                              ignore_errors=True)
 
     # writer lock: two resumable runs racing on one output root would
     # interleave staged files and commit markers; the loser must fail

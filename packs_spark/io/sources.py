@@ -8,9 +8,10 @@ parquet chunk paths).  Here a source config resolves to a lazy Spark
 DataFrame: scans stay distributed, predicate pushdown / column pruning
 apply, and the "chunked dataset" case (list of parquet files treated as
 ONE logical dataset, profiling_pack/main.py:161-214 +
-qalita_core.aggregation) is simply a multi-path ``spark.read.parquet`` —
+qalita_core.aggregation) is simply a multi-path parquet read —
 Spark's partial/final aggregation replaces the reference's manual
-chunk aggregators for free.
+chunk aggregators for free.  Parquet reads go through :func:`read_parquet`,
+which infers a file set's schema once per process.
 
 Excel has no JVM-side reader in stock Spark; it is ingested via pandas on
 the driver (reference uses pandas too) and parallelized afterwards — the
@@ -19,11 +20,99 @@ import is gated so the engine works without openpyxl installed.
 
 from __future__ import annotations
 
+import copy
 import os
 import re
+import stat
+import threading
 import time
+from collections import OrderedDict
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMAS: OrderedDict[tuple, StructType] = OrderedDict()  # LRU
+_SCHEMAS_MAX = 64
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers each file set's schema
+    once per process.
+
+    Spark infers a parquet schema with a job of its own
+    (``SchemaMergeUtils.mergeSchemasInParallel``), even for one file, on
+    every read.  The first read here infers as Spark does; a later read of
+    the same, unchanged files passes that schema to ``spark.read.schema``
+    and launches no job.  The key is the absolute paths, the name, size
+    and ``mtime_ns`` of every data file under them (names starting with
+    ``_`` or ``.`` are not data, as for Spark, unless they hold ``=``), and
+    the session's values of :data:`_INFERENCE_CONFS`.  So a file that is
+    added, removed or rewritten is inferred again; one rewritten in place
+    with the same size and ``mtime_ns`` is the one change the key cannot
+    see.  Paths with a non-``file`` URI scheme, glob characters or no
+    local file go straight to ``spark.read.parquet``."""
+    paths = [paths] if isinstance(paths, str) else list(paths)
+    key = _schema_key(spark, paths)
+    if key is None:
+        return spark.read.parquet(*paths)
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = copy.deepcopy(df.schema)  # callers may mutate theirs
+        if len(_SCHEMAS) > _SCHEMAS_MAX:
+            _SCHEMAS.popitem(last=False)
+    return df
+
+
+def _schema_key(spark: SparkSession, paths: list[str]) -> tuple | None:
+    """The cache key of :func:`read_parquet`; None when a path is not a
+    plain local one."""
+    local = []
+    for p in paths:
+        url = urlsplit(p)
+        if url.scheme not in ("", "file") or any(ch in p for ch in "*?[{"):
+            return None
+        local.append(os.path.abspath(url.path if url.scheme else p))
+    try:
+        files = tuple(f for p in local for f in _data_files(p))
+    except FileNotFoundError:
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return tuple(local), files, confs
+
+
+def _is_data(name: str) -> bool:
+    return not name.startswith((".", "_")) or "=" in name
+
+
+def _data_files(path: str) -> list[tuple[str, int, int]]:
+    """``(path, size, mtime_ns)`` of every data file at or under ``path``."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return [(path, st.st_size, st.st_mtime_ns)]
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if _is_data(d))
+        for n in sorted(filter(_is_data, names)):
+            f = os.path.join(root, n)
+            st = os.stat(f)
+            out.append((f, st.st_size, st.st_mtime_ns))
+    return out
 
 
 def load_source(spark: SparkSession, conf: dict) -> DataFrame:
@@ -41,7 +130,7 @@ def load_source(spark: SparkSession, conf: dict) -> DataFrame:
             return read_csv(spark, path, skiprows=int(conf.get("skiprows", 0)))
         if ext in (".xlsx", ".xls"):
             return read_excel(spark, path, skiprows=int(conf.get("skiprows", 0)))
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     if stype == "folder":
         # list-of-chunks = ONE dataset (reference chunk semantics)
         paths = conf.get("paths") or [
@@ -49,7 +138,7 @@ def load_source(spark: SparkSession, conf: dict) -> DataFrame:
             for n in sorted(os.listdir(conf["path"]))
             if n.endswith(".parquet")
         ]
-        return spark.read.parquet(*paths)
+        return read_parquet(spark, paths)
     if stype == "excel":
         return read_excel(spark, conf["path"], skiprows=int(conf.get("skiprows", 0)))
     if stype == "database":

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from packs_spark.io.envelope import one_row
+
 EPSILON = 1e-9
 DEFAULT_K = 5  # PyOD KNN default n_neighbors
 DEFAULT_FIT_CAP = 100_000  # reference MAX_ROWS_FOR_FULL_KNN
@@ -158,7 +160,7 @@ def knn_normality(
     finally:
         scored.unpersist()
     spark = df.sparkSession
-    return spark.range(1).select(
+    return one_row(spark).select(
         F.lit(row["n_rows"]).alias("n_rows"),
         F.lit(row["n_outliers"]).alias("n_outliers"),
         F.lit(float(row["normality_score"])).alias("normality_score"),

@@ -31,6 +31,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from packs_spark.io.envelope import one_row
+
 
 def grouped_value_counts(
     df_a: DataFrame, df_b: DataFrame, col: str
@@ -223,7 +225,7 @@ def psi_2sample(
         pa = max(ca / n_a if n_a else 0.0, eps)
         pb = max(cb / n_b if n_b else 0.0, eps)
         psi += (pa - pb) * math.log(pa / pb)
-    return spark.range(1).select(
+    return one_row(spark).select(
         F.round(F.lit(psi), 4).alias("psi"),
         F.lit(n_a).alias("n_a"),
         F.lit(n_b).alias("n_b"),

@@ -9,18 +9,31 @@ reference's third-party check dispatchers:
 * the dqops check catalog (dqops-checks-reference.md).
 
 All three are config-driven pass/fail rules over one dataset, so they share
-one evaluator here.  Design for scale: the whole suite is compiled into at
-most two ``df.agg(...)`` passes, each one scan with partial aggregation per
-partition and no shuffle beyond the final merge; schema-level expectations
-never touch data at all.  The first pass holds every plain and object
-aggregate (counts, sums, percentile, mode, collect_set); the second only
-the checks that use ``countDistinct`` (distinct/duplicate counts and
-compound-column uniqueness), and a pass with no check is skipped.  One
-fused pass would cost more than the two: a DISTINCT aggregate makes
-Catalyst's distinct rewrite Expand every row once per distinct group and
-carry every other aggregate's buffer through an ObjectHashAggregate
-grouped by the distinct keys, a shuffle of those buffers and a
-SortAggregate merge.
+one evaluator here.  Design for scale: the whole suite is compiled into
+1-row aggregates, each one scan with partial aggregation per partition and
+no shuffle beyond the final merge, and the driver reads them all with ONE
+collect; schema-level expectations never touch data at all.
+
+* The plain pass, ``df.agg(...)``, holds every plain and object aggregate
+  (counts, sums, percentile, mode, collect_set).
+* The distinct pass, a second ``df.agg(...)``, holds only the checks that
+  use ``countDistinct`` (distinct/duplicate counts and compound-column
+  uniqueness).
+* expect_table_row_count_to_equal_other_table adds a count over the other
+  table.
+
+The 1-row frames are cross-joined, so one plan collects them all and AQE
+runs their stages concurrently; a frame with no aggregate is left out.
+Each pass keeps its own plan.  One fused ``df.agg`` of both passes costs
+far more: a DISTINCT aggregate makes Catalyst's distinct rewrite Expand
+every row once per distinct group and carry every other aggregate's
+buffer through an ObjectHashAggregate grouped by the distinct keys, a
+shuffle of those buffers and a SortAggregate merge.  For the registry's
+``expectations_suite_orders`` suite at sf0.1 (4 cores) the fused pass
+took 9.3-10.7 s, the three frames collected one after another 3.0-3.5 s,
+and cross-joined 2.3-2.8 s.  Compiling a suite builds each shared Column (a
+column, its non-null test, a row count) once (:func:`_shared`), since
+every Column costs py4j round trips.
 
 The supported checks are the keys of :data:`CATALOG`: the public GX
 ``expectation_type`` names the reference dispatches by ``getattr``,
@@ -41,8 +54,8 @@ Deliberate deviations from the pandas GX backend:
   windows plus a driver-side boundary stitch (see
   :func:`_monotone_violations`); run them before any shuffle, since a
   shuffle destroys the order GX would have seen.
-* expect_table_row_count_to_equal_other_table counts the other table (a
-  session-catalog name) in its own job.
+* expect_table_row_count_to_equal_other_table resolves the other table
+  through the session catalog (a temp view or catalog table).
 * expect_column_values_to_be_dateutil_parseable is a deterministic subset
   of dateutil: ISO casts plus the reference's sniffable format table.
 * expect_column_value_z_scores_to_be_less_than is single-pass via the
@@ -64,6 +77,7 @@ from __future__ import annotations
 import math
 import operator
 import re
+from contextvars import ContextVar
 from dataclasses import dataclass
 from datetime import datetime
 from functools import reduce
@@ -74,7 +88,7 @@ from pyspark.errors import AnalysisException, ParseException
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, FloatType
+from pyspark.sql import types as T
 
 from packs_spark.functions import text as TX
 from packs_spark.functions.datesniff import DATE_REGEX_TABLE
@@ -83,6 +97,7 @@ from packs_spark.functions.patterns import (
     USA_PHONE_PATTERN,
     contains_pattern,
 )
+from packs_spark.io.envelope import local_frame
 
 _OPS = {
     ">": operator.gt,
@@ -106,7 +121,27 @@ class _Compiled:
     label: str = ""
     error: str | None = None
     distinct: bool = False  # aggs use countDistinct: the second pass
+    # aggregates over another frame; their values follow those of aggs
+    other: tuple[DataFrame, list[Column]] | None = None
     values: list | None = None  # the collected aggs
+
+
+# the Columns shared by the checks of the suite being compiled (_shared)
+_SUITE_COLUMNS: ContextVar[dict | None] = ContextVar("_SUITE_COLUMNS",
+                                                     default=None)
+
+
+def _shared(key: tuple | None, make: Callable[[], Column]) -> Column:
+    """``make()``, built once per suite evaluation for each ``key`` (None:
+    not shared).  Every Column costs py4j round trips to build and one
+    more to release, and a suite asks for the same column, non-null test
+    and row counts many times."""
+    memo = _SUITE_COLUMNS.get()
+    if key is None or memo is None:
+        return make()
+    if key not in memo:
+        memo[key] = make()
+    return memo[key]
 
 
 def _between(value, lo, hi) -> bool:
@@ -124,8 +159,16 @@ def _col_name(kw: dict) -> str:
     return kw["column"]
 
 
+def _column(name: str) -> Column:
+    return _shared(("col", name), lambda: F.col(name))
+
+
 def _col(kw: dict) -> Column:
-    return F.col(_col_name(kw))
+    return _column(_col_name(kw))
+
+
+def _nonnull(name: str) -> Column:
+    return _shared(("nonnull", name), lambda: _column(name).isNotNull())
 
 
 def _mostly(kw: dict) -> float:
@@ -134,11 +177,13 @@ def _mostly(kw: dict) -> float:
 
 def _any(preds) -> Column:
     """Or-chain, not Column.isin — wide InSet lists JIT pathologically."""
-    return reduce(operator.or_, preds, F.lit(False))
+    preds = list(preds)
+    return reduce(operator.or_, preds) if preds else F.lit(False)
 
 
 def _all(preds) -> Column:
-    return reduce(operator.and_, preds, F.lit(True))
+    preds = list(preds)
+    return reduce(operator.and_, preds) if preds else F.lit(True)
 
 
 def _in_set(c: Column, values) -> Column:
@@ -204,15 +249,22 @@ def _no_duplicates(kw: dict):
 
 
 def _ratio(cond: Column, pred: Column, mostly: float,
-           column: str | None = None) -> _Compiled:
+           column: str | None = None, key: tuple | None = None) -> _Compiled:
     """Row ratio: of the n rows satisfying ``cond`` (the complement of GX's
     ignore_row_if), the ok rows also satisfying ``pred``; verdict ok/n >=
-    mostly, with a vacuous pass when no row qualifies."""
+    mostly, with a vacuous pass when no row qualifies.  ``key`` names a
+    ``cond`` that other checks share, so that n is built once."""
+    n = _shared(key and ("n", key), lambda: F.sum(cond.cast("long")))
     return _Compiled(
-        [F.sum((cond & pred).cast("long")), F.sum(cond.cast("long"))],
+        [F.sum((cond & pred).cast("long")), n],
         lambda v: (v[1] or 0) == 0 or (v[0] or 0) / v[1] >= mostly,
         column,
     )
+
+
+def _values_of(name: str, pred: Column, mostly: float) -> _Compiled:
+    """``pred`` over the NON-NULL rows of column ``name``."""
+    return _ratio(_nonnull(name), pred, mostly, key=("nonnull", name))
 
 
 def _scalar(agg: Column, ok, column: str | None = None,
@@ -236,7 +288,7 @@ def _share(num: Column, of: Column, ok, scale: float = 100.0,
 # count metrics are never NULL (0 on an empty frame); value metrics are
 # NULL there, and a None value fails every bound
 _METRICS: dict[str, Callable[[Column], Column]] = {
-    "row_count": lambda c: F.count(F.lit(1)),
+    "row_count": lambda c: _shared(("rows",), lambda: F.count(F.lit(1))),
     "missing_count": lambda c: F.count_if(c.isNull()),
     "distinct_count": F.countDistinct,
     # Σ max(cnt-1, 0) without a groupBy = count_nonnull - countDistinct
@@ -278,14 +330,15 @@ def _values(pred_of):
     """``pred_of(c, kw)`` over the column's NON-NULL rows (GX ignores
     nulls for value expectations except the null checks themselves)."""
     def build(df, kw):
-        c = _col(kw)
-        return _ratio(c.isNotNull(), pred_of(c, kw), _mostly(kw))
+        return _values_of(_col_name(kw), pred_of(_col(kw), kw), _mostly(kw))
     return build
 
 
 def _rows(pred_of):
     """``pred_of(c)`` over every row."""
-    return lambda df, kw: _ratio(F.lit(True), pred_of(_col(kw)), _mostly(kw))
+    return lambda df, kw: _ratio(
+        _shared(("true",), lambda: F.lit(True)), pred_of(_col(kw)),
+        _mostly(kw), key=("all",))
 
 
 def _pattern(key: str, negate: bool = False):
@@ -310,7 +363,7 @@ def _pair(pred_of):
     both_values_are_missing: a half-null pair IS evaluated and can never
     satisfy the predicate."""
     def build(df, kw):
-        a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
+        a, b = _column(kw["column_A"]), _column(kw["column_B"])
         return _ratio(
             a.isNotNull() | b.isNotNull(),
             a.isNotNull() & b.isNotNull() & pred_of(a, b, kw),
@@ -323,7 +376,7 @@ def _multicolumn(pred_of):
     """Check over ``column_list`` under GX's ignore_row_if default
     all_values_are_missing: a partially-null row IS evaluated."""
     def build(df, kw):
-        cols = [F.col(x) for x in kw["column_list"]]
+        cols = [_column(x) for x in kw["column_list"]]
         return _ratio(
             _any(x.isNotNull() for x in cols), pred_of(cols, kw),
             _mostly(kw), ",".join(kw["column_list"]),
@@ -558,7 +611,7 @@ def _monotone_violations(
         F.spark_partition_id().alias("__pid"),
         F.monotonically_increasing_id().alias("__mid"),
     ).where(F.col("__v").isNotNull())
-    if isinstance(aug.schema["__v"].dataType, (FloatType, DoubleType)):
+    if isinstance(aug.schema["__v"].dataType, (T.FloatType, T.DoubleType)):
         # NaN is dropped like NULL (pandas-GX drops it with dropna);
         # keeping it would make the verdict partitioning-dependent —
         # Spark sorts NaN greatest in-partition while the driver-side
@@ -614,13 +667,14 @@ def _monotone(decreasing: bool):
 
 def _other_table_row_count(df, kw) -> _Compiled:
     # the other table resolves through the session catalog (a temp view or
-    # catalog table); its count is one bounded eager job, and the suite's
-    # own count stays in the fused agg
+    # catalog table); its count is an aggregate over that frame, collected
+    # with the suite's own passes
     try:
-        other_n = df.sparkSession.table(kw["other_table_name"]).count()
+        other = df.sparkSession.table(kw["other_table_name"])
     except AnalysisException as e:
         raise ValueError(f"other table unresolvable: {e}") from e
-    return _scalar(_METRICS["row_count"](None), lambda n: n == other_n)
+    return _Compiled([_METRICS["row_count"](None)], lambda v: v[0] == v[1],
+                     other=(other, [F.count(F.lit(1))]))
 
 
 # -- schema-level checks: a bool, no aggregate ------------------------------
@@ -670,7 +724,7 @@ def _column_exists(df, kw) -> bool:
 
 def _found(flag):
     """dqops *_found: rows flagged by ``flag(c)`` <= max_count."""
-    return lambda df, kw: _scalar(TX.count_if(flag(_col(kw))), _max_count(kw))
+    return lambda df, kw: _scalar(F.count_if(flag(_col(kw))), _max_count(kw))
 
 
 def _percent(flag_of, test):
@@ -679,7 +733,7 @@ def _percent(flag_of, test):
     percent."""
     def build(df, kw):
         flag, of = flag_of(_col(kw), kw)
-        return _share(TX.count_if(flag), of, test(kw))
+        return _share(F.count_if(flag), of, test(kw))
     return build
 
 
@@ -771,10 +825,10 @@ def _sql_condition(kw: dict, column: str | None) -> Column:
 # aggregate expression compiled straight into the fused agg
 _SQL_CHECKS = {
     "sql_condition_failed": lambda kw, col: _scalar(
-        TX.count_if(~_sql_condition(kw, col)), _max_count(kw)),
+        F.count_if(~_sql_condition(kw, col)), _max_count(kw)),
     # the dqops sensor is 100·passed/count(*) over ALL rows
     "sql_condition_passed_percent": lambda kw, col: _share(
-        TX.count_if(_sql_condition(kw, col)), F.lit(1), _min_percent(kw)),
+        F.count_if(_sql_condition(kw, col)), F.lit(1), _min_percent(kw)),
     "sql_aggregate_expression": lambda kw, col: _scalar(
         _dqops_sql_expr(kw["sql_expression"], col), _bounds(kw)),
 }
@@ -802,7 +856,7 @@ CATALOG: dict[str, Callable[[DataFrame, dict], _Compiled | bool]] = {
     "expect_column_values_to_be_unique":
         _metric("duplicate_count", _no_duplicates),
     "expect_compound_columns_to_be_unique": lambda df, kw: _scalar(
-        _METRICS["duplicate_count"](F.struct(*map(F.col, kw["column_list"]))),
+        _METRICS["duplicate_count"](F.struct(*map(_column, kw["column_list"]))),
         lambda dup: dup == 0, ",".join(kw["column_list"]), distinct=True),
     **{f"soda:{m}": _metric(m, _soda) for m in (
         "row_count", "missing_count", "duplicate_count",
@@ -829,8 +883,8 @@ CATALOG: dict[str, Callable[[DataFrame, dict], _Compiled | bool]] = {
     "expect_column_values_to_not_be_in_set": _values(
         lambda c, kw: ~_in_set(c, kw.get("value_set", []))),
     # every distinct value ∈ set ⇔ no non-null value outside it (no mostly)
-    "expect_column_distinct_values_to_be_in_set": lambda df, kw: _ratio(
-        _col(kw).isNotNull(), _in_set(_col(kw), kw.get("value_set", [])), 1.0),
+    "expect_column_distinct_values_to_be_in_set": lambda df, kw: _values_of(
+        _col_name(kw), _in_set(_col(kw), kw.get("value_set", [])), 1.0),
     "expect_column_values_to_match_regex": _pattern("regex"),
     "expect_column_values_to_not_match_regex": _pattern("regex", True),
     "expect_column_values_to_match_regex_list": _pattern("regex_list"),
@@ -951,31 +1005,48 @@ def _compile(df: DataFrame, exp: dict) -> _Compiled | None:
     return out
 
 
+def _collect_row(parts: list[tuple[DataFrame, list[Column]]]) -> list:
+    """The values of each part's aggregates over its frame, in order: one
+    1-row ``frame.agg`` per part with aggregates, cross-joined so that one
+    collect runs them all (AQE runs their stages concurrently); no job
+    when no part has one."""
+    rows = [frame.agg(*aggs) for frame, aggs in parts if aggs]
+    return list(reduce(DataFrame.crossJoin, rows).collect()[0]) if rows else []
+
+
 def _aggregate(df: DataFrame, checks: list[_Compiled]) -> None:
-    """Collect the aggregates of ``checks`` into their ``values`` in one
-    ``df.agg``; no job when they have no aggregate."""
-    aggs = [a for comp in checks for a in comp.aggs]
+    """Collect the aggregates of ``checks`` into their ``values``: the plain
+    pass, the countDistinct pass and each check's other frame, in one
+    collect."""
+    plain = [comp for comp in checks if not comp.distinct]
+    distinct = [comp for comp in checks if comp.distinct]
+    other = [comp for comp in checks if comp.other]
     try:
-        row = iter(df.agg(*aggs).collect()[0] if aggs else [])
-        for comp in checks:
+        row = iter(_collect_row(
+            [(df, [a for comp in plain for a in comp.aggs]),
+             (df, [a for comp in distinct for a in comp.aggs])]
+            + [comp.other for comp in other]))
+        for comp in plain + distinct:
             comp.values = [next(row) for _ in comp.aggs]
+        for comp in other:
+            comp.values += [next(row) for _ in comp.other[1]]
     except CapturedException:
         # one expression that fails analysis (a value_set literal whose
         # type mismatches the column: `cat = array('a')`) or at run time
-        # (an ANSI cast of 'abc') must not kill the whole pass — fall back
-        # to one agg per check so only the offending check fails.  Error
-        # path only: the fused plan stays the fast path
+        # (an ANSI cast of 'abc') must not kill the whole suite — fall
+        # back to one collect per check so only the offending check
+        # fails.  Error path only: the fused plan stays the fast path
         for comp in checks:
             try:
-                comp.values = (list(df.agg(*comp.aggs).collect()[0])
-                               if comp.aggs else [])
+                comp.values = _collect_row(
+                    [(df, comp.aggs)] + ([comp.other] if comp.other else []))
             except CapturedException as e:
                 comp.error = _error(e)
 
 
 def evaluate_suite(df: DataFrame, expectations: list[dict]) -> list[dict]:
-    """Evaluate the whole suite in at most two aggregation passes (see the
-    module docstring).  Returns
+    """Evaluate the whole suite in one collect (see the module docstring).
+    Returns
     [{expectation, column, success}] in suite order (skipped/unknown
     expectations omitted, matching the reference's `continue`).
 
@@ -984,32 +1055,34 @@ def evaluate_suite(df: DataFrame, expectations: list[dict]) -> list[dict]:
     entry ``{"_raw": text}`` is SodaCL text, parsed here so that a bad
     check fails alone, labelled with its text."""
     checks: list[_Compiled] = []
-    for exp in expectations:
-        try:
-            comp = _compile(df, exp)
-        except (ValueError, KeyError, NotImplementedError, TypeError,
-                AttributeError) as e:
-            # one uncompilable expectation (an unmapped strftime directive
-            # like %f, an unsupported SodaCL check, a malformed kwargs
-            # dict, a non-numeric threshold → TypeError, a non-dict
-            # expectation entry → AttributeError) must not abort the whole
-            # suite run — record it as failed and keep evaluating the rest
-            # (the reference's dispatch likewise skips what it can't
-            # handle)
-            kwargs = exp.get("kwargs") if isinstance(exp, dict) else None
-            comp = _Compiled(
-                [], None,
-                kwargs.get("column") if isinstance(kwargs, dict) else None,
-                error=_error(e),
-            )
-        if comp is not None:
-            comp.label = _label(exp)
-            checks.append(comp)
-
+    memo = _SUITE_COLUMNS.set({})
+    try:
+        for exp in expectations:
+            try:
+                comp = _compile(df, exp)
+            except (ValueError, KeyError, NotImplementedError, TypeError,
+                    AttributeError) as e:
+                # one uncompilable expectation (an unmapped strftime
+                # directive like %f, an unsupported SodaCL check, a
+                # malformed kwargs dict, a non-numeric threshold →
+                # TypeError, a non-dict expectation entry → AttributeError)
+                # must not abort the whole suite run — record it as failed
+                # and keep evaluating the rest (the reference's dispatch
+                # likewise skips what it can't handle)
+                kwargs = exp.get("kwargs") if isinstance(exp, dict) else None
+                comp = _Compiled(
+                    [], None,
+                    kwargs.get("column") if isinstance(kwargs, dict) else None,
+                    error=_error(e),
+                )
+            if comp is not None:
+                comp.label = _label(exp)
+                checks.append(comp)
+    finally:
+        _SUITE_COLUMNS.reset(memo)
     for i, comp in enumerate(checks):
         comp.aggs = [a.alias(f"c{i}_{j}") for j, a in enumerate(comp.aggs)]
-    for distinct in (False, True):
-        _aggregate(df, [comp for comp in checks if comp.distinct == distinct])
+    _aggregate(df, checks)
 
     results = []
     for comp in checks:
@@ -1033,6 +1106,15 @@ def evaluate_suite(df: DataFrame, expectations: list[dict]) -> list[dict]:
     return results
 
 
+SUITE_RESULT_SCHEMA = T.StructType([
+    T.StructField("idx", T.IntegerType()),
+    T.StructField("expectation", T.StringType()),
+    T.StructField("column", T.StringType()),
+    T.StructField("success", T.BooleanType()),
+    T.StructField("suite_score", T.DoubleType()),
+])
+
+
 def suite_results_df(df: DataFrame, expectations: list[dict]) -> DataFrame:
     """Per-expectation results as a DataFrame, with the dataset-level
     suite score (passed/total rounded 2 — reference
@@ -1041,13 +1123,8 @@ def suite_results_df(df: DataFrame, expectations: list[dict]) -> DataFrame:
     total = len(res)
     passed = sum(r["success"] for r in res)
     score = 1.0 if total == 0 else round(passed / total, 2)
-    spark = df.sparkSession
     rows = [
         (i, r["expectation"], r["column"], r["success"], score)
         for i, r in enumerate(res)
     ]
-    return spark.createDataFrame(
-        rows,
-        "idx int, expectation string, column string, success boolean, "
-        "suite_score double",
-    )
+    return local_frame(df.sparkSession, rows, SUITE_RESULT_SCHEMA)

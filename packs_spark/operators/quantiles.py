@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from packs_spark.io.envelope import one_row
+
 
 def quantile_values_multi(
     df: DataFrame,
@@ -172,7 +174,7 @@ def iqr_summary(
         aggs.append(F.sum(((c < lo) | (c > hi)).cast("long")).alias(f"out_{col}"))
         aggs.append(F.count(c).alias(f"cnt_{col}"))
     spark = df.sparkSession
-    wide = df.agg(*aggs) if aggs else spark.range(1)
+    wide = df.agg(*aggs) if aggs else one_row(spark)
     structs = []
     for col in cols:
         q1, q3 = quart[col]

@@ -17,22 +17,19 @@ from packs_spark.pipeline import rules
 BPE_SPLIT_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def whitespace_tokens(c: Column) -> Column:
-    return rules.n_words(c)
-
-
 def bpe_tokens(c: Column) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_SPLIT_REGEX), 0))
 
 
-def quality_score(c: Column) -> Column:
-    """Composite 0..1 quality score: equal-weight blend of four bounded
+def quality_score(c: Column, w: Column) -> Column:
+    """Composite 0..1 quality score of text ``c`` with lowercase word array
+    ``w`` (``rules.words(F.lower(c))``): equal-weight blend of four bounded
     signals (length saturation at 500 chars, symbol cleanliness, stopword
     density saturation at 10%, vocabulary diversity)."""
     length_sig = F.least(rules.n_chars(c) / F.lit(500.0), F.lit(1.0))
     symbol_sig = 1.0 - F.least(rules.symbol_ratio(c) / F.lit(0.5), F.lit(1.0))
-    stop_sig = F.least(rules.stopword_ratio(c) / F.lit(0.10), F.lit(1.0))
-    diversity_sig = rules.distinct_word_ratio(c)
+    stop_sig = F.least(rules.stopword_ratio(w) / F.lit(0.10), F.lit(1.0))
+    diversity_sig = rules.distinct_word_ratio(w)
     return (length_sig + symbol_sig + stop_sig + diversity_sig) / 4.0
 
 
@@ -79,14 +76,19 @@ def fingerprint(c: Column, k: int = 8) -> Column:
 
 
 def summary(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass corpus text statistics."""
-    c = F.col(text_col)
-    return df.agg(
+    """One-pass corpus text statistics.  The lowercase word array is
+    projected once, and every word statistic reads that column: each use
+    of a ``split`` expression splits every document again.  The whitespace
+    token count is the array's size (lowercasing moves no whitespace)."""
+    lower_words = rules.words(F.lower(F.col(text_col)))
+    t = df.select(F.col(text_col).alias("__t"), lower_words.alias("__w"))
+    c, w = F.col("__t"), F.col("__w")
+    return t.agg(
         F.count(c).alias("n_docs"),
-        F.sum(whitespace_tokens(c).cast("long")).alias("total_ws_tokens"),
+        F.sum(F.size(w).cast("long")).alias("total_ws_tokens"),
         F.sum(bpe_tokens(c).cast("long")).alias("total_bpe_tokens"),
-        F.round(F.avg(quality_score(c)), 4).alias("avg_quality"),
+        F.round(F.avg(quality_score(c, w)), 4).alias("avg_quality"),
         F.round(F.avg(rules.symbol_ratio(c)), 6).alias("avg_symbol_ratio"),
-        F.round(F.avg(rules.distinct_word_ratio(c)), 6).alias("avg_distinct_ratio"),
+        F.round(F.avg(rules.distinct_word_ratio(w)), 6).alias("avg_distinct_ratio"),
         F.countDistinct(fingerprint(c)).alias("n_fingerprints"),
     )

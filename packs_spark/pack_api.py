@@ -35,6 +35,8 @@ from packs_spark.functions.patterns import PII_PATTERNS, pii_hit_count
 from packs_spark.io.envelope import (
     SCHEMA_STREAM_SCHEMA,
     envelope,
+    local_frame,
+    one_row,
     recommendation_level,
     recommendation_rows_to_df,
     schema_stream,
@@ -153,7 +155,7 @@ def _duplicates(spark, df, dataset, job, source_conf):
 
 
 def _schema_scanner(spark, df, dataset, job, source_conf):
-    wide = spark.range(1).select(*PM.schema_signature(df))
+    wide = one_row(spark).select(*PM.schema_signature(df))
     return _wide(spark, wide, dataset), []
 
 
@@ -510,7 +512,7 @@ def run_pack(
     if pack_name == "dbt_checks":
         # a dbt ARTIFACT, not a data source: no table to read, no schemas
         df, dataset = None, job.get("project_dir", ".")
-        schemas = spark.createDataFrame([], SCHEMA_STREAM_SCHEMA)
+        schemas = local_frame(spark, [], SCHEMA_STREAM_SCHEMA)
     else:
         df = load_source(spark, source_conf)
         dataset = source_conf.get("name", "source")

@@ -60,10 +60,6 @@ def n_chars(c: Column) -> Column:
     return F.length(c)
 
 
-def n_words(c: Column) -> Column:
-    return F.size(words(c))
-
-
 def symbol_ratio(c: Column) -> Column:
     """Non-alphanumeric, non-whitespace chars / total chars (0 for empty)."""
     total = F.length(c)
@@ -71,19 +67,21 @@ def symbol_ratio(c: Column) -> Column:
     return F.when(total == 0, F.lit(0.0)).otherwise(sym / total)
 
 
-def stopword_ratio(c: Column) -> Column:
-    """Fraction of lowercase tokens found in STOPWORDS (0 if no tokens)."""
-    w = words(F.lower(c))
+def stopword_ratio(w: Column) -> Column:
+    """Fraction of the tokens of ``w``, the lowercase word array
+    ``words(F.lower(text))``, found in STOPWORDS (0 if no tokens).  The
+    word-array rules take the array, not the text, so that a caller binds
+    it once for all of them."""
     n = F.size(w)
     # count token hits (array_intersect would dedup them)
     hits = F.size(F.filter(w, lambda x: x.isin(STOPWORDS)))
     return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
 
 
-def distinct_word_ratio(c: Column) -> Column:
-    """|distinct tokens| / |tokens| — repetition/boilerplate signal (1.0 for
-    empty docs so they fail on length, not repetition)."""
-    w = words(F.lower(c))
+def distinct_word_ratio(w: Column) -> Column:
+    """|distinct tokens| / |tokens| of the lowercase word array ``w`` —
+    repetition/boilerplate signal (1.0 for empty docs so they fail on
+    length, not repetition)."""
     n = F.size(w)
     return F.when(n == 0, F.lit(1.0)).otherwise(F.size(F.array_distinct(w)) / n)
 

@@ -38,6 +38,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from packs_spark.io.sources import read_parquet
 from packs_spark.pipeline import rules
 
 # default model thresholds (see packs_spark/pipeline/README.md)
@@ -262,7 +263,7 @@ def run_batch(
 
     # before any output directory exists
     checked = _checked_thresholds(thresholds)
-    df = spark.read.parquet(source) if isinstance(source, str) else source
+    df = read_parquet(spark, source) if isinstance(source, str) else source
 
     # Project away the raw html payload BEFORE the shuffle: extraction
     # already happened upstream (the input carries `text`), so html is dead
@@ -331,36 +332,24 @@ def quality_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach heuristic quality-signal columns (all JVM-side expressions).
 
     The lowercase token array is materialized ONCE and every word-based
-    signal derives from it — semantically identical to applying each
-    rules.* expression directly (the oracle-checked form), but a single
-    regex split instead of five per row.
+    signal derives from it — a single regex split instead of one per
+    signal and row.
     """
-    c = F.col(text_col)
+    c, w = F.col(text_col), F.col("__wl")
     out = (
         df.withColumn("__wl", rules.words(F.lower(c)))
         .withColumn("q_n_chars", rules.n_chars(c))
-        .withColumn("q_n_words", F.size("__wl"))
+        .withColumn("q_n_words", F.size(w))
         .withColumn("q_symbol_ratio", rules.symbol_ratio(c))
-        .withColumn(
-            "q_stopword_ratio",
-            F.when(F.col("q_n_words") == 0, F.lit(0.0)).otherwise(
-                F.size(F.filter("__wl", lambda x: x.isin(rules.STOPWORDS)))
-                / F.col("q_n_words")
-            ),
-        )
-        .withColumn(
-            "q_distinct_ratio",
-            F.when(F.col("q_n_words") == 0, F.lit(1.0)).otherwise(
-                F.size(F.array_distinct("__wl")) / F.col("q_n_words")
-            ),
-        )
+        .withColumn("q_stopword_ratio", rules.stopword_ratio(w))
+        .withColumn("q_distinct_ratio", rules.distinct_word_ratio(w))
     )
     return out.withColumn("keep", rules.heuristic_keep()).drop("__wl")
 
 
 def flagship_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source keep/drop + mean quality signals over `documents`."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_parquet(spark, f"{sf_dir}/documents.parquet")
     q = quality_columns(df)
     return (
         q.groupBy("source")

@@ -18,6 +18,7 @@ from packs_spark.functions.patterns import (
     any_pii,
     pii_hit_count,
 )
+from packs_spark.io.envelope import one_row
 from packs_spark.operators import pack_metrics as PM
 from packs_spark.operators import text_validation
 from packs_spark.registry import load, register
@@ -838,7 +839,7 @@ FROM cols
 )
 def q_schema_scan(spark, sf_dir):
     df = load(spark, sf_dir, "lineitem")
-    return spark.range(1).select(*PM.schema_signature(df)).withColumnRenamed(
+    return one_row(spark).select(*PM.schema_signature(df)).withColumnRenamed(
         "column_count", "n_columns"
     )
 
@@ -963,7 +964,7 @@ def q_drift_ks(spark, sf_dir):
         li.where(F.col("l_shipdate") >= split),
         "l_extendedprice",
     )
-    return spark.range(1).select(
+    return one_row(spark).select(
         F.round(F.lit(d), 6).alias("ks_stat"),
         F.lit(n_a).alias("n_a"),
         F.lit(n_b).alias("n_b"),

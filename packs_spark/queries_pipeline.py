@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from packs_spark.io.envelope import one_row
 from packs_spark.pipeline import rules
 from packs_spark.registry import load, register
 
@@ -322,7 +323,7 @@ def q_dedup_minhash(spark, sf_dir):
         F.count(F.lit(1)).alias("n_candidate_pairs"),
         F.sum((F.col("est_jaccard") >= 0.5).cast("long")).alias("n_near_dups"),
     ).collect()[0]
-    return spark.range(1).select(
+    return one_row(spark).select(
         F.lit(n_docs).alias("n_docs"),
         F.lit(row["n_candidate_pairs"]).alias("n_candidate_pairs"),
         F.lit(row["n_near_dups"] or 0).alias("n_near_dups"),

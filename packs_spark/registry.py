@@ -12,6 +12,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from packs_spark.io.sources import read_parquet
+
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
 
@@ -27,7 +29,7 @@ def register(name: str, oracle: str | None = None):
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{table}.parquet")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

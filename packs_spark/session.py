@@ -61,15 +61,26 @@ def get_spark(
     # before the JVM starts: local-mode python workers inherit this env
     if not os.environ.get("SPARK_GRAFT_NO_MALLOC_TUNE"):
         os.environ.update(_MALLOC_ENV)
-    builder = SparkSession.builder.appName(app_name)
-
     if master is None and "SPARK_GRAFT_MASTER" in os.environ:
         master = os.environ["SPARK_GRAFT_MASTER"]
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = builder.master(master)
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
 
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def session_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf :func:`get_spark` builds its session with for ``master``."""
     if shuffle_partitions is None:
         # local[N] → N; cluster → leave to AQE with a generous initial count.
         n = _parallelism_of(master)
@@ -118,19 +129,18 @@ def get_spark(
         # spark-submit, not here.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     }
-    if master.split("[")[0] == "local":
-        # fork Python workers from the lazy-zip-invalidation daemon; the
-        # package root on PYTHONPATH lets it start from any cwd
-        conf["spark.python.daemon.module"] = "packs_spark.pyworker"
+    kind = master.split("[")[0]
+    if kind in ("local", "local-cluster"):
+        # Python workers on this machine import the package from its root,
+        # from any cwd; without it every task of a local-cluster executor
+        # fails with "No module named 'packs_spark'"
         conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_ROOT
+    if kind == "local":
+        # fork Python workers from the lazy-zip-invalidation daemon
+        conf["spark.python.daemon.module"] = "packs_spark.pyworker"
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return conf
 
 
 def _parallelism_of(master: str) -> int | None:

@@ -1359,3 +1359,65 @@ def test_distinct_checks_run_in_their_own_pass(spark, monkeypatch):
     res = evaluate_suite(df, [plain[0], *distinct, plain[1]])
     assert calls == [{0, 6}, {1, 2, 3, 4, 5}]
     assert [r["success"] for r in res] == [True] * 7
+
+
+def test_suite_is_one_collect_and_a_bad_check_fails_alone(spark, monkeypatch):
+    """The plain pass, the countDistinct pass and the other table's count
+    are cross-joined 1-row aggregates read by one collect; a check that
+    fails analysis (a value_set literal of another type) sends the suite
+    to one collect per check, where only that check fails."""
+    df = _orders_df(spark)
+    df.createOrReplaceTempView("suite_other_orders")
+    collects = []
+    collect = type(df).collect
+
+    def spy(self):
+        collects.append(1)
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    suite = [
+        {"expectation_type": "expect_column_values_to_not_be_null",
+         "kwargs": {"column": "o_custkey"}},
+        {"expectation_type": "expect_column_values_to_be_unique",
+         "kwargs": {"column": "o_orderkey"}},
+        {"expectation_type": "expect_table_row_count_to_equal_other_table",
+         "kwargs": {"other_table_name": "suite_other_orders"}},
+    ]
+    res = evaluate_suite(df, suite)
+    assert len(collects) == 1
+    assert [r["success"] for r in res] == [False, True, True]
+    assert not any("error" in r for r in res)
+
+    bad = {"expectation_type": "expect_column_values_to_be_in_set",
+           "kwargs": {"column": "o_orderstatus", "value_set": [["O"]]}}
+    res = evaluate_suite(df, [*suite, bad])
+    assert [r["success"] for r in res] == [False, True, True, False]
+    assert [("error" in r) for r in res] == [False, False, False, True]
+
+
+def test_suite_results_frame_collects_without_a_job(spark):
+    """suite_results_df's frame is a local relation with the schema it
+    always had: collecting it launches no Spark job."""
+    from pyspark.sql import types as T
+
+    sc = spark.sparkContext
+    out = suite_results_df(_df(spark), [
+        {"expectation_type": "expect_table_row_count_to_be_between",
+         "kwargs": {"min_value": 1}},
+        {"expectation_type": "expect_column_values_to_not_be_null",
+         "kwargs": {"column": "cat"}},
+    ])
+    assert out.schema == T._parse_datatype_string(
+        "idx int, expectation string, column string, success boolean, "
+        "suite_score double")
+    sc.setJobGroup("suite-results-collect", "collect")
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("suite-results-collect") == []
+    assert [tuple(r) for r in rows] == [
+        (0, "expect_table_row_count_to_be_between", None, True, 0.5),
+        (1, "expect_column_values_to_not_be_null", "cat", False, 0.5),
+    ]

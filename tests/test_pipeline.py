@@ -3,6 +3,7 @@ byte-identical scrubbed text per url, langid accuracy, resumability."""
 
 import os
 import re
+import shutil
 
 import pandas as pd
 import pytest
@@ -148,6 +149,30 @@ def test_resumed_table_equals_fresh(spark, pages_pd, tmp_path):
     for b in (0, 2):
         marker = json.load(open(os.path.join(prog, f"bucket-{b}.json")))
         assert marker["metrics"]["n_docs"] == int(want.n_docs[want.bucket == b].iloc[0])
+
+
+def test_resume_removes_a_killed_runs_staging(spark, pages_pd, tmp_path):
+    """A killed run never removes its ``_staging-<pid>-<bucket>``
+    directory; the next run to hold the writer lock does, and still writes
+    the fresh run's table."""
+    sdf = spark.createDataFrame(pages_pd.head(300))
+    fresh, resumed = str(tmp_path / "fresh"), str(tmp_path / "resumed")
+    run_batch(spark, sdf, fresh, n_buckets=4, run_id="fresh")
+    run_batch(spark, sdf, resumed, n_buckets=4, run_id="first")
+    os.remove(os.path.join(resumed, "_progress", "bucket-2.json"))
+    stale = os.path.join(resumed, "_staging-999999-0")
+    os.makedirs(stale)
+    shutil.copy(os.path.join(resumed, "bucket-00002.parquet"),
+                os.path.join(stale, "bucket-2-a7.parquet"))
+
+    stats = run_batch(spark, sdf, resumed, n_buckets=4, run_id="resume")
+    assert (stats["written"], stats["skipped"]) == (1, 3)
+    assert not os.path.exists(stale)
+    assert not [n for n in os.listdir(resumed) if n.startswith("_staging-")]
+    got_dtypes, got = _rows_but_run_id(spark, resumed)
+    want_dtypes, want = _rows_but_run_id(spark, fresh)
+    assert got_dtypes == want_dtypes
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_fresh_run_launches_no_write_or_read_back_job(spark, pages_pd, tmp_path):

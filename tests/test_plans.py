@@ -114,6 +114,14 @@ def test_word_shingles_split_once(spark, name, n_split):
     assert sum(p.count("split(") for p in plans) == n_split
 
 
+def test_textstats_splits_text_once(spark):
+    """textstats.summary projects the lowercase word array once for all its
+    word statistics; while each statistic split the text itself, the plan
+    printed ``split(`` 180 times."""
+    plans = _executed_plans(spark, "textstats_documents")
+    assert sum(p.count("split(") for p in plans) == 2
+
+
 @pytest.mark.parametrize(
     "name, on",
     [

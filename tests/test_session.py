@@ -127,6 +127,16 @@ def test_parallelism_of_local_star_honours_affinity(monkeypatch):
     assert session._parallelism_of("yarn") is None
 
 
+def test_local_cluster_executors_get_the_package_path():
+    """Executor JVMs of a local-cluster master start Python workers that
+    must import packs_spark; the conf is checked without starting one."""
+    conf = session.session_conf("local-cluster[2,1,1024]")
+    assert conf["spark.executorEnv.PYTHONPATH"] == REPO
+    assert "spark.python.daemon.module" not in conf
+    assert session.session_conf("local[2]")["spark.executorEnv.PYTHONPATH"] == REPO
+    assert "spark.executorEnv.PYTHONPATH" not in session.session_conf("yarn")
+
+
 def test_dataframe_call_site_capture_is_off(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 

@@ -3,7 +3,13 @@
 import os
 import time
 
-from packs_spark.io.sources import data_staleness_days, load_source, read_csv
+from packs_spark import registry
+from packs_spark.io.sources import (
+    data_staleness_days,
+    load_source,
+    read_csv,
+    read_parquet,
+)
 
 
 def test_csv_with_skiprows(spark, tmp_path):
@@ -384,3 +390,52 @@ def test_table_names_starting_with_select_route_as_tables(spark, tmp_path):
          "table_or_query": "SELECT id FROM selections WHERE id > 1"},
     )
     assert q.count() == 1
+
+
+def _jobs(spark, group, fn):
+    """(result of ``fn()``, Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_of_unchanged_file_launches_no_job(spark, tmp_path):
+    """The first read infers the parquet schema with a job; a read of the
+    same, unchanged file reuses that schema and launches none."""
+    spark.range(5).selectExpr("id", "id * 2 AS twice").write.parquet(
+        str(tmp_path / "t.parquet"))
+    first, n_first = _jobs(spark, "load-first",
+                           lambda: registry.load(spark, str(tmp_path), "t"))
+    again, n_again = _jobs(spark, "load-again",
+                           lambda: registry.load(spark, str(tmp_path), "t"))
+    assert n_first >= 1 and n_again == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert read_parquet(spark, path).columns == ["id"]
+    spark.range(3).selectExpr("id", "'x' AS added").write.mode(
+        "overwrite").parquet(path)
+    df, n = _jobs(spark, "load-rewritten", lambda: read_parquet(spark, path))
+    assert n >= 1 and df.columns == ["id", "added"]
+    assert sorted(df.collect()) == [(0, "x"), (1, "x"), (2, "x")]
+
+
+def test_partitioned_directory_keeps_its_partition_column(spark, tmp_path):
+    path = str(tmp_path / "parts")
+    spark.range(6).selectExpr("id", "id % 2 AS key").write.partitionBy(
+        "key").parquet(path)
+    first = read_parquet(spark, path)
+    again, n = _jobs(spark, "load-partitioned",
+                     lambda: load_source(spark, {"type": "parquet",
+                                                 "path": path}))
+    assert n == 0
+    assert again.schema == first.schema and again.columns == ["id", "key"]
+    assert sorted(again.collect()) == [(i, i % 2) for i in range(6)]

@@ -4,12 +4,17 @@ Plan-quality evidence for the operators' scale claims: parquet
 PushedFilters / ReadSchema pruning, BroadcastHashJoin on dim joins,
 partial aggregation (HashAggregate x2), WindowGroupLimit for top-k,
 single-exchange plans.  Regenerate with: python tools/explain_plans.py
+
+The output is deterministic: Exchange ``plan_id`` values and the temporary
+directory of generated pages are replaced by placeholders, so a rerun
+that plans the same gives no ``diff``.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -80,6 +85,13 @@ def _intermediate_sections(spark, sf):
     ]
 
 
+def _stable(plan: str, tmp: str | None = None) -> str:
+    """``plan`` without what changes from run to run: Exchange plan ids and
+    the temporary directory ``tmp`` of generated pages."""
+    plan = re.sub(r"plan_id=\d+", "plan_id=#", plan)
+    return plan.replace(tmp, "<tmp>") if tmp else plan
+
+
 def main() -> None:
     from packs_spark.session import get_spark
     import __spark_entry__ as entry_mod
@@ -101,7 +113,7 @@ def main() -> None:
         out.append(f"## {name}")
         out.append(f"*{note}*")
         out.append("```")
-        out.append(buf.getvalue().rstrip())
+        out.append(_stable(buf.getvalue().rstrip()))
         out.append("```")
         out.append("")
     # the north-star pipeline's labeling plan over one full wave placed as
@@ -137,7 +149,7 @@ def main() -> None:
         "each task writes its buckets' files*"
     )
     out.append("```")
-    out.append(buf.getvalue().rstrip())
+    out.append(_stable(buf.getvalue().rstrip(), tmp))
     out.append("```")
     out.append("")
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
