@@ -16,9 +16,16 @@ collect; schema-level expectations never touch data at all.
 
 * The plain pass, ``df.agg(...)``, holds every plain and object aggregate
   (counts, sums, percentile, mode, collect_set).
-* The distinct pass, a second ``df.agg(...)``, holds only the checks that
-  use ``countDistinct`` (distinct/duplicate counts and compound-column
-  uniqueness).
+* The distinct passes, one ``df.agg(...)`` per distinct column, hold only
+  the checks that use ``countDistinct`` (distinct/duplicate counts and
+  compound-column uniqueness).  With one distinct column per pass Catalyst
+  plans no Expand, and the plan is the same on every run: two or more
+  distinct columns in one ``agg`` get their Expand groups in an order that
+  changes from run to run, so their generated code missed Spark's codegen
+  cache and was compiled again on every evaluation (6 classes, ~0.2 s,
+  for the registry suite), and the suite's time varied with what the JIT
+  had already compiled.  The extra passes cost ~0.1 s of a warm run at
+  scale 0.005 (median of 11: 0.75-0.97 s against 0.65-0.74 s).
 * expect_table_row_count_to_equal_other_table adds a count over the other
   table.
 
@@ -120,7 +127,7 @@ class _Compiled:
     column: str | None = None  # result label; default kwargs["column"]
     label: str = ""
     error: str | None = None
-    distinct: bool = False  # aggs use countDistinct: the second pass
+    distinct: bool = False  # aggs use countDistinct: a distinct pass
     # aggregates over another frame; their values follow those of aggs
     other: tuple[DataFrame, list[Column]] | None = None
     values: list | None = None  # the collected aggs
@@ -1016,15 +1023,20 @@ def _collect_row(parts: list[tuple[DataFrame, list[Column]]]) -> list:
 
 def _aggregate(df: DataFrame, checks: list[_Compiled]) -> None:
     """Collect the aggregates of ``checks`` into their ``values``: the plain
-    pass, the countDistinct pass and each check's other frame, in one
-    collect."""
+    pass, one countDistinct pass per distinct column and each check's other
+    frame, in one collect."""
     plain = [comp for comp in checks if not comp.distinct]
-    distinct = [comp for comp in checks if comp.distinct]
+    by_column: dict[str | None, list[_Compiled]] = {}
+    for comp in checks:
+        if comp.distinct:
+            by_column.setdefault(comp.column, []).append(comp)
+    distinct = [comp for group in by_column.values() for comp in group]
     other = [comp for comp in checks if comp.other]
     try:
         row = iter(_collect_row(
-            [(df, [a for comp in plain for a in comp.aggs]),
-             (df, [a for comp in distinct for a in comp.aggs])]
+            [(df, [a for comp in plain for a in comp.aggs])]
+            + [(df, [a for comp in group for a in comp.aggs])
+               for group in by_column.values()]
             + [comp.other for comp in other]))
         for comp in plain + distinct:
             comp.values = [next(row) for _ in comp.aggs]

@@ -50,14 +50,17 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+def _top_k(pairs: DataFrame, k: int, score: Column | None = None) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): the k best-scoring neighbors
-    per query of (query_id, neighbor_id, qv, cv) pairs, cosine rounded to 6
-    digits and ties broken by neighbor id ascending for determinism."""
+    per query of (query_id, neighbor_id, qv, cv) pairs, cosine (``score``,
+    by default computed from qv and cv) rounded to 6 digits and ties broken
+    by neighbor id ascending for determinism."""
+    if score is None:
+        score = cosine(F.col("qv"), F.col("cv"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
+        F.round(score, 6).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
@@ -80,12 +83,17 @@ def topk_bruteforce(
     """Exact top-k by cosine per query: (query_id, neighbor_id, cosine, rank).
 
     Ties broken by neighbor id ascending for determinism; self-matches
-    (same id) excluded.
+    (same id) excluded.  Each side's norms are computed once per vector,
+    before the cross join, so a pair folds only its dot product; the
+    cosine is the same double as :func:`cosine` gives.
     """
-    q = F.broadcast(_queries(queries, query_id_col, vec_col))
+    q = _queries(queries, query_id_col, vec_col)
+    q = F.broadcast(q.withColumn("qn", norm(F.col("qv"))))
     c = _corpus(corpus, id_col, vec_col)
+    c = c.withColumn("cn", norm(F.col("cv")))
     return _top_k(
-        q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")), k
+        q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")), k,
+        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
     )
 
 

@@ -115,6 +115,16 @@ def session_conf(
         # those plans to interpreted mode — raise it so wide single-pass
         # aggregations stay inside codegen.
         "spark.sql.codegen.maxFields": "500",
+        # Spark keeps 100 generated classes per JVM by default.  One pass of
+        # seven registry queries generates ~110, so each pass evicted the
+        # classes the next one needed and compiled them all again (~1 s of
+        # Janino per pass at local[4], plus the JIT of the new classes).
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        # The cache is keyed by the generated source, and by default the
+        # whole-stage class name holds the codegen stage id.  Under AQE the
+        # ids follow the order in which concurrent stages finish, so the
+        # same plan could miss the cache from one run to the next.
+        "spark.sql.codegen.useIdInClassName": "false",
         # PySpark 4 records the Python call site of every DataFrame and
         # Column call (pyspark.errors.utils._with_origin): an active-session
         # lookup, a conf read and a JVM origin set + clear, about two thirds

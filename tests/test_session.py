@@ -137,6 +137,31 @@ def test_local_cluster_executors_get_the_package_path():
     assert "spark.executorEnv.PYTHONPATH" not in session.session_conf("yarn")
 
 
+def test_rerunning_queries_compiles_no_code(spark, sf_dir):
+    """Spark's codegen cache holds every class of a pass over these
+    queries (more than its default 100 entries), their whole-stage class
+    names carry no AQE stage id, and the GX suite's distinct passes plan
+    no Expand (whose group order changes from run to run), so a second
+    pass reuses every generated class."""
+    from pyspark.sql import SparkSession
+
+    from packs_spark.registry import queries
+
+    names = ["events_sessionization", "expectations_suite_orders",
+             "drift_psi_lineitem",
+             "dedup_exact_documents", "similarity_topk_bruteforce",
+             "textstats_documents", "multimodal_metadata_documents"]
+    jvm = SparkSession.getActiveSession().sparkContext._jvm
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    for name in names:
+        queries()[name](spark, sf_dir).collect()
+    before = compiled.getCount()
+    for name in names:
+        queries()[name](spark, sf_dir).collect()
+    assert compiled.getCount() == before
+
+
 def test_dataframe_call_site_capture_is_off(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 

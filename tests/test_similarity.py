@@ -44,6 +44,22 @@ def test_bruteforce_matches_numpy(spark, embeddings):
             assert abs(gc - ec) < 1e-5
 
 
+def test_bruteforce_scores_equal_the_pairwise_cosine(spark, embeddings):
+    """Norms computed once per vector give the very doubles that
+    ``cosine`` computes per pair."""
+    queries = embeddings.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = similarity.topk_bruteforce(embeddings, queries, k=5)
+    pairs = (
+        similarity._queries(queries, "query_id", "embedding")
+        .crossJoin(similarity._corpus(embeddings, "vec_id", "embedding"))
+        .where(F.col("query_id") != F.col("neighbor_id"))
+    )
+    plain = similarity._top_k(pairs, 5)
+    assert sorted(got.collect()) == sorted(plain.collect())
+
+
 def test_lsh_recall_at_least_bucket_fraction(spark, embeddings):
     """Multi-table LSH (4 planes x 8 tables): hit prob for cosine≈0.35
     neighbors is ~0.7 per pair → recall@5 well above 0.4 on 20 queries;
