@@ -1,30 +1,17 @@
-"""Pure-stdlib media codecs for the multimodal operators.
-
-This container ships no Pillow/ffmpeg/soundfile, but "decode is stubbed"
-was the one honest gap in the multimodal tier — so the two formats whose
-specs are fully servable from the standard library are implemented for
-real here:
+"""Pure-stdlib PNG/WAV codecs and the JPEG SOF header reader.
 
 * PNG (ISO/IEC 15948): chunk parse + zlib inflate + scanline unfilter
   (all five filter types), 8-bit depth, color types 0/2/3/4/6,
   non-interlaced.  Encoder emits filter-0 RGB/RGBA/gray.
 * WAV (RIFF PCM): stdlib ``wave`` for container parsing, numpy for the
   sample buffer.  8/16/32-bit PCM.
+* JPEG: :func:`parse_jpeg_header` walks the marker segments to the SOF
+  frame header (ITU-T T.81 §B.2) without touching entropy-coded data.
 
-JPEG pixel decode stays Pillow-gated (a pure-python baseline-JPEG decoder
-is not a sensible use of engine code), but the METADATA tier is
-Pillow-free: :func:`parse_jpeg_header` walks the marker segments to the
-SOF frame header (ITU-T T.81 §B.2) and returns (width, height, channels)
-without touching entropy-coded data.  Video gets the same treatment:
-MP4/MOV pixel decode needs ffmpeg, but the CONTAINER tier
-(:func:`parse_mp4_metadata`, :func:`mp4_sample_ranges`) is stdlib — box
-walk per ISO/IEC 14496-12 for duration/tracks/codec/dimensions, and the
-stsz×stsc×stco×stss sample-table join that maps every (key)frame to its
-byte range, which is all a frame SAMPLER needs.  Callers fall back to these decoders
-only when Pillow is absent, so a real deployment with Pillow installed
-never pays the python filter loop.  At fixture scale (tests) the loops
-touch KB-sized images; the Sub/Up filters — the common ones — are
-vectorized.
+No engine entry point calls these: the multimodal tier
+(``operators/multimodal.py``) only sniffs formats and counts bytes.  The
+module and its tests are the rest of ROADMAP item 10, to be deleted in
+a follow-up change.
 """
 
 from __future__ import annotations
@@ -37,7 +24,6 @@ import zlib
 import numpy as np
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-JPEG_MAGIC = b"\xff\xd8\xff"
 
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
@@ -47,17 +33,11 @@ _JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
 def parse_jpeg_header(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, channels) from a JPEG's SOF frame header — metadata
-    only, no pixel decode (that stays Pillow-gated).
+    """(width, height, channels) from a JPEG's SOF frame header.
 
-    Walks the marker-segment stream (ITU-T T.81 §B.2): each non-standalone
-    marker carries a 2-byte big-endian length, so this is O(#segments) over
-    header bytes and never reads entropy-coded scan data.  Handles fill
-    bytes, standalone markers (SOI/TEM/RSTn), and every SOFn variant
-    (baseline SOF0 through progressive SOF2 and the arithmetic frames).
-
-    Raises ValueError if no SOF marker appears before SOS/EOI/end-of-bytes
-    (truncated or non-JPEG payload).
+    Each non-standalone marker carries a 2-byte big-endian length, so this
+    is O(#segments) over header bytes and never reads scan data.  Raises
+    ValueError if no SOF marker appears before SOS/EOI/end-of-bytes.
     """
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI marker)")
@@ -90,9 +70,7 @@ def parse_jpeg_header(payload: bytes) -> tuple[int, int, int]:
 
 
 def decode_png(payload: bytes) -> np.ndarray:
-    """PNG bytes → (H, W, C) uint8 array.  8-bit, non-interlaced only
-    (the overwhelmingly common case; Pillow covers the rest when
-    installed)."""
+    """PNG bytes → (H, W, C) uint8 array.  8-bit, non-interlaced only."""
     if payload[:8] != PNG_MAGIC:
         raise ValueError("not a PNG payload")
     pos, idat, plte = 8, [], None
@@ -222,442 +200,3 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
         f.writeframes(samples.astype("<i2").tobytes())
     return buf.getvalue()
 
-
-def _lzw_decode(min_code_size: int, data: bytes) -> bytes:
-    """GIF-variant LZW (variable code width, LSB-first bit packing)."""
-    clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-    code_size = min_code_size + 1
-    table: dict[int, bytes] = {i: bytes([i]) for i in range(clear)}
-    next_code = end + 1
-    out = bytearray()
-    prev: bytes | None = None
-    bitpos, total = 0, len(data) * 8
-    while bitpos + code_size <= total:
-        byte_i, bit_o = bitpos >> 3, bitpos & 7
-        chunk = int.from_bytes(data[byte_i : byte_i + 4], "little")
-        code = (chunk >> bit_o) & ((1 << code_size) - 1)
-        bitpos += code_size
-        if code == clear:
-            code_size = min_code_size + 1
-            table = {i: bytes([i]) for i in range(clear)}
-            next_code = end + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            entry = table[code]
-        elif code in table:
-            entry = table[code]
-            table[next_code] = prev + entry[:1]
-            next_code += 1
-        elif code == next_code:  # the KwKwK case
-            entry = prev + prev[:1]
-            table[next_code] = entry
-            next_code += 1
-        else:
-            raise ValueError("corrupt LZW stream")
-        out += entry
-        prev = entry
-        if next_code == (1 << code_size) and code_size < 12:
-            code_size += 1
-    return bytes(out)
-
-
-def _deinterlace(idx: np.ndarray) -> np.ndarray:
-    h = idx.shape[0]
-    order = (
-        list(range(0, h, 8)) + list(range(4, h, 8))
-        + list(range(2, h, 4)) + list(range(1, h, 2))
-    )
-    out = np.empty_like(idx)
-    out[order] = idx
-    return out
-
-
-def decode_gif_frames(payload: bytes, max_frames: int | None = None) -> list:
-    """GIF bytes → list of fully-composited (H, W, 3) uint8 frames.
-
-    Real multi-frame decode from the stdlib alone: LZW inflate, local/
-    global palettes, interlacing, transparency, and disposal methods
-    0-3 (each returned frame is the full canvas as a viewer would show
-    it, not the raw patch)."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    w, h = struct.unpack("<HH", payload[6:10])
-    flags, bg = payload[10], payload[11]
-    pos, gct = 13, None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(payload[pos : pos + 3 * n], np.uint8).reshape(-1, 3)
-        pos += 3 * n
-    canvas = np.zeros((h, w, 3), np.uint8)
-    if gct is not None:
-        canvas[:] = gct[bg]
-    frames: list = []
-    transparent, disposal = None, 0
-    while pos < len(payload):
-        b0 = payload[pos]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension
-            label = payload[pos + 1]
-            pos += 2
-            if label == 0xF9 and payload[pos] >= 4:  # graphic control
-                block = payload[pos + 1 : pos + 1 + payload[pos]]
-                disposal = (block[0] >> 2) & 7
-                transparent = block[3] if block[0] & 1 else None
-            while payload[pos] != 0:
-                pos += payload[pos] + 1
-            pos += 1
-        elif b0 == 0x2C:  # image descriptor
-            x, y, iw, ih = struct.unpack("<HHHH", payload[pos + 1 : pos + 9])
-            iflags = payload[pos + 9]
-            pos += 10
-            if iflags & 0x80:
-                n = 2 << (iflags & 7)
-                lct = np.frombuffer(
-                    payload[pos : pos + 3 * n], np.uint8
-                ).reshape(-1, 3)
-                pos += 3 * n
-            else:
-                lct = gct
-            if lct is None:
-                raise ValueError("GIF image without a color table")
-            min_code = payload[pos]
-            pos += 1
-            lzw = bytearray()
-            while payload[pos] != 0:
-                sz = payload[pos]
-                lzw += payload[pos + 1 : pos + 1 + sz]
-                pos += sz + 1
-            pos += 1
-            raw = _lzw_decode(min_code, bytes(lzw))[: iw * ih]
-            idx = np.frombuffer(raw, np.uint8).reshape(ih, iw)
-            if iflags & 0x40:
-                idx = _deinterlace(idx)
-            patch = lct[idx]
-            saved = canvas[y : y + ih, x : x + iw].copy()
-            region = canvas[y : y + ih, x : x + iw]
-            if transparent is not None:
-                mask = idx != transparent
-                region[mask] = patch[mask]
-            else:
-                region[:] = patch
-            frames.append(canvas.copy())
-            if disposal == 2:  # restore to background
-                canvas[y : y + ih, x : x + iw] = (
-                    gct[bg] if gct is not None else 0
-                )
-            elif disposal == 3:  # restore to previous
-                canvas[y : y + ih, x : x + iw] = saved
-            transparent, disposal = None, 0
-            if max_frames is not None and len(frames) >= max_frames:
-                break
-        else:
-            raise ValueError(f"unexpected GIF block 0x{b0:02x}")
-    return frames
-
-
-def _lzw_encode_literal(data: bytes, min_code_size: int = 8) -> bytes:
-    """Literal-code LZW: every byte emitted as its own code, with CLEAR
-    codes keeping the table small enough that the code width never grows
-    past min_code_size+1.  ~25% size overhead; trivially correct — the
-    encoder a test fixture wants."""
-    clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-    code_size = min_code_size + 1
-    bits, acc, nbits = bytearray(), 0, 0
-
-    def emit(code: int):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            bits.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    for i, b in enumerate(data):
-        if i and i % 200 == 0:  # table would hit 2^code_size at ~254
-            emit(clear)
-        emit(b)
-    emit(end)
-    if nbits:
-        bits.append(acc & 0xFF)
-    return bytes(bits)
-
-
-def encode_gif(frames: list, palette: np.ndarray | None = None) -> bytes:
-    """List of (H, W) uint8 palette-index frames → animated GIF (global
-    256-color table; grayscale identity palette by default)."""
-    h, w = frames[0].shape
-    if palette is None:
-        g = np.arange(256, dtype=np.uint8)
-        palette = np.stack([g, g, g], axis=1)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | 0x07, 0, 0])  # 256-entry GCT, bg index 0
-    out += palette.astype(np.uint8).tobytes()
-    for fr in frames:
-        out += b"\x21\xf9\x04\x00\x00\x00\x00\x00"  # GCE, no transparency
-        out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-        out += bytes([8])
-        stream = _lzw_encode_literal(fr.astype(np.uint8).tobytes())
-        for i in range(0, len(stream), 255):
-            block = stream[i : i + 255]
-            out += bytes([len(block)]) + block
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def resize_nearest(img: np.ndarray, target: tuple[int, int]) -> np.ndarray:
-    """Nearest-neighbor resize of (H, W, C) to (target_w, target_h) — the
-    deterministic resize used when Pillow's resamplers are unavailable."""
-    tw, th = target
-    h, w = img.shape[:2]
-    ys = (np.arange(th) * h // th).clip(0, h - 1)
-    xs = (np.arange(tw) * w // tw).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
-# ---------------------------------------------------------------------------
-# ISO BMFF (MP4/MOV, ISO/IEC 14496-12) — container-level parsing only.
-# Pixel/audio decode of the coded samples needs ffmpeg and stays gated;
-# what IS fully servable from the stdlib is the box structure: duration,
-# track layout, codec fourcc, and the sample tables (stsz/stsc/stco/stss)
-# that map sample index → byte range — which is exactly what a frame
-# SAMPLER needs (it selects and slices coded samples; it never decodes).
-
-
-def _iter_boxes(buf: bytes, start: int, end: int):
-    """Yield (type, payload_start, payload_end) for the boxes in
-    buf[start:end] (ISO 14496-12 §4.2: 32-bit size, size==1 → 64-bit
-    largesize follows, size==0 → box extends to the end)."""
-    pos = start
-    while pos + 8 <= end:
-        size = struct.unpack_from(">I", buf, pos)[0]
-        btype = buf[pos + 4 : pos + 8]
-        head = 8
-        if size == 1:
-            if pos + 16 > end:
-                raise ValueError("truncated largesize box")
-            size = struct.unpack_from(">Q", buf, pos + 8)[0]
-            head = 16
-        elif size == 0:
-            size = end - pos
-        if size < head or pos + size > end:
-            raise ValueError(f"invalid box size {size} at offset {pos}")
-        yield btype, pos + head, pos + size
-        pos += size
-
-
-def _find_box(buf: bytes, start: int, end: int, btype: bytes):
-    for t, s, e in _iter_boxes(buf, start, end):
-        if t == btype:
-            return s, e
-    return None
-
-
-def _full_box(buf: bytes, start: int) -> tuple[int, int]:
-    """(version, flags) of a FullBox; payload begins at start+4."""
-    v_f = struct.unpack_from(">I", buf, start)[0]
-    return v_f >> 24, v_f & 0xFFFFFF
-
-
-def parse_mp4_metadata(payload: bytes) -> dict:
-    """Container metadata of an ISO BMFF file, stdlib-only.
-
-    Returns ``{brand, duration_s, tracks: [{handler, codec, width,
-    height, n_samples, n_keyframes}]}``.  Raises ValueError on anything
-    that is not a parseable BMFF stream (callers contain it per-row).
-    Reference scope: the multimodal metadata tier
-    (multimodal_metadata_documents) — video twin of parse_jpeg_header.
-    """
-    try:
-        return _parse_mp4_metadata(payload)
-    except struct.error as e:
-        # corrupted counts/offsets inside otherwise well-framed boxes
-        # reach unpack_from directly; normalize to the documented error
-        raise ValueError(f"corrupt BMFF structure: {e}") from e
-
-
-def _parse_mp4_metadata(payload: bytes) -> dict:
-    buf = bytes(payload)
-    brand = ""
-    duration_s = None
-    tracks = []
-    ftyp = _find_box(buf, 0, len(buf), b"ftyp")
-    if ftyp:
-        brand = buf[ftyp[0] : ftyp[0] + 4].decode("ascii", "replace")
-    moov = _find_box(buf, 0, len(buf), b"moov")
-    if moov is None:
-        raise ValueError("no moov box: not a parseable BMFF stream")
-    mvhd = _find_box(buf, moov[0], moov[1], b"mvhd")
-    if mvhd:
-        ver, _ = _full_box(buf, mvhd[0])
-        if ver == 1:
-            timescale, duration = struct.unpack_from(">IQ", buf, mvhd[0] + 20)
-        else:
-            timescale, duration = struct.unpack_from(">II", buf, mvhd[0] + 12)
-        if timescale:
-            duration_s = round(duration / timescale, 3)
-    for t, s, e in _iter_boxes(buf, moov[0], moov[1]):
-        if t != b"trak":
-            continue
-        tracks.append(_parse_trak(buf, s, e))
-    return {"brand": brand, "duration_s": duration_s, "tracks": tracks}
-
-
-def _parse_trak(buf: bytes, start: int, end: int) -> dict:
-    width = height = 0
-    tkhd = _find_box(buf, start, end, b"tkhd")
-    # minimum tkhd payload is 84 bytes for v0 (fullbox 4 + times/ids 24 +
-    # layer/volume/matrix 48 + width/height 8) and 96 for v1 (64-bit
-    # times add 12); a truncated/corrupt box must not read width/height
-    # from bytes BEFORE its own payload — or, for a v1 box between 84 and
-    # 95 bytes, from inside the matrix fields
-    if tkhd and tkhd[1] - tkhd[0] >= 84:
-        ver, _ = _full_box(buf, tkhd[0])
-        if tkhd[1] - tkhd[0] >= (96 if ver else 84):
-            # width/height are the LAST two 16.16 fixed-point fields of
-            # tkhd (§8.3.2) — offset from the end dodges the version split
-            width = struct.unpack_from(">I", buf, tkhd[1] - 8)[0] >> 16
-            height = struct.unpack_from(">I", buf, tkhd[1] - 4)[0] >> 16
-    handler = codec = ""
-    n_samples = n_keyframes = 0
-    mdia = _find_box(buf, start, end, b"mdia")
-    if mdia:
-        hdlr = _find_box(buf, mdia[0], mdia[1], b"hdlr")
-        if hdlr:
-            handler = buf[hdlr[0] + 8 : hdlr[0] + 12].decode("ascii", "replace")
-        stbl = _stbl_of(buf, mdia)
-        if stbl:
-            stsd = _find_box(buf, stbl[0], stbl[1], b"stsd")
-            if stsd:
-                # first SampleEntry: fullbox(4) + entry_count(4) +
-                # size(4), then the codec fourcc
-                codec = buf[stsd[0] + 12 : stsd[0] + 16].decode(
-                    "ascii", "replace"
-                )
-            stsz = _find_box(buf, stbl[0], stbl[1], b"stsz")
-            if stsz:
-                n_samples = struct.unpack_from(">I", buf, stsz[0] + 8)[0]
-            stss = _find_box(buf, stbl[0], stbl[1], b"stss")
-            if stss:
-                n_keyframes = struct.unpack_from(">I", buf, stss[0] + 4)[0]
-            elif n_samples:
-                n_keyframes = n_samples  # no stss → every sample is a sync
-    return {
-        "handler": handler,
-        "codec": codec,
-        "width": width,
-        "height": height,
-        "n_samples": n_samples,
-        "n_keyframes": n_keyframes,
-    }
-
-
-def _stbl_of(buf: bytes, mdia: tuple[int, int]):
-    minf = _find_box(buf, mdia[0], mdia[1], b"minf")
-    if minf is None:
-        return None
-    return _find_box(buf, minf[0], minf[1], b"stbl")
-
-
-def mp4_sample_ranges(payload: bytes, handler: bytes = b"vide") -> list:
-    """(offset, size, is_keyframe) per sample of the first track with the
-    given handler — the sample-table join (stsc × stco × stsz × stss,
-    §8.7) that a frame sampler runs to slice coded samples out of the
-    container without any codec work."""
-    try:
-        return _mp4_sample_ranges(payload, handler)
-    except struct.error as e:
-        raise ValueError(f"corrupt BMFF structure: {e}") from e
-
-
-def _mp4_sample_ranges(payload: bytes, handler: bytes) -> list:
-    buf = bytes(payload)
-    moov = _find_box(buf, 0, len(buf), b"moov")
-    if moov is None:
-        raise ValueError("no moov box: not a parseable BMFF stream")
-    for t, s, e in _iter_boxes(buf, moov[0], moov[1]):
-        if t != b"trak":
-            continue
-        mdia = _find_box(buf, s, e, b"mdia")
-        if mdia is None:
-            continue
-        hdlr = _find_box(buf, mdia[0], mdia[1], b"hdlr")
-        if hdlr is None or buf[hdlr[0] + 8 : hdlr[0] + 12] != handler:
-            continue
-        stbl = _stbl_of(buf, mdia)
-        if stbl is None:
-            continue
-        return _sample_ranges_of_stbl(buf, stbl)
-    return []
-
-
-def _sample_ranges_of_stbl(buf: bytes, stbl: tuple[int, int]) -> list:
-    stsz = _find_box(buf, stbl[0], stbl[1], b"stsz")
-    stsc = _find_box(buf, stbl[0], stbl[1], b"stsc")
-    stco = _find_box(buf, stbl[0], stbl[1], b"stco")
-    co64 = _find_box(buf, stbl[0], stbl[1], b"co64")
-    if stsz is None or stsc is None or (stco is None and co64 is None):
-        raise ValueError("incomplete sample table (stsz/stsc/stco)")
-
-    fixed, n_samples = struct.unpack_from(">II", buf, stsz[0] + 4)
-    # a sample count exceeding the file's byte length is corrupt by
-    # construction — without this bound the fixed-size branch would
-    # allocate [fixed] * n_samples for a 32-bit garbage count (the
-    # per-sample branch is implicitly bounded by unpack_from validating
-    # 4 * n_samples against the buffer)
-    if n_samples > len(buf):
-        raise ValueError(f"stsz sample_count {n_samples} exceeds file size")
-    sizes = (
-        [fixed] * n_samples
-        if fixed
-        else list(struct.unpack_from(f">{n_samples}I", buf, stsz[0] + 12))
-    )
-
-    if stco is not None:
-        n_chunks = struct.unpack_from(">I", buf, stco[0] + 4)[0]
-        offsets = struct.unpack_from(f">{n_chunks}I", buf, stco[0] + 8)
-    else:
-        n_chunks = struct.unpack_from(">I", buf, co64[0] + 4)[0]
-        offsets = struct.unpack_from(f">{n_chunks}Q", buf, co64[0] + 8)
-
-    n_runs = struct.unpack_from(">I", buf, stsc[0] + 4)[0]
-    runs = [
-        struct.unpack_from(">III", buf, stsc[0] + 8 + 12 * i)[:2]
-        for i in range(n_runs)
-    ]  # (first_chunk 1-based, samples_per_chunk)
-
-    keyframes = None
-    stss = _find_box(buf, stbl[0], stbl[1], b"stss")
-    if stss:
-        n_sync = struct.unpack_from(">I", buf, stss[0] + 4)[0]
-        keyframes = set(struct.unpack_from(f">{n_sync}I", buf, stss[0] + 8))
-
-    out = []
-    sample = 0  # 0-based
-    for run_i, (first_chunk, per_chunk) in enumerate(runs):
-        # chunks are 1-based (§8.7.4); a corrupt first_chunk of 0 would
-        # otherwise wrap offsets[-1] to the LAST chunk and return
-        # well-formed but wrong byte ranges instead of raising
-        if not 1 <= first_chunk <= n_chunks:
-            raise ValueError(f"stsc first_chunk {first_chunk} out of range")
-        last_chunk = (
-            runs[run_i + 1][0] - 1 if run_i + 1 < n_runs else n_chunks
-        )
-        for chunk in range(first_chunk, last_chunk + 1):
-            pos = offsets[chunk - 1]
-            for _ in range(per_chunk):
-                if sample >= n_samples:
-                    return out
-                size = sizes[sample]
-                sync = keyframes is None or (sample + 1) in keyframes
-                out.append((pos, size, sync))
-                pos += size
-                sample += 1
-    return out

@@ -1,23 +1,20 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, processed with Arrow-batched ``mapInPandas``.
+metadata, computed per Arrow batch inside pandas UDFs.
 
-Decode tiers:
+Per payload the engine computes three things:
 
-* PNG and WAV decode FOR REAL via pure-stdlib codecs
-  (operators/codecs.py — zlib chunk-inflate + scanline unfilter, and the
-  ``wave`` module); ``image_features``/``audio_features``/``resize_images``
-  run them inside ``mapInPandas``.
-* Pillow, when installed, takes over image decode (all formats, C-speed);
-  JPEG and compressed audio without Pillow/ffmpeg raise
-  ``NotImplementedError`` naming the dependency.
-* ``fake_decode_features`` remains the deterministic codec-free stand-in
-  (byte histogram) used by the oracle-gated metadata query, whose output
-  must be reproducible by DuckDB SQL — a real pixel decode never can be.
+* its container format, sniffed from the leading magic bytes
+  (:func:`sniff_format`; an ISO BMFF ``ftyp`` box counts only behind a
+  plausible box size);
+* its byte count;
+* ``fake_decode_features``, a 16-bucket byte histogram standing in for a
+  decode→embed step, so the oracle-gated metadata query stays
+  reproducible by DuckDB SQL — a real pixel decode never can be.
 
-At scale the pattern is the one that matters: binary payloads NEVER pass
-through Python row-at-a-time; ``mapInPandas`` streams Arrow record batches
-whose binary columns are zero-copy buffers, and per-batch numpy does the
-feature math.
+:func:`extract_metadata` projects all three (one ``mapInPandas`` pass);
+:func:`media_metadata_col` adds (format, n_bytes) as a struct column in
+place, for ``run_batch(multimodal=True)``.  No pixel or sample decoder
+ships: one belongs here only together with an entry point that calls it.
 """
 
 from __future__ import annotations
@@ -68,43 +65,11 @@ def _box_size_ok(payload: bytes) -> bool:
     return size >= 8 or size in (0, 1)
 
 
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Image bytes → (H, W, C) uint8 array.
-
-    Pillow when installed (all formats, C-speed); otherwise the
-    pure-stdlib PNG decoder in operators/codecs.py (full filter support,
-    8-bit non-interlaced).  JPEG without Pillow raises — a pure-python
-    baseline-JPEG decoder is deliberately out of scope."""
-    try:  # pragma: no cover - Pillow absent in this container
-        import io
-
-        from PIL import Image
-
-        return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
-    except ImportError:
-        pass
-    from packs_spark.operators.codecs import PNG_MAGIC, decode_png
-
-    if payload[:8] == PNG_MAGIC:
-        return decode_png(payload)
-    raise NotImplementedError(
-        f"decoding {sniff_format(payload)} images requires Pillow "
-        "(PIL.Image.open); only PNG decodes with the stdlib fallback"
-    )
-
-
-def decode_audio(payload: bytes) -> tuple["np.ndarray", int]:
-    """Audio bytes → ((n_frames, channels) int32 array, sample_rate).
-
-    WAV/PCM decodes for real via the stdlib ``wave`` module
-    (operators/codecs.py); compressed codecs require soundfile/ffmpeg."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        from packs_spark.operators.codecs import decode_wav
-
-        return decode_wav(payload)
-    raise NotImplementedError(
-        f"decoding {sniff_format(payload)} audio requires soundfile/ffmpeg; "
-        "only RIFF/WAVE PCM decodes with the stdlib fallback"
+def _format_and_bytes(payloads: pd.Series) -> tuple[list[str], list[int]]:
+    """(format, n_bytes) per payload; a null payload is ("empty", 0)."""
+    return (
+        [sniff_format(p) for p in payloads],
+        [len(p) if p is not None else 0 for p in payloads],
     )
 
 
@@ -135,14 +100,13 @@ def extract_metadata(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf[binary_col]
+            formats, n_bytes = _format_and_bytes(payloads)
             feats = fake_decode_features(payloads)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
-                    "n_bytes": [
-                        len(p) if p is not None else 0 for p in payloads
-                    ],
-                    "format": [sniff_format(p) for p in payloads],
+                    "n_bytes": n_bytes,
+                    "format": formats,
                     "features": [f.tolist() for f in feats],
                 }
             )
@@ -159,315 +123,7 @@ def media_metadata_col(binary_col) -> F.Column:
 
     @F.pandas_udf("format string, n_bytes bigint")
     def _meta(p: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "format": [sniff_format(x) for x in p],
-                "n_bytes": [len(x) if x is not None else 0 for x in p],
-            }
-        )
+        formats, n_bytes = _format_and_bytes(p)
+        return pd.DataFrame({"format": formats, "n_bytes": n_bytes})
 
     return _meta(binary_col)
-
-
-def frame_sample(
-    df: DataFrame,
-    binary_col: str = "payload",
-    id_col: str = "url",
-    every_n: int = 30,
-    max_frames: int = 10,
-) -> DataFrame:
-    """Frame sampling: explode each payload into (id, frame_idx,
-    frame_bytes) rows — the 1→N row shape a video sampler produces.
-
-    Animated GIF (the one multi-frame container decodable from the
-    stdlib) decodes FOR REAL — LZW inflate + disposal-aware compositing
-    (operators/codecs.py), keeping every ``every_n``-th composited frame
-    re-encoded as PNG.  MP4/MOV payloads sample FOR REAL at the container
-    level: the stdlib BMFF sample-table join (codecs.mp4_sample_ranges)
-    slices the coded bytes of every ``every_n``-th keyframe out of mdat —
-    exactly what a distributed sampler ships to a decode stage (decoding
-    those samples to pixels still needs ffmpeg).  Other containers (webm)
-    use the deterministic byte-slice stand-in so the explode/partitioning/
-    schema contract holds for every payload."""
-    schema = f"{id_col} string, frame_idx int, frame_bytes binary"
-
-    from packs_spark.operators.codecs import (
-        decode_gif_frames,
-        encode_png,
-        mp4_sample_ranges,
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, p in zip(pdf[id_col], pdf[binary_col]):
-                if p is not None and bytes(p[:4]) == b"GIF8":
-                    # corrupt GIFs (truncated/bad LZW) fall through to the
-                    # stand-in instead of failing the task — at corpus
-                    # scale a fraction of payloads is always corrupt.
-                    # The sampled rows are built COMPLETELY before being
-                    # appended: extending from a generator inside the try
-                    # would leave partial real rows followed by stand-in
-                    # rows for the same id on a mid-stream failure.
-                    try:
-                        frames = decode_gif_frames(
-                            bytes(p), max_frames=max_frames * every_n
-                        )
-                        gif_rows = [
-                            (rid, k, encode_png(frames[i]))
-                            for k, i in enumerate(
-                                range(0, len(frames), every_n)
-                            )
-                            if k < max_frames
-                        ]
-                        rows.extend(gif_rows)
-                        continue
-                    except Exception:
-                        pass
-                if (
-                    p is not None
-                    and len(p) >= 8
-                    and bytes(p[4:8]) == b"ftyp"
-                    and _box_size_ok(bytes(p[:4]))
-                ):
-                    # real container-level sampling: keyframe coded bytes
-                    # via the BMFF sample tables.  Corrupt/fragmented
-                    # files (no stbl; moof-based) fall through to the
-                    # stand-in, same containment as GIF above
-                    try:
-                        pb = bytes(p)
-                        ranges = mp4_sample_ranges(pb)
-                        # keyframes are the samplable points; a stream
-                        # with no sync table treats every sample as one
-                        keys = [r for r in ranges if r[2]] or ranges
-                        # same partial-append invariant as the GIF path:
-                        # build the full list before extending rows
-                        mp4_rows = [
-                            (rid, k, pb[off : off + size])
-                            for k, (off, size, _) in enumerate(
-                                keys[:: max(1, every_n)][:max_frames]
-                            )
-                        ]
-                        if mp4_rows:
-                            rows.extend(mp4_rows)
-                            continue
-                    except Exception:
-                        pass
-                # STAND-IN for codec-dependent containers (ffmpeg):
-                # frame count from byte length, frame bytes = a slice
-                n_frames = (len(p) if p else 0) // every_n
-                rows.extend(
-                    (rid, i, bytes(p[i : i + 16]))
-                    for i in range(min(n_frames, max_frames))
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "frame_idx", "frame_bytes"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(op, schema=schema)
-
-
-def resize_images(
-    df: DataFrame,
-    binary_col: str = "payload",
-    id_col: str = "url",
-    target: tuple[int, int] = (64, 64),
-) -> DataFrame:
-    """Image resize: (id, width, height, resized binary) per row — the
-    1→1 map shape of a thumbnail pass.  PNG payloads decode for real
-    (operators/codecs.py), resize nearest-neighbor, and re-encode as
-    PNG; undecodable payloads fall back to deterministic strided byte
-    sampling so the contract (fixed output size, binary in → binary out,
-    one Arrow round-trip) holds for every row."""
-    w, h = target
-    schema = f"{id_col} string, width int, height int, resized binary"
-
-    from packs_spark.operators.codecs import (
-        PNG_MAGIC,
-        decode_png,
-        encode_png,
-        resize_nearest,
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rid, p in zip(pdf[id_col], pdf[binary_col]):
-                if not p:
-                    out.append((rid, w, h, b"\x00" * (w * h)))
-                    continue
-                if bytes(p[:8]) == PNG_MAGIC:
-                    try:  # corrupt PNG → strided fallback, not a task kill
-                        img = resize_nearest(decode_png(bytes(p)), (w, h))
-                        out.append((rid, w, h, encode_png(img)))
-                        continue
-                    except Exception:
-                        pass
-                arr = np.frombuffer(p, dtype=np.uint8)
-                idx = np.linspace(0, len(arr) - 1, w * h).astype(np.int64)
-                out.append((rid, w, h, arr[idx].tobytes()))
-            yield pd.DataFrame(
-                out, columns=[id_col, "width", "height", "resized"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(op, schema=schema)
-
-
-def image_features(
-    df: DataFrame, binary_col: str = "payload", id_col: str = "url"
-) -> DataFrame:
-    """Real decode → feature-extract over an image column:
-    (id, width, height, channels, mean_luma, features[16]) where features
-    is an 8-bin luma histogram (L1-normalized) followed by per-channel
-    means scaled to [0,1] (zero-padded).  JPEG payloads without Pillow
-    still get real (width, height, channels) from the stdlib SOF header
-    parse (codecs.parse_jpeg_header) — pixel-derived columns stay NULL.
-    Fully undecodable rows keep NULL dims and empty features rather than
-    failing the batch — at corpus scale a fraction of payloads is always
-    corrupt."""
-    schema = (
-        f"{id_col} string, width int, height int, channels int, "
-        f"mean_luma double, features array<float>"
-    )
-
-    from packs_spark.operators.codecs import JPEG_MAGIC, parse_jpeg_header
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, p in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    img = decode_image(bytes(p))
-                except Exception:
-                    wid = hgt = ch = None
-                    if p is not None and bytes(p[:3]) == JPEG_MAGIC:
-                        try:  # metadata tier: header-only, Pillow-free
-                            wid, hgt, ch = parse_jpeg_header(bytes(p))
-                        except ValueError:
-                            pass
-                    rows.append((rid, wid, hgt, ch, None, []))
-                    continue
-                hgt, wid = img.shape[:2]
-                ch = img.shape[2] if img.ndim == 3 else 1
-                flat = img.reshape(hgt * wid, ch).astype(np.float64)
-                luma = flat.mean(axis=1)
-                hist = np.histogram(luma, bins=8, range=(0, 256))[0].astype(
-                    np.float64
-                )
-                hist /= max(hist.sum(), 1.0)
-                means = flat.mean(axis=0) / 255.0
-                feats = np.zeros(16, dtype=np.float32)
-                feats[:8] = hist
-                feats[8 : 8 + min(ch, 8)] = means[: min(ch, 8)]
-                rows.append(
-                    (rid, wid, hgt, ch, float(luma.mean()), feats.tolist())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "channels", "mean_luma",
-                    "features",
-                ],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(op, schema=schema)
-
-
-def audio_features(
-    df: DataFrame, binary_col: str = "payload", id_col: str = "url"
-) -> DataFrame:
-    """Real decode → feature-extract over an audio column:
-    (id, sample_rate, n_frames, channels, duration_sec, rms, zero_cross_rate).
-    WAV/PCM decodes via the stdlib; undecodable rows yield NULLs."""
-    schema = (
-        f"{id_col} string, sample_rate int, n_frames long, channels int, "
-        f"duration_sec double, rms double, zero_cross_rate double"
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, p in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    samples, sr = decode_audio(bytes(p))
-                except Exception:
-                    rows.append((rid, None, None, None, None, None, None))
-                    continue
-                mono = samples.astype(np.float64).mean(axis=1)
-                rms = float(np.sqrt(np.mean(mono**2))) if len(mono) else 0.0
-                zc = (
-                    float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-                    if len(mono) > 1
-                    else 0.0
-                )
-                rows.append(
-                    (
-                        rid, sr, samples.shape[0], samples.shape[1],
-                        samples.shape[0] / sr if sr else 0.0, rms, zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "sample_rate", "n_frames", "channels",
-                    "duration_sec", "rms", "zero_cross_rate",
-                ],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(op, schema=schema)
-
-
-def video_metadata(
-    df: DataFrame, binary_col: str = "payload", id_col: str = "url"
-) -> DataFrame:
-    """Container-level video metadata over an MP4/MOV column:
-    (id, brand, duration_sec, n_tracks, width, height, n_samples,
-    n_keyframes) — the video twin of the JPEG header tier: everything
-    here comes from the stdlib BMFF box walk (codecs.parse_mp4_metadata),
-    no ffmpeg, no pixel decode.  Width/height/samples come from the first
-    video track; non-BMFF or corrupt payloads yield NULLs instead of
-    failing the batch."""
-    schema = (
-        f"{id_col} string, brand string, duration_sec double, "
-        f"n_tracks int, width int, height int, n_samples long, "
-        f"n_keyframes long"
-    )
-
-    from packs_spark.operators.codecs import parse_mp4_metadata
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, p in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    meta = parse_mp4_metadata(bytes(p))
-                except Exception:
-                    rows.append(
-                        (rid, None, None, None, None, None, None, None)
-                    )
-                    continue
-                vid = next(
-                    (t for t in meta["tracks"] if t["handler"] == "vide"),
-                    None,
-                )
-                rows.append(
-                    (
-                        rid,
-                        meta["brand"],
-                        meta["duration_s"],
-                        len(meta["tracks"]),
-                        vid["width"] if vid else None,
-                        vid["height"] if vid else None,
-                        vid["n_samples"] if vid else None,
-                        vid["n_keyframes"] if vid else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "brand", "duration_sec", "n_tracks", "width",
-                    "height", "n_samples", "n_keyframes",
-                ],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(op, schema=schema)

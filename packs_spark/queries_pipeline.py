@@ -802,9 +802,10 @@ def q_multimodal_metadata(spark, sf_dir):
     """Binary-column plumbing end-to-end: plant a deterministic container
     magic (by doc_id % 5) in front of the UTF-8 text bytes — including
     the BMFF shape, whose 'ftyp' signature sits after the 4-byte box
-    size — then run the Arrow-batched mapInPandas metadata extractor
-    (sniff + byte-histogram features) and verify the sniffer recovers
-    the planted format and the byte counts/L1-normalized features are
+    size — then run the one-pass mapInPandas metadata extractor (format
+    sniff, byte count, byte-histogram stand-in for decoded features;
+    nothing is decoded) and check that the sniff recovers the planted
+    format and that the byte counts and L1-normalized features are
     exact."""
     from packs_spark.operators.multimodal import extract_metadata
 

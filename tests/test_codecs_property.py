@@ -1,9 +1,10 @@
-"""Property-based round-trips for the pure-stdlib codecs (hypothesis).
+"""Property-based round-trips for the pure-stdlib codecs and the xlsx
+writer (hypothesis).
 
 The example-based tests in test_codecs.py pin known shapes; these sweep
 arbitrary dimensions/channel counts/payload values so encoder/decoder
-disagreements (stride math, bit packing, palette edges, XML escaping)
-can't hide in untested corners.  No Spark involved — pure numpy."""
+disagreements (stride math, palette edges, XML escaping) can't hide in
+untested corners.  No Spark involved — pure numpy."""
 
 import numpy as np
 from hypothesis import given, settings
@@ -11,12 +12,8 @@ from hypothesis import strategies as st
 
 from packs_spark.io.xlsx import read_xlsx, write_xlsx
 from packs_spark.operators.codecs import (
-    _lzw_decode,
-    _lzw_encode_literal,
-    decode_gif_frames,
     decode_png,
     decode_wav,
-    encode_gif,
     encode_png,
     encode_wav,
 )
@@ -33,31 +30,6 @@ def test_png_roundtrip_any_shape(h, w, ch, seed):
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8)
     assert np.array_equal(decode_png(encode_png(img)), img)
-
-
-@settings(max_examples=25, deadline=None)
-@given(data=st.binary(min_size=0, max_size=3000))
-def test_lzw_literal_roundtrip_any_bytes(data):
-    assert _lzw_decode(8, _lzw_encode_literal(data)) == data
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    h=st.integers(1, 16),
-    w=st.integers(1, 16),
-    n_frames=st.integers(1, 4),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_gif_roundtrip_any_shape(h, w, n_frames, seed):
-    rng = np.random.default_rng(seed)
-    frames = [
-        rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-        for _ in range(n_frames)
-    ]
-    decoded = decode_gif_frames(encode_gif(frames))
-    assert len(decoded) == n_frames
-    for fr, dec in zip(frames, decoded):
-        assert np.array_equal(dec[:, :, 0], fr)
 
 
 @settings(max_examples=20, deadline=None)
@@ -153,7 +125,7 @@ def test_jpeg_header_roundtrip_any_frame(w, h, ncomp, sof, n_app, junk):
 def test_jpeg_header_never_crashes_on_garbage(data):
     """Arbitrary bytes after the SOI magic either parse or raise ValueError
     — never IndexError/struct.error/infinite loop (corrupt payloads are
-    routine at corpus scale; image_features catches ValueError only)."""
+    routine at corpus scale; a caller catches ValueError only)."""
     from packs_spark.operators.codecs import parse_jpeg_header
 
     try:
@@ -162,94 +134,3 @@ def test_jpeg_header_never_crashes_on_garbage(data):
         return
     w, h, ncomp = res
     assert 0 <= w <= 65535 and 0 <= h <= 65535 and 0 <= ncomp <= 255
-
-
-@settings(max_examples=60, deadline=None)
-@given(data=st.binary(min_size=0, max_size=1500))
-def test_mp4_parser_never_crashes_on_garbage(data):
-    """Arbitrary bytes either parse or raise ValueError — never an
-    uncaught IndexError/struct.error/KeyError (dirty-corpus contract for
-    the per-row containment in the multimodal operators)."""
-    from packs_spark.operators.codecs import (
-        mp4_sample_ranges,
-        parse_mp4_metadata,
-    )
-
-    for fn in (parse_mp4_metadata, mp4_sample_ranges):
-        try:
-            fn(data)
-        except ValueError:
-            pass
-
-
-@settings(max_examples=40, deadline=None)
-@given(data=st.binary(min_size=0, max_size=1200))
-def test_mp4_parser_never_crashes_on_corrupted_valid_file(data):
-    """A structurally valid fixture with arbitrary bytes spliced over its
-    middle (box sizes/sample tables corrupted in place) still only ever
-    raises ValueError."""
-    from packs_spark.operators.codecs import (
-        mp4_sample_ranges,
-        parse_mp4_metadata,
-    )
-    from tests.test_codecs import _mp4_fixture
-
-    blob, _, _ = _mp4_fixture()
-    start = min(16, len(blob) - 1)
-    spliced = blob[:start] + data + blob[start + len(data):]
-    for fn in (parse_mp4_metadata, mp4_sample_ranges):
-        try:
-            fn(spliced)
-        except ValueError:
-            pass
-
-
-# ---------------------------------------------------------------------------
-# BMFF/MP4 corruption fuzz: arbitrary mutations of a valid container must
-# either parse or raise the codec's contained ValueError — never leak
-# struct.error / IndexError / MemoryError (the mapInPandas batch-error
-# containment in operators/multimodal.py catches ValueError only).
-# ---------------------------------------------------------------------------
-
-from test_codecs import _mp4_fixture  # noqa: E402
-
-_MP4_BLOB, _, _ = _mp4_fixture()
-
-
-@settings(max_examples=120, deadline=None)
-@given(
-    cut=st.integers(0, len(_MP4_BLOB)),
-    flips=st.lists(
-        st.tuples(
-            st.integers(0, len(_MP4_BLOB) - 1), st.integers(0, 255)
-        ),
-        max_size=6,
-    ),
-)
-def test_mp4_parse_contained_under_corruption(cut, flips):
-    from packs_spark.operators.codecs import (
-        mp4_sample_ranges,
-        parse_mp4_metadata,
-    )
-
-    buf = bytearray(_MP4_BLOB[:cut].ljust(8, b"\x00"))
-    for pos, val in flips:
-        if pos < len(buf):
-            buf[pos] = val
-    blob = bytes(buf)
-    for fn in (parse_mp4_metadata, mp4_sample_ranges):
-        try:
-            fn(blob)
-        except ValueError:
-            pass  # the contained error contract
-
-
-@settings(max_examples=60, deadline=None)
-@given(data=st.binary(min_size=0, max_size=400))
-def test_mp4_parse_contained_on_garbage(data):
-    from packs_spark.operators.codecs import parse_mp4_metadata
-
-    try:
-        parse_mp4_metadata(data)
-    except ValueError:
-        pass

@@ -2,7 +2,6 @@
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from packs_spark.streaming.pipeline import (
@@ -114,15 +113,63 @@ def test_multimodal_metadata(spark, tmp_path):
         assert abs(sum(r["features"]) - 1.0) < 1e-3  # L1-normalized histogram
 
 
-def test_multimodal_decode_unsupported_raises():
-    # corrupt PNG magic / non-WAVE RIFF fall through the stdlib decoders
-    # to the dependency-naming error (real decode paths: tests/test_codecs.py)
-    from packs_spark.operators.multimodal import decode_audio, decode_image
+def test_media_metadata_col_agrees_with_extract_metadata(spark):
+    """The projection (extract_metadata) and the in-place struct column
+    (media_metadata_col) give the same (format, n_bytes) per row, and the
+    histogram features equal a reference written here, bit for bit."""
+    import numpy as np
 
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG....")
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"RIFF....")
+    from packs_spark.operators.multimodal import (
+        FEATURE_DIM,
+        extract_metadata,
+        media_metadata_col,
+    )
+
+    text = "héllo, wörld <p>".encode()
+    # the five magics q_multimodal_metadata plants, then the edge cases
+    payloads = [
+        b"\x89PNG" + text,
+        b"\xff\xd8\xff" + text,
+        b"GIF8" + text,
+        b"RIFF" + text,
+        b"\x00\x00\x00\x08ftyp" + text,
+        None,
+        b"",
+        b"<HTML>",
+        b"<!DOCTYPE",
+        b"\x00\x00\x00\x02ftypisom",
+    ]
+    want_formats = [
+        "png", "jpeg", "gif", "riff", "mp4",
+        "empty", "empty", "html", "html", "unknown",
+    ]
+    df = spark.createDataFrame(
+        [(str(i), p) for i, p in enumerate(payloads)], "id string, payload binary"
+    )
+
+    projected = {
+        r["id"]: r for r in extract_metadata(df, "payload", "id").collect()
+    }
+    in_place = {
+        r["id"]: (r["format"], r["n_bytes"])
+        for r in df.select(
+            "id", media_metadata_col(F.col("payload")).alias("m")
+        ).select("id", "m.format", "m.n_bytes").collect()
+    }
+    assert len(projected) == len(in_place) == len(payloads)
+    for i, (p, fmt) in enumerate(zip(payloads, want_formats)):
+        r = projected[str(i)]
+        n = len(p) if p is not None else 0
+        assert (r["format"], r["n_bytes"]) == in_place[str(i)] == (fmt, n)
+
+        want = np.zeros(FEATURE_DIM, dtype=np.float32)
+        if p:
+            arr = np.frombuffer(p, dtype=np.uint8)
+            want = (np.bincount(arr >> 4, minlength=16) / len(arr)).astype(
+                np.float32
+            )
+        got = np.array(r["features"], dtype=np.float32)
+        assert got.tobytes() == want.tobytes()
 
 
 def test_stream_sessionize_matches_batch_closed_sessions(spark, sf_dir, tmp_path):
@@ -190,41 +237,6 @@ def test_stream_sessionize_matches_batch_closed_sessions(spark, sf_dir, tmp_path
     want_keys = key(closed, "start_us", "end_us", "n_events")
     assert len(want_keys) > 0
     assert got_keys == want_keys
-
-
-def test_multimodal_frame_sample_shape(spark):
-    """1->N explode shape of a video frame sampler: id rides along, frame
-    indices dense from 0, payload-derived frame bytes, typed schema."""
-    from packs_spark.operators.multimodal import frame_sample
-
-    rows = [
-        ("u1", bytes(range(256)) * 2),  # 512 bytes -> 17 frames, capped 10
-        ("u2", b"xy"),                  # too short -> 0 frames
-        ("u3", None),                   # null payload -> 0 frames
-        ("u4", bytes(100)),             # 100 // 30 = 3 frames
-    ]
-    df = spark.createDataFrame(rows, ["url", "payload"])
-    out = frame_sample(df, "payload", "url", every_n=30, max_frames=10)
-    got = out.groupBy("url").count().collect()
-    counts = {r.url: r["count"] for r in got}
-    assert counts == {"u1": 10, "u4": 3}
-    one = out.where("url = 'u4' and frame_idx = 1").first()
-    assert one.frame_bytes == bytes(100)[1:17]
-    assert dict(out.dtypes)["frame_bytes"] == "binary"
-
-
-def test_multimodal_resize_fixed_output(spark):
-    """1->1 map shape of an image resizer: fixed 64*64-byte output for any
-    input size, nulls padded, one row per input."""
-    from packs_spark.operators.multimodal import resize_images
-
-    rows = [("a", bytes(range(256)) * 40), ("b", b"abc"), ("c", None)]
-    df = spark.createDataFrame(rows, ["url", "payload"])
-    out = resize_images(df, "payload", "url", target=(64, 64)).collect()
-    assert len(out) == 3
-    for r in out:
-        assert (r.width, r.height) == (64, 64)
-        assert len(r.resized) == 64 * 64
 
 
 def test_stream_dedup_exact_keeps_one_per_text(spark, tmp_path):
